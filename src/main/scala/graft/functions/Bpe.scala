@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one shuffle for the word histogram, then `numMerges`
   * rounds of a vocabulary-sized pair aggregate (map-side combinable) +
-  * one LIMIT 1 action each; the vocab table is persisted EAGERly and
-  * freed in a finally. Round r's job replays r narrow replaces over the
+  * one LIMIT 1 action each; the vocab table is cached eagerly and freed
+  * when training returns or fails. Round r's job replays r narrow replaces over the
   * cached vocab — O(k²·|vocab|) character work total, the standard
   * trade against k checkpoint materializations.
   */
@@ -52,40 +52,40 @@ object Bpe {
   /** Train `numMerges` BPE merges over the corpus; returns the merge
     * table (step, left_sym, right_sym, merged, pair_count) in training
     * order — metadata-sized, built from one LIMIT-1 action per round. */
-  def trainMerges(df: DataFrame, textCol: String, numMerges: Int): DataFrame = {
-    require(numMerges >= 1 && numMerges <= 64,
-      s"numMerges must be in [1, 64], got $numMerges")
-    val spark = df.sparkSession
-    import spark.implicits._
-    // Spread: the corpus tokenize feeding the word histogram is the one
-    // corpus-sized pass and otherwise fuses into a one-task single-file
-    // scan at bench shape
-    val vocab = Spread(df.select(col(textCol)))
-      .select(explode(Text.tokens(col(textCol))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      .select(charSeq(col("w")).as("seq"), col("freq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    vocab.count() // EAGER: materialize the barrier before iterating
-    // merge rounds iterate a fixed tiny plan over the cached vocab — the
-    // IterConf contract (AQE re-planning adds only driver latency here)
-    try IterConf.withIterConf(spark, 0) {
-      var cur = vocab.select(col("seq"), col("freq"))
-      val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-      for (step <- 1 to numMerges) {
-        val best = cur.select(col("freq"), explode(symPairs(col("seq"))).as("p"))
-          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-          .agg(sum(col("freq")).as("cnt"))
-          .orderBy(col("cnt").desc, col("l").asc, col("r").asc)
-          .limit(1).collect()
-        require(best.nonEmpty, s"BPE round $step: no pairs left to merge")
-        val (l, r, cnt) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        merges += ((step, l, r, l + r, cnt))
-        cur = cur.withColumn("seq",
-          replace(col("seq"), lit(s" $l $r "), lit(s" $l$r ")))
+  def trainMerges(df: DataFrame, textCol: String, numMerges: Int): DataFrame =
+    // the merge table is a local relation: nothing cached outlives the call
+    CacheScope.run { s =>
+      require(numMerges >= 1 && numMerges <= 64,
+        s"numMerges must be in [1, 64], got $numMerges")
+      val spark = df.sparkSession
+      import spark.implicits._
+      // Spread: the corpus tokenize feeding the word histogram is the one
+      // corpus-sized pass and otherwise fuses into a one-task single-file
+      // scan at bench shape. Materialized before iterating.
+      val vocab = s.materialize(Spread(df.select(col(textCol)))
+        .select(explode(Text.tokens(col(textCol))).as("w"))
+        .groupBy(col("w")).agg(count(lit(1)).as("freq"))
+        .select(charSeq(col("w")).as("seq"), col("freq")))
+      // merge rounds iterate a fixed tiny plan over the cached vocab — the
+      // IterConf contract (AQE re-planning adds only driver latency here)
+      IterConf.withIterConf(spark, 0) {
+        var cur = vocab.select(col("seq"), col("freq"))
+        val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
+        for (step <- 1 to numMerges) {
+          val best = cur.select(col("freq"), explode(symPairs(col("seq"))).as("p"))
+            .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+            .agg(sum(col("freq")).as("cnt"))
+            .orderBy(col("cnt").desc, col("l").asc, col("r").asc)
+            .limit(1).collect()
+          require(best.nonEmpty, s"BPE round $step: no pairs left to merge")
+          val (l, r, cnt) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+          merges += ((step, l, r, l + r, cnt))
+          cur = cur.withColumn("seq",
+            replace(col("seq"), lit(s" $l $r "), lit(s" $l$r ")))
+        }
+        merges.toSeq.toDF("step", "left_sym", "right_sym", "merged", "pair_count")
       }
-      merges.toSeq.toDF("step", "left_sym", "right_sym", "merged", "pair_count")
-    } finally { vocab.unpersist(); () }
-  }
+    }
 
   /** Tokenize with a trained merge list (in training order): per word,
     * apply each merge as the same literal replace, then split — a chain

@@ -28,9 +28,9 @@ object Curation {
   /** Run the full pipeline. The returned DataFrame carries a `split` column
     * ("train" / "validation" / "test"); the report materializes stage
     * counts (one action per stage — curation is a batch job, not a lazy
-    * view). EAGER cache contract, as for the dedup operators: the result is
-    * computed + cached when this returns, all internal barriers are freed,
-    * and the caller owns exactly one `unpersist()` on the result.
+    * view). Eager, under the [[CacheScope]] rules: the result is cached,
+    * every internal barrier (exact survivors, candidate pairs, component
+    * labels, loser ids) is freed on return or failure.
     *
     * `checkpointDir`: stable-storage directory (HDFS/object store on a
     * cluster) for RELIABLE checkpoints during the connected-components
@@ -48,100 +48,75 @@ object Curation {
              minQuality: Double = 0.25,
              trainPct: Int = 90, validationPct: Int = 5,
              checkpointDir: Option[String] = None,
-             verbose: Boolean = false): (DataFrame, CurationReport) = {
-    def timed[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (verbose) System.err.println(
-        f"[graft] curate/$label%-22s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    }
-    checkpointDir.foreach(docs.sparkSession.sparkContext.setCheckpointDir)
-    val nInput = timed("input-count")(docs.count())
+             verbose: Boolean = false): (DataFrame, CurationReport) =
+    CacheScope.withFrame { s =>
+      def timed[A](label: String)(f: => A): A = {
+        val t0 = System.nanoTime()
+        val r = f
+        if (verbose) System.err.println(
+          f"[graft] curate/$label%-22s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
+        r
+      }
+      checkpointDir.foreach(docs.sparkSession.sparkContext.setCheckpointDir)
+      val nInput = timed("input-count")(docs.count())
 
-    // Every internal barrier (own persists AND the eager frames the dedup
-    // operators hand back) registers here and deregisters when freed on the
-    // success path; a failure in any later stage unpersists whatever is
-    // still live, so the EAGER cache contract holds on the error path too —
-    // no barrier outlives the call except the returned frame.
-    val liveBarriers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def tracked(df: DataFrame): DataFrame = { liveBarriers += df; df }
-    def freeTracked(df: DataFrame): Unit = {
-      df.unpersist(blocking = true); liveBarriers -= df
-    }
-    try {
+      // 1. exact dedup on the NORMALIZED text (casing/punct/ws-insensitive),
+      //    deterministic min-id survivor; hash groupBy — content never shuffles.
+      //    PERSISTED: every later stage (near-dedup build, three stage counts,
+      //    the final write) re-reads these survivors — without the barrier the
+      //    lazy chain re-ran scan+normalize+dedup-join per ACTION, ~5× the
+      //    work (measured 120 s → ~30 s at sf0.1). MEMORY_AND_DISK spills to
+      //    executor-local disk at corpus scale — the managed equivalent of
+      //    writing stage intermediates, standard for multi-action batch
+      //    pipelines (or pass a checkpointDir and Spark re-reads from there
+      //    on executor loss).
+      val normalized = docs.withColumn("__norm", Text.normalizeText(col(textCol)))
+      val exactSurvivors = s.cache(normalized
+        .join(Dedup.exactDedupIds(normalized, "__norm", idCol), Seq(idCol)))
+      val nAfterExact = timed("exact-dedup")(exactSurvivors.count())
 
-    // 1. exact dedup on the NORMALIZED text (casing/punct/ws-insensitive),
-    //    deterministic min-id survivor; hash groupBy — content never shuffles.
-    //    PERSISTED: every later stage (near-dedup build, three stage counts,
-    //    the final write) re-reads these survivors — without the barrier the
-    //    lazy chain re-ran scan+normalize+dedup-join per ACTION, ~5× the
-    //    work (measured 120 s → ~30 s at sf0.1). MEMORY_AND_DISK spills to
-    //    executor-local disk at corpus scale — the managed equivalent of
-    //    writing stage intermediates, standard for multi-action batch
-    //    pipelines (or pass a checkpointDir and Spark re-reads from there
-    //    on executor loss).
-    val normalized = docs.withColumn("__norm", Text.normalizeText(col(textCol)))
-    val exactSurvivors = tracked(normalized
-      .join(Dedup.exactDedupIds(normalized, "__norm", idCol), Seq(idCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val nAfterExact = timed("exact-dedup")(exactSurvivors.count())
+      // 2. near-duplicate removal (banded LSH → components → min-id
+      //    survivor), composed from the operator pieces rather than
+      //    dedupNearDuplicates so each barrier is freed as soon as no later
+      //    stage reads it.
+      val cands = timed("minhash-cands")(
+        Dedup.minhashCandidates(exactSurvivors, idCol, textCol))
+      val comps = timed("components")(Dedup.connectedComponents(
+        cands.filter(col("jaccard_est") >= nearDupThreshold)
+          .select(col("idA"), col("idB"))))
+      s.free(cands)
+      val losers = s.materialize(
+        comps.filter(col("id") =!= col("component")).select(col("id").as(idCol)))
+      s.free(comps)
+      val nearDeduped = exactSurvivors.join(losers, Seq(idCol), "left_anti")
+      val nAfterNearDup = timed("near-dedup")(nearDeduped.count())
 
-    // 2. near-duplicate removal (banded LSH → components → min-id
-    //    survivor), composed from the operator pieces rather than
-    //    dedupNearDuplicates so curate OWNS every internal barrier: when it
-    //    returns, the only live cache is the result frame.
-    val cands = tracked(timed("minhash-cands")(
-      Dedup.minhashCandidates(exactSurvivors, idCol, textCol)))
-    val comps = tracked(timed("components")(Dedup.connectedComponents(
-      cands.filter(col("jaccard_est") >= nearDupThreshold)
-        .select(col("idA"), col("idB")))))
-    freeTracked(cands)
-    val losers = tracked(Dedup.materializeAndFree(
-      comps.filter(col("id") =!= col("component")).select(col("id").as(idCol)),
-      comps))
-    liveBarriers -= comps
-    val nearDeduped = exactSurvivors.join(losers, Seq(idCol), "left_anti")
-    val nAfterNearDup = timed("near-dedup")(nearDeduped.count())
+      // 3. benchmark decontamination (shared n-gram hashes)
+      val decontaminated = Decontamination.decontaminate(
+        nearDeduped, benchmark, idCol, textCol, n = decontamN)
+      val nAfterDecontam = timed("decontaminate")(decontaminated.count())
 
-    // 3. benchmark decontamination (shared n-gram hashes)
-    val decontaminated = Decontamination.decontaminate(
-      nearDeduped, benchmark, idCol, textCol, n = decontamN)
-    val nAfterDecontam = timed("decontaminate")(decontaminated.count())
+      // 4. quality floor (codegen'd heuristic score)
+      val qualityFiltered = decontaminated
+        .filter(Text.qualityScore(col(textCol)) >= minQuality)
+      val nAfterQuality = timed("quality")(qualityFiltered.count())
 
-    // 4. quality floor (codegen'd heuristic score)
-    val qualityFiltered = decontaminated
-      .filter(Text.qualityScore(col(textCol)) >= minQuality)
-    val nAfterQuality = timed("quality")(qualityFiltered.count())
+      // 5. deterministic content-hash split
+      val withSplit = s.cache(qualityFiltered
+        .withColumn("split",
+          when(Decontamination.hashBucket(col(idCol)) < trainPct, "train")
+            .when(Decontamination.hashBucket(col(idCol)) < trainPct + validationPct,
+              "validation")
+            .otherwise("test"))
+        .drop("__norm"))
+      val splitCounts = timed("split-materialize")(withSplit.groupBy("split").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+      // the split counts filled the result's cache: free the survivors and
+      // loser ids now, not with a recount at scope exit
+      s.free(exactSurvivors)
+      s.free(losers)
 
-    // 5. deterministic content-hash split
-    val withSplit = tracked(qualityFiltered
-      .withColumn("split",
-        when(Decontamination.hashBucket(col(idCol)) < trainPct, "train")
-          .when(Decontamination.hashBucket(col(idCol)) < trainPct + validationPct,
-            "validation")
-          .otherwise("test"))
-      .drop("__norm")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val splitCounts = timed("split-materialize")(withSplit.groupBy("split").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-    // the returned frame is materialized + cached (EAGER, like the dedup
-    // operators); every internal barrier (exact survivors, candidate pairs,
-    // component labels, loser ids) is freed. The caller owns ONE
-    // unpersist() on the result — correctness survives an early unpersist
-    // (lineage intact), only recompute cost is at stake.
-    freeTracked(exactSurvivors)
-    freeTracked(losers)
-    liveBarriers -= withSplit // ownership transfers to the caller
-
-    (withSplit, CurationReport(nInput, nAfterExact, nAfterNearDup,
-      nAfterDecontam, nAfterQuality, splitCounts))
-    } catch {
-      case t: Throwable =>
-        liveBarriers.foreach { b =>
-          try b.unpersist(blocking = true) catch { case _: Throwable => () }
-        }
-        throw t
-    }
-  }
+      (withSplit, CurationReport(nInput, nAfterExact, nAfterNearDup,
+        nAfterDecontam, nAfterQuality, splitCounts))
+    }(_._1)
 }

@@ -57,17 +57,16 @@ object Decontamination {
     * never changes the answer (same DuckDB oracle).
     *
     * `expectedGrams` sizes the filter (pass ≥ the benchmark's distinct gram
-    * count; ~1.2 MB per million entries at fpp=0.01). EAGER with the
-    * internal benchmark-gram barrier freed; caller owns one unpersist. */
+    * count; ~1.2 MB per million entries at fpp=0.01). Eager, under the
+    * [[CacheScope]] rules. */
   def sharedNgramCountsBloom(corpus: DataFrame, benchmark: DataFrame,
                              idCol: String, textCol: String, n: Int = 8,
                              expectedGrams: Long = 1000000L,
-                             fpp: Double = 0.01): DataFrame = {
+                             fpp: Double = 0.01): DataFrame = CacheScope { s =>
     import org.apache.spark.sql.graft.ColumnBridge
-    val benchGrams = benchmark
+    val benchGrams = s.cache(benchmark
       .select(explode(ngramHashes(col(textCol), n)).as("g"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val bloom = benchGrams.stat.bloomFilter("g", expectedGrams, fpp)
     val bytes = {
       val bos = new java.io.ByteArrayOutputStream()
@@ -83,10 +82,9 @@ object Decontamination {
       .select(col(idCol), explode(ngramHashes(col(textCol), n)).as("g"))
       .filter(mightContain) // map-side: clean grams never reach the distinct
       .distinct()
-    val result = corpusGrams.join(benchGrams, "g") // exact verify kills bloom FPs
+    corpusGrams.join(benchGrams, "g") // exact verify kills bloom FPs
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_shared"))
-    Dedup.materializeAndFree(result, benchGrams)
   }
 
   /** Training split minus contaminated docs (≥ `minShared` shared n-grams). */
@@ -193,11 +191,10 @@ object Decontamination {
     * held by k groups emits k² pairs — bounded by groups², never by
     * corpus size. Returns (src_a < src_b, n_shared, overlap). */
   def sourceOverlapMatrix(df: DataFrame, groupCol: String, textCol: String,
-                          n: Int = 8): DataFrame = {
-    val sg = df.select(col(groupCol).as("__s"),
+                          n: Int = 8): DataFrame = CacheScope { s =>
+    val sg = s.cache(df.select(col(groupCol).as("__s"),
         explode(ngramHashes(col(textCol), n)).as("g"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val sizes = sg.groupBy(col("__s")).agg(count(lit(1)).as("__n"))
     val a = sg.select(col("__s").as("src_a"), col("g"))
     val b = sg.select(col("__s").as("src_b"), col("g"))
@@ -205,7 +202,7 @@ object Decontamination {
       .filter(col("src_a") < col("src_b"))
       .groupBy(col("src_a"), col("src_b"))
       .agg(count(lit(1)).as("n_shared"))
-    val out = shared
+    shared
       .join(broadcast(sizes.select(col("__s").as("src_a"),
         col("__n").as("__na"))), Seq("src_a"))
       .join(broadcast(sizes.select(col("__s").as("src_b"),
@@ -213,7 +210,6 @@ object Decontamination {
       .select(col("src_a"), col("src_b"), col("n_shared"),
         PinnedMath.pinnedRatio(col("n_shared"),
           least(col("__na"), col("__nb")), 6).as("overlap"))
-    Dedup.materializeAndFree(out, sg)
   }
 
   /** Intra-document repetition: 1 − distinct/total tokens (0 for empty

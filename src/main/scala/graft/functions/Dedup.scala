@@ -17,27 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Cache hygiene for operators with internal persists: materialize the
-    * result into its own cache, then free the internal barriers (blocking)
-    * so a long-lived session — the 100 TB deployment model — never strands
-    * operator-lifetime blocks. The returned DataFrame is persisted; the
-    * caller owns exactly one `unpersist()` (correctness survives earlier
-    * unpersist — lineage is intact — only recompute cost is at stake). */
-  private[graft] def materializeAndFree(result: DataFrame,
-                                        internals: DataFrame*): DataFrame = {
-    // Skip the persist when `result` is already cached (an iterative
-    // operator returning its last persisted generation, or a plan that
-    // cache-matches an existing entry): persist would be a WARN-logging
-    // no-op either way, and the caller's single unpersist() contract is
-    // unchanged.
-    val out =
-      if (result.storageLevel != org.apache.spark.storage.StorageLevel.NONE) result
-      else result.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize: internals are no longer needed for `out`
-    internals.foreach(_.unpersist(blocking = true))
-    out
-  }
-
   /** Exact dedup, keep-first-by-id: one row per distinct value of `keyCols`,
     * the survivor being the row with the minimum `idCol`. Deterministic
     * (unlike dropDuplicates, whose survivor is arbitrary) — at scale the
@@ -112,14 +91,12 @@ object Dedup {
     * the shuffle is fine-grained; skewed buckets (boilerplate docs) can be
     * capped upstream by filtering bucket sizes.
     *
-    * EAGER: the result is computed when the method returns, cached, with
-    * every internal barrier already freed (see [[materializeAndFree]]); the
-    * caller owns one `unpersist()` on the returned frame.
+    * Eager, under the [[CacheScope]] rules.
     */
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         shingleSize: Int = 3, numHashes: Int = 64,
                         bands: Int = 16, seed: Int = 42,
-                        maxBucketSize: Int = 0): DataFrame = {
+                        maxBucketSize: Int = 0): DataFrame = CacheScope { s =>
     require(bands > 0 && numHashes % bands == 0,
       s"numHashes ($numHashes) must be a positive multiple of bands ($bands) " +
         "— a partial trailing band would silently weaken the LSH guarantee")
@@ -131,12 +108,11 @@ object Dedup {
     // size at 100 TB.
     // Spread first: the fused tokenize+minhash projection is the corpus
     // pass, and a single-file scan otherwise runs it on one task
-    val sig = Spread(df.select(col(idCol).as("id"), col(textCol).as("__t")))
+    val sig = s.cache(Spread(df.select(col(idCol).as("id"), col(textCol).as("__t")))
       .select(col("id"),
         graft.functions.expressions.MinHashExpression
           .minhashTokens(Text.tokens(col("__t")), shingleSize, numHashes, seed.toLong)
-          .as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .as("sig")))
     // Everything downstream moves 128-BIT SURROGATE KEYS, not the
     // 8·numHashes-byte signature arrays: at 500k docs the band explosion
     // is bands × distinct-sigs rows, and carrying ~520-byte signatures
@@ -154,8 +130,7 @@ object Dedup {
     // xxhash64(sig) (same 64 bits twice); xxhash64(salt, sig) perturbs
     // the chain BEFORE the array and yields an independent second hash
     def key128(sigCol: Column): Column = sigKey128(sigCol)
-    val sigK = sig.select(col("id"), key128(col("sig")).as("k"), col("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigK = s.cache(sig.select(col("id"), key128(col("sig")).as("k"), col("sig")))
     // (1) SAME-key pairs — identical signatures (the boilerplate mass):
     // output-proportional id pairs within each key group, est computed
     // from the true signatures (identical arrays → exactly 1.0). This
@@ -174,9 +149,8 @@ object Dedup {
     // bucket) group would otherwise scale with corpus size — after the
     // collapse it scales with *distinct* signatures, and the identical-doc
     // pairs come back from the output-proportional expansion joins below.
-    val distinctSig = sig.select(col("sig")).distinct()
-      .select(key128(col("sig")).as("k"), col("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val distinctSig = s.cache(sig.select(col("sig")).distinct()
+      .select(key128(col("sig")).as("k"), col("sig")))
     val bucketed0 = distinctSig.select(col("k"),
         posexplode(lshBandKeys(col("sig"), bands, rowsPerBand)).as(Seq("band", "bucket")))
     // Optional hard cap on residual oversized buckets (true hash-degenerate
@@ -213,8 +187,7 @@ object Dedup {
       .select(least(col("__ia"), col("__ib")).as("idA"),
         greatest(col("__ia"), col("__ib")).as("idB"),
         col("jaccard_est"))
-    val result = crossPairs.unionAll(samePairs)
-    materializeAndFree(result, sig, sigK, distinctSig)
+    crossPairs.unionAll(samePairs)
   }
 
   /** SimHash-64 of a token array: bit i of the result is the sign of the sum
@@ -286,29 +259,27 @@ object Dedup {
     * each and their doc pairs come back from output-proportional expansion.
     */
   def simhashCandidates(df: DataFrame, idCol: String, textCol: String,
-                        maxHamming: Int = 3, seed: Int = 42): DataFrame = {
+                        maxHamming: Int = 3, seed: Int = 42): DataFrame = CacheScope { s =>
     // persist: barrier against recomputing the signature in both join legs.
-    // simhashCandidatesFromSigs materializes its (cached) result, so the
-    // barrier can be freed before returning — EAGER semantics, the caller
-    // owns one unpersist() on the returned frame.
-    val sigs = simhashSignatures(df, idCol, textCol, seed)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // simhashCandidatesFromSigs materializes its result, so the barrier is
+    // freed before returning
+    val sigs = s.cache(simhashSignatures(df, idCol, textCol, seed))
     val result = simhashCandidatesFromSigs(sigs, maxHamming)
-    sigs.unpersist(blocking = true)
+    s.free(sigs)
     result
   }
 
   /** Blocking + verify + expansion over precomputed (id, sig) rows; see
     * [[simhashCandidates]]. Exposed for reuse and for candidate-volume
-    * testing. EAGER: returns a cached, already-computed frame with internal
-    * barriers freed (the caller-supplied `sigs` frame is left untouched).
+    * testing. Eager, under the [[CacheScope]] rules; the caller-supplied
+    * `sigs` frame is left untouched.
     *
     * The block count adapts to the radius: more, narrower blocks let the
     * per-block neighbor budget q = ⌊r/B⌋ stay at 1 instead of 2+, which
     * shrinks the probe-side mask explosion ~8× (e.g. r=8: 5×~C(13,≤1)=69
     * probe structs vs 4×C(16,≤2)=548) at a comparable per-block collision
     * rate. */
-  def simhashCandidatesFromSigs(sigs: DataFrame, maxHamming: Int): DataFrame = {
+  def simhashCandidatesFromSigs(sigs: DataFrame, maxHamming: Int): DataFrame = CacheScope { s =>
     require(maxHamming >= 0 && maxHamming < 16,
       s"maxHamming must be in [0, 16), got $maxHamming")
     val nBlocks =
@@ -323,8 +294,7 @@ object Dedup {
       if (blockWidth(b) == 64) -1L else (1L << blockWidth(b)) - 1
     def blockKey(sig: Column, b: Int): Column =
       shiftright(sig, bounds(b)).bitwiseAND(lit(blockMask(b)))
-    val distinctSigs = sigs.select(col("sig")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val distinctSigs = s.cache(sigs.select(col("sig")).distinct())
     val build = distinctSigs.select(col("sig").as("sigB"),
         explode(array((0 until nBlocks).map(b =>
           struct(lit(b).as("blk"), blockKey(col("sig"), b).as("key"))): _*)).as("bk"))
@@ -357,12 +327,11 @@ object Dedup {
       .select(col("sigA"), col("sigB"))
     val a = sigs.select(col("id").as("__ia"), col("sig").as("sigA"))
     val b = sigs.select(col("id").as("__ib"), col("sig").as("sigB"))
-    val result = sigPairs.join(a, "sigA").join(b, "sigB")
+    sigPairs.join(a, "sigA").join(b, "sigB")
       .filter(col("sigA") =!= col("sigB") || col("__ia") < col("__ib"))
       .select(least(col("__ia"), col("__ib")).as("idA"),
         greatest(col("__ia"), col("__ib")).as("idB"),
         hamming64(col("sigA"), col("sigB")).as("hamming"))
-    materializeAndFree(result, distinctSigs)
   }
 
   /** Distributed connected components over a candidate-pair edge list by
@@ -375,9 +344,8 @@ object Dedup {
     * Input: (idA, idB) pairs. Output: (id, component) with component = the
     * minimum id in each connected component.
     *
-    * EAGER: the labels are computed before returning, cached, and every
-    * internal structure (edge cache, superseded generations, checkpoint
-    * backing RDDs) is freed — the caller owns one `unpersist()`.
+    * Eager, under the [[CacheScope]] rules (edge cache, superseded
+    * generations and checkpoint blocks are all freed).
     *
     * Fault tolerance: lineage is truncated every 3 rounds with
     * localCheckpoint, whose blocks live in executor storage — an executor
@@ -403,8 +371,7 @@ object Dedup {
     }
   }
 
-  private def connectedComponentsImpl(pairs: DataFrame, maxIter: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+  private def connectedComponentsImpl(pairs: DataFrame, maxIter: Int): DataFrame = CacheScope { s =>
     // Flatten the EDGE plan before iterating, symmetric to the output
     // flattening below: `pairs` usually arrives as a filter over a dedup
     // operator's (cached but tree-shaped) candidate pipeline, and the
@@ -422,22 +389,18 @@ object Dedup {
     val edgesRaw = pairs.select(col("idA").as("src"), col("idB").as("dst"))
       .union(pairs.select(col("idB").as("src"), col("idA").as("dst")))
       .distinct()
-    val edges = org.apache.spark.sql.graft.PlanBridge.flattenPlan(edgesRaw)
-      .persist(MEMORY_AND_DISK)
-    var labels = edges.select(col("src").as("id"))
+    val edges = s.cache(org.apache.spark.sql.graft.PlanBridge.flattenPlan(edgesRaw))
+    var labels = s.cache(edges.select(col("src").as("id"))
       .distinct()
-      .withColumn("component", col("id"))
-      .persist(MEMORY_AND_DISK)
+      .withColumn("component", col("id")))
     // Resource hygiene for deep iteration at scale: exactly one cached
     // label generation is live in steady state (the superseded one is
-    // unpersisted as soon as its successor is materialized), the
-    // convergence test rides the SAME action that materializes the new
-    // labels (one aggregate, no extra join+count pass), and an eager
-    // localCheckpoint every 3 rounds truncates the otherwise
-    // quadratically-deepening lineage.
-    val sc = pairs.sparkSession.sparkContext
-    var prevGen: DataFrame = labels
-    var prevCheckpointIds: Set[Int] = Set.empty
+    // freed as soon as its successor is materialized), the convergence
+    // test rides the SAME action that materializes the new labels (one
+    // aggregate, no extra join+count pass), and an eager checkpoint every
+    // 3 rounds truncates the otherwise quadratically-deepening lineage.
+    var prevGen: Option[DataFrame] = Some(labels)
+    var lastCheckpoint: Option[DataFrame] = None
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -447,39 +410,28 @@ object Dedup {
           Seq("dst"))
         .groupBy(col("src").as("id"))
         .agg(min(col("nbr_component")).as("min_nbr"))
-      val updated = labels.join(nbr, Seq("id"), "left")
+      val updated = s.cache(labels.join(nbr, Seq("id"), "left")
         .select(col("id"), col("component").as("__old"),
           least(col("component"), coalesce(col("min_nbr"), col("component")))
-            .as("component"))
-        .persist(MEMORY_AND_DISK)
+            .as("component")))
       // one action: materializes `updated` AND computes the convergence test
       val changed = updated
         .agg(count(when(col("component") =!= col("__old"), lit(1))).as("n"))
         .head().getLong(0)
-      prevGen.unpersist()
+      prevGen.foreach(s.free(_, blocking = false))
       if ((iter + 1) % 3 == 0) {
         // Truncate lineage. Ordering matters for recoverability: the
         // SUPERSEDED checkpoint is freed only after the new one is fully
-        // materialized (localCheckpoint(true) / checkpoint+count are eager),
-        // so no live generation ever lineage-depends on freed data.
-        // Reliable checkpoints (checkpointDir set) live on stable storage
-        // and are not in getPersistentRDDs — the id-based free is a no-op
-        // for them, and lost partitions re-read the checkpoint files.
-        val idsBefore = sc.getPersistentRDDs.keySet
-        labels =
-          if (sc.getCheckpointDir.isDefined) {
-            val cp = updated.select("id", "component").checkpoint(eager = true)
-            cp
-          } else updated.select("id", "component").localCheckpoint(true)
-        val newIds = (sc.getPersistentRDDs.keySet -- idsBefore).toSet
-        updated.unpersist()
-        prevCheckpointIds.foreach(id =>
-          sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-        prevCheckpointIds = newIds
-        prevGen = labels
+        // materialized (the checkpoint is eager), so no live generation
+        // ever lineage-depends on freed data.
+        labels = s.checkpoint(updated.select("id", "component"))
+        s.free(updated, blocking = false)
+        lastCheckpoint.foreach(s.free(_, blocking = false))
+        lastCheckpoint = Some(labels)
+        prevGen = None
       } else {
         labels = updated.select("id", "component")
-        prevGen = updated
+        prevGen = Some(updated)
       }
       converged = changed == 0
       iter += 1
@@ -490,30 +442,18 @@ object Dedup {
       System.err.println(s"[graft] connectedComponents: NOT converged after " +
         s"$maxIter iterations — labels are an upper approximation; raise maxIter " +
         "(near-dup cliques normally converge in 2-3 rounds)")
-    // Hand back a self-contained cached result and free EVERYTHING internal:
-    // the edge cache, the final generation's cache/checkpoint blocks.
-    val out0 = materializeAndFree(labels.select("id", "component"), edges)
-    // When the final generation IS a checkpoint, labels has no cache-manager
-    // entry and unpersisting it would instead evict `out0` (the
-    // re-projection canonicalizes to the same plan → sameResult match).
-    // Only the non-checkpoint case has a distinct cached plan (the __old
-    // column) to free.
+    // Materialize the final labels, then free the edge cache.
+    val out0 = s.materialize(labels.select("id", "component"))
+    s.free(edges)
     // PLAN truncation, not just RDD-lineage truncation: the label plan
     // after k un-checkpointed rounds is a ~2^k join tree over the full edge
     // pipeline, and every CONSUMER action re-analyzes/canonicalizes it —
     // measured ~30-40 DRIVER seconds per downstream action in the curation
     // pipeline while stages took milliseconds. Rebuild the result over the
-    // materialized rows (flat LogicalRDD), re-cache, then free the
-    // tree-shaped cache. Lineage stays correct: losing a cached partition
-    // re-executes the (uncached) upstream plan.
-    val out = org.apache.spark.sql.graft.PlanBridge.flattenPlan(out0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // copy the tiny (id, component) table into the flat cache
-    out0.unpersist(blocking = true)
-    if (prevGen ne labels) prevGen.unpersist(blocking = true)
-    prevCheckpointIds.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
-    out
+    // materialized rows (flat LogicalRDD) and cache that; the scope frees
+    // the tree-shaped cache and the last generation. Lineage stays correct:
+    // losing a cached partition re-executes the (uncached) upstream plan.
+    s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(out0))
   }
 
   /** End-to-end near-duplicate removal: find MinHash-LSH candidates above
@@ -521,24 +461,22 @@ object Dedup {
     * non-canonical duplicate (the minimum id of each cluster survives —
     * deterministic, partition-independent).
     *
-    * Cache contract: only the loser-id filter (size ∝ duplicates, not
-    * corpus) stays cached when this returns — every upstream intermediate
-    * (signatures, candidate pairs, component labels) is already freed. The
-    * returned frame is a lazy anti-join against that cached filter; after
-    * writing the result out, free it with `spark.catalog.clearCache()` (or
-    * compose the pieces yourself for finer control). */
+    * Eager, under the [[CacheScope]] rules: the result is cached, and
+    * every intermediate (signatures, candidate pairs, component labels,
+    * the loser-id filter) is freed. Compose the pieces yourself to keep
+    * the result lazy. */
   def dedupNearDuplicates(df: DataFrame, idCol: String, textCol: String,
                           threshold: Double = 0.8,
                           shingleSize: Int = 3, numHashes: Int = 64,
-                          bands: Int = 16, seed: Int = 42): DataFrame = {
+                          bands: Int = 16, seed: Int = 42): DataFrame = CacheScope { s =>
     val cands = minhashCandidates(df, idCol, textCol, shingleSize, numHashes, bands, seed)
     val comps = connectedComponents(
       cands.filter(col("jaccard_est") >= threshold)
         .select(col("idA"), col("idB")))
-    cands.unpersist(blocking = true) // comps is materialized (eager)
-    val losers = materializeAndFree(
-      comps.filter(col("id") =!= col("component")).select(col("id").as(idCol)),
-      comps)
+    s.free(cands) // comps is materialized (eager)
+    val losers = s.materialize(
+      comps.filter(col("id") =!= col("component")).select(col("id").as(idCol)))
+    s.free(comps)
     df.join(losers, Seq(idCol), "left_anti")
   }
 
@@ -548,21 +486,20 @@ object Dedup {
     * self-join). Both sides collapse to DISTINCT signatures before the
     * bipartite band join (boilerplate skew control, as in
     * [[minhashCandidates]]); only candidate signature pairs expand back to
-    * (newId, refId, jaccardEstimate). EAGER; the caller owns one
-    * unpersist(). */
+    * (newId, refId, jaccardEstimate). Eager, under the [[CacheScope]]
+    * rules. */
   def minhashCandidatesAgainst(newDf: DataFrame, refDf: DataFrame,
                                idCol: String, textCol: String,
                                shingleSize: Int = 3, numHashes: Int = 64,
-                               bands: Int = 16, seed: Int = 42): DataFrame = {
+                               bands: Int = 16, seed: Int = 42): DataFrame = CacheScope { s =>
     require(bands > 0 && numHashes % bands == 0,
       s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
     val rowsPerBand = numHashes / bands
-    def sigOf(df: DataFrame) = df
+    def sigOf(df: DataFrame) = s.cache(df
       .select(col(idCol).as("id"),
         graft.functions.expressions.MinHashExpression
           .minhashTokens(Text.tokens(col(textCol)), shingleSize, numHashes, seed.toLong)
-          .as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .as("sig")))
     val sigN = sigOf(newDf)
     val sigR = sigOf(refDf)
     // Same 128-bit surrogate-key discipline as [[minhashCandidates]]: the
@@ -578,10 +515,8 @@ object Dedup {
     def bucketed(dk: DataFrame, as: String) = dk
       .select(col("k").as(as),
         posexplode(lshBandKeys(col("sig"), bands, rowsPerBand)).as(Seq("band", "bucket")))
-    val dkN = distinctK(sigN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dkR = distinctK(sigR)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val dkN = s.cache(distinctK(sigN))
+    val dkR = s.cache(distinctK(sigR))
     val keyPairs = bucketed(dkN, "kN").join(bucketed(dkR, "kR"), Seq("band", "bucket"))
       .select(col("kN"), col("kR"))
       .distinct()
@@ -595,9 +530,8 @@ object Dedup {
       .select(col("kN"), col("kR"), col("jaccard_est"))
     val in = sigN.select(col("id").as("idNew"), key128(col("sig")).as("kN"))
     val ir = sigR.select(col("id").as("idRef"), key128(col("sig")).as("kR"))
-    val result = sigPairs.join(in, "kN").join(ir, "kR")
+    sigPairs.join(in, "kN").join(ir, "kR")
       .select(col("idNew"), col("idRef"), col("jaccard_est"))
-    materializeAndFree(result, sigN, sigR, dkN, dkR)
   }
 
   /** Quality-aware near-dedup: like [[dedupNearDuplicates]], but each
@@ -611,13 +545,13 @@ object Dedup {
   def dedupNearDuplicatesBy(df: DataFrame, idCol: String, textCol: String,
                             scoreCol: String, threshold: Double = 0.8,
                             shingleSize: Int = 3, numHashes: Int = 64,
-                            bands: Int = 16, seed: Int = 42): DataFrame = {
+                            bands: Int = 16, seed: Int = 42): DataFrame = CacheScope { s =>
     val cands = minhashCandidates(df, idCol, textCol, shingleSize, numHashes,
       bands, seed)
     val kept = keepBestByComponent(df, idCol, scoreCol,
       cands.filter(col("jaccard_est") >= threshold)
         .select(col("idA"), col("idB")))
-    cands.unpersist(blocking = true)
+    s.free(cands)
     kept
   }
 
@@ -626,25 +560,21 @@ object Dedup {
     * pairs, fuzzy-join output: cluster the pairs, keep each cluster's
     * argmax by `scoreCol` (ties to the smaller id; one struct-max
     * aggregate, no window), anti-join the rest away. Docs in no pair
-    * pass through untouched. EAGER with internal barriers freed; the
-    * caller owns ONE `unpersist()` on the returned frame. */
+    * pass through untouched. Eager, under the [[CacheScope]] rules. */
   def keepBestByComponent(df: DataFrame, idCol: String, scoreCol: String,
-                          pairs: DataFrame): DataFrame = {
+                          pairs: DataFrame): DataFrame = CacheScope { s =>
     val comps = connectedComponents(pairs)
     val scored = comps.join(
       df.select(col(idCol).as("id"), col(scoreCol).as("__sc")), Seq("id"))
     val winners = scored.groupBy(col("component"))
       .agg(max(struct(col("__sc"), (-col("id")).as("__nid"))).as("__w"))
       .select((-col("__w.__nid")).as("id"))
-    val losers = materializeAndFree(
+    val losers = s.materialize(
       comps.join(winners.withColumn("__win", lit(true)), Seq("id"), "left")
         .filter(col("__win").isNull)
-        .select(col("id").as(idCol)),
-      comps)
-    // materialize the RESULT and free the losers barrier here: the
-    // anti-join is a projection over it, so a caller's unpersist could
-    // never release it (the cache-plan-matching no-op)
-    materializeAndFree(df.join(losers, Seq(idCol), "left_anti"), losers)
+        .select(col("id").as(idCol)))
+    s.free(comps)
+    df.join(losers, Seq(idCol), "left_anti")
   }
 
   /** Persist a REUSABLE MinHash-LSH index of `df` at `path` — the
@@ -670,7 +600,7 @@ object Dedup {
   def writeMinhashIndex(df: DataFrame, idCol: String, textCol: String,
                         path: String, shingleSize: Int = 3,
                         numHashes: Int = 64, bands: Int = 16,
-                        seed: Int = 42): Unit = {
+                        seed: Int = 42): Unit = CacheScope.run { s =>
     require(bands > 0 && numHashes % bands == 0,
       s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
     val rowsPerBand = numHashes / bands
@@ -682,11 +612,10 @@ object Dedup {
     val pfs = paramsPath
       .getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     if (pfs.exists(paramsPath)) pfs.delete(paramsPath, false)
-    val sig = df.select(col(idCol).as("id"),
+    val sig = s.cache(df.select(col(idCol).as("id"),
       graft.functions.expressions.MinHashExpression
         .minhashTokens(Text.tokens(col(textCol)), shingleSize, numHashes,
-          seed.toLong).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          seed.toLong).as("sig")))
     sig.write.mode("overwrite").parquet(s"$path/sigs")
     // bands carry the 128-bit surrogate KEY, not the signature array
     // (layout 2): a probe's band join reads ~24 bytes per (band, sig)
@@ -700,7 +629,7 @@ object Dedup {
       .repartition(col("band"))
       .sortWithinPartitions(col("bucket"))
       .write.partitionBy("band").mode("overwrite").parquet(s"$path/bands")
-    sig.unpersist(blocking = true)
+    s.free(sig)
     val p = new org.apache.hadoop.fs.Path(path, "_params.json")
     val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
@@ -717,9 +646,9 @@ object Dedup {
     * signature pairs expand to (idNew, idRef, jaccard_est). The corpus
     * itself is never read — index probes cost batch-side work plus a
     * band-keyed join against the (distinct-signature × bands) table.
-    * EAGER; the caller owns one unpersist(). */
+    * Eager, under the [[CacheScope]] rules. */
   def minhashCandidatesAgainstIndex(newDf: DataFrame, path: String,
-                                    idCol: String, textCol: String): DataFrame = {
+                                    idCol: String, textCol: String): DataFrame = CacheScope { s =>
     val spark = newDf.sparkSession
     val p = new org.apache.hadoop.fs.Path(path, "_params.json")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -746,15 +675,13 @@ object Dedup {
     val layout = """"layout":(-?\d+)""".r.findFirstMatchIn(txt)
       .map(_.group(1).toInt).getOrElse(1)
     val rowsPerBand = numHashes / bands
-    val sigN = newDf.select(col(idCol).as("id"),
+    val sigN = s.cache(newDf.select(col(idCol).as("id"),
       graft.functions.expressions.MinHashExpression
         .minhashTokens(Text.tokens(col(textCol)), shingleSize, numHashes,
-          seed.toLong).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val result = if (layout >= 2) {
-      val dkN = sigN.select(col("sig")).distinct()
-        .select(sigKey128(col("sig")).as("kN"), col("sig").as("sigN"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          seed.toLong).as("sig")))
+    if (layout >= 2) {
+      val dkN = s.cache(sigN.select(col("sig")).distinct()
+        .select(sigKey128(col("sig")).as("kN"), col("sig").as("sigN")))
       val bandedN = dkN.select(col("kN"),
         posexplode(lshBandKeys(col("sigN"), bands, rowsPerBand))
           .as(Seq("band", "bucket")))
@@ -767,7 +694,7 @@ object Dedup {
         .select(col("id").as("idRef"), sigKey128(col("sig")).as("kR"),
           col("sig").as("sigR"))
       val in2 = sigN.select(col("id").as("idNew"), sigKey128(col("sig")).as("kN"))
-      val out = keyPairs
+      keyPairs
         .join(dkN.select(col("kN"), col("sigN")), "kN")
         .join(refSigs, "kR")
         .withColumn("jaccard_est",
@@ -776,7 +703,6 @@ object Dedup {
             .cast("double") / lit(numHashes))
         .join(in2, "kN")
         .select(col("idNew"), col("idRef"), col("jaccard_est"))
-      materializeAndFree(out, sigN, dkN)
     } else {
       val bandedN = sigN.select(col("sig")).distinct()
         .select(col("sig").as("sigN"),
@@ -794,10 +720,9 @@ object Dedup {
       val in2 = sigN.select(col("id").as("idNew"), col("sig").as("sigN"))
       val ir = spark.read.parquet(s"$path/sigs")
         .select(col("id").as("idRef"), col("sig").as("sigR"))
-      materializeAndFree(sigPairs.join(in2, "sigN").join(ir, "sigR")
-        .select(col("idNew"), col("idRef"), col("jaccard_est")), sigN)
+      sigPairs.join(in2, "sigN").join(ir, "sigR")
+        .select(col("idNew"), col("idRef"), col("jaccard_est"))
     }
-    result
   }
 
   /** Winnowing fingerprints (Schleimer et al. 2003, the MOSS scheme): the
@@ -819,8 +744,8 @@ object Dedup {
   /** Candidate pairs sharing ≥ `minShared` winnow fingerprints — documents
     * containing a common run of ≥ window+shingleSize−1 tokens are
     * GUARANTEED to pair (the winnowing property), at fingerprint-join cost
-    * instead of all-grams cost. Returns (idA, idB, n_shared). EAGER with
-    * internal barriers freed, like the other candidate generators.
+    * instead of all-grams cost. Returns (idA, idB, n_shared). Eager,
+    * under the [[CacheScope]] rules, like the other candidate generators.
     *
     * `maxDocFreq` guards the fingerprint self-join against corpus-wide
     * boilerplate: the join is QUADRATIC per fingerprint group, so one
@@ -838,33 +763,30 @@ object Dedup {
   def winnowCandidates(df: DataFrame, idCol: String, textCol: String,
                        shingleSize: Int = 6, window: Int = 8,
                        minShared: Int = 1, seed: Int = 42,
-                       maxDocFreq: Int = 1000): DataFrame = {
-    val fps = winnowFingerprints(df, idCol, textCol, shingleSize, window, seed)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                       maxDocFreq: Int = 1000): DataFrame = CacheScope { s =>
+    val fps = s.cache(
+      winnowFingerprints(df, idCol, textCol, shingleSize, window, seed))
     val ex = fps.select(col("id"), explode(col("fps")).as("fp"))
-    val (exKept, dfreqBarrier) = if (maxDocFreq > 0) {
+    val exKept = if (maxDocFreq > 0) {
       // fps are distinct per document (array_distinct upstream), so the
       // count per fp IS its document frequency. The df table is one row per
       // distinct fingerprint — the same small shape the join shuffles anyway.
-      val dfreq = ex.groupBy("fp").agg(count(lit(1)).as("__df"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val dfreq = s.cache(ex.groupBy("fp").agg(count(lit(1)).as("__df")))
       val nDropped = dfreq.filter(col("__df") > maxDocFreq).count()
       if (nDropped > 0)
         System.err.println(s"[graft] winnowCandidates: dropping $nDropped " +
           s"fingerprint(s) with document frequency > $maxDocFreq before the " +
           "pair join (corpus boilerplate; co-occurring documents still pair " +
           "via their other fingerprints). Raise maxDocFreq or pass 0 to keep them.")
-      (ex.join(dfreq.filter(col("__df") <= maxDocFreq), Seq("fp")).drop("__df"),
-        Seq(dfreq))
-    } else (ex, Seq.empty[DataFrame])
+      ex.join(dfreq.filter(col("__df") <= maxDocFreq), Seq("fp")).drop("__df")
+    } else ex
     val a = exKept.select(col("fp"), col("id").as("idA"))
     val b = exKept.select(col("fp"), col("id").as("idB"))
-    val result = a.join(b, Seq("fp"))
+    a.join(b, Seq("fp"))
       .filter(col("idA") < col("idB"))
       .groupBy(col("idA"), col("idB"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-    materializeAndFree(result, fps +: dfreqBarrier: _*)
   }
 
   /** POSITIONAL winnow fingerprints: one row per selected fingerprint with
@@ -905,8 +827,8 @@ object Dedup {
     * span merging is a per-(pair, offset) window function — no driver
     * logic, no all-pairs work.
     *
-    * Cost contract (measured, WinnowProbe over the 1×/10×/100× rehearsal
-    * replicas of sf0.1): wall time tracks the OUTPUT span count, not the
+    * Cost contract (measured over the 1×/10×/100× rehearsal replicas of
+    * sf0.1): wall time tracks the OUTPUT span count, not the
     * corpus size — 16.5k spans in 3.6 s (per-action floor), 1.46M in
     * 4.1 s, 41.3M in 33.9 s (0.8 µs/span; per-span cost FALLS with
     * scale). The rehearsal's steep 100× point is the corpus construction,
@@ -920,14 +842,13 @@ object Dedup {
                          shingleSize: Int = 6, window: Int = 8,
                          minShared: Int = 1, seed: Int = 42,
                          maxDocFreq: Int = 1000,
-                         maxGap: Int = 0): DataFrame = {
+                         maxGap: Int = 0): DataFrame = CacheScope { s =>
     val gap = if (maxGap > 0) maxGap else window + shingleSize
-    val fps = winnowFingerprintsPositional(df, idCol, textCol, shingleSize, window, seed)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (kept, dfreqBarrier) = if (maxDocFreq > 0) {
-      val dfreq = fps.groupBy("fp")
-        .agg(countDistinct(col("id")).as("__df"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fps = s.cache(
+      winnowFingerprintsPositional(df, idCol, textCol, shingleSize, window, seed))
+    val kept = if (maxDocFreq > 0) {
+      val dfreq = s.cache(fps.groupBy("fp")
+        .agg(countDistinct(col("id")).as("__df")))
       // same LOUD-drop contract as [[winnowCandidates]]: a span suppressed
       // by the boilerplate cap must never vanish silently
       val nDropped = dfreq.filter(col("__df") > maxDocFreq).count()
@@ -936,9 +857,8 @@ object Dedup {
           s"fingerprint(s) with document frequency > $maxDocFreq before the " +
           "span join (corpus boilerplate; spans held together only by these " +
           "fingerprints are suppressed). Raise maxDocFreq or pass 0 to keep them.")
-      (fps.join(dfreq.filter(col("__df") <= maxDocFreq), Seq("fp")).drop("__df"),
-        Seq(dfreq))
-    } else (fps, Seq.empty[DataFrame])
+      fps.join(dfreq.filter(col("__df") <= maxDocFreq), Seq("fp")).drop("__df")
+    } else fps
     val a = kept.select(col("fp"), col("id").as("idA"), col("pos").as("posA"))
     val b = kept.select(col("fp"), col("id").as("idB"), col("pos").as("posB"))
     val matches = a.join(b, Seq("fp"))
@@ -948,7 +868,7 @@ object Dedup {
     // jump exceeds the gap
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("idA"), col("idB"), col("off")).orderBy(col("posA"))
-    val spans = matches
+    matches
       .withColumn("__newSpan",
         when(col("posA") - lag(col("posA"), 1).over(w) > gap, 1)
           .otherwise(lit(0)))
@@ -962,7 +882,6 @@ object Dedup {
         count(lit(1)).as("n_fps"))
       .filter(col("n_fps") >= minShared)
       .select("idA", "idB", "startA", "endA", "startB", "endB", "n_fps")
-    materializeAndFree(spans, fps +: dfreqBarrier: _*)
   }
 
   /** N-gram Jaccard near-dup pairs within LSH-free small candidate sets:

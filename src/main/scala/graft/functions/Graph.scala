@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
-import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** Link-graph analytics for corpus curation. PageRank is the standard
   * page-quality prior for web-crawl filtering (a harvested link graph ranks
@@ -47,8 +46,7 @@ object Graph {
   /** PageRank over an edge list. Returns (node, rank) with rank in
     * massScale units (sums to ~massScale up to floor loss). `dampPct` is
     * the damping factor in integer percent (85 = the classic 0.85).
-    * EAGER: the result is materialized and all internal caches are freed;
-    * the caller owns one `unpersist()`. */
+    * Eager, under the [[CacheScope]] rules. */
   /** `iterPartitions`: shuffle-partition count for the iteration joins —
     * the rank/edge tables are usually far smaller than the corpus the
     * session is tuned for, and per-iteration latency is TASK overhead ×
@@ -76,26 +74,21 @@ object Graph {
 
   private def pageRankImpl(edges: DataFrame, srcCol: String, dstCol: String,
                            iterations: Int, massScale: Long,
-                           dampPct: Int): DataFrame = {
-    val e = org.apache.spark.sql.graft.PlanBridge.flattenPlan(
-        edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-      .persist(MEMORY_AND_DISK)
-    val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .persist(MEMORY_AND_DISK)
-    val edgesDeg = e.join(outDeg, Seq("src")).persist(MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .persist(MEMORY_AND_DISK)
+                           dampPct: Int): DataFrame = CacheScope { s =>
+    val e = s.cache(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
+        edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()))
+    val outDeg = s.cache(e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
+    val edgesDeg = s.cache(e.join(outDeg, Seq("src")))
+    val nodes = s.cache(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
     val n = nodes.count()
     require(n > 0, "pageRank: empty graph")
     val m0 = massScale / n
     val baseShare = (100L - dampPct) * m0 / 100L // exact Long floor, same as SQL
-    val sinks = nodes.join(outDeg.select(col("src").as("node")), Seq("node"),
-      "left_anti").persist(MEMORY_AND_DISK)
+    val sinks = s.cache(nodes.join(outDeg.select(col("src").as("node")), Seq("node"),
+      "left_anti"))
 
-    var ranks = nodes.select(col("node"), lit(m0).as("rank"))
-      .persist(MEMORY_AND_DISK)
-    ranks.count()
+    var ranks = s.materialize(nodes.select(col("node"), lit(m0).as("rank")))
     (1 to iterations).foreach { _ =>
       val inflow = edgesDeg
         .join(ranks.select(col("node").as("src"), col("rank")), Seq("src"))
@@ -106,18 +99,16 @@ object Graph {
       // not a separate driver collect per round
       val dang = broadcast(sinks.join(ranks, Seq("node"))
         .agg(intDiv(coalesce(sum(col("rank")), lit(0L)), lit(n)).as("__dang")))
-      val updated = org.apache.spark.sql.graft.PlanBridge.flattenPlan(
+      val updated = s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
           nodes.join(inflow, Seq("node"), "left").crossJoin(dang)
             .select(col("node"),
               (lit(baseShare) + intDiv(
                 lit(dampPct.toLong) * (coalesce(col("__s"), lit(0L)) + col("__dang")),
-                lit(100L))).as("rank")))
-        .persist(MEMORY_AND_DISK)
-      updated.count()
-      ranks.unpersist()
+                lit(100L))).as("rank"))))
+      s.free(ranks, blocking = false)
       ranks = updated
     }
-    Dedup.materializeAndFree(ranks, e, outDeg, edgesDeg, nodes, sinks)
+    ranks
   }
 
   /** Exact per-node triangle counts — the clustering-coefficient /
@@ -134,12 +125,11 @@ object Graph {
     * oracle may enumerate naively. Shuffles: the wedge self-join on the
     * oriented source + the closing edge join, both key-partitioned.
     * Returns (node, n_tri) for nodes in ≥1 triangle. */
-  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val und = edges
+  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = CacheScope { s =>
+    val und = s.cache(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .persist(MEMORY_AND_DISK)
+      .filter(col("a") =!= col("b")).distinct())
     val deg = und.select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     val withDeg = und
@@ -159,10 +149,9 @@ object Graph {
     val tri = wedges
       .join(o.select(col("u").as("v"), col("v").as("w")), Seq("v", "w"))
       .select(col("u"), col("v"), col("w"))
-    val result = tri
+    tri
       .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
-    Dedup.materializeAndFree(result, und)
   }
 
   /** Bounded-round k-core peeling (Seidman 1983's k-core by synchronous
@@ -177,8 +166,8 @@ object Graph {
     * Deterministic by construction (synchronous rounds, exact integer
     * degrees). Scale shape: one degree aggregate + two semi-joins per
     * round over the flattened cached edge generation; generations are
-    * flattened + materialized before freeing predecessors. EAGER; caller
-    * owns one `unpersist()`. Returns (node, deg) of survivors. */
+    * flattened + materialized before freeing predecessors. Eager, under
+    * the [[CacheScope]] rules. Returns (node, deg) of survivors. */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
             rounds: Int = 4, iterPartitions: Int = 0): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -189,29 +178,25 @@ object Graph {
   }
 
   private def kCoreImpl(edges: DataFrame, srcCol: String, dstCol: String,
-                        k: Int, rounds: Int): DataFrame = {
+                        k: Int, rounds: Int): DataFrame = CacheScope { s =>
     def degrees(e: DataFrame): DataFrame =
       e.select(explode(array(col("a"), col("b"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    var live = org.apache.spark.sql.graft.PlanBridge.flattenPlan(
+    var live = s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
         edges.select(least(col(srcCol), col(dstCol)).as("a"),
             greatest(col(srcCol), col(dstCol)).as("b"))
-          .filter(col("a") =!= col("b")).distinct())
-      .persist(MEMORY_AND_DISK)
-    live.count()
+          .filter(col("a") =!= col("b")).distinct()))
     (1 to rounds).foreach { _ =>
       val keep = degrees(live).filter(col("deg") >= k)
         .select(col("node"))
-      val next = org.apache.spark.sql.graft.PlanBridge.flattenPlan(
+      val next = s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
           live.join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
             .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
-            .select(col("a"), col("b")))
-        .persist(MEMORY_AND_DISK)
-      next.count()
-      live.unpersist()
+            .select(col("a"), col("b"))))
+      s.free(live, blocking = false)
       live = next
     }
-    Dedup.materializeAndFree(degrees(live), live)
+    degrees(live)
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) — community
@@ -231,7 +216,7 @@ object Graph {
     * one argmax aggregate per round over the flattened cached
     * both-direction edge list; each generation is flattened +
     * materialized before its predecessor is freed (the pageRank driver
-    * hygiene). EAGER; caller owns one `unpersist()`.
+    * hygiene). Eager, under the [[CacheScope]] rules.
     * Returns (node, community). */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iterations: Int = 4,
@@ -243,20 +228,15 @@ object Graph {
   }
 
   private def lpImpl(edges: DataFrame, srcCol: String, dstCol: String,
-                     iterations: Int): DataFrame = {
-    val und = org.apache.spark.sql.graft.PlanBridge.flattenPlan(
+                     iterations: Int): DataFrame = CacheScope { s =>
+    val und = s.cache(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
         edges.select(least(col(srcCol), col(dstCol)).as("a"),
             greatest(col(srcCol), col(dstCol)).as("b"))
-          .filter(col("a") =!= col("b")).distinct())
-      .persist(MEMORY_AND_DISK)
-    val dir = und.select(col("a").as("src"), col("b").as("dst"))
-      .union(und.select(col("b").as("src"), col("a").as("dst")))
-      .persist(MEMORY_AND_DISK)
-    val nodes = dir.select(col("src").as("node")).distinct()
-      .persist(MEMORY_AND_DISK)
-    var labels = nodes.select(col("node"), col("node").as("lbl"))
-      .persist(MEMORY_AND_DISK)
-    labels.count()
+          .filter(col("a") =!= col("b")).distinct()))
+    val dir = s.cache(und.select(col("a").as("src"), col("b").as("dst"))
+      .union(und.select(col("b").as("src"), col("a").as("dst"))))
+    val nodes = s.cache(dir.select(col("src").as("node")).distinct())
+    var labels = s.materialize(nodes.select(col("node"), col("node").as("lbl")))
     (1 to iterations).foreach { _ =>
       val votes = dir
         .join(labels.select(col("node").as("src"), col("lbl")), Seq("src"))
@@ -264,17 +244,14 @@ object Graph {
         .agg(count(lit(1)).as("n"))
       // argmax by (count desc, label asc): max(struct(n, −label)) — Long
       // negation is exact
-      val updated = org.apache.spark.sql.graft.PlanBridge.flattenPlan(
+      val updated = s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
           votes.groupBy(col("node"))
             .agg(max(struct(col("n").as("n"), (-col("lbl")).as("nl"))).as("m"))
-            .select(col("node"), (-col("m.nl")).as("lbl")))
-        .persist(MEMORY_AND_DISK)
-      updated.count()
-      labels.unpersist()
+            .select(col("node"), (-col("m.nl")).as("lbl"))))
+      s.free(labels, blocking = false)
       labels = updated
     }
-    val result = labels.select(col("node"), col("lbl").as("community"))
-    Dedup.materializeAndFree(result, und, dir, nodes, labels)
+    labels.select(col("node"), col("lbl").as("community"))
   }
 
   /** Personalized PageRank (the random surfer teleports to a SEED SET
@@ -287,7 +264,7 @@ object Graph {
     * so the fixpoint is engine/partitioning/order independent and
     * unrollable in SQL. Seeds absent from the graph simply contribute no
     * mass (identically in any engine). Scale shape identical to
-    * [[pageRank]]. EAGER; caller owns one `unpersist()`. */
+    * [[pageRank]]. Eager, under the [[CacheScope]] rules. */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            seeds: Seq[Long], iterations: Int = 8,
                            massScale: Long = 1000000000000L,
@@ -303,29 +280,23 @@ object Graph {
 
   private def pprImpl(edges: DataFrame, srcCol: String, dstCol: String,
                       seeds: Seq[Long], iterations: Int, massScale: Long,
-                      dampPct: Int): DataFrame = {
-    val e = org.apache.spark.sql.graft.PlanBridge.flattenPlan(
-        edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-      .persist(MEMORY_AND_DISK)
-    val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .persist(MEMORY_AND_DISK)
-    val edgesDeg = e.join(outDeg, Seq("src")).persist(MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
+                      dampPct: Int): DataFrame = CacheScope { s =>
+    val e = s.cache(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
+        edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()))
+    val outDeg = s.cache(e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
+    val edgesDeg = s.cache(e.join(outDeg, Seq("src")))
+    val nodes = s.cache(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-      .select(col("node"), col("node").isInCollection(seeds).as("__seed"))
-      .persist(MEMORY_AND_DISK)
+      .select(col("node"), col("node").isInCollection(seeds).as("__seed")))
     require(nodes.limit(1).count() > 0, "personalizedPageRank: empty graph")
     val nSeeds = seeds.length.toLong
     val m0 = massScale / nSeeds
     val seedShare = (100L - dampPct) * massScale / 100L / nSeeds
-    val sinks = nodes.select(col("node"))
-      .join(outDeg.select(col("src").as("node")), Seq("node"), "left_anti")
-      .persist(MEMORY_AND_DISK)
+    val sinks = s.cache(nodes.select(col("node"))
+      .join(outDeg.select(col("src").as("node")), Seq("node"), "left_anti"))
 
-    var ranks = nodes
-      .select(col("node"), when(col("__seed"), lit(m0)).otherwise(lit(0L)).as("rank"))
-      .persist(MEMORY_AND_DISK)
-    ranks.count()
+    var ranks = s.materialize(nodes
+      .select(col("node"), when(col("__seed"), lit(m0)).otherwise(lit(0L)).as("rank")))
     (1 to iterations).foreach { _ =>
       val inflow = edgesDeg
         .join(ranks.select(col("node").as("src"), col("rank")), Seq("src"))
@@ -333,7 +304,7 @@ object Graph {
         .groupBy(col("node")).agg(sum(col("__c")).as("__s"))
       val dang = broadcast(sinks.join(ranks, Seq("node"))
         .agg(coalesce(sum(col("rank")), lit(0L)).as("__dangTot")))
-      val updated = org.apache.spark.sql.graft.PlanBridge.flattenPlan(
+      val updated = s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
           nodes.join(inflow, Seq("node"), "left").crossJoin(dang)
             .select(col("node"),
               (when(col("__seed"), lit(seedShare)).otherwise(lit(0L)) +
@@ -342,13 +313,11 @@ object Graph {
                     when(col("__seed"),
                       intDiv(col("__dangTot"), lit(nSeeds)))
                       .otherwise(lit(0L))),
-                  lit(100L))).as("rank")))
-        .persist(MEMORY_AND_DISK)
-      updated.count()
-      ranks.unpersist()
+                  lit(100L))).as("rank"))))
+      s.free(ranks, blocking = false)
       ranks = updated
     }
-    Dedup.materializeAndFree(ranks, e, outDeg, edgesDeg, nodes, sinks)
+    ranks
   }
 
   /** HITS hubs & authorities (Kleinberg 1999, "Authoritative sources in a
@@ -372,7 +341,7 @@ object Graph {
     * partial-sum aggregates per iteration over the flattened cached edge
     * table, normalizers ride each generation as broadcast 1-row
     * aggregates, each generation flattened + materialized before its
-    * predecessor is freed. EAGER; the caller owns one `unpersist()`.
+    * predecessor is freed. Eager, under the [[CacheScope]] rules.
     * Returns (node, hub, auth) in massScale units. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iterations: Int = 8, massScale: Long = 1000000L,
@@ -385,13 +354,11 @@ object Graph {
   }
 
   private def hitsImpl(edges: DataFrame, srcCol: String, dstCol: String,
-                       iterations: Int, massScale: Long): DataFrame = {
-    val e = org.apache.spark.sql.graft.PlanBridge.flattenPlan(
-        edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-      .persist(MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .persist(MEMORY_AND_DISK)
+                       iterations: Int, massScale: Long): DataFrame = CacheScope { s =>
+    val e = s.cache(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
+        edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()))
+    val nodes = s.cache(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
     val n = nodes.count()
     require(n > 0, "hits: empty graph")
     require(massScale >= n,
@@ -408,18 +375,15 @@ object Graph {
       // x → (x · massScale) // max(Σx, 1); nodes without inflow score 0
       val tot = broadcast(raw.agg(
         greatest(coalesce(sum(col("__s")), lit(0L)), lit(1L)).as("__t")))
-      org.apache.spark.sql.graft.PlanBridge.flattenPlan(
+      s.cache(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
           nodes.join(raw, Seq("node"), "left").crossJoin(tot)
             .select(col("node"),
               intDiv(coalesce(col("__s"), lit(0L)) * lit(massScale),
-                col("__t")).as(outCol)))
-        .persist(MEMORY_AND_DISK)
+                col("__t")).as(outCol))))
     }
 
     val h0 = massScale / n
-    var hubs = nodes.select(col("node"), lit(h0).as("hub"))
-      .persist(MEMORY_AND_DISK)
-    hubs.count()
+    var hubs = s.materialize(nodes.select(col("node"), lit(h0).as("hub")))
     var auths: DataFrame = null
     (1 to iterations).foreach { _ =>
       val aRaw = e
@@ -431,7 +395,7 @@ object Graph {
       // aNew's lineage (aNew = f(hubs, e, nodes)) — one action per
       // iteration instead of two
       val aNew = renorm(aRaw, "auth")
-      if (auths != null) auths.unpersist()
+      if (auths != null) s.free(auths, blocking = false)
       auths = aNew
       val hRaw = e
         .join(auths.select(col("node").as("dst"), col("auth")), Seq("dst"))
@@ -439,10 +403,10 @@ object Graph {
         .groupBy(col("node")).agg(sum(col("__s")).as("__s"))
       val hNew = renorm(hRaw, "hub")
       hNew.count()
-      hubs.unpersist()
+      s.free(hubs, blocking = false)
       hubs = hNew
     }
-    Dedup.materializeAndFree(hubs.join(auths, Seq("node")), e, nodes, hubs, auths)
+    hubs.join(auths, Seq("node"))
   }
 
   /** Edge-WEIGHTED PageRank: rank flows in proportion to edge weight
@@ -468,39 +432,29 @@ object Graph {
 
   private def weightedPrImpl(edges: DataFrame, srcCol: String, dstCol: String,
                              weightCol: String, iterations: Int,
-                             massScale: Long, dampPct: Int): DataFrame = {
-    val e = org.apache.spark.sql.graft.PlanBridge.flattenPlan(
+                             massScale: Long, dampPct: Int): DataFrame = CacheScope { s =>
+    val e = s.cache(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
         edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
             col(weightCol).cast("long").as("w"))
-          .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w")))
-      .persist(MEMORY_AND_DISK)
-    // guard failures must release the edge barrier (refusal is not a leak)
-    try {
-      val badW = e.filter(col("w") <= 0).count()
-      require(badW == 0, s"weightedPageRank: $badW edge(s) with weight <= 0")
-      val maxW = e.agg(max(col("w"))).head().getLong(0)
-      require(maxW < Long.MaxValue / (2 * massScale),
-        s"weightedPageRank: massScale * maxWeight ($massScale * $maxW) risks " +
-          "Long overflow in the per-edge flow product; lower massScale")
-    } catch {
-      case t: Throwable => e.unpersist(blocking = true); throw t
-    }
-    val outW = e.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-      .persist(MEMORY_AND_DISK)
-    val edgesW = e.join(outW, Seq("src")).persist(MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .persist(MEMORY_AND_DISK)
+          .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))))
+    val badW = e.filter(col("w") <= 0).count()
+    require(badW == 0, s"weightedPageRank: $badW edge(s) with weight <= 0")
+    val maxW = e.agg(max(col("w"))).head().getLong(0)
+    require(maxW < Long.MaxValue / (2 * massScale),
+      s"weightedPageRank: massScale * maxWeight ($massScale * $maxW) risks " +
+        "Long overflow in the per-edge flow product; lower massScale")
+    val outW = s.cache(e.groupBy(col("src")).agg(sum(col("w")).as("ow")))
+    val edgesW = s.cache(e.join(outW, Seq("src")))
+    val nodes = s.cache(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
     val n = nodes.count()
     require(n > 0, "weightedPageRank: empty graph")
     val m0 = massScale / n
     val baseShare = (100L - dampPct) * m0 / 100L
-    val sinks = nodes.join(outW.select(col("src").as("node")), Seq("node"),
-      "left_anti").persist(MEMORY_AND_DISK)
+    val sinks = s.cache(nodes.join(outW.select(col("src").as("node")), Seq("node"),
+      "left_anti"))
 
-    var ranks = nodes.select(col("node"), lit(m0).as("rank"))
-      .persist(MEMORY_AND_DISK)
-    ranks.count()
+    var ranks = s.materialize(nodes.select(col("node"), lit(m0).as("rank")))
     (1 to iterations).foreach { _ =>
       val inflow = edgesW
         .join(ranks.select(col("node").as("src"), col("rank")), Seq("src"))
@@ -509,18 +463,16 @@ object Graph {
         .groupBy(col("node")).agg(sum(col("__c")).as("__s"))
       val dang = broadcast(sinks.join(ranks, Seq("node"))
         .agg(intDiv(coalesce(sum(col("rank")), lit(0L)), lit(n)).as("__dang")))
-      val updated = org.apache.spark.sql.graft.PlanBridge.flattenPlan(
+      val updated = s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
           nodes.join(inflow, Seq("node"), "left").crossJoin(dang)
             .select(col("node"),
               (lit(baseShare) + intDiv(
                 lit(dampPct.toLong) * (coalesce(col("__s"), lit(0L)) + col("__dang")),
-                lit(100L))).as("rank")))
-        .persist(MEMORY_AND_DISK)
-      updated.count()
-      ranks.unpersist()
+                lit(100L))).as("rank"))))
+      s.free(ranks, blocking = false)
       ranks = updated
     }
-    Dedup.materializeAndFree(ranks, e, outW, edgesW, nodes, sinks)
+    ranks
   }
 
   /** Multi-source BFS distances, bounded rounds: the minimum hop count
@@ -535,8 +487,8 @@ object Graph {
     * (join + min-aggregate) per round over the flattened cached edge
     * table; generations flatten + materialize before freeing their
     * predecessor (the pageRank hygiene); `iterPartitions` sizes the
-    * iteration shuffles to the frontier, not the session corpus. EAGER;
-    * caller owns one unpersist(). */
+    * iteration shuffles to the frontier, not the session corpus. Eager,
+    * under the [[CacheScope]] rules. */
   def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
                    seeds: Seq[Long], rounds: Int,
                    iterPartitions: Int = 0): DataFrame = {
@@ -548,31 +500,25 @@ object Graph {
   }
 
   private def bfsImpl(edges: DataFrame, srcCol: String, dstCol: String,
-                      seeds: Seq[Long], rounds: Int): DataFrame = {
+                      seeds: Seq[Long], rounds: Int): DataFrame = CacheScope { s =>
     import edges.sparkSession.implicits._
-    val e = org.apache.spark.sql.graft.PlanBridge.flattenPlan(
+    val e = s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
         edges.select(col(srcCol).cast("long").as("src"),
-          col(dstCol).cast("long").as("dst")).distinct())
-      .persist(MEMORY_AND_DISK)
-    e.count()
-    var dist = seeds.distinct.toDF("node")
-      .select(col("node"), lit(0L).as("dist"))
-      .persist(MEMORY_AND_DISK)
-    dist.count()
+          col(dstCol).cast("long").as("dst")).distinct()))
+    var dist = s.materialize(seeds.distinct.toDF("node")
+      .select(col("node"), lit(0L).as("dist")))
     (1 to rounds).foreach { _ =>
       val grown = dist
         .join(e, dist("node") === e("src"))
         .select(col("dst").as("node"), (col("dist") + 1L).as("dist"))
         .unionByName(dist)
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-      val next = org.apache.spark.sql.graft.PlanBridge.flattenPlan(grown)
-        .persist(MEMORY_AND_DISK)
-      next.count()
-      dist.unpersist(blocking = true)
+      val next = s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(grown))
+      s.free(dist)
       dist = next
     }
     // the final generation is already materialized + cached; free the edges
-    e.unpersist(blocking = true)
+    s.free(e)
     dist
   }
 
@@ -597,22 +543,20 @@ object Graph {
     * (never a global sort) with the rank window over k rows only.
     *
     * Returns the top `k` predicted links (a, b, aa_score, n_common, rank),
-    * a < b, existing edges excluded. EAGER with internal barriers freed;
-    * the caller owns one unpersist() on the result. */
+    * a < b, existing edges excluded. Eager, under the [[CacheScope]]
+    * rules. */
   def adamicAdar(edges: DataFrame, srcCol: String, dstCol: String,
-                 k: Int, maxDegree: Int = 10000): DataFrame = {
+                 k: Int, maxDegree: Int = 10000): DataFrame = CacheScope { s =>
     require(k > 0, s"adamicAdar: k must be positive, got $k")
     require(maxDegree >= 2, s"adamicAdar: maxDegree must be >= 2, got $maxDegree")
-    val und = edges
+    val und = s.cache(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .persist(MEMORY_AND_DISK)
+      .filter(col("a") =!= col("b")).distinct())
     // both-direction adjacency: z = intermediate, x = its neighbor
     val adj = und.select(col("a").as("z"), col("b").as("x"))
       .unionAll(und.select(col("b").as("z"), col("a").as("x")))
-    val deg = adj.groupBy(col("z")).agg(count(lit(1)).as("deg"))
-      .persist(MEMORY_AND_DISK)
+    val deg = s.cache(adj.groupBy(col("z")).agg(count(lit(1)).as("deg")))
     val nHubs = deg.filter(col("deg") > maxDegree).count()
     if (nHubs > 0) System.err.println(
       s"graft.Graph.adamicAdar: dropping $nHubs intermediate node(s) with " +
@@ -664,7 +608,6 @@ object Graph {
       .limit(k)
     val win = org.apache.spark.sql.expressions.Window
       .orderBy(col("aa_score").desc, col("a").asc, col("b").asc)
-    val result = top.withColumn("rank", row_number().over(win).cast(LongType))
-    Dedup.materializeAndFree(result, und, deg)
+    top.withColumn("rank", row_number().over(win).cast(LongType))
   }
 }

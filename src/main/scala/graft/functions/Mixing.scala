@@ -277,10 +277,10 @@ object Mixing {
     * All integer arithmetic; the kept set is a pure function of content.
     * Scale shape: bucket sizes are one tiny aggregate; M is a broadcast
     * 1-row frame (never collected); ranking is the distributed
-    * global-rank pass. Returns the kept rows plus (bucket_rank). EAGER
-    * (inherits the rank barrier); caller owns one unpersist(). */
+    * global-rank pass. Returns the kept rows plus (bucket_rank). Eager,
+    * under the [[CacheScope]] rules. */
   def matchDistribution(df: DataFrame, idCol: String, bucketCol: String,
-                        share: Column): DataFrame = {
+                        share: Column): DataFrame = CacheScope { _ =>
     // share must be CONSTANT per bucket: a within-bucket disagreement
     // splits the (bucket, __s) group, corrupting the global scale M and
     // every per-bucket quota SILENTLY. Probe the distinct pairs (bounded
@@ -306,14 +306,9 @@ object Mixing {
         .as("__m"))
     val ranked = graft.functions.Windowing.globalRowNumber(d,
       Seq(bucketCol), Seq("__h", idCol), outCol = "bucket_rank")
-    // EAGER + barrier-free: unpersisting a PROJECTION over the cached rank
-    // frame is a silent no-op (the cache manager matches plans), so the
-    // result must be materialized and the rank barrier freed here.
-    graft.functions.Dedup.materializeAndFree(
-      ranked.crossJoin(broadcast(m))
-        .filter(col("bucket_rank") <= col("__s") * col("__m"))
-        .drop("__s", "__h", "__m"),
-      ranked)
+    ranked.crossJoin(broadcast(m))
+      .filter(col("bucket_rank") <= col("__s") * col("__m"))
+      .drop("__s", "__h", "__m")
   }
 
   /** Deterministic weighted source interleave — the EPOCH SCHEDULE for a
@@ -333,10 +328,9 @@ object Mixing {
     * division compared identically in any engine, ties broken by
     * (source, id). `weight` must be a strictly-positive integer column
     * derived from the source (plan-stable). Returns df's columns plus
-    * (src_pos, epoch_pos). EAGER (inherits the rank barriers); caller
-    * owns one unpersist(). */
+    * (src_pos, epoch_pos). Eager, under the [[CacheScope]] rules. */
   def interleaveSources(df: DataFrame, idCol: String, srcCol: String,
-                        weight: Column): DataFrame = {
+                        weight: Column): DataFrame = CacheScope { _ =>
     val d = df.withColumn("__w", weight.cast("long"))
     // refuse non-positive weights loudly: w = 0 would send a source's
     // whole stream to the epoch tail ((2p−1)/0 = ∞) and w < 0 would
@@ -357,11 +351,7 @@ object Mixing {
       .withColumn("__g", lit("all"))
     val ranked = graft.functions.Windowing.globalRowNumber(keyed,
       Seq("__g"), Seq("__key", srcCol, idCol), outCol = "epoch_pos")
-    // EAGER + barrier-free: the returned frame is itself the cached one
-    // (unpersisting a PROJECTION over a cached frame is a cache-manager
-    // no-op), and both internal rank barriers are freed here.
-    graft.functions.Dedup.materializeAndFree(
-      ranked.drop("__w", "__h", "__key", "__g"), ranked, withPos)
+    ranked.drop("__w", "__h", "__key", "__g")
   }
 
   /** DSIR-style Gumbel top-k importance resampling (Xie et al. 2023,

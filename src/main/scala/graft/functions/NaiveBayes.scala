@@ -45,11 +45,9 @@ object NaiveBayes {
   /** Train on `df`'s (`labelCol`, `textCol`) pairs and classify every row,
     * returning (idCol, labelCol, pred, score, ok) — the true label, the
     * predicted label, the winning rounded log-score, and the match flag.
-    * EAGER with internal barriers freed; the caller owns one
-    * `unpersist()` on the result. */
+    * Eager, under the [[CacheScope]] rules. */
   def trainAndPredict(df: DataFrame, idCol: String, textCol: String,
-                      labelCol: String, logScale: Int = 6): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+                      labelCol: String, logScale: Int = 6): DataFrame = CacheScope { s =>
     // Spread: the tokenize pass below is the corpus pass; a single-file
     // scan otherwise fuses it into one task
     val base = Spread(df.select(col(idCol).as("__id"),
@@ -59,29 +57,18 @@ object NaiveBayes {
     // both training (class count table) and scoring consume it; the old
     // shape tokenized the corpus twice and scored one row per token
     // OCCURRENCE instead of per distinct (doc, token).
-    val dtf = base.select(col("__id"), col("__true"),
+    val dtf = s.cache(base.select(col("__id"), col("__true"),
         explode(Text.tokens(col("__text"))).as("token"))
       .groupBy(col("__id"), col("__true"), col("token"))
-      .agg(count(lit(1)).as("__n"))
-      .persist(lvl)
+      .agg(count(lit(1)).as("__n")))
 
     // Training: (class, token) occurrence counts — exact integers,
     // derived from the doc-level counts with map-side combine.
-    val cnt = dtf.groupBy(col("__true").as("label"), col("token"))
-      .agg(sum(col("__n")).as("__c"))
-      .persist(lvl)
-    // refusal (or a failed count) must not leak the persisted frames
-    val (vocab, totalDocs) = try {
-      val v = cnt.select(col("token")).distinct().count()
-      val t = base.count()
-      require(v > 0, "naive bayes training corpus has no tokens")
-      (v, t)
-    } catch {
-      case th: Throwable =>
-        cnt.unpersist(blocking = true)
-        dtf.unpersist(blocking = true)
-        throw th
-    }
+    val cnt = s.cache(dtf.groupBy(col("__true").as("label"), col("token"))
+      .agg(sum(col("__n")).as("__c")))
+    val vocab = cnt.select(col("token")).distinct().count()
+    val totalDocs = base.count()
+    require(vocab > 0, "naive bayes training corpus has no tokens")
 
     // Per-class stats: token mass + document count → k broadcastable rows.
     val labelStats = base.groupBy(col("__true").as("label"))
@@ -116,13 +103,12 @@ object NaiveBayes {
 
     // Argmax as max(struct(score, label)) — lexicographic max picks the
     // best score, ties the highest label. Single aggregate pass.
-    val result = scored
+    scored
       .groupBy(col("__id"), col("__true"))
       .agg(max(struct(col("__score"), col("label"))).as("__b"))
       .select(col("__id").as(idCol), col("__true").as(labelCol),
         col("__b.label").as("pred"),
         round(col("__b.__score").cast(DoubleType), 4).as("score"),
         (col("__b.label") === col("__true")).as("ok"))
-    Dedup.materializeAndFree(result, cnt, dtf)
   }
 }

@@ -105,37 +105,29 @@ object Similarity {
     * Returns (idCol, neighbor_id, cosine, rank). */
   def knnWithinGroups(df: DataFrame, groupCol: String, embCol: String,
                       idCol: String, k: Int, maxGroupSize: Int = 20000,
-                      outScale: Int = 6): DataFrame = {
+                      outScale: Int = 6): DataFrame = CacheScope { scope =>
     require(k >= 1, s"k must be >= 1, got $k")
     // Spread + persist: the interpreted quantize transform is the heavy
     // map pass and THREE consumers read it (the block-size guard and both
     // self-join legs) — uncached it re-ran per consumer, fused into a
     // one-task single-file scan (measured 1.2 s + 1.5 s single-task
-    // stages at bench shape). EAGER via materializeAndFree; the caller
-    // owns one unpersist() on the result.
+    // stages at bench shape).
     val s = array_max(transform(col("__emb"), x => abs(x.cast("double"))))
-    val codes = graft.functions.Spread(
+    val codes = scope.cache(graft.functions.Spread(
         df.select(col(groupCol).as("__grp"), col(idCol).as("__id"),
           col(embCol).as("__emb")))
       .select(col("__grp"), col("__id"),
         transform(col("__emb"), x =>
           when(s > 0, floor(x.cast("double") / s * 127 + 0.5))
             .otherwise(lit(0.0))).as("__codes"))
-      .withColumn("__n2", dot(col("__codes"), col("__codes")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // refusal must not leak the persisted frame (library callers catch
-    // the require and keep the session alive)
-    try {
-      val largest = codes.groupBy(col("__grp")).agg(count(lit(1)).as("n"))
-        .agg(max(col("n"))).head().getLong(0)
-      require(largest <= maxGroupSize,
-        s"knnWithinGroups: largest block holds $largest vectors (> " +
-          s"maxGroupSize=$maxGroupSize) — the within-block join is quadratic " +
-          "in that block. Use a finer blocking key (k-means clusters, LSH " +
-          "buckets) or raise maxGroupSize explicitly.")
-    } catch {
-      case t: Throwable => codes.unpersist(blocking = true); throw t
-    }
+      .withColumn("__n2", dot(col("__codes"), col("__codes"))))
+    val largest = codes.groupBy(col("__grp")).agg(count(lit(1)).as("n"))
+      .agg(max(col("n"))).head().getLong(0)
+    require(largest <= maxGroupSize,
+      s"knnWithinGroups: largest block holds $largest vectors (> " +
+        s"maxGroupSize=$maxGroupSize) — the within-block join is quadratic " +
+        "in that block. Use a finer blocking key (k-means clusters, LSH " +
+        "buckets) or raise maxGroupSize explicitly.")
     val a = codes.select(col("__grp"), col("__id").as("__ida"),
       col("__codes").as("__ca"), col("__n2").as("__n2a"))
     val b = codes.select(col("__grp"), col("__id").as("__idb"),
@@ -143,7 +135,7 @@ object Similarity {
     val den = sqrt(col("__n2a")) * sqrt(col("__n2b"))
     val cos = when(den > 0,
       round(dot(col("__ca"), col("__cb")) / den, outScale)).otherwise(lit(0.0))
-    val result = a.join(b, Seq("__grp"))
+    a.join(b, Seq("__grp"))
       .filter(col("__ida") =!= col("__idb"))
       .select(col("__ida"), col("__idb"), cos.as("cosine"))
       .groupBy(col("__ida"))
@@ -152,7 +144,6 @@ object Similarity {
       .select(col("__ida"), posexplode(col("__top")).as(Seq("__r", "__e")))
       .select(col("__ida").as(idCol), col("__e.id").as("neighbor_id"),
         col("__e.score").as("cosine"), (col("__r") + 1).cast("long").as("rank"))
-    Dedup.materializeAndFree(result, codes)
   }
 
   /** Mutual nearest neighbors: pairs whose top-1 same-block neighbors are
@@ -166,11 +157,7 @@ object Similarity {
     * Returns (id_a, id_b, cosine) with id_a < id_b. */
   def mutualNearestNeighbors(df: DataFrame, groupCol: String, embCol: String,
                              idCol: String,
-                             maxGroupSize: Int = 20000): DataFrame = {
-    // knnWithinGroups returns an EAGER cached frame (caller owns one
-    // unpersist): materialize the mutual pairs and free it here, so this
-    // operator honors the same caller-owns-one-unpersist contract instead
-    // of leaking the inner cache entry.
+                             maxGroupSize: Int = 20000): DataFrame = CacheScope { _ =>
     val knn = knnWithinGroups(df, groupCol, embCol, idCol, k = 1,
       maxGroupSize)
     val top = knn
@@ -178,10 +165,9 @@ object Similarity {
       .select(col(idCol).as("__v"), col("neighbor_id").as("__n"),
         col("cosine"))
     val rev = top.select(col("__n").as("__v"), col("__v").as("__n"))
-    val result = top.join(rev, Seq("__v", "__n"))
+    top.join(rev, Seq("__v", "__n"))
       .filter(col("__v") < col("__n"))
       .select(col("__v").as("id_a"), col("__n").as("id_b"), col("cosine"))
-    Dedup.materializeAndFree(result, knn)
   }
 
   /** Contrastive hard-pair mining (Schroff et al. 2015 FaceNet §3.2;
@@ -205,35 +191,28 @@ object Similarity {
     * (idCol, labelCol, neg_id, neg_cos, pos_id, pos_cos). */
   def hardPairs(df: DataFrame, blockCol: String, labelCol: String,
                 embCol: String, idCol: String,
-                maxBlockSize: Int = 20000, outScale: Int = 6): DataFrame = {
+                maxBlockSize: Int = 20000, outScale: Int = 6): DataFrame = CacheScope { scope =>
     // Spread + persist: same contract as [[knnWithinGroups]] — the
-    // quantize transform feeds the guard and both join legs. EAGER via
-    // materializeAndFree; the caller owns one unpersist() on the result.
+    // quantize transform feeds the guard and both join legs.
     val s = array_max(transform(col("__emb"), x => abs(x.cast("double"))))
-    val codes = graft.functions.Spread(
+    val codes = scope.cache(graft.functions.Spread(
         df.select(col(blockCol).as("__blk"), col(labelCol).as("__lab"),
           col(idCol).as("__id"), col(embCol).as("__emb")))
       .select(col("__blk"), col("__lab"), col("__id"),
         transform(col("__emb"), x =>
           when(s > 0, floor(x.cast("double") / s * 127 + 0.5))
             .otherwise(lit(0.0))).as("__codes"))
-      .withColumn("__n2", dot(col("__codes"), col("__codes")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__n2", dot(col("__codes"), col("__codes"))))
     // max(n) over an EMPTY input is NULL — getLong would NPE (the
     // ZOrder.stats failure class); an empty corpus has no blocks to bound.
-    // Refusal must not leak the persisted frame.
-    try {
-      val largestRow = codes.groupBy(col("__blk")).agg(count(lit(1)).as("n"))
-        .agg(max(col("n"))).head()
-      val largest = if (largestRow.isNullAt(0)) 0L else largestRow.getLong(0)
-      require(largest <= maxBlockSize,
-        s"hardPairs: largest block holds $largest vectors (> " +
-          s"maxBlockSize=$maxBlockSize) — the within-block join is quadratic " +
-          "in that block. Use a finer blocking key or raise maxBlockSize " +
-          "explicitly.")
-    } catch {
-      case t: Throwable => codes.unpersist(blocking = true); throw t
-    }
+    val largestRow = codes.groupBy(col("__blk")).agg(count(lit(1)).as("n"))
+      .agg(max(col("n"))).head()
+    val largest = if (largestRow.isNullAt(0)) 0L else largestRow.getLong(0)
+    require(largest <= maxBlockSize,
+      s"hardPairs: largest block holds $largest vectors (> " +
+        s"maxBlockSize=$maxBlockSize) — the within-block join is quadratic " +
+        "in that block. Use a finer blocking key or raise maxBlockSize " +
+        "explicitly.")
     val a = codes.select(col("__blk"), col("__id").as("__ida"),
       col("__lab").as("__laba"), col("__codes").as("__ca"),
       col("__n2").as("__n2a"))
@@ -243,7 +222,7 @@ object Similarity {
     val den = sqrt(col("__n2a")) * sqrt(col("__n2b"))
     val cos = when(den > 0,
       round(dot(col("__ca"), col("__cb")) / den, outScale)).otherwise(lit(0.0))
-    val result = a.join(b, Seq("__blk"))
+    a.join(b, Seq("__blk"))
       .filter(col("__ida") =!= col("__idb"))
       .select(col("__ida"), col("__laba"), col("__labb"), col("__idb"),
         cos.as("__cos"))
@@ -257,7 +236,6 @@ object Similarity {
       .select(col("__ida").as(idCol), col("__laba").as(labelCol),
         col("__neg.__idb").as("neg_id"), col("__neg.__cos").as("neg_cos"),
         col("__pos.__idb").as("pos_id"), col("__pos.__cos").as("pos_cos"))
-    Dedup.materializeAndFree(result, codes)
   }
 
   /** Engine-exact cosine scores against a literal query vector: per-element
@@ -510,96 +488,96 @@ object Similarity {
   def kmeans(df: DataFrame, embCol: String, idCol: String,
              k: Int, dim: Int, iters: Int = 5,
              trackInertia: Boolean = true,
-             init: String = "kmeans++"): (DataFrame, Array[Array[Double]], Seq[Double]) = {
-    import org.apache.spark.sql.types.DecimalType
+             init: String = "kmeans++"): (DataFrame, Array[Array[Double]], Seq[Double]) =
+    CacheScope.withFrame { scope =>
+      import org.apache.spark.sql.types.DecimalType
 
-    def distStructK(cs: Array[Array[Double]]): Column = distStruct(embCol, cs)
+      def distStructK(cs: Array[Array[Double]]): Column = distStruct(embCol, cs)
 
-    // ---- init: deterministic farthest-point k-means++ (or first-k by id)
-    var centroids: Array[Array[Double]] = init match {
-      case "first" =>
-        df.orderBy(col(idCol)).limit(k).select(col(embCol)).collect()
-          .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-      case _ =>
-        // Farthest-point selection over a deterministic hash-sample: ONE
-        // Spark job collects ~sampleSize candidate vectors (smallest md5
-        // buckets — partitioning-independent), then the k sequential argmax
-        // rounds run driver-side on the sample. k driver-side loops over a
-        // bounded sample instead of k cluster-wide jobs — the k-means||
-        // observation (Bahmani et al. 2012) that init needs a good sketch,
-        // not the full corpus, per round.
-        val sampleSize = math.max(k * 64, 1024)
-        val sample = df
-          .select(col(idCol), col(embCol),
-            conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10)
-              .cast("long").as("__b"))
-          .orderBy(col("__b").asc, col(idCol).asc)
-          .limit(sampleSize)
-          .select(col(idCol), col(embCol))
-          .collect()
-          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray.map(_.toDouble)))
-          .sortBy(_._1)
-        def d2(a: Array[Double], b: Array[Double]): Double = {
-          var s = 0.0; var i = 0
-          while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-          s
-        }
-        val picked = scala.collection.mutable.ArrayBuffer(sample.head._2)
-        val minD = sample.map(v => d2(v._2, picked.head)).toArray
-        while (picked.size < k) {
-          var best = 0
-          var i = 1
-          while (i < sample.length) { if (minD(i) > minD(best)) best = i; i += 1 }
-          picked += sample(best)._2
-          i = 0
-          while (i < sample.length) {
-            val d = d2(sample(i)._2, picked.last)
-            if (d < minD(i)) minD(i) = d
-            i += 1
+      // ---- init: deterministic farthest-point k-means++ (or first-k by id)
+      var centroids: Array[Array[Double]] = init match {
+        case "first" =>
+          df.orderBy(col(idCol)).limit(k).select(col(embCol)).collect()
+            .map(_.getSeq[Float](0).toArray.map(_.toDouble))
+        case _ =>
+          // Farthest-point selection over a deterministic hash-sample: ONE
+          // Spark job collects ~sampleSize candidate vectors (smallest md5
+          // buckets — partitioning-independent), then the k sequential argmax
+          // rounds run driver-side on the sample. k driver-side loops over a
+          // bounded sample instead of k cluster-wide jobs — the k-means||
+          // observation (Bahmani et al. 2012) that init needs a good sketch,
+          // not the full corpus, per round.
+          val sampleSize = math.max(k * 64, 1024)
+          val sample = df
+            .select(col(idCol), col(embCol),
+              conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10)
+                .cast("long").as("__b"))
+            .orderBy(col("__b").asc, col(idCol).asc)
+            .limit(sampleSize)
+            .select(col(idCol), col(embCol))
+            .collect()
+            .map(r => (r.getLong(0), r.getSeq[Float](1).toArray.map(_.toDouble)))
+            .sortBy(_._1)
+          def d2(a: Array[Double], b: Array[Double]): Double = {
+            var s = 0.0; var i = 0
+            while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
+            s
           }
-        }
-        picked.toArray
-    }
-    require(centroids.length == k, s"need at least $k vectors, got ${centroids.length}")
-
-    val inertias = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var converged = false
-    var iter = 0
-    while (iter < iters && !converged) {
-      val best = distStructK(centroids)
-      val assigned = df.select(col(idCol), col(embCol),
-        best.getField("c").as("cluster"),
-        (best.getField("d") + dot(col(embCol), col(embCol))).as("dist2"))
-      // one materialization per iteration serves both the centroid sums
-      // and the inertia aggregate
-      val cached = assigned
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // decimal-exact centroid sums: k×dim rows after the partial agg
-      val sums = cached
-        .select(col("cluster"), posexplode(col(embCol)).as(Seq("pos", "v")))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(sum(col("v").cast(DecimalType(28, 10))).as("s"), count(lit(1)).as("n"))
-        .collect()
-      val next = centroids.map(_.clone())
-      sums.foreach { r =>
-        val cl = r.getInt(0); val pos = r.getInt(1)
-        next(cl)(pos) = r.getDecimal(2).doubleValue() / r.getLong(3)
+          val picked = scala.collection.mutable.ArrayBuffer(sample.head._2)
+          val minD = sample.map(v => d2(v._2, picked.head)).toArray
+          while (picked.size < k) {
+            var best = 0
+            var i = 1
+            while (i < sample.length) { if (minD(i) > minD(best)) best = i; i += 1 }
+            picked += sample(best)._2
+            i = 0
+            while (i < sample.length) {
+              val d = d2(sample(i)._2, picked.last)
+              if (d < minD(i)) minD(i) = d
+              i += 1
+            }
+          }
+          picked.toArray
       }
-      if (trackInertia)
-        inertias += cached
-          .agg(sum(col("dist2").cast(DecimalType(28, 10)))).head().getDecimal(0).doubleValue()
-      cached.unpersist()
-      // early stop: unchanged centroids ⇒ assignments are a fixed point
-      converged = next.zip(centroids).forall { case (a, b) => a.sameElements(b) }
-      centroids = next
-      iter += 1
-    }
-    // final assignment pass against the RETURNED centroids — without it a
-    // point may sit nearer a different returned centroid than its label
-    val bestFinal = distStructK(centroids)
-    val finalAssign = df.select(col(idCol), bestFinal.getField("c").as("cluster"))
-    (finalAssign, centroids, inertias.toSeq)
-  }
+      require(centroids.length == k, s"need at least $k vectors, got ${centroids.length}")
+
+      val inertias = scala.collection.mutable.ArrayBuffer.empty[Double]
+      var converged = false
+      var iter = 0
+      while (iter < iters && !converged) {
+        val best = distStructK(centroids)
+        val assigned = df.select(col(idCol), col(embCol),
+          best.getField("c").as("cluster"),
+          (best.getField("d") + dot(col(embCol), col(embCol))).as("dist2"))
+        // one materialization per iteration serves both the centroid sums
+        // and the inertia aggregate
+        val cached = scope.cache(assigned)
+        // decimal-exact centroid sums: k×dim rows after the partial agg
+        val sums = cached
+          .select(col("cluster"), posexplode(col(embCol)).as(Seq("pos", "v")))
+          .groupBy(col("cluster"), col("pos"))
+          .agg(sum(col("v").cast(DecimalType(28, 10))).as("s"), count(lit(1)).as("n"))
+          .collect()
+        val next = centroids.map(_.clone())
+        sums.foreach { r =>
+          val cl = r.getInt(0); val pos = r.getInt(1)
+          next(cl)(pos) = r.getDecimal(2).doubleValue() / r.getLong(3)
+        }
+        if (trackInertia)
+          inertias += cached
+            .agg(sum(col("dist2").cast(DecimalType(28, 10)))).head().getDecimal(0).doubleValue()
+        scope.free(cached, blocking = false)
+        // early stop: unchanged centroids ⇒ assignments are a fixed point
+        converged = next.zip(centroids).forall { case (a, b) => a.sameElements(b) }
+        centroids = next
+        iter += 1
+      }
+      // final assignment pass against the RETURNED centroids — without it a
+      // point may sit nearer a different returned centroid than its label
+      val bestFinal = distStructK(centroids)
+      val finalAssign = df.select(col(idCol), bestFinal.getField("c").as("cluster"))
+      (finalAssign, centroids, inertias.toSeq)
+    }(_._1)
 
   /** Persist an IVF index: vectors written partitioned by their coarse list,
     * so a probe reads only `nprobe` partitions of a 100 TB index instead of

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, struct, xxhash64}
 
 /** Parallelism floor for compute-heavy fused map stages above narrow scans.
   *
@@ -29,24 +28,15 @@ object Spread {
     // Planned scan parallelism WITHOUT executing anything: for a bare scan
     // pipeline this is the file-split count; for an input that already
     // passes through an exchange (join/aggregate/repartition upstream) it
-    // is None — parallelism there is governed by shuffle partitions / AQE,
-    // and the old `df.rdd.getNumPartitions` probe finalized the adaptive
-    // plan, EXECUTING the upstream pipeline as throwaway jobs for any
-    // non-scan caller input.
+    // is None — parallelism there is governed by shuffle partitions / AQE.
     org.apache.spark.sql.graft.PlanBridge.scanParallelism(df) match {
       case Some(parts) if parts * 2 <= target =>
-        // HASH-repartition on a deterministic 64-bit key of the whole row,
-        // not round-robin: round-robin repartition first SORTS each input
-        // partition (spark.sql.execution.sortBeforeRepartition, on since
-        // SPARK-23207 so retried tasks reproduce their row-to-partition
-        // assignment) — on the one-task map stage this exchange exists to
-        // relieve, that sort serializes the whole input through one core
-        // twice. A row-content hash is deterministic under retry WITHOUT
-        // the sort (guide §2.5: derive synthetic keys deterministically),
-        // and spreads as evenly unless the input is dominated by one
-        // duplicate row — not a shape any call site has (ids are unique
-        // or near-unique in every Spread input).
-        df.repartition(target) /* AB-test roundrobin */
+        // Round-robin repartition to the session's default parallelism.
+        // Spark sorts each input partition before a round-robin exchange
+        // (spark.sql.execution.sortBeforeRepartition) so a retried task
+        // reproduces its row-to-partition assignment; that sort runs on
+        // the few input tasks this exchange exists to relieve.
+        df.repartition(target)
       case _ => df
     }
   }

@@ -104,15 +104,12 @@ object UnigramLm {
     * `outScale` decimals; lower is more fluent. `total` is always the FULL
     * reference token count, so in-vocab probabilities are true MLE
     * frequencies regardless of the vocabulary cap and OOV tokens get
-    * `oovCount`/total. EAGER with the internal frequency barrier freed
-    * (the dedup-operator cache contract): the result is materialized, the
-    * caller owns one `unpersist()`. */
+    * `oovCount`/total. Eager, under the [[CacheScope]] rules. */
   def score(df: DataFrame, reference: DataFrame,
             idCol: String, textCol: String,
             maxVocab: Int = 0, oovCount: Double = 0.5,
-            logScale: Int = 6, outScale: Int = 4): DataFrame = {
-    val freq = tokenFrequencies(reference, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            logScale: Int = 6, outScale: Int = 4): DataFrame = CacheScope { s =>
+    val freq = s.cache(tokenFrequencies(reference, textCol))
     val total = freq.agg(sum(col("cnt"))).head().getLong(0)
     require(total > 0, "unigram training corpus has no tokens")
     val freqSide =
@@ -134,7 +131,7 @@ object UnigramLm {
     // adjustPrecisionScale, which TRUNCATES the product's scale toward 6
     // and silently breaks the rounding contract at logScale > 6. 1e9
     // occurrences of one token in one document is far beyond any real doc.
-    val result = toks.join(freqSide, Seq("token"), "left")
+    toks.join(freqSide, Seq("token"), "left")
       .select(col("id"), col("__n"),
         (logp * col("__n").cast("decimal(9,0)")).as("__lp"))
       .groupBy("id")
@@ -142,7 +139,6 @@ object UnigramLm {
       .select(col("id").as(idCol), col("n_tokens"),
         pinnedMean("__sum", "n_tokens", logScale, outScale, negate = true)
           .as("xent"))
-    Dedup.materializeAndFree(result, freq)
   }
 
   /** DSIR-style importance weights (Xie et al. 2023, arXiv:2302.03169 —
@@ -170,15 +166,13 @@ object UnigramLm {
     * OOV tokens score as `oovCount` pseudo-occurrences over the FULL
     * distribution totals, `maxVocab` caps + broadcasts both vocabularies
     * (making the scoring pass shuffle-free on the frequency side), and the
-    * result is EAGER with internal barriers freed — the caller owns one
-    * `unpersist()`. */
+    * operator is eager, under the [[CacheScope]] rules. */
   def importanceWeights(df: DataFrame, target: DataFrame, raw: DataFrame,
                         idCol: String, textCol: String,
                         maxVocab: Int = 0, oovCount: Double = 0.5,
-                        logScale: Int = 12, outScale: Int = 4): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val ft = tokenFrequencies(target, textCol).persist(lvl)
-    val fr = tokenFrequencies(raw, textCol).persist(lvl)
+                        logScale: Int = 12, outScale: Int = 4): DataFrame = CacheScope { s =>
+    val ft = s.cache(tokenFrequencies(target, textCol))
+    val fr = s.cache(tokenFrequencies(raw, textCol))
     val totT = ft.agg(sum(col("cnt"))).head().getLong(0)
     val totR = fr.agg(sum(col("cnt"))).head().getLong(0)
     require(totT > 0, "importanceWeights: target corpus has no tokens")
@@ -199,7 +193,7 @@ object UnigramLm {
       log(coalesce(col("cnt_t").cast("double"), lit(oovCount)) / lit(totT.toDouble)) -
         log(coalesce(col("cnt_r").cast("double"), lit(oovCount)) / lit(totR.toDouble)),
       logScale).cast(s"decimal(28,$logScale)")
-    val result = toks
+    toks
       .join(side(ft, "cnt_t"), Seq("token"), "left")
       .join(side(fr, "cnt_r"), Seq("token"), "left")
       // DECIMAL(9,0): keeps product precision at 38 — see [[score]]; at
@@ -210,7 +204,6 @@ object UnigramLm {
       .agg(sum(col("__n")).as("n_tokens"), sum(col("__lr")).as("__sum"))
       .select(col("id").as(idCol), col("n_tokens"),
         pinnedMean("__sum", "n_tokens", logScale, outScale).as("logratio"))
-    Dedup.materializeAndFree(result, ft, fr)
   }
 
   /** Bigram LM scoring with stupid backoff (Brants et al. 2007, "Large
@@ -234,20 +227,19 @@ object UnigramLm {
     * with corpus diversity, not corpus size, and stays far below the
     * token stream (the 2007 paper served 300 GB of n-grams; here it is a
     * shuffle, there it was the whole serving system). Scoring is three
-    * equi-joins AQE is free to re-plan. EAGER with internal count
-    * barriers freed; the caller owns one `unpersist()`. */
+    * equi-joins AQE is free to re-plan. Eager, under the [[CacheScope]]
+    * rules. */
   def scoreBigram(df: DataFrame, reference: DataFrame,
                   idCol: String, textCol: String, alpha: Double = 0.4,
                   oovCount: Double = 0.5,
-                  logScale: Int = 6, outScale: Int = 4): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val uni = tokenFrequencies(reference, textCol).persist(lvl)
+                  logScale: Int = 6, outScale: Int = 4): DataFrame = CacheScope { s =>
+    val uni = s.cache(tokenFrequencies(reference, textCol))
     val total = uni.agg(sum(col("cnt"))).head().getLong(0)
     require(total > 0, "bigram training corpus has no tokens")
-    val bc = reference
+    val bc = s.cache(reference
       .select(explode(Text.bigrams(col(textCol))).as("__b"))
       .groupBy(col("__b.w1").as("w1"), col("__b.w2").as("w2"))
-      .agg(count(lit(1)).as("c2")).persist(lvl)
+      .agg(count(lit(1)).as("c2")))
 
     // OOV tokens score as `oovCount` pseudo-occurrences over the full
     // total, exactly like [[score]] — left joins, never dropped positions.
@@ -282,14 +274,13 @@ object UnigramLm {
           logScale).cast(s"decimal(28,$logScale)").as("__lp"),
         col("__k"))
 
-    val result = firsts.unionByName(pairs)
+    firsts.unionByName(pairs)
       .groupBy(col("id"))
       .agg(sum(col("__k")).as("n_tokens"),
         sum(col("__lp") * col("__k")).as("__sum"))
       .select(col("id").as(idCol), col("n_tokens"),
         pinnedMean("__sum", "n_tokens", logScale, outScale, negate = true)
           .as("xent2"))
-    Dedup.materializeAndFree(result, uni, bc)
   }
 
   /** Trigram LM with the FULL stupid-backoff chain (the shape Brants et
@@ -301,7 +292,7 @@ object UnigramLm {
     *
     * with the unigram first position and the bigram chain for position 2.
     * Everything else — decimal determinism, OOV pseudo-counts,
-    * distinct-gram collapse, EAGER barrier hygiene — is [[scoreBigram]]'s
+    * distinct-gram collapse, eager barrier hygiene — is [[scoreBigram]]'s
     * contract one order up; the trigram count table again grows with
     * corpus diversity, not size. (An annotate-the-count-tables join
     * reduction was tried and REJECTED by measurement: the trigram count
@@ -310,20 +301,19 @@ object UnigramLm {
   def scoreTrigram(df: DataFrame, reference: DataFrame,
                    idCol: String, textCol: String, alpha: Double = 0.4,
                    oovCount: Double = 0.5,
-                   logScale: Int = 6, outScale: Int = 4): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val uni = tokenFrequencies(reference, textCol).persist(lvl)
+                   logScale: Int = 6, outScale: Int = 4): DataFrame = CacheScope { s =>
+    val uni = s.cache(tokenFrequencies(reference, textCol))
     val total = uni.agg(sum(col("cnt"))).head().getLong(0)
     require(total > 0, "trigram training corpus has no tokens")
-    val bc = reference
+    val bc = s.cache(reference
       .select(explode(Text.bigrams(col(textCol))).as("__b"))
       .groupBy(col("__b.w1").as("w1"), col("__b.w2").as("w2"))
-      .agg(count(lit(1)).as("c2")).persist(lvl)
-    val tc = reference
+      .agg(count(lit(1)).as("c2")))
+    val tc = s.cache(reference
       .select(explode(Text.trigrams(col(textCol))).as("__t"))
       .groupBy(col("__t.w1").as("w1"), col("__t.w2").as("w2"),
         col("__t.w3").as("w3"))
-      .agg(count(lit(1)).as("c3")).persist(lvl)
+      .agg(count(lit(1)).as("c3")))
 
     def uniP(cnt: Column): Column =
       coalesce(cnt.cast("double"), lit(oovCount)) / lit(total.toDouble)
@@ -372,14 +362,13 @@ object UnigramLm {
               .otherwise(lit(alpha) * uniP(col("cw3"))))).as("__lp"),
         col("__k"))
 
-    val result = firsts.unionByName(seconds).unionByName(triples)
+    firsts.unionByName(seconds).unionByName(triples)
       .groupBy(col("id"))
       .agg(sum(col("__k")).as("n_tokens"),
         sum(col("__lp") * col("__k")).as("__sum"))
       .select(col("id").as(idCol), col("n_tokens"),
         pinnedMean("__sum", "n_tokens", logScale, outScale, negate = true)
           .as("xent3"))
-    Dedup.materializeAndFree(result, uni, bc, tc)
   }
 
   /** Interpolated Kneser-Ney bigram cross-entropy (Kneser & Ney 1995;
@@ -406,17 +395,16 @@ object UnigramLm {
     * (pair counts, context totals, fan-out, continuation fan-in, type
     * count) derive from the ONE pair-count table, which grows with corpus
     * diversity, not size; scoring joins are token/pair-keyed, never
-    * broadcast. EAGER with internal barriers freed; the caller owns one
-    * `unpersist()`. Returns (id, n_bigrams, kn_xent). */
+    * broadcast. Eager, under the [[CacheScope]] rules. Returns (id,
+    * n_bigrams, kn_xent). */
   def scoreKneserNey(df: DataFrame, reference: DataFrame,
                      idCol: String, textCol: String, discount: Double = 0.75,
                      oovCount: Double = 0.5,
-                     logScale: Int = 6, outScale: Int = 4): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val bc = reference
+                     logScale: Int = 6, outScale: Int = 4): DataFrame = CacheScope { s =>
+    val bc = s.cache(reference
       .select(explode(Text.bigrams(col(textCol))).as("__b"))
       .groupBy(col("__b.w1").as("w1"), col("__b.w2").as("w2"))
-      .agg(count(lit(1)).as("c2")).persist(lvl)
+      .agg(count(lit(1)).as("c2")))
     val tTypes = bc.count()
     require(tTypes > 0, "kneser-ney training corpus has no bigrams")
     val ctx = bc.groupBy(col("w1"))
@@ -431,7 +419,7 @@ object UnigramLm {
     val lp = round(log(when(col("c1").isNotNull, pSeen).otherwise(pc)), logScale)
       .cast(s"decimal(28,$logScale)")
 
-    val result = df.select(col(idCol).as("id"),
+    df.select(col(idCol).as("id"),
         explode(Text.bigrams(col(textCol))).as("__b"))
       .groupBy(col("id"), col("__b.w1").as("w1"), col("__b.w2").as("w2"))
       .agg(count(lit(1)).as("__k"))
@@ -445,6 +433,5 @@ object UnigramLm {
       .select(col("id").as(idCol), col("n_bigrams"),
         pinnedMean("__sum", "n_bigrams", logScale, outScale, negate = true)
           .as("kn_xent"))
-    Dedup.materializeAndFree(result, bc)
   }
 }

@@ -44,10 +44,6 @@ object Windowing {
   def globalRowNumber(df: DataFrame, groupCols: Seq[String],
                       orderCols: Seq[String], outCol: String = "rn",
                       numPartitions: Int = 0): DataFrame =
-    // the rename/drop happens INSIDE the rank pass so the returned frame
-    // IS the persisted one — an unpersist() on a projection over a cached
-    // frame is a cache-manager no-op (plans must match), and the EAGER
-    // caller-owns-one-unpersist contract would silently leak
     withRankAndCount(df, groupCols, orderCols, numPartitions,
       _.withColumnRenamed("__rn", outCol).drop("__gn"))
 
@@ -58,25 +54,21 @@ object Windowing {
     * [[globalRowNumber]] pass and predecessors attach via ONE
     * (group, rank−offset) equi-join, so a skewed group spans many bounded
     * tasks instead of serializing through a single window task. First
-    * `offset` rows of each group get nulls, as in SQL. EAGER (inherits
-    * the rank barrier); caller owns one unpersist(). */
+    * `offset` rows of each group get nulls, as in SQL. Eager, under the
+    * [[CacheScope]] rules. */
   def globalLag(df: DataFrame, groupCols: Seq[String], orderCols: Seq[String],
                 lagCols: Seq[String], offset: Int = 1,
-                numPartitions: Int = 0): DataFrame = {
+                numPartitions: Int = 0): DataFrame = CacheScope { _ =>
     require(offset >= 1, s"globalLag: offset must be >= 1, got $offset")
     require(lagCols.nonEmpty, "globalLag: no lag columns")
-    // hold the PERSISTED rank frame itself (a projection over it would not
-    // release the cache on unpersist — plans must match the cached entry)
-    val rankedP = withRankAndCount(df, groupCols, orderCols, numPartitions)
-    val ranked = rankedP.drop("__gn")
+    val ranked = withRankAndCount(df, groupCols, orderCols, numPartitions)
+      .drop("__gn")
     val prev = ranked.select(
       groupCols.map(col) ++ Seq((col("__rn") + offset).as("__rn")) ++
         lagCols.map(c => col(c).as(s"lag_$c")): _*)
-    val out = ranked.join(prev, groupCols :+ "__rn", "left")
+    // both join legs read the SAME cached rank barrier
+    ranked.join(prev, groupCols :+ "__rn", "left")
       .drop("__rn")
-    // both join legs read the SAME persisted rank barrier; materialize the
-    // result before freeing it (EAGER contract — caller owns one unpersist)
-    graft.functions.Dedup.materializeAndFree(out, rankedP)
   }
 
   /** 2-D Pareto frontier (skyline), both dimensions MAXIMIZED: rows not
@@ -173,16 +165,15 @@ object Windowing {
     * VALUE columns; `tieCols` only pins the underlying row order). */
   def globalRankDist(df: DataFrame, groupCols: Seq[String],
                      valueCols: Seq[String], tieCols: Seq[String],
-                     numPartitions: Int = 0): DataFrame = {
-    // the rank frame is consumed TWICE (value stats + final join), so hold
-    // the persisted frame itself and free it after the result materializes
+                     numPartitions: Int = 0): DataFrame = CacheScope { _ =>
+    // the rank frame is consumed TWICE (value stats + final join)
     val ranked = withRankAndCount(df, groupCols, valueCols ++ tieCols,
       numPartitions)
     val vg = groupCols ++ valueCols
     val vstats = ranked.groupBy(vg.map(col): _*)
       .agg(min(col("__rn")).as("rank"), count(lit(1)).as("__vc"))
     val dense = globalRowNumber(vstats, groupCols, valueCols, "dense_rank")
-    val out = ranked.join(dense, vg)
+    ranked.join(dense, vg)
       .withColumn("percent_rank",
         when(col("__gn") > 1,
           (col("rank") - 1).cast("double") / (col("__gn") - 1).cast("double"))
@@ -190,7 +181,6 @@ object Windowing {
       .withColumn("cume_dist",
         (col("rank") + col("__vc") - 1).cast("double") / col("__gn").cast("double"))
       .drop("__rn", "__gn", "__vc")
-    graft.functions.Dedup.materializeAndFree(out, ranked, dense)
   }
 
   /** Integer division on non-negative longs — exact past 2^53, where
@@ -215,17 +205,14 @@ object Windowing {
     * re-execute the range exchange with DIFFERENT sampled boundaries
     * (exchange reuse is not guaranteed, e.g. under an AQE-replanned
     * upstream join) and the assembled ranks silently corrupt. The result
-    * is EAGER (materialized, internal barrier freed — the dedup-operator
-    * cache contract); at scale the cache is output-sized and spills via
-    * MEMORY_AND_DISK, the price of a deterministic distributed rank. */
-  /** `finish` shapes the frame BEFORE it is persisted, so every public
-    * rank operator returns the cached frame ITSELF (not a projection over
-    * it — which unpersist() would silently fail to release). */
+    * is eager, under the [[CacheScope]] rules; at scale the cache is
+    * output-sized and spills via MEMORY_AND_DISK, the price of a
+    * deterministic distributed rank. `finish` shapes the result. */
   private def withRankAndCount(df: DataFrame, groupCols: Seq[String],
                                orderCols: Seq[String],
                                numPartitions: Int,
                                finish: DataFrame => DataFrame = identity)
-      : DataFrame = {
+      : DataFrame = CacheScope { s =>
     require(groupCols.nonEmpty && orderCols.nonEmpty,
       "groupCols and orderCols must be non-empty")
     val spark = df.sparkSession
@@ -233,11 +220,10 @@ object Windowing {
       if (numPartitions > 0) numPartitions
       else spark.conf.get("spark.sql.shuffle.partitions").toInt
     val keys: Seq[Column] = (groupCols ++ orderCols).map(col)
-    val ranged = df.repartitionByRange(parts, keys: _*)
+    val ranged = s.cache(df.repartitionByRange(parts, keys: _*)
       .sortWithinPartitions(keys: _*)
       .withColumn("__pid", spark_partition_id())
-      .withColumn("__mid", monotonically_increasing_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__mid", monotonically_increasing_id()))
     // Metadata-sized slice stats; the offset window runs over
     // groups × partitions rows, never the data.
     val gCols = groupCols.map(col)
@@ -253,6 +239,6 @@ object Windowing {
     val out = ranged.join(broadcast(offsets), groupCols :+ "__pid")
       .withColumn("__rn", col("__mid") - col("__mmin") + 1 + col("__off"))
       .drop("__pid", "__mid", "__mmin", "__off")
-    graft.functions.Dedup.materializeAndFree(finish(out), ranged)
+    finish(out)
   }
 }

@@ -1263,7 +1263,7 @@ object CsvWriter {
       }.toMap
       graft.sources.StarTableSource.FileStats(
         raw, p.getName, r.getLong(1 + dataCols.size * 3), stats)
-    }.sortBy(s => (s.partition.map(v => if (v == null) "" else v).mkString(" "),
+    }.sortBy(s => (s.partition.map(v => if (v == null) "" else v).mkString("\u0000"),
       s.file))
   }
 
@@ -1415,7 +1415,7 @@ object CsvWriter {
     import JsonValue._
     def optStr(s: String): JsonValue = if (s == null) JsonNull else JsonString(s)
     def tuplesJson(ts: Set[Seq[String]]): JsonValue = JsonArray(ts.toVector
-      .sortBy(_.map(v => if (v == null) "" else v).mkString(" "))
+      .sortBy(_.map(v => if (v == null) "" else v).mkString("\u0000"))
       .map(t => JsonArray(t.toVector.map(optStr))))
     val intentJson = JsonValue.write(JsonObject(scala.collection.immutable.ListMap(
       "holder" -> JsonString(handle.info.token),

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.CacheScope
+
 /** Bloom-prefiltered semi/anti joins — the cross-size join shape: probe a
   * 100 TB fact table against a GB-scale key set WITHOUT shuffling the
   * misses. A bloom filter over the build side's distinct keys ships as a
@@ -20,13 +22,12 @@ import org.apache.spark.sql.functions._
   */
 object BloomJoin {
 
-  private def mightContain(build: DataFrame, buildKey: String,
+  private def mightContain(s: CacheScope, build: DataFrame, buildKey: String,
                            probeKey: Column, expectedKeys: Long,
                            fpp: Double): (Column, DataFrame) = {
     import org.apache.spark.sql.graft.ColumnBridge
-    val keys = build.select(col(buildKey).as("__bk"))
-      .filter(col("__bk").isNotNull).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val keys = s.cache(build.select(col(buildKey).as("__bk"))
+      .filter(col("__bk").isNotNull).distinct())
     val bloom = keys.stat.bloomFilter("__bk", expectedKeys, fpp)
     val bytes = {
       val bos = new java.io.ByteArrayOutputStream()
@@ -42,32 +43,29 @@ object BloomJoin {
   }
 
   /** `probe LEFT SEMI JOIN build ON probe(probeKey) = build(buildKey)`,
-    * bloom-prefiltered map-side. EAGER (internal key barrier freed);
-    * caller owns one unpersist(). */
+    * bloom-prefiltered map-side. Eager, under the [[CacheScope]] rules. */
   def bloomSemiJoin(probe: DataFrame, build: DataFrame, probeKey: String,
                     buildKey: String, expectedKeys: Long = 1000000L,
-                    fpp: Double = 0.01): DataFrame = {
-    val (mc, keys) = mightContain(build, buildKey, col(probeKey),
+                    fpp: Double = 0.01): DataFrame = CacheScope { s =>
+    val (mc, keys) = mightContain(s, build, buildKey, col(probeKey),
       expectedKeys, fpp)
-    val out = probe.filter(col(probeKey).isNotNull).filter(mc)
+    probe.filter(col(probeKey).isNotNull).filter(mc)
       .join(keys, probe(probeKey) === keys("__bk"), "left_semi")
-    graft.functions.Dedup.materializeAndFree(out, keys)
   }
 
   /** `probe LEFT ANTI JOIN build ...`, bloom-accelerated: bloom-negative
     * rows keep WITHOUT any join (no false negatives ⇒ provably absent);
     * only the bloom-positive sliver exact-anti-joins. Null probe keys
-    * keep, matching SQL anti-join semantics. EAGER; caller owns one
-    * unpersist(). */
+    * keep, matching SQL anti-join semantics. Eager, under the
+    * [[CacheScope]] rules. */
   def bloomAntiJoin(probe: DataFrame, build: DataFrame, probeKey: String,
                     buildKey: String, expectedKeys: Long = 1000000L,
-                    fpp: Double = 0.01): DataFrame = {
-    val (mc, keys) = mightContain(build, buildKey, col(probeKey),
+                    fpp: Double = 0.01): DataFrame = CacheScope { s =>
+    val (mc, keys) = mightContain(s, build, buildKey, col(probeKey),
       expectedKeys, fpp)
     val definiteMiss = probe.filter(col(probeKey).isNull || !mc)
     val checked = probe.filter(col(probeKey).isNotNull).filter(mc)
       .join(keys, probe(probeKey) === keys("__bk"), "left_anti")
-    val out = definiteMiss.unionByName(checked)
-    graft.functions.Dedup.materializeAndFree(out, keys)
+    definiteMiss.unionByName(checked)
   }
 }

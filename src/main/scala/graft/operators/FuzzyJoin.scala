@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.CacheScope
+
 /** Approximate string self-join: all pairs within Levenshtein distance 1,
   * without the quadratic cross product — entity/near-key resolution over
   * name-like columns (typo'd identifiers, OCR'd labels, URL slugs).
@@ -43,41 +45,33 @@ object FuzzyJoin {
     * (one groupBy into per-key arrays, pairs enumerated narrow) instead of
     * a two-sided self-join, so each input string crosses the wire once. */
   def editDistance1Pairs(df: DataFrame, idCol: String, strCol: String,
-                         maxBucketSize: Long = 10000L): DataFrame = {
+                         maxBucketSize: Long = 10000L): DataFrame = CacheScope { scope =>
     // Spread + persist: the deletion-neighborhood explode (len+1 hashed
     // keys per string) is the operator's heavy map pass, and BOTH the
     // hot-bucket guard and the blocking aggregate consume it — uncached
     // it ran twice (measured 1.55 s + 2.31 s at bench shape on a 3-task
     // scan while 29 cores idled). The guard still aggregates COUNTS
     // first, so a degenerate corpus refuses before any oversized
-    // collect_list buffer is built. EAGER via materializeAndFree below;
-    // the caller owns one unpersist() on the result.
-    val keyed = graft.functions
+    // collect_list buffer is built.
+    val keyed = scope.cache(graft.functions
       .Spread(df.select(col(idCol).as("__id"), col(strCol).as("__s")))
       .filter(col("__s").isNotNull)
       .select(col("__id"), col("__s"),
         explode(deletionKeys(col("__s"))).as("__kraw"))
-      .select(col("__id"), col("__s"), xxhash64(col("__kraw")).as("__k"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // refusal must not leak the persisted frame (library callers catch
-    // the require and keep the session alive)
-    try {
-      val hot = keyed.groupBy(col("__k")).agg(count(lit(1)).as("__n"))
-        .filter(col("__n") > maxBucketSize)
-        .limit(1).collect()
-      require(hot.isEmpty,
-        s"editDistance1Pairs: a deletion-key bucket holds ${hot.headOption
-          .map(_.getLong(1)).getOrElse(0L)} strings, exceeding " +
-          s"maxBucketSize=$maxBucketSize — template-generated strings would " +
-          "make the block join quadratic; pre-segment the input or raise " +
-          "the cap explicitly")
-    } catch {
-      case t: Throwable => keyed.unpersist(blocking = true); throw t
-    }
+      .select(col("__id"), col("__s"), xxhash64(col("__kraw")).as("__k")))
+    val hot = keyed.groupBy(col("__k")).agg(count(lit(1)).as("__n"))
+      .filter(col("__n") > maxBucketSize)
+      .limit(1).collect()
+    require(hot.isEmpty,
+      s"editDistance1Pairs: a deletion-key bucket holds ${hot.headOption
+        .map(_.getLong(1)).getOrElse(0L)} strings, exceeding " +
+        s"maxBucketSize=$maxBucketSize — template-generated strings would " +
+        "make the block join quadratic; pre-segment the input or raise " +
+        "the cap explicitly")
     val buckets = keyed.groupBy(col("__k"))
       .agg(collect_list(struct(col("__id"), col("__s"))).as("xs"))
       .filter(size(col("xs")) >= 2)
-    val result = buckets
+    buckets
       .select(posexplode(col("xs")).as(Seq("__i", "ra")), col("xs"))
       .select(col("ra"),
         explode(expr("slice(xs, __i + 2, size(xs))")).as("rb"))
@@ -93,7 +87,6 @@ object FuzzyJoin {
       .filter(levenshtein(col("s_a"), col("s_b")) <= 1)
       .select(col("id_a"), col("id_b"),
         levenshtein(col("s_a"), col("s_b")).as("dist"))
-    graft.functions.Dedup.materializeAndFree(result, keyed)
   }
 
   /** Blocked Jaro-Winkler similarity self-join — the classic entity-

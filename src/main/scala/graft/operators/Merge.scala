@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.CacheScope
+
 /** SCD-1 upsert: apply a change batch to a snapshot by key — the
   * incremental-maintenance primitive for a continuously-updated corpus
   * (re-crawled documents replace their old rows, new documents insert,
@@ -188,7 +190,7 @@ object Merge {
     * view. */
   def maintainAggregate(agg: DataFrame, changes: DataFrame,
                         keyCols: Seq[String], valueCols: Seq[String],
-                        opCol: String = "op"): DataFrame = {
+                        opCol: String = "op"): DataFrame = CacheScope { s =>
     val sgn = when(col(opCol) === "D", lit(-1L))
       .when(col(opCol) === "I", lit(1L))
     val delta = changes
@@ -207,19 +209,16 @@ object Merge {
             coalesce(col(s"__d_${v}_sum"), lit(0).cast("decimal(28,2)")))
             .cast("decimal(28,2)").as(s"${v}_sum")
         }: _*)
-    // EAGER with one internal barrier: the merge join runs ONCE for both
-    // the corruption check and the result; caller owns one unpersist().
-    val barrier = merged.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // one internal barrier: the merge join runs ONCE for both the
+    // corruption check and the result
+    val barrier = s.cache(merged)
     val negatives = barrier.filter(col("n") < 0).count()
-    if (negatives > 0L) {
-      barrier.unpersist(blocking = true)
+    if (negatives > 0L)
       throw new IllegalArgumentException(
         s"maintainAggregate: $negatives group(s) would reach a NEGATIVE row " +
           "count — the change batch deletes rows the aggregate never saw. " +
           "Refusing to produce a corrupt view.")
-    }
-    graft.functions.Dedup.materializeAndFree(
-      barrier.filter(col("n") > 0), barrier)
+    barrier.filter(col("n") > 0)
   }
 
   /** Snapshot diff — derive the change feed BETWEEN two table versions:

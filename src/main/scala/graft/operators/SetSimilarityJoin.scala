@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Dedup
+import graft.functions.CacheScope
 
 /** Exact thresholded set-similarity self-join via prefix filtering
   * (AllPairs: Bayardo, Ma, Srikant, WWW 2007; prefix+length filters of
@@ -38,8 +38,8 @@ import graft.functions.Dedup
   * length filter keeps a 1e-6 slack, so FP can only ADMIT spurious
   * candidates (removed by exact verification), never drop a true pair.
   *
-  * EAGER (guard + materialization actions); internal barriers freed, the
-  * caller owns one `unpersist()` of the result.
+  * Eager (guard + materialization actions), under the
+  * [[graft.functions.CacheScope]] rules.
   */
 object SetSimilarityJoin {
 
@@ -48,21 +48,19 @@ object SetSimilarityJoin {
     * array column; duplicates within a document are collapsed. */
   def jaccardPairs(df: DataFrame, idCol: String, tokensCol: String,
                    threshold: Double,
-                   maxBucketSize: Long = 100000L): DataFrame = {
+                   maxBucketSize: Long = 100000L): DataFrame = CacheScope { scope =>
     require(threshold > 0.0 && threshold <= 1.0,
       s"jaccardPairs: threshold must be in (0, 1], got $threshold")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
     // Token arrays are kept LEXICOGRAPHICALLY SORTED so the verification
     // step can count overlap with a zero-allocation two-pointer merge
     // ([[graft.functions.expressions.SortedOverlap]]) instead of
     // size(array_intersect(...)), which allocates a hash set + an
     // intersection array per candidate pair — at bench shape ~1.9 M pairs.
-    val docs = graft.functions.Spread(df.select(col(idCol), col(tokensCol)))
+    val docs = scope.cache(graft.functions.Spread(df.select(col(idCol), col(tokensCol)))
       .select(col(idCol).as("__id"),
         array_sort(array_distinct(col(tokensCol))).as("__toks"))
-      .filter(size(col("__toks")) > 0)
-      .persist(lvl)
+      .filter(size(col("__toks")) > 0))
 
     // Canonical order: (document frequency asc, token asc) — rarest first.
     val tok = docs.select(col("__id"), explode(col("__toks")).as("__t"))
@@ -78,29 +76,20 @@ object SetSimilarityJoin {
     val prefLen = least(
       col("__n") - floor(lit(threshold) * col("__n")).cast("int") + 1,
       col("__n"))
-    val pref = ordered
+    val pref = scope.cache(ordered
       .select(col("__id"), col("__n"),
         posexplode(slice(col("__ord"), lit(1), prefLen)))
       .select(col("__id"), col("__n"), (col("pos") + 1).as("__p"),
-        col("col").as("__t"))
-      .persist(lvl)
+        col("col").as("__t")))
 
-    // refusal must not leak the persisted frames
-    try {
-      val hot = pref.groupBy("__t").agg(count(lit(1)).as("__c"))
-        .filter(col("__c") > maxBucketSize).limit(1).collect()
-      require(hot.isEmpty,
-        s"jaccardPairs: prefix-token posting list for '${hot.headOption
-          .map(_.getString(0)).getOrElse("")}' exceeds maxBucketSize=$maxBucketSize — " +
-          "the corpus is dominated by near-identical template documents and the " +
-          "index join would be quadratic; dedup exactly first or raise the cap " +
-          "explicitly")
-    } catch {
-      case t: Throwable =>
-        pref.unpersist(blocking = true)
-        docs.unpersist(blocking = true)
-        throw t
-    }
+    val hot = pref.groupBy("__t").agg(count(lit(1)).as("__c"))
+      .filter(col("__c") > maxBucketSize).limit(1).collect()
+    require(hot.isEmpty,
+      s"jaccardPairs: prefix-token posting list for '${hot.headOption
+        .map(_.getString(0)).getOrElse("")}' exceeds maxBucketSize=$maxBucketSize — " +
+        "the corpus is dominated by near-identical template documents and the " +
+        "index join would be quadratic; dedup exactly first or raise the cap " +
+        "explicitly")
 
     val a = pref.select(col("__t"), col("__id").as("id_a"),
       col("__n").as("n_a"), col("__p").as("p_a"))
@@ -126,7 +115,7 @@ object SetSimilarityJoin {
     val overlap = graft.functions.expressions.SortedOverlap
       .sortedOverlapCount(col("__ta"), col("__tb"))
     val union = col("__na") + col("__nb") - col("overlap")
-    val result = cands
+    cands
       .join(ta.withColumn("__na", size(col("__ta"))), Seq("id_a"))
       .join(tb.withColumn("__nb", size(col("__tb"))), Seq("id_b"))
       .withColumn("overlap", overlap)
@@ -136,7 +125,6 @@ object SetSimilarityJoin {
       // oracle contract is BIGINT — keep the hashed representation uniform
       .select(col("id_a"), col("id_b"),
         col("overlap").cast("long").as("overlap"), col("jac"))
-    Dedup.materializeAndFree(result, docs, pref)
   }
 
   /** Exact thresholded set-CONTAINMENT join: all DIRECTED pairs
@@ -157,22 +145,20 @@ object SetSimilarityJoin {
     * before exact verification; FP slack can only ADMIT, never drop.
     *
     * Determinism: overlap and |A| are exact integers, containment one IEEE
-    * division — bit-identical cross-engine. EAGER; caller owns one
-    * `unpersist()`. */
+    * division — bit-identical cross-engine. Eager, under the
+    * [[graft.functions.CacheScope]] rules. */
   def containmentPairs(df: DataFrame, idCol: String, tokensCol: String,
                        threshold: Double,
                        maxBucketSize: Long = 100000L,
-                       maxJoinRows: Long = 50000000L): DataFrame = {
+                       maxJoinRows: Long = 50000000L): DataFrame = CacheScope { scope =>
     require(threshold > 0.0 && threshold <= 1.0,
       s"containmentPairs: threshold must be in (0, 1], got $threshold")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
     // sorted for the merge-count verification (see jaccardPairs)
-    val docs = graft.functions.Spread(df.select(col(idCol), col(tokensCol)))
+    val docs = scope.cache(graft.functions.Spread(df.select(col(idCol), col(tokensCol)))
       .select(col(idCol).as("__id"),
         array_sort(array_distinct(col(tokensCol))).as("__toks"))
-      .filter(size(col("__toks")) > 0)
-      .persist(lvl)
+      .filter(size(col("__toks")) > 0))
     val tok = docs.select(col("__id"), explode(col("__toks")).as("__t"))
     val dfreq = tok.groupBy("__t").agg(count(lit(1)).as("__df"))
     val ordered = tok.join(dfreq, "__t")
@@ -183,30 +169,17 @@ object SetSimilarityJoin {
         size(col("__st")).as("__n"))
 
     // build side: the full inverted index with canonical positions
-    val full = ordered
+    val full = scope.cache(ordered
       .select(col("__id"), col("__n"), posexplode(col("__ord")))
       .select(col("__id"), col("__n"), (col("pos") + 1).as("__p"),
-        col("col").as("__t"))
-      .persist(lvl)
-    val fullCounts = full.groupBy("__t").agg(count(lit(1)).as("__c"))
-      .persist(lvl)
-    // refusal must not leak the persisted frames (both guards below)
-    def freeOnRefusal[T](body: => T): T =
-      try body catch {
-        case t: Throwable =>
-          fullCounts.unpersist(blocking = true)
-          full.unpersist(blocking = true)
-          docs.unpersist(blocking = true)
-          throw t
-      }
-    freeOnRefusal {
-      val hot = fullCounts.filter(col("__c") > maxBucketSize).limit(1).collect()
-      require(hot.isEmpty,
-        s"containmentPairs: posting list for '${hot.headOption
-          .map(_.getString(0)).getOrElse("")}' exceeds maxBucketSize=$maxBucketSize — " +
-          "drop corpus-wide stopwords/boilerplate tokens first or raise the " +
-          "cap explicitly")
-    }
+        col("col").as("__t")))
+    val fullCounts = scope.cache(full.groupBy("__t").agg(count(lit(1)).as("__c")))
+    val hot = fullCounts.filter(col("__c") > maxBucketSize).limit(1).collect()
+    require(hot.isEmpty,
+      s"containmentPairs: posting list for '${hot.headOption
+        .map(_.getString(0)).getOrElse("")}' exceeds maxBucketSize=$maxBucketSize — " +
+        "drop corpus-wide stopwords/boilerplate tokens first or raise the " +
+        "cap explicitly")
 
     // probe side: A's prefix only (robust length, clamped)
     val prefLen = least(
@@ -226,17 +199,15 @@ object SetSimilarityJoin {
     // vocabulary made 5k docs produce 12.7M genuinely-contained pairs —
     // and no filtering can shrink genuine output; refuse loudly instead
     // of grinding.
-    freeOnRefusal {
-      val est = pref.join(fullCounts, Seq("__t"))
-        .agg(coalesce(sum(col("__c")), lit(0L))).head().getLong(0)
-      require(est <= maxJoinRows,
-        s"containmentPairs: estimated candidate join volume $est exceeds " +
-          s"maxJoinRows=$maxJoinRows — the corpus's vocabulary is small " +
-          "relative to its document count, so the genuine containment output " +
-          "is near-quadratic. Raise the threshold, pre-block the corpus " +
-          "(e.g. by near-dup cluster), or raise maxJoinRows explicitly")
-    }
-    fullCounts.unpersist(blocking = true)
+    val est = pref.join(fullCounts, Seq("__t"))
+      .agg(coalesce(sum(col("__c")), lit(0L))).head().getLong(0)
+    require(est <= maxJoinRows,
+      s"containmentPairs: estimated candidate join volume $est exceeds " +
+        s"maxJoinRows=$maxJoinRows — the corpus's vocabulary is small " +
+        "relative to its document count, so the genuine containment output " +
+        "is near-quadratic. Raise the threshold, pre-block the corpus " +
+        "(e.g. by near-dup cluster), or raise maxJoinRows explicitly")
+    scope.free(fullCounts)
 
     val alpha = ceil(lit(threshold) * col("n_a") - lit(1e-6))
     val ubound = least(col("p_a") - 1, col("p_b") - 1) + 1 +
@@ -251,7 +222,7 @@ object SetSimilarityJoin {
 
     val ta = docs.select(col("__id").as("id_a"), col("__toks").as("__ta"))
     val tb = docs.select(col("__id").as("id_b"), col("__toks").as("__tb"))
-    val result = cands
+    cands
       .join(ta.withColumn("n_a", size(col("__ta"))), Seq("id_a"))
       .join(tb, Seq("id_b"))
       .withColumn("overlap", graft.functions.expressions.SortedOverlap
@@ -259,6 +230,5 @@ object SetSimilarityJoin {
       .withColumn("containment", col("overlap").cast("double") / col("n_a"))
       .filter(col("containment") >= threshold)
       .select(col("id_a"), col("id_b"), col("overlap"), col("containment"))
-    Dedup.materializeAndFree(result, docs, full)
   }
 }

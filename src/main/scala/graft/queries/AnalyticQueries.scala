@@ -169,7 +169,6 @@ object AnalyticQueries {
     // oracle. One shuffle per iteration; edge table flattened + cached.
     "q_pagerank" -> ((s, dir) => {
       val edges = linkEdges(s, dir)
-      // returned still cached (EAGER contract; the bench sweeps barriers);
       // iteration shuffles sized to the small rank table, not the session
       graft.functions.Graph.pageRank(edges, "src", "dst", iterations = 8,
         iterPartitions = 8)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.functions.{NaiveBayes, Similarity, Text, UnigramLm}
+import graft.functions.{CacheScope, NaiveBayes, Similarity, Text, UnigramLm}
 import Tables.star
 
 /** Trained-model operators over the documents corpus: classifiers and
@@ -105,7 +105,7 @@ object ModelQueries {
     // ranking needs no floating-point tolerance at all. Per-label sum
     // vectors are a (labels × dim)-sized broadcast; per-vector work is
     // two fused codegen dot products; ranking on the distributed rank.
-    "q_emb_outliers" -> ((s, dir) => {
+    "q_emb_outliers" -> ((s, dir) => CacheScope { scope =>
       val emb = star(s, dir, "embeddings").df
       val sc = array_max(transform(col("embedding"),
         x => abs(x.cast("double"))))
@@ -113,13 +113,12 @@ object ModelQueries {
       // consumers (sum vectors, counts, the scoring join) and otherwise
       // re-runs per consumer inside a one-task single-file scan
       // (measured 2.7 s + 1.1 s single-task stages at bench shape)
-      val codes = graft.functions.Spread(
+      val codes = scope.cache(graft.functions.Spread(
           emb.select(col("label"), col("vec_id"), col("embedding")))
         .select(col("label"), col("vec_id"),
           transform(col("embedding"), x =>
             when(sc > 0, floor(x.cast("double") / sc * 127 + 0.5))
-              .otherwise(lit(0.0))).as("codes"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              .otherwise(lit(0.0))).as("codes")))
       val svecs = codes
         .select(col("label"), posexplode(col("codes")).as(Seq("pos", "v")))
         .groupBy(col("label"), col("pos")).agg(sum(col("v")).as("sv"))
@@ -131,7 +130,7 @@ object ModelQueries {
           Similarity.dot(col("codes"), col("codes"))
         - lit(2.0) * col("n") * Similarity.dot(col("codes"), col("svec"))
         + Similarity.dot(col("svec"), col("svec"))).as("d2n2")
-      val out = codes
+      codes
         .join(broadcast(svecs), Seq("label"))
         .join(broadcast(counts), Seq("label"))
         .select(col("label"), col("vec_id"), score)
@@ -144,7 +143,6 @@ object ModelQueries {
         .select(col("label"), col("__e.id").as("vec_id"),
           col("__e.score").as("d2n2"),
           (col("__r") + 1).cast("long").as("rank"))
-      graft.functions.Dedup.materializeAndFree(out, codes)
     }),
 
     // Rendezvous (highest-random-weight) sharding: every document's
@@ -171,7 +169,7 @@ object ModelQueries {
     // and full-outer-joined token-keyed; each token's contribution
     // p·ln(p/q) is one IEEE chain rounded then DECIMAL-summed, so the
     // single-number divergence hash-matches.
-    "q_split_drift" -> ((s, dir) => {
+    "q_split_drift" -> ((s, dir) => CacheScope { scope =>
       val docs = star(s, dir, "documents").df
       val bucket = graft.functions.Decontamination.hashBucket(col("doc_id"))
       def counts(lo: Int, hi: Int) = docs
@@ -180,21 +178,19 @@ object ModelQueries {
         .groupBy(col("token")).agg(count(lit(1)).as("c"))
       val p = counts(0, 80).withColumnRenamed("c", "cp")
       val q = counts(80, 100).withColumnRenamed("c", "cq")
-      val joined = p.join(q, Seq("token"), "full_outer")
+      val joined = scope.cache(p.join(q, Seq("token"), "full_outer")
         .select(col("token"), coalesce(col("cp"), lit(0L)).as("cp"),
-          coalesce(col("cq"), lit(0L)).as("cq"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          coalesce(col("cq"), lit(0L)).as("cq")))
       val tot = joined.agg(sum(col("cp")), sum(col("cq")), count(lit(1))).head()
       val (np, nq, v) = (tot.getLong(0), tot.getLong(1), tot.getLong(2))
       val pProb = (col("cp").cast(DoubleType) + 0.5) / (np + 0.5 * v)
       val qProb = (col("cq").cast(DoubleType) + 0.5) / (nq + 0.5 * v)
       val term = round(pProb * log(pProb / qProb), 9)
         .cast(org.apache.spark.sql.types.DecimalType(28, 9))
-      val out = joined
+      joined
         .agg(sum(term).as("__kl"), count(lit(1)).as("n_vocab"))
         .select(lit(np).as("n_train_tokens"), lit(nq).as("n_val_tokens"),
           col("n_vocab"), round(col("__kl").cast(DoubleType), 6).as("kl"))
-      graft.functions.Dedup.materializeAndFree(out, joined)
     }),
 
     // Token burstiness (Church & Gale 1995): variance-to-mean ratio of a

@@ -297,7 +297,7 @@ private[sources] class StarTableScanBuilder(fullSchema: StructType,
             // no GROUP BY was pushed); deterministic group order
             val groups: Seq[(Seq[String], Seq[Seq[String]])] =
               parts.groupBy(p => groupIdx.map(p(_))).toSeq
-                .sortBy(_._1.map(v => if (v == null) " " else v)
+                .sortBy(_._1.map(v => if (v == null) "\u0000" else v)
                   .mkString(""))
             val rows: Seq[Option[Array[Any]]] = groups.map { case (key, gp) =>
               val keyVals: Seq[Option[Any]] =

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.functions.CacheScope
+
 /** Structured Streaming surface over the `events` table.
   *
   * The reference has no event-time streaming (SURVEY §2.7) — this is the
@@ -269,25 +271,20 @@ object EventStreams {
     * micro-batched. Each generation is plan-flattened and materialized
     * before its predecessor is freed (constant plan size and live cache
     * over an unbounded stream — the iterative-operator hygiene contract).
-    * Returns the final snapshot, cached; the caller owns one unpersist. */
+    * Returns the final snapshot; eager, under the [[CacheScope]] rules. */
   def streamingUpsert(spark: SparkSession, changes: DataFrame,
                       initial: DataFrame, keyCols: Seq[String],
-                      deleteCol: Option[String] = None): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var snapshot = org.apache.spark.sql.graft.PlanBridge
-      .flattenPlan(initial.select(initial.columns.map(col): _*))
-      .persist(MEMORY_AND_DISK)
-    snapshot.count()
+                      deleteCol: Option[String] = None): DataFrame = CacheScope { s =>
+    var snapshot = s.materialize(org.apache.spark.sql.graft.PlanBridge
+      .flattenPlan(initial.select(initial.columns.map(col): _*)))
     val name = "graft_upsert_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val ckpt = scratchCheckpointDir(name)
     try {
       val q = changes.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val merged = org.apache.spark.sql.graft.PlanBridge.flattenPlan(
-              graft.operators.Merge.upsert(snapshot, batch, keyCols, deleteCol))
-            .persist(MEMORY_AND_DISK)
-          merged.count()
-          snapshot.unpersist()
+          val merged = s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
+              graft.operators.Merge.upsert(snapshot, batch, keyCols, deleteCol)))
+          s.free(snapshot, blocking = false)
           snapshot = merged
         }
         .option("checkpointLocation", ckpt)
@@ -307,33 +304,32 @@ object EventStreams {
     * equals the batch [[graft.operators.Merge.maintainAggregate]] over
     * the whole feed bit for bit. Generation hygiene as
     * [[streamingUpsert]]: flatten + materialize, then free the
-    * predecessor. Returns the final view, cached; caller owns one
-    * unpersist. */
+    * predecessor. Returns the final view; eager, under the [[CacheScope]]
+    * rules. */
   def streamingAggMaintain(spark: SparkSession, changes: DataFrame,
                            initial: DataFrame, keyCols: Seq[String],
                            valueCols: Seq[String],
-                           opCol: String = "op"): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var view = org.apache.spark.sql.graft.PlanBridge
-      .flattenPlan(initial.select(initial.columns.map(col): _*))
-      .persist(MEMORY_AND_DISK)
-    view.count()
+                           opCol: String = "op"): DataFrame = CacheScope { s =>
+    var view = s.materialize(org.apache.spark.sql.graft.PlanBridge
+      .flattenPlan(initial.select(initial.columns.map(col): _*)))
     val name = "graft_aggmaint_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val ckpt = scratchCheckpointDir(name)
     try {
       val q = changes.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          // maintainAggregate is EAGER (returns its own cached frame):
-          // flatten + materialize the generation, then free BOTH the
-          // inner eager frame and the predecessor generation
-          val inner = graft.operators.Merge.maintainAggregate(
-            view, batch, keyCols, valueCols, opCol)
-          val merged = org.apache.spark.sql.graft.PlanBridge
-            .flattenPlan(inner).persist(MEMORY_AND_DISK)
-          merged.count()
-          inner.unpersist()
-          view.unpersist()
-          view = merged
+          // the batch runs on the stream's thread: enter the scope so the
+          // eager maintainAggregate hands its result here; flatten +
+          // materialize the generation, then free the inner frame and the
+          // predecessor generation
+          s.enter {
+            val inner = graft.operators.Merge.maintainAggregate(
+              view, batch, keyCols, valueCols, opCol)
+            val merged = s.materialize(
+              org.apache.spark.sql.graft.PlanBridge.flattenPlan(inner))
+            s.free(inner, blocking = false)
+            s.free(view, blocking = false)
+            view = merged
+          }
         }
         .option("checkpointLocation", ckpt)
         .start()

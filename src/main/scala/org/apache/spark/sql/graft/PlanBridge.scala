@@ -1,6 +1,9 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Bridge to `internalCreateDataFrame` (package `org.apache.spark.sql`
   * visibility): rebuilds a DataFrame over the physical rows of an existing
@@ -35,24 +38,76 @@ object PlanBridge {
   /** Planned parallelism of a bare scan pipeline, WITHOUT executing any
     * upstream stage.
     *
-    * Returns Some(partition count) when `df`'s physical plan is
+    * Returns Some(partition count) when `df`'s prepared physical plan is
     * exchange-free — a scan pipeline, possibly under projections, filters
     * or unions — in which case building the plan's RDD only enumerates the
-    * planned input splits (no job runs, with or without AQE: adaptive
-    * execution materializes query STAGES, and stages exist only at
-    * exchanges). Returns None when the plan already contains an exchange:
-    * there the downstream parallelism is governed by shuffle partitions /
-    * AQE anyway, and probing it via `df.rdd` would finalize the adaptive
-    * plan and EXECUTE every upstream shuffle stage as a throwaway job —
-    * an arbitrary caller-supplied input would pay its whole pipeline
-    * twice. */
+    * planned input splits (no job runs: adaptive execution materializes
+    * query STAGES, and stages exist only at exchanges). Returns None when
+    * the plan contains an exchange, explicit (repartition) or implicit (the
+    * shuffles EnsureRequirements adds under aggregates, joins, sorts and
+    * windows): there the downstream parallelism is governed by shuffle
+    * partitions / AQE anyway, and building the RDD would finalize the
+    * adaptive plan and EXECUTE every upstream shuffle stage as a throwaway
+    * job. The probe reads the prepared plan (`executedPlan`, or the
+    * adaptive plan's initial plan, which already carries the exchanges);
+    * the planner's `sparkPlan` predates EnsureRequirements and shows only
+    * explicit repartitions. */
   def scanParallelism(df: DataFrame): Option[Int] = {
-    val plan = df.queryExecution.sparkPlan
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
     val hasExchange = plan.find {
       case _: org.apache.spark.sql.execution.exchange.Exchange => true
       case _ => false
     }.isDefined
     if (hasExchange) None
     else Some(df.queryExecution.toRdd.getNumPartitions)
+  }
+
+  private def classic(df: DataFrame) =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+
+  /** The key of the cache-manager entry serving `df`'s plan, if any: the
+    * entry's own plan object, which survives the cache manager rebuilding
+    * the entry. It is the handle [[graft.functions.CacheScope]] registers
+    * and later frees by. */
+  def cacheEntry(df: DataFrame): Option[LogicalPlan] = {
+    val ds = classic(df)
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds).map(_.plan)
+  }
+
+  /** Fill `df`'s cache entry now by running the entry's own batch RDD:
+    * one job beyond the shuffle stages the cached plan itself needs. A
+    * `count()` would plan an aggregate over the cache, whose exchange makes
+    * adaptive execution run the cache as a separate stage, then the
+    * partial-count shuffle, then the final job. */
+  def fill(df: DataFrame): Unit = {
+    val ds = classic(df)
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+      .foreach(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers.count())
+  }
+
+  /** Whether the entry keyed by `entry` still serves its plan. */
+  def isCached(df: DataFrame, entry: LogicalPlan): Boolean = {
+    val sess = classic(df).sparkSession
+    sess.sharedState.cacheManager.lookupCachedData(sess, entry).exists(_.plan eq entry)
+  }
+
+  /** Drop exactly the entry keyed by `entry`: a no-op once it is freed, or
+    * when another owner's entry serves the plan now. */
+  def uncache(df: DataFrame, entry: LogicalPlan, blocking: Boolean): Unit =
+    if (isCached(df, entry)) {
+      val sess = classic(df).sparkSession
+      sess.sharedState.cacheManager.uncacheQuery(sess, entry, cascade = false, blocking)
+    }
+
+  /** The RDD behind a checkpointed frame (the LogicalRDD `Dataset.checkpoint`
+    * and `localCheckpoint` build over their copy of the rows); its blocks are
+    * what a local checkpoint keeps alive. */
+  def checkpointRdd(df: DataFrame): RDD[_] = df.queryExecution.analyzed match {
+    case l: LogicalRDD => l.rdd
+    case other => throw new IllegalArgumentException(
+      s"not a checkpointed frame: ${other.nodeName}")
   }
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{Decontamination, Dedup}
+import graft.functions.{Bpe, Curation, Decontamination, Dedup, Graph, Mixing, NaiveBayes,
+  Similarity, UnigramLm, Windowing}
 
 /** Operator cache hygiene: operators with internal persist barriers must not
   * strand storage blocks in a long-lived session (the 100 TB deployment
@@ -90,8 +91,8 @@ class OperatorHygieneSpec extends AnyFunSuite {
   }
 
   test("dedupNearDuplicates strands nothing after clearCache") {
-    // contract: only the loser-id filter stays cached (documented), and it
-    // is freeable by the cache manager — no zombie blocks beyond its reach
+    // contract: only the (eager) result stays cached, and it is freeable by
+    // the cache manager — no zombie blocks beyond its reach
     val sc = spark.sparkContext
     spark.sharedState.cacheManager.clearCache()
     val before = sc.getPersistentRDDs.keySet
@@ -201,4 +202,156 @@ class OperatorHygieneSpec extends AnyFunSuite {
       graft.functions.Mixing.matchDistribution(df, "id", "bkt", lit(1))
     }
   }
+
+  // ---- failure paths: an executor failure mid-materialize must leave the
+  // session exactly as it was. The failure comes from the INPUT: a column
+  // computed by a UDF that throws in the first task evaluating it (over a
+  // range scan, so the optimizer cannot fold it on the driver).
+
+  import OperatorHygieneSpec._
+
+  private def badDocs: DataFrame = spark.range(0, 60).select(col("id").as("doc_id"),
+    failText(concat(lit("alpha beta gamma delta doc "), col("id").cast("string")))
+      .as("text"))
+  private def badEdges: DataFrame = spark.range(0, 60)
+    .select(failLong(col("id")).as("src"), (col("id") % 7).as("dst"))
+  private def badPairs: DataFrame = badEdges.select(col("src").as("idA"), col("dst").as("idB"))
+  private def badRows: DataFrame = spark.range(0, 200).select(
+    concat(lit("g"), (col("id") % 3).cast("string")).as("g"),
+    failLong(col("id") % 17).as("v"), col("id"))
+  private def badEmb: DataFrame = spark.range(0, 40).select(col("id").as("vec_id"),
+    (col("id") % 2).as("grp"), (col("id") % 3).as("label"), failVec(col("id")).as("embedding"))
+
+  /** Runs `op` (and, for a lazy frame, a consumer action), expects the
+    * injected failure, and asserts nothing cached survives it. */
+  private def assertFailsClean(label: String)(op: => Any): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val err = intercept[Throwable] {
+      op match {
+        case df: org.apache.spark.sql.Dataset[_] => df.write.format("noop").mode("overwrite").save()
+        case _ => ()
+      }
+    }
+    assert(Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains(Injected)),
+      s"$label failed for another reason: $err")
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"$label left cached RDDs $leaked after failing")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      s"$label left cache-manager entries after failing")
+  }
+
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private val failureCases: Seq[(String, () => Any)] = Seq(
+    "minhashCandidates" -> (() => Dedup.minhashCandidates(badDocs, "doc_id", "text",
+      shingleSize = 2, numHashes = 16, bands = 4)),
+    "simhashCandidates" -> (() =>
+      Dedup.simhashCandidates(badDocs, "doc_id", "text", maxHamming = 4)),
+    "simhashCandidatesFromSigs" -> (() => Dedup.simhashCandidatesFromSigs(
+      badEdges.select(col("dst").as("id"), col("src").as("sig")), maxHamming = 2)),
+    "connectedComponents" -> (() => Dedup.connectedComponents(badPairs)),
+    "dedupNearDuplicates" -> (() => Dedup.dedupNearDuplicates(badDocs, "doc_id", "text",
+      shingleSize = 2, numHashes = 16, bands = 4)),
+    "minhashCandidatesAgainst" -> (() => Dedup.minhashCandidatesAgainst(badDocs, docs,
+      "doc_id", "text", shingleSize = 2, numHashes = 16, bands = 4)),
+    "dedupNearDuplicatesBy" -> (() => Dedup.dedupNearDuplicatesBy(
+      badDocs.withColumn("q", col("doc_id") % 3), "doc_id", "text", "q",
+      shingleSize = 2, numHashes = 16, bands = 4)),
+    "keepBestByComponent" -> (() => Dedup.keepBestByComponent(
+      docs.withColumn("q", col("doc_id") % 3), "doc_id", "q", badPairs)),
+    "writeMinhashIndex" -> (() => Dedup.writeMinhashIndex(badDocs, "doc_id", "text",
+      tmpDir("hyg_idx"), shingleSize = 2, numHashes = 16, bands = 4)),
+    "minhashCandidatesAgainstIndex" -> (() => {
+      val path = tmpDir("hyg_probe")
+      Dedup.writeMinhashIndex(docs, "doc_id", "text", path,
+        shingleSize = 2, numHashes = 16, bands = 4)
+      Dedup.minhashCandidatesAgainstIndex(badDocs, path, "doc_id", "text")
+    }),
+    "winnowCandidates" -> (() => Dedup.winnowCandidates(badDocs, "doc_id", "text",
+      shingleSize = 3, window = 3)),
+    "winnowMatchedSpans" -> (() => Dedup.winnowMatchedSpans(badDocs, "doc_id", "text",
+      shingleSize = 3, window = 3)),
+    "pageRank" -> (() => Graph.pageRank(badEdges, "src", "dst", iterations = 3)),
+    "triangleCounts" -> (() => Graph.triangleCounts(badEdges, "src", "dst")),
+    "kCore" -> (() => Graph.kCore(badEdges, "src", "dst", k = 2)),
+    "labelPropagation" -> (() => Graph.labelPropagation(badEdges, "src", "dst")),
+    "personalizedPageRank" -> (() =>
+      Graph.personalizedPageRank(badEdges, "src", "dst", seeds = Seq(1L))),
+    "hits" -> (() => Graph.hits(badEdges, "src", "dst")),
+    "weightedPageRank" -> (() => Graph.weightedPageRank(
+      badEdges.withColumn("w", col("dst") + 1), "src", "dst", "w")),
+    "bfsDistances" -> (() =>
+      Graph.bfsDistances(badEdges, "src", "dst", seeds = Seq(0L), rounds = 3)),
+    "adamicAdar" -> (() => Graph.adamicAdar(badEdges, "src", "dst", k = 5)),
+    "globalRowNumber" -> (() =>
+      Windowing.globalRowNumber(badRows, Seq("g"), Seq("v", "id"))),
+    "globalLag" -> (() => Windowing.globalLag(badRows, Seq("g"), Seq("v", "id"), Seq("v"))),
+    "globalRankDist" -> (() =>
+      Windowing.globalRankDist(badRows, Seq("g"), Seq("v"), Seq("id"))),
+    "matchDistribution" -> (() => Mixing.matchDistribution(
+      badRows.select(col("v").as("id"), col("g").as("bkt")), "id", "bkt", lit(1))),
+    "interleaveSources" -> (() => Mixing.interleaveSources(
+      badRows.select(col("v").as("id"), col("g").as("src")), "id", "src", lit(1))),
+    "trainAndPredict" -> (() => NaiveBayes.trainAndPredict(
+      badDocs.withColumn("label", col("doc_id") % 2), "doc_id", "text", "label")),
+    "trainMerges" -> (() => Bpe.trainMerges(badDocs, "text", 3)),
+    "score" -> (() => UnigramLm.score(badDocs, badDocs, "doc_id", "text")),
+    "importanceWeights" -> (() =>
+      UnigramLm.importanceWeights(badDocs, badDocs, badDocs, "doc_id", "text")),
+    "scoreBigram" -> (() => UnigramLm.scoreBigram(badDocs, badDocs, "doc_id", "text")),
+    "scoreTrigram" -> (() => UnigramLm.scoreTrigram(badDocs, badDocs, "doc_id", "text")),
+    "scoreKneserNey" -> (() => UnigramLm.scoreKneserNey(badDocs, badDocs, "doc_id", "text")),
+    "sharedNgramCountsBloom" -> (() => Decontamination.sharedNgramCountsBloom(
+      badDocs, badDocs, "doc_id", "text", n = 3)),
+    "sourceOverlapMatrix" -> (() => Decontamination.sourceOverlapMatrix(
+      badDocs.withColumn("g", col("doc_id") % 4), "g", "text", n = 3)),
+    "knnWithinGroups" -> (() =>
+      Similarity.knnWithinGroups(badEmb, "grp", "embedding", "vec_id", k = 2)),
+    "mutualNearestNeighbors" -> (() =>
+      Similarity.mutualNearestNeighbors(badEmb, "grp", "embedding", "vec_id")),
+    "hardPairs" -> (() =>
+      Similarity.hardPairs(badEmb, "grp", "label", "embedding", "vec_id")),
+    "kmeans" -> (() => Similarity.kmeans(badEmb, "embedding", "vec_id", k = 2, dim = 2,
+      init = "first")._1),
+    "curate" -> (() => Curation.curate(badDocs, docs, "doc_id", "text")._1),
+    "bloomSemiJoin" -> (() => graft.operators.BloomJoin.bloomSemiJoin(
+      docs, badEdges, "doc_id", "src")),
+    "bloomAntiJoin" -> (() => graft.operators.BloomJoin.bloomAntiJoin(
+      docs, badEdges, "doc_id", "src")),
+    "editDistance1Pairs" -> (() =>
+      graft.operators.FuzzyJoin.editDistance1Pairs(badDocs, "doc_id", "text")),
+    "maintainAggregate" -> (() => graft.operators.Merge.maintainAggregate(
+      graft.operators.Merge.buildAggregate(
+        (0L until 100L).map(i => (i, s"g${i % 5}", i / 10.0)).toDF("id", "g", "x"),
+        Seq("g"), Seq("x")),
+      spark.range(0, 3).select(lit("g1").as("g"),
+        failLong(col("id")).cast("double").as("x"), lit("I").as("op")),
+      Seq("g"), Seq("x"))),
+    "jaccardPairs" -> (() => graft.operators.SetSimilarityJoin.jaccardPairs(
+      badDocs.withColumn("toks", split(col("text"), " ")), "doc_id", "toks", 0.5)),
+    "containmentPairs" -> (() => graft.operators.SetSimilarityJoin.containmentPairs(
+      badDocs.withColumn("toks", split(col("text"), " ")), "doc_id", "toks", 0.5)),
+    "streamingUpsert" -> (() => graft.streaming.EventStreams.streamingUpsert(spark,
+      spark.readStream.format("rate").load(), badDocs, Seq("doc_id"))))
+
+  failureCases.foreach { case (name, op) =>
+    test(s"$name frees every cached intermediate when an executor fails mid-materialize") {
+      assertFailsClean(name)(op())
+    }
+  }
+}
+
+object OperatorHygieneSpec {
+  // in the companion, so the UDF closures capture no suite instance
+  val Injected = "injected executor failure"
+  val failText = udf((t: String) =>
+    if (t != null) throw new IllegalStateException(Injected) else t)
+  val failLong = udf((x: Long) =>
+    if (x >= 0) throw new IllegalStateException(Injected) else x)
+  val failVec = udf((x: Long) =>
+    if (x >= 0) throw new IllegalStateException(Injected) else Seq(1.0f, 2.0f))
 }

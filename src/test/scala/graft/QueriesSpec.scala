@@ -112,10 +112,17 @@ class QueriesSpec extends AnyFunSuite {
       s"allowlist entries no longer present — remove them: $stale")
   }
 
+  // Each query also leaves the session as it found it: after the caller's
+  // one unpersist() on the returned frame, no cached RDD remains.
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"$name runs on sf0.001 and returns rows") {
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
       val df = fn(spark, sfDir)
       assert(df.count() > 0, s"$name returned no rows")
+      df.unpersist(blocking = true)
+      val leaked = sc.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"$name left ${leaked.size} cached RDD(s) behind")
     }
   }
 }
