@@ -171,54 +171,31 @@ object Bench {
     else "\"(q[^\"]+)\":([0-9.Ee+-]+)".r.findAllMatchIn(txt)
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
 
+  /** Isolation between timed runs: one query's cache hygiene bug must not
+    * distort its alphabetical neighbors (the round-2 bench lost three
+    * queries 10-14× to a leaked persist). clearCache covers cache-manager
+    * entries; the explicit RDD sweep also frees checkpoint-backed and
+    * otherwise-orphaned RDDs, blockingly, so freeing completes before the
+    * next timer starts; the state-store unload evicts streaming providers;
+    * the GC drains accumulated garbage off the next query's clock. */
+  def sweep(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    org.apache.spark.sql.graft.StreamingHygiene.stopStateStores()
+    System.gc()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cores
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing is BYTE-based: with parallelismFirst (default) it
-      // still floors partitions at minPartitionSize (default 1 MB), so a
-      // compute-dense stage above a small shuffle (pair joins over int8
-      // codes, per-token aggregates — kilobytes of keys, quadratic or
-      // hash-heavy work) collapses to ONE task and serializes on one core
-      // (measured: q_knn_graph's pair-join stage ran 1.48 s on 1 task at
-      // local[32]). 64 KB keeps such stages parallel while remaining a
-      // provable no-op at production scale, where every real shuffle
-      // partition is far above any floor (the advisory size governs
-      // there). Parameterized; the local default is what the driver
-      // benches.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Bound AQE's per-update plan-string render: a deep iterative plan
-      // otherwise costs plan-sized DRIVER time per plan-change event
-      // (onUpdatePlan → explainString), single-threaded. 1 MB keeps any
-      // conceivable diagnostic value; the default is effectively unbounded.
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame, dir: String): Unit =
       fn(spark, dir).write.format("noop").mode("overwrite").save()
 
-    // Isolation between timed runs: one query's cache hygiene bug must not
-    // distort its alphabetical neighbors (the round-2 bench lost three
-    // queries 10-14× to a leaked persist). clearCache covers cache-manager
-    // entries; the explicit RDD sweep also frees checkpoint-backed and
-    // otherwise-orphaned RDDs, blockingly, so freeing completes before the
-    // next timer starts; the state-store unload evicts streaming providers;
-    // the GC drains accumulated garbage off the next query's clock.
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      org.apache.spark.sql.graft.StreamingHygiene.stopStateStores()
-      System.gc()
-    }
+    def sweep(): Unit = Bench.sweep(spark)
 
     // Optional comma-separated query filter for targeted timing sessions
     // (e.g. SPARK_GRAFT_BENCH_ONLY=q_link_predict,q_hits). A filtered run
@@ -265,7 +242,7 @@ object Bench {
     def calibrateSaturate(): Double = {
       val sc = spark.sparkContext
       val t0 = System.nanoTime()
-      sc.parallelize(1 to cpus.toInt, cpus.toInt).map { p =>
+      sc.parallelize(1 to cpus, cpus).map { p =>
         var acc = p.toLong
         var i = 0L
         while (i < 150000000L) { acc = acc * 6364136223846793005L + 1442695040888963407L; i += 1 }

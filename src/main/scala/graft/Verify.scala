@@ -1,26 +1,35 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import scala.collection.immutable.ListMap
+
+import graft.io.JsonValue
+import graft.io.JsonValue.{JsonObject, JsonString}
+
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json and rows_only.json, for the DuckDB oracle compare.
+  *
+  * Usage: Verify <sfDir> <outDir> [q1,q2,…]. The optional third argument
+  * narrows the dump — parquet and both JSON files — to the named queries,
+  * so dev/check_oracle.py checks just the queries under work; the full
+  * correctness gate passes exactly two arguments. */
 object Verify {
+
+  /** `entries` as one JSON object of strings at `path`. */
+  def writeJson(path: String, entries: Map[String, String]): Unit =
+    Files.writeString(Paths.get(path), JsonValue.write(JsonObject(
+      ListMap.from(entries.map { case (k, v) => k -> JsonString(v) }))))
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // optional 3rd arg (builder-side only): comma-separated query-name
-    // filter for a fast dev loop; the driver always passes exactly 2 args.
     val only: Option[Set[String]] = args.drop(2).headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    def keep(name: String): Boolean = only.forall(_.contains(name))
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => keep(name) }
       .foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
@@ -30,26 +39,12 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeJson(s"$outDir/oracle_sql.json",
+      SparkEntry.oracleSql.filter { case (k, _) => keep(k) })
     // By-design rows-only queries, with reasons — so the gate's no_oracle
     // rows are explained rather than unexplained gaps.
-    val rj = SparkEntry.rowsOnlyReasons
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/rows_only.json"), rj)
+    writeJson(s"$outDir/rows_only.json",
+      SparkEntry.rowsOnlyReasons.filter { case (k, _) => keep(k) })
     spark.stop()
   }
 }

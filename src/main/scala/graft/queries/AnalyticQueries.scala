@@ -1394,10 +1394,7 @@ object AnalyticQueries {
       .filter(col("dst").isNotNull)
 
   private def lpCommunitiesFor(s: SparkSession, dir: String): DataFrame = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|lp4".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_lp4_$key"
+    val path = Tables.memoDir("lp4", dir, "lp4")
     if (!java.nio.file.Files.exists(
         java.nio.file.Paths.get(path, "_SUCCESS"))) {
       graft.functions.Graph.labelPropagation(linkEdges(s, dir), "src", "dst",

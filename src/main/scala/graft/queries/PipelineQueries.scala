@@ -54,10 +54,7 @@ object PipelineQueries {
     * run). The parquet `_SUCCESS` marker gates the rebuild, so Verify and
     * Bench share one build per dataset per container. */
   private def keyedStoreFor(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|keyed64".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_keyed_$key"
+    val path = Tables.memoDir("keyed", dir, "keyed64")
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")))
       graft.operators.KeyedStore.write(
         Tables.df(s, dir, "documents").select("doc_id", "lang", "n_chars"),
@@ -68,10 +65,7 @@ object PipelineQueries {
   private def lshIndexFor(s: SparkSession, dir: String,
                           emb: org.apache.spark.sql.DataFrame,
                           marker: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|p8t2s42|$marker".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_lsh_$key"
+    val path = Tables.memoDir("lsh", dir, s"p8t2s42|$marker")
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")))
       Similarity.writeLshIndex(emb, "embedding", "vec_id", path,
         dim = 64, numPlanes = 8, tables = 2)
@@ -1441,10 +1435,7 @@ object PipelineQueries {
     * (docs >= 10), memoized on disk; `_params.json` is written LAST by
     * writeMinhashIndex, so it doubles as the success marker. */
   private def minhashIndexFor(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|mhidx".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_mhidx_$key"
+    val path = Tables.memoDir("mhidx", dir, "mhidx")
     if (!java.nio.file.Files.exists(
         java.nio.file.Paths.get(path, "_params.json")))
       Dedup.writeMinhashIndex(
@@ -1457,10 +1448,7 @@ object PipelineQueries {
   /** Build-once-per-dataset trained IVF index over the planted clusters
     * (memoized like the LSH index; `_SUCCESS` gates the rebuild). */
   private def ivfIndexFor(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|ivfplant8".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_$key"
+    val path = Tables.memoDir("ivf", dir, "ivfplant8")
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")))
       Similarity.writeTrainedIvfIndex(plantedClusters(s, dir),
         "embedding", "vec_id", path, nlist = 8, dim = 64)
@@ -1470,10 +1458,7 @@ object PipelineQueries {
   /** Memoized PQ index over the planted clusters (same scheme as
     * [[ivfIndexFor]]). */
   private def pqIndexFor(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|pqplant8".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_pq_$key"
+    val path = Tables.memoDir("pq", dir, "pqplant8")
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")))
       Similarity.writePqIndex(plantedClusters(s, dir),
         "embedding", "vec_id", path, dim = 64, m = 8, k = 16, iters = 3)
@@ -1482,10 +1467,7 @@ object PipelineQueries {
 
   /** Memoized composed IVF-PQ index over the planted clusters. */
   private def ivfpqIndexFor(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|ivfpqplant8".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_$key"
+    val path = Tables.memoDir("ivfpq", dir, "ivfpqplant8")
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")))
       Similarity.writeIvfPqIndex(plantedClusters(s, dir),
         "embedding", "vec_id", path, nlist = 8, dim = 64, m = 8, k = 16,

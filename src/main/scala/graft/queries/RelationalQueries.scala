@@ -876,12 +876,6 @@ object RelationalQueries {
     })
   )
 
-  /** Recursive delete for the build-once dataset fixtures' rebuild path. */
-  private def deleteTree(f: java.io.File): Unit = {
-    val cs = f.listFiles(); if (cs != null) cs.foreach(deleteTree)
-    f.delete(): Unit
-  }
-
   /** Build-once NAMED catalog table (q_catalog_named): seed StarTable at
     * a location, register it by name in the graft catalog (default
     * warehouse, so every session in this JVM/host agrees), then REWRITE
@@ -889,15 +883,13 @@ object RelationalQueries {
     * qualified name. The CREATE runs on every call (IF NOT EXISTS — a
     * cleaned warehouse re-registers; a present one no-ops). */
   private def namedCatalogTableFor(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|named1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val loc = s"${System.getProperty("java.io.tmpdir")}/graft_named_$key"
+    val key = Tables.memoKey(dir, "named1")
+    val loc = Tables.memoDir("named", dir, "named1")
     s.conf.set("spark.sql.catalog.graft", "graft.GraftCatalog")
     val fq = s"graft.gate.named_$key"
     val marker = java.nio.file.Paths.get(loc, "_graft_named_done")
     if (!java.nio.file.Files.exists(marker)) {
-      deleteTree(new java.io.File(loc))
+      Tables.deleteTree(new java.io.File(loc))
       val rollup = Tables.df(s, dir, "nation").join(
           Tables.df(s, dir, "region"),
           col("n_regionkey") === col("r_regionkey"))
@@ -923,10 +915,7 @@ object RelationalQueries {
     * the sidecar is written LAST by writePartitionedDataset, so its
     * existence marks a complete dataset — the _params.json discipline). */
   private def partitionedDatasetFor(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|stpds1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_stpds_$key"
+    val path = Tables.memoDir("stpds", dir, "stpds1")
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path,
         graft.io.CsvWriter.DatasetMetaFile)))
       graft.io.CsvWriter.writePartitionedDataset(
@@ -943,13 +932,10 @@ object RelationalQueries {
     * evolveSchema. The `_graft_evolved` marker is written only after the
     * evolution commits, so an interrupted build reruns from scratch. */
   private def evolvedDatasetFor(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|evds1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_evds_$key"
+    val path = Tables.memoDir("evds", dir, "evds1")
     val marker = java.nio.file.Paths.get(path, "_graft_evolved")
     if (!java.nio.file.Files.exists(marker)) {
-      deleteTree(new java.io.File(path))
+      Tables.deleteTree(new java.io.File(path))
       val li = Tables.df(s, dir, "lineitem")
       graft.io.CsvWriter.writePartitionedDataset(
         StarTable.fromDataFrame(
@@ -976,13 +962,10 @@ object RelationalQueries {
     * slice backfilled as a PLAIN backfill that simply carries the new
     * column. Marker written only after the whole sequence commits. */
   private def metaEvolvedDatasetFor(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|mevds1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_mevds_$key"
+    val path = Tables.memoDir("mevds", dir, "mevds1")
     val marker = java.nio.file.Paths.get(path, "_graft_meta_evolved")
     if (!java.nio.file.Files.exists(marker)) {
-      deleteTree(new java.io.File(path))
+      Tables.deleteTree(new java.io.File(path))
       val li = Tables.df(s, dir, "lineitem")
       graft.io.CsvWriter.writePartitionedDataset(
         StarTable.fromDataFrame(
@@ -1018,13 +1001,10 @@ object RelationalQueries {
     * provably overlapped. A: price ×2; R: price +7 (both exact double ops
     * an oracle mirrors bit-for-bit). Marker written after both commit. */
   private def parallelBackfilledDatasetFor(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|pbds1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_pbds_$key"
+    val path = Tables.memoDir("pbds", dir, "pbds1")
     val marker = java.nio.file.Paths.get(path, "_graft_parallel")
     if (!java.nio.file.Files.exists(marker)) {
-      deleteTree(new java.io.File(path))
+      Tables.deleteTree(new java.io.File(path))
       val li = Tables.df(s, dir, "lineitem")
         .select(col("l_returnflag"), col("l_linestatus"),
           col("l_extendedprice"))
@@ -1076,10 +1056,7 @@ object RelationalQueries {
     * same shape as [[partitionedDatasetFor]] but with per-leaf stat
     * shards (shardStats = Some(true)). */
   private def shardedDatasetFor(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|shds1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_shds_$key"
+    val path = Tables.memoDir("shds", dir, "shds1")
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path,
         graft.io.CsvWriter.DatasetMetaFile)))
       graft.io.CsvWriter.writePartitionedDataset(
@@ -1103,13 +1080,10 @@ object RelationalQueries {
     * `_graft_vacuumed` marker is written only after the whole drill
     * passes, so an interrupted build reruns from scratch. */
   private def vacuumedDatasetFor(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|vacds1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_vacds_$key"
+    val path = Tables.memoDir("vacds", dir, "vacds1")
     val marker = java.nio.file.Paths.get(path, "_graft_vacuumed")
     if (!java.nio.file.Files.exists(marker)) {
-      deleteTree(new java.io.File(path))
+      Tables.deleteTree(new java.io.File(path))
       graft.io.CsvWriter.writePartitionedDataset(
         StarTable.fromDataFrame(
           Tables.df(s, dir, "lineitem").select(col("l_returnflag"),
@@ -1160,13 +1134,10 @@ object RelationalQueries {
     * the R leaf orphaned WITH its live shard, vacuum restores/cleans, a
     * clean compaction then re-installs every leaf's shard. */
   private def vacuumedShardedDatasetFor(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|vacshds1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_vacshds_$key"
+    val path = Tables.memoDir("vacshds", dir, "vacshds1")
     val marker = java.nio.file.Paths.get(path, "_graft_vacuumed")
     if (!java.nio.file.Files.exists(marker)) {
-      deleteTree(new java.io.File(path))
+      Tables.deleteTree(new java.io.File(path))
       graft.io.CsvWriter.writePartitionedDataset(
         StarTable.fromDataFrame(
           Tables.df(s, dir, "lineitem").select(col("l_returnflag"),
@@ -1213,13 +1184,10 @@ object RelationalQueries {
     * the cluster pass completes — the sidecar alone exists from the
     * moment the base write finishes). */
   private def clusteredDatasetFor(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|clds1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_clds_$key"
+    val path = Tables.memoDir("clds", dir, "clds1")
     val marker = java.nio.file.Paths.get(path, "_graft_clustered")
     if (!java.nio.file.Files.exists(marker)) {
-      deleteTree(new java.io.File(path))
+      Tables.deleteTree(new java.io.File(path))
       graft.io.CsvWriter.writePartitionedDataset(
         StarTable.fromDataFrame(
           Tables.df(s, dir, "lineitem").select(col("l_returnflag"),
@@ -1238,10 +1206,7 @@ object RelationalQueries {
     * sidecar is written LAST by writeParquet, so its existence is the
     * success marker — a crash mid-write leaves no readable half-table). */
   private def unitParquetFor(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|upq1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_upq_$key"
+    val path = Tables.memoDir("upq", dir, "upq1")
     if (!java.nio.file.Files.exists(
         java.nio.file.Paths.get(path, "_startable_meta.json")))
       StarTable.writeParquet(StarTable.fromDataFrame(
@@ -1269,10 +1234,7 @@ object RelationalQueries {
     * the memoization would then serve (the _params.json discipline). The
     * dataset directory is gated on the text sink's _SUCCESS marker. */
   private[graft] def startableCsvFor(s: SparkSession, dir: String): (String, String) = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|stcsv1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_stcsv_$key"
+    val base = Tables.memoDir("stcsv", dir, "stcsv1")
     val file = s"$base/lineitem.csv"
     val dsDir = s"$base/dataset"
     def slim = StarTable.fromDataFrame(

@@ -438,16 +438,12 @@ object StreamingQueries {
     * upfront by design, so it cannot be the success marker here), and is
     * ignored by the connector's listing. */
   private def streamedStartableDatasetFor(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|qss1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_qss_$key")
+    val base = java.nio.file.Paths.get(Tables.memoDir("qss", dir, "qss1"))
     val out = base.resolve("ds").toString
     val marker = base.resolve("ds").resolve("_graft_stream_done")
     if (java.nio.file.Files.exists(marker)) return out
     // (re)build from scratch — a marker-less directory is an aborted build
-    deleteTree(base.toFile)
+    Tables.deleteTree(base.toFile)
     val staging = base.resolve("staging").toString
     val ckpt = base.resolve("ckpt").toString
     Tables.df(s, dir, "events")
@@ -485,15 +481,11 @@ object StreamingQueries {
     * the seeded wrong values survive only if the mid-stream backfill was
     * refused or lost. */
   private def coexistStreamedDatasetFor(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|qsc1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_qsc_$key")
+    val base = java.nio.file.Paths.get(Tables.memoDir("qsc", dir, "qsc1"))
     val out = base.resolve("ds").toString
     val marker = base.resolve("ds").resolve("_graft_coexist_done")
     if (java.nio.file.Files.exists(marker)) return out
-    deleteTree(base.toFile)
+    Tables.deleteTree(base.toFile)
     val staging = base.resolve("staging").toString
     val late = base.resolve("late").toString
     val ckpt = base.resolve("ckpt").toString
@@ -557,12 +549,6 @@ object StreamingQueries {
     } finally q.stop()
     java.nio.file.Files.createFile(marker)
     out
-  }
-
-  private def deleteTree(f: java.io.File): Unit = {
-    val children = f.listFiles()
-    if (children != null) children.foreach(deleteTree)
-    f.delete(): Unit
   }
 
   val oracleSql: Map[String, String] = Map(

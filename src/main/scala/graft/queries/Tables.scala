@@ -38,6 +38,25 @@ object Tables {
   def star(spark: SparkSession, dir: String, name: String): StarTable =
     StarTable.fromDataFrame(df(spark, dir, name), name)
 
+  /** Key of a query's build-once fixture: the first 12 hex digits of
+    * MD5("<dir>|<variant>"). Bumping the variant forces a rebuild. */
+  def memoKey(dir: String, variant: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s"$dir|$variant".getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(12)
+
+  /** Directory of a query's build-once fixture, `graft_<prefix>_<key>`
+    * under java.io.tmpdir: one build per dataset per host, shared by every
+    * session (Verify, Bench, the specs) that runs the query. */
+  def memoDir(prefix: String, dir: String, variant: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_${prefix}_${memoKey(dir, variant)}"
+
+  /** Recursive delete: a fixture's rebuild path clears an aborted build. */
+  def deleteTree(f: java.io.File): Unit = {
+    val cs = f.listFiles(); if (cs != null) cs.foreach(deleteTree)
+    f.delete(): Unit
+  }
+
   /** DuckDB mirror of `UnigramLm.pinnedMean` — the boundary-free rounded
     * mean of an exact DECIMAL sum, as one SQL scalar expression. The
     * scaled numerator sum·10^S is built in HUGEINT (int128) via the exact

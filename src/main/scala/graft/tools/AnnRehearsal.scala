@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Similarity
@@ -53,12 +53,7 @@ object AnnRehearsal {
     val n = args.headOption.map(_.toLong).getOrElse(500000L)
     val dim = 64
     val clusters = 1024
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
 
     val corpusPath = s"/tmp/graft_ann_corpus_v2_${n}/vectors.parquet"

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-10 composition rehearsal (VERDICT r9 item 8): run the startable
@@ -36,14 +35,7 @@ object CompositionRehearsal {
     val multArgs = if (realistic) args.drop(1) else args
     val mults = if (multArgs.nonEmpty) multArgs.toSeq.map(_.toInt)
       else Seq(10, 100)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
 
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime()
@@ -51,11 +43,7 @@ object CompositionRehearsal {
       println(f"[compose] $label%-40s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
       r
     }
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      System.gc()
-    }
+    def sweep(): Unit = graft.Bench.sweep(spark)
 
     val baseDocs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       .select("doc_id", "text", "lang")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
 /** Dump EVERY oracle SQL statement (no Spark, no query execution) as
   * `<outDir>/oracle_sql.json`, so `dev/preflight_types.py` can LIMIT-0
   * type-check the full oracle contract in seconds. Catches the
@@ -11,18 +9,7 @@ object DumpOracles {
   def main(args: Array[String]): Unit = {
     val outDir = if (args.nonEmpty) args(0) else "/tmp/oracle_dump"
     new java.io.File(outDir).mkdirs()
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    graft.Verify.writeJson(s"$outDir/oracle_sql.json", graft.SparkEntry.oracleSql)
     println(s"[dump-oracles] ${graft.SparkEntry.oracleSql.size} oracles -> $outDir/oracle_sql.json")
   }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-10 rehearsal: dataset maintenance + listing at ~1k slices.
   * Claims under test (VERDICT r9 items 4-5):
   *  - compact/cluster wall time scales with data volume, not slice count —
@@ -15,12 +13,7 @@ import org.apache.spark.sql.SparkSession
 object MaintenanceRehearsal {
   def main(args: Array[String]): Unit = {
     val slices = args.headOption.map(_.toInt).getOrElse(1000)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
 
     def t[A](label: String)(f: => A): A = {

@@ -3,34 +3,30 @@ package graft.tools
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-/** Per-job/per-stage decomposition of a declared query's wall time —
+import graft.{Bench, GraftSession}
+
+/** Per-job decomposition of a declared query's wall time —
   * distinguishes executor work from driver gaps (planning, persist
-  * bookkeeping, barriers) so optimization targets the real cost.
+  * bookkeeping, barriers) so optimization targets the real cost. Each job
+  * line also sums its completed stages' executor CPU, shuffle read/write
+  * and spill, so a drifted bench number can be adjudicated: "the plan
+  * changed" (different jobs, stages, shuffle bytes) versus "the same work
+  * ran slower" (same counts, more wall).
   *
-  * Usage: sbt "runMain graft.tools.ProfileQuery <q1,q2,...>"
+  * Usage: SPARK_GRAFT_SF_DIR=<sfDir> sbt "runMain graft.tools.ProfileQuery <q1,q2,...>"
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     case class Job(id: Int, var start: Long = 0L, var end: Long = 0L,
                    var stages: Int = 0, var tasks: Int = 0,
-                   var taskTimeMs: Long = 0L)
+                   var taskTimeMs: Long = 0L, var cpuNs: Long = 0L,
+                   var shufReadB: Long = 0L, var shufWriteB: Long = 0L,
+                   var spillB: Long = 0L)
     val jobs = mutable.LinkedHashMap[Int, Job]()
     val stageToJob = mutable.HashMap[Int, Int]()
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -45,12 +41,17 @@ object ProfileQuery {
       }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = jobs.synchronized {
         val si = e.stageInfo
+        val m = si.taskMetrics
         stageToJob.get(si.stageId).foreach { jid =>
           jobs.get(jid).foreach { j =>
             j.tasks += si.numTasks
             j.taskTimeMs += (for {
               s <- si.submissionTime; c <- si.completionTime
             } yield c - s).getOrElse(0L)
+            j.cpuNs += m.executorCpuTime
+            j.shufReadB += m.shuffleReadMetrics.totalBytesRead
+            j.shufWriteB += m.shuffleWriteMetrics.bytesWritten
+            j.spillB += m.memoryBytesSpilled + m.diskBytesSpilled
           }
         }
       }
@@ -59,16 +60,11 @@ object ProfileQuery {
     def run(n: String, dir: String): Unit =
       graft.SparkEntry.queries(n)(spark, dir)
         .write.format("noop").mode("overwrite").save()
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      org.apache.spark.sql.graft.StreamingHygiene.stopStateStores()
-      System.gc()
-    }
+    def mb(b: Long): Double = b / 1e6
 
     names.foreach { n =>
       try run(n, "/root/testdata/sf0.001") catch { case _: Throwable => () }
-      sweep()
+      Bench.sweep(spark)
       jobs.synchronized { jobs.clear(); stageToJob.clear() }
       val t0 = System.nanoTime()
       run(n, sfDir)
@@ -87,12 +83,15 @@ object ProfileQuery {
           cursor = math.max(cursor, e)
         }
         val span = if (js.nonEmpty) (js.last.end - js.head.start) / 1e3 else 0.0
-        println(f"== $n%s wall=$wall%.2fs jobs=${js.size}%d jobWallSum=$jobWall%.2fs jobSpan=$span%.2fs uncovered=${span - covered / 1e3}%.2fs")
+        println(f"== $n%s wall=$wall%.2fs jobs=${js.size}%d jobWallSum=$jobWall%.2fs jobSpan=$span%.2fs uncovered=${span - covered / 1e3}%.2fs " +
+          f"cpu=${js.map(_.cpuNs).sum / 1e9}%.2fs shufRead=${mb(js.map(_.shufReadB).sum)}%.1fMB " +
+          f"shufWrite=${mb(js.map(_.shufWriteB).sum)}%.1fMB spill=${mb(js.map(_.spillB).sum)}%.1fMB")
         js.foreach { j =>
-          println(f"   job ${j.id}%4d ${(j.end - j.start) / 1e3}%6.2fs stages=${j.stages}%3d tasks=${j.tasks}%5d stageTime=${j.taskTimeMs / 1e3}%6.2fs")
+          println(f"   job ${j.id}%4d ${(j.end - j.start) / 1e3}%6.2fs stages=${j.stages}%3d tasks=${j.tasks}%5d stageTime=${j.taskTimeMs / 1e3}%6.2fs " +
+            f"cpu=${j.cpuNs / 1e9}%6.2fs shufRead=${mb(j.shufReadB)}%8.1fMB shufWrite=${mb(j.shufWriteB)}%8.1fMB spill=${mb(j.spillB)}%6.1fMB")
         }
       }
-      sweep()
+      Bench.sweep(spark)
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale rehearsal: run the flagship pipeline operators end-to-end at 1×
@@ -18,15 +18,7 @@ import org.apache.spark.sql.functions._
 object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
     val mults = if (args.nonEmpty) args.toSeq.map(_.toInt) else Seq(1, 10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Bench.scala: bound AQE's per-update plan-string render
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
 
     // Optional stage filter (builder-side): SPARK_GRAFT_REHEARSE_ONLY is a
     // comma-separated list of case-insensitive label substrings — lets a
@@ -42,11 +34,7 @@ object ScaleRehearsal {
       println(f"[scale] $label%-42s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
       r
     }
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      System.gc()
-    }
+    def sweep(): Unit = graft.Bench.sweep(spark)
 
     val baseDocs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       .select("doc_id", "text")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-11 rehearsal: sharded dataset statistics at ≥100k slices.
@@ -25,12 +24,7 @@ import org.apache.spark.sql.functions._
 object ShardRehearsal {
   def main(args: Array[String]): Unit = {
     val slices = args.headOption.map(_.toInt).getOrElse(100000)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
     val src = graft.sources.StarTableSource
 

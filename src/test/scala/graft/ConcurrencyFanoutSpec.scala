@@ -6,12 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.io.CsvWriter
 import graft.model.StarTable
 
-/** Round-14 promotion of tools/ConcurrencyRehearsal into the gated suite
-  * (VERDICT r13 item 5): disjoint-slice concurrent backfills must beat
+/** Concurrent fan-out gate: disjoint-slice concurrent backfills must beat
   * the serialized shape by a conservative floor AND produce byte-
   * identical results — so a regression in the shared-lease / batched-
   * flip path (e.g. an accidental re-serialization on the root lock) is
-  * caught mechanically, not by a rehearsal someone remembers to run.
+  * caught mechanically.
   *
   * Contention-immunity: the ratio compares the concurrent pass against
   * its OWN serial baseline measured in the same window on the same data,

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.RelationalQueries
@@ -402,5 +404,46 @@ class PlanSpec extends AnyFunSuite {
       graft.sources.StarTableSource.dirsPruned.sum() > 0,
       "the l_returnflag=R slice query pruned no files — the other slices " +
         "were opened")
+  }
+
+  private object aqe extends AdaptiveSparkPlanHelper
+
+  /** (map-output bytes, post-coalesce reduce partitions) of a one-shuffle
+    * aggregate over `keys` distinct keys, under the session's AQE floor or,
+    * with `sparkDefaultFloor`, under Spark's default (1 MB). */
+  private def coalescedShuffle(keys: Long,
+                               sparkDefaultFloor: Boolean = false): (Long, Int) = {
+    val floorKey = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val saved = spark.conf.getOption(floorKey)
+    if (sparkDefaultFloor) spark.conf.unset(floorKey)
+    try {
+      // a derived key: Range's own range partitioning on `id` would
+      // satisfy a groupBy(id) without any shuffle
+      val df = spark.range(keys).groupBy((col("id") * 2).as("k")).count()
+      // toRdd runs the map stage and returns the coalesced reduce RDD
+      val partitions = df.queryExecution.toRdd.getNumPartitions
+      val bytes = aqe.collect(df.queryExecution.executedPlan) {
+        case s: ShuffleQueryStageExec => s.mapStats.fold(0L)(_.bytesByPartitionId.sum)
+      }.sum
+      (bytes, partitions)
+    } finally saved.fold(spark.conf.unset(floorKey))(spark.conf.set(floorKey, _))
+  }
+
+  test("AQE keeps a few-hundred-KB shuffle on more than one reduce task") {
+    val (bytes, partitions) = coalescedShuffle(80000L)
+    assert(bytes > 128L * 1024 && bytes < 1024L * 1024,
+      s"premise: shuffle of a few hundred KB, got $bytes bytes")
+    assert(partitions > 1,
+      s"$bytes-byte shuffle coalesced to $partitions reduce partition(s)")
+  }
+
+  test("the 64 KB AQE floor is a no-op above cores x 1 MB of shuffle") {
+    val cores = spark.sparkContext.defaultParallelism
+    val (bytes, withFloor) = coalescedShuffle(1500000L)
+    assert(bytes > cores * 1024L * 1024,
+      s"premise: shuffle above $cores x 1 MB, got $bytes bytes")
+    val (_, withDefault) = coalescedShuffle(1500000L, sparkDefaultFloor = true)
+    assert(withFloor == withDefault,
+      s"64 KB floor: $withFloor partitions, Spark default: $withDefault")
   }
 }
