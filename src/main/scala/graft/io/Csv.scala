@@ -8,6 +8,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.io.DatasetSidecar.{ColStats, DatasetMeta, DatasetMetaFile,
+  FileStats, MergeIntent, PendingMergePrefix, SliceShard, SliceShardFile,
+  SliceStats}
 import graft.model._
 import graft.origin._
 import graft.parse._
@@ -394,15 +397,17 @@ object CsvWriter {
     * `numFiles > 0` bounds the task count with a shuffle ON the partition
     * columns, so each task writes few distinct slices (Spark opens one
     * file per slice per task — an unshuffled skewed upstream would
-    * otherwise fan out files quadratically). */
-  /** `overwriteSlices = true` is the INCREMENTAL-BACKFILL mode: only the
+    * otherwise fan out files quadratically).
+    *
+    * `overwriteSlices = true` is the INCREMENTAL-BACKFILL mode: only the
     * partition slices present in `t` are replaced (dynamic partition
     * overwrite); every other slice survives untouched — re-running one
     * day/source never clobbers its siblings, where the default static
     * overwrite drops the whole dataset first. Backfill requires an
     * EXISTING dataset whose sidecar schema matches `t` exactly (a drifted
-    * backfill would silently fork the dataset's schema — refused). */
-  /** `collectFileStats` controls the per-FILE statistics read-back over
+    * backfill would silently fork the dataset's schema — refused).
+    *
+    * `collectFileStats` controls the per-FILE statistics read-back over
     * multi-file slices (see [[computeWrittenFileStats]] for the cost
     * shape). Default (None): collected only under a SHUFFLED write
     * (numFiles > 0), where multi-file slices exist only by explicit
@@ -414,14 +419,16 @@ object CsvWriter {
     * already range-ordered gets file-tier skipping straight from the
     * write); `Some(false)` always skips it. Slice-level statistics are
     * unaffected; file-tier skipping otherwise arrives with the next
-    * clusterStarDataset pass. */
-  /** `filesPerSlice > 1` SALTS the `numFiles` shuffle within each slice:
+    * clusterStarDataset pass.
+    *
+    * `filesPerSlice > 1` SALTS the `numFiles` shuffle within each slice:
     * plain repartition-on-partition-columns routes ALL of a slice's rows
     * to one task, so a 90%-one-slice skew serializes the write; a salt of
     * k spreads each slice over up to k tasks (k× write parallelism for
     * the hot slice) at the cost of at most k files per slice — bounded,
-    * unlike an unshuffled write's task-count × slice-count fan-out. */
-  /** `shardStats` picks the statistics LAYOUT: `Some(false)`/default keeps
+    * unlike an unshuffled write's task-count × slice-count fan-out.
+    *
+    * `shardStats` picks the statistics LAYOUT: `Some(false)`/default keeps
     * every slice's stats inline in the root sidecar (one parse serves the
     * whole dataset — right for datasets whose slice count a single JSON
     * comfortably holds); `Some(true)` writes one `_startable_slice.json`
@@ -436,8 +443,9 @@ object CsvWriter {
     * always follows the existing dataset's layout (a layout fork is
     * refused when forced), and a fresh write whose slice count exceeds
     * [[MaxStatSlices]] auto-upgrades to sharded instead of degrading to
-    * no stats at all. */
-  /** `evolveSchema = true` (requires `overwriteSlices`) APPENDS data
+    * no stats at all.
+    *
+    * `evolveSchema = true` (requires `overwriteSlices`) APPENDS data
     * columns to an existing dataset's schema: the incoming table must
     * carry the dataset's current data columns as a PREFIX (same names,
     * units, order — reorder with select) plus the new columns after them,
@@ -449,7 +457,7 @@ object CsvWriter {
     * columns are recorded as `lateColumns`, so statistics pruning and
     * metadata aggregates keep working across the evolution (a slice entry
     * that predates the column provably means all-null — see
-    * [[graft.sources.StarTableSource.DatasetMeta.lateCols]]). Stats for
+    * [[DatasetSidecar.DatasetMeta.lateCols]]). Stats for
     * the new columns start at this append. */
   def writePartitionedDataset(t: StarTable, outDir: String,
                               partitionBy: Seq[String],
@@ -682,7 +690,7 @@ object CsvWriter {
     // inline statistics would degrade to "none" — a FRESH default-layout
     // write auto-upgrades to the sharded layout instead (shards have no
     // cardinality cap: they are written distributed, one per leaf)
-    val (fresh: Seq[graft.sources.StarTableSource.SliceStats], capped: Boolean) =
+    val (fresh: Seq[SliceStats], capped: Boolean) =
       if (!collectStats || shardedPre) (Nil, false)
       else computeSliceStats(t, dataCols, partitionBy, naRep,
         warnOnCap = !(existingMeta.isEmpty && shardStats.isEmpty)) match {
@@ -763,8 +771,9 @@ object CsvWriter {
         // retry accepts — publishing the union early would make the
         // retry refuse with "no new columns" and wedge at-least-once
         // schedulers
-        writeSidecarRaw(outDir, m.copy(sliceStats = stripped), strippedFiles,
-          lockToken = lockToken)
+        installSidecar(outDir,
+          m.copy(sliceStats = stripped, fileStats = strippedFiles),
+          expectCommit = Some(m.commit), lockToken = lockToken)
         lastCommit = Some(lastCommit.getOrElse(0L) + 1L)
       }
     }
@@ -844,7 +853,7 @@ object CsvWriter {
       // shards: shardless slices are read, never skipped (conservative).
       if (collectStats)
         writeSliceShards(t.df.sparkSession, dataDir, dataCols,
-          dataCols.map(t.unit), partitionBy, sep, naRep,
+          dataCols.map(t.unit), partitionBy, sep,
           onlySlices = if (overwriteSlices) Some(rewrittenParts) else None,
           recordFileEntries = collectFileStats.getOrElse(true))
       if (sharedLease)
@@ -853,16 +862,15 @@ object CsvWriter {
         // siblings, and one drain covers every sibling that finished
         applySidecarMergeBatched(outDir, lock.get, Set.empty, Nil, Nil)
       else
-        writeDatasetSidecar(t, dataDir, dataCols, partitionBy, sep, Nil, Nil,
-          statsSharded = true,
+        installSidecar(dataDir, tableMeta(t, dataCols, partitionBy, sep)
+          .copy(statsSharded = true, lateCols = lateCols),
           // the full (static) overwrite stages a fresh sidecar; a
           // backfill's sidecar survives at the observed commit
-          expectCommit = Some(if (overwriteSlices) lastCommit else None),
-          lateCols = lateCols, lockToken = lockToken,
-          seedCommit = overwriteSeedCommit)
+          expectCommit = if (overwriteSlices) lastCommit else None,
+          lockToken = lockToken, seedCommit = overwriteSeedCommit)
       graft.sources.StarTableSource.invalidateShardCache(outDir)
     } else {
-      val stats: Seq[graft.sources.StarTableSource.SliceStats] =
+      val stats: Seq[SliceStats] =
         if (capped) Nil
         else existingMeta match {
           case Some(m) if overwriteSlices =>
@@ -874,15 +882,15 @@ object CsvWriter {
       // stripping is hygiene) PLUS fresh entries for just-written MULTI-file
       // slices (filesPerSlice salting / unshuffled writes), so file-tier
       // skipping works from write time, not only after clusterStarDataset
-      val survivors: Seq[graft.sources.StarTableSource.FileStats] =
+      val survivors: Seq[FileStats] =
         if (capped) Nil
         else existingMeta.map(
           _.fileStats.filterNot(s => rewrittenParts.contains(s.partition)))
           .getOrElse(Nil)
-      val written: Seq[graft.sources.StarTableSource.FileStats] =
+      val written: Seq[FileStats] =
         if (capped || !collectStats || !collectFileStats.getOrElse(numFiles > 0)) Nil
         else computeWrittenFileStats(t.df.sparkSession, dataDir, dataCols,
-          dataCols.map(t.unit), partitionBy, sep, naRep,
+          dataCols.map(t.unit), partitionBy, sep,
           onlySlices = if (overwriteSlices) Some(rewrittenParts) else None)
       // sidecar LAST: readers refuse a dataset without it
       if (sharedLease)
@@ -894,11 +902,11 @@ object CsvWriter {
         applySidecarMergeBatched(outDir, lock.get, rewrittenParts,
           fresh, written)
       else
-        writeDatasetSidecar(t, dataDir, dataCols, partitionBy, sep, stats,
-          survivors ++ written,
-          expectCommit = Some(if (overwriteSlices) lastCommit else None),
-          lateCols = lateCols, lockToken = lockToken,
-          seedCommit = overwriteSeedCommit)
+        installSidecar(dataDir, tableMeta(t, dataCols, partitionBy, sep)
+          .copy(sliceStats = stats, fileStats = survivors ++ written,
+            lateCols = lateCols),
+          expectCommit = if (overwriteSlices) lastCommit else None,
+          lockToken = lockToken, seedCommit = overwriteSeedCommit)
     }
     if (replaceExisting) {
       // two-rename commit: old root to hidden trash, staging in, trash
@@ -931,7 +939,6 @@ object CsvWriter {
   private def writeSliceShards(spark: SparkSession, outDir: String,
                                dataCols: Seq[String], units: Seq[String],
                                partitionBy: Seq[String], sep: String,
-                               naRep: String,
                                onlySlices: Option[Set[Seq[String]]],
                                recordFileEntries: Boolean = true): Unit = {
     val conf = spark.sessionState.newHadoopConf()
@@ -944,73 +951,43 @@ object CsvWriter {
         // marker), the same parity dropPartitions relies on.
         val root = new org.apache.hadoop.fs.Path(outDir)
         val fs = root.getFileSystem(conf)
-        parts.toSeq.flatMap { raw =>
-          val leaf = sliceLeafPath(root, partitionBy, raw)
-          try fs.listStatus(leaf).toSeq
-            .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-              !s.getPath.getName.startsWith("."))
-            .map(_.getPath.toString)
-          catch { case _: java.io.FileNotFoundException => Nil }
-        }
+        parts.toSeq.flatMap(raw => DatasetSidecar.sliceFiles(fs,
+          sliceLeafPath(root, partitionBy, raw))).map(_.getPath.toString)
       case None => graft.sources.StarTableSource.listPartitionedFiles(
         Seq(outDir), partitionBy, conf).map(_._1)
     }
     if (files.isEmpty) return
-    val qsep = java.util.regex.Pattern.quote(sep)
-    val cells = split(col("value"), qsep, -1).as("__cs")
-    val aggs = dataCols.indices.flatMap { i =>
-      val v = parsedCellExpr(col("__cs"), i, units(i))
-      Seq(min(v).as(s"__min_$i"), max(v).as(s"__max_$i"),
-        count(when(v.isNull, 1)).as(s"__nulls_$i"))
-    } :+ count(lit(1)).as("__rows")
-    val perFile = spark.read.text(files: _*)
-      .select(input_file_name().as("__f"), cells)
-      .groupBy(col("__f")).agg(aggs.head, aggs.tail: _*)
+    val perFile = DatasetSidecar.fileStatsFrame(spark, files, sep, units)
     val confS = new org.apache.spark.util.SerializableConfiguration(conf)
     val colsL = dataCols.toList
     val unitsL = units.toList
     val partsL = partitionBy.toList
     val rootL = outDir
-    val naRepL = naRep
     val recordFileEntriesL = recordFileEntries
     perFile.rdd
-      .map { r =>
-        // input_file_name yields a qualified URI; normalize like the
-        // listing so the leaf key and the shard path agree
-        val p = try new org.apache.hadoop.fs.Path(new java.net.URI(r.getString(0)))
-        catch { case _: Exception => new org.apache.hadoop.fs.Path(r.getString(0)) }
-        (p.getParent.toString, (p.getName, r))
-      }
+      .map(r => (DatasetSidecar.fileOf(r).getParent.toString, r))
       .groupByKey() // one group per leaf: slices ≪ rows, groups are file counts
-      .foreachPartition { it: Iterator[(String, Iterable[(String, org.apache.spark.sql.Row)])] =>
+      .foreachPartition { it: Iterator[(String, Iterable[org.apache.spark.sql.Row])] =>
         val hconf = confS.value
         it.foreach { case (leafDir, fileRows) =>
           val leaf = new org.apache.hadoop.fs.Path(leafDir)
           val raw = graft.sources.StarTableStreamUtil.partitionValuesFromPath(
             new org.apache.hadoop.fs.Path(leaf, "x").toString, partsL, rootL)
-          val entries = fileRows.toSeq.sortBy(_._1)
-          val fileEntries = entries.map { case (base, r) =>
-            val stats = colsL.zipWithIndex.map { case (c, i) =>
-              c -> graft.sources.StarTableSource.ColStats(
-                renderStat(r.get(1 + i * 3), unitsL(i), naRepL),
-                renderStat(r.get(1 + i * 3 + 1), unitsL(i), naRepL),
-                r.getLong(1 + i * 3 + 2))
-            }.toMap
-            graft.sources.StarTableSource.FileStats(
-              raw, base, r.getLong(1 + colsL.size * 3), stats)
-          }
+          val fileEntries = fileRows.toSeq
+            .map(r => DatasetSidecar.fileStatsOf(r, raw, colsL, unitsL))
+            .sortBy(_.file)
           // fold file→slice: the file entries are already RENDERED —
           // re-fold on the rendered values through the same ordering the
           // reader uses (parse + cmp), so the slice bound equals the
           // bound over all rows exactly
           val slice = graft.sources.StarTableSource.foldFileEntries(
             raw, fileEntries, colsL, unitsL)
-          val json = renderSliceShardJson(slice,
-            if (recordFileEntriesL && fileEntries.size > 1) fileEntries
-            else Nil)
           graft.io.CsvWriter.atomicInstallJson(
             leaf.getFileSystem(hconf), hconf,
-            new org.apache.hadoop.fs.Path(leaf, SliceShardFile), json)
+            new org.apache.hadoop.fs.Path(leaf, SliceShardFile),
+            DatasetSidecar.encodeShard(SliceShard(slice,
+              if (recordFileEntriesL && fileEntries.size > 1) fileEntries
+              else Nil)))
         }
       }
   }
@@ -1081,8 +1058,9 @@ object CsvWriter {
   private def computeSliceStats(t: StarTable, dataCols: Seq[String],
                                 partitionBy: Seq[String], naRep: String,
                                 warnOnCap: Boolean = true)
-      : Option[Seq[graft.sources.StarTableSource.SliceStats]] = {
-    val keyCols = partitionPathCols(t, partitionBy, naRep, "sliceStats")
+      : Option[Seq[SliceStats]] = {
+    val keyCols = partitionPathCols(t, partitionBy, naRep,
+      "writePartitionedDataset")
     // rendered cells in DATASET column order — first-column sealing applies
     // to dataCols.head exactly as the written value column does
     val renderedByCol: Map[String, Column] =
@@ -1149,12 +1127,9 @@ object CsvWriter {
         val mn = r.get(base + ci * 3)
         val mx = r.get(base + ci * 3 + 1)
         val nulls = r.getLong(base + ci * 3 + 2)
-        c -> graft.sources.StarTableSource.ColStats(
-          renderStat(mn, t.unit(c), naRep), renderStat(mx, t.unit(c), naRep),
-          nulls)
+        c -> ColStats(renderStat(mn), renderStat(mx), nulls)
       }.toMap
-      graft.sources.StarTableSource.SliceStats(part,
-        r.getLong(base + dataCols.size * 3), stats)
+      SliceStats(part, r.getLong(base + dataCols.size * 3), stats)
     })
   }
 
@@ -1183,7 +1158,9 @@ object CsvWriter {
         when(e.isNull, lit(null))
           .otherwise(when(lower(e).isin("1", "true"), 1).otherwise(0))
       case _          =>
-        val d = e.cast(DoubleType)
+        // try_cast: a naRep or malformed cell reads as null (the fixer's
+        // verdict), where an ANSI cast would fail the whole pass
+        val d = e.try_cast(DoubleType)
         when(!isnan(d) &&
           !d.isin(Double.PositiveInfinity, Double.NegativeInfinity), d)
     }
@@ -1204,9 +1181,8 @@ object CsvWriter {
   private def computeWrittenFileStats(spark: SparkSession, outDir: String,
                                       dataCols: Seq[String], units: Seq[String],
                                       partitionBy: Seq[String], sep: String,
-                                      naRep: String,
                                       onlySlices: Option[Set[Seq[String]]])
-      : Seq[graft.sources.StarTableSource.FileStats] = {
+      : Seq[FileStats] = {
     val conf = spark.sessionState.newHadoopConf()
     // backfill: construct the rewritten leaves DIRECTLY — touched-
     // proportional cost (a 1-slice backfill must not pay an O(dataset)
@@ -1218,14 +1194,8 @@ object CsvWriter {
       case Some(parts) =>
         val root = new org.apache.hadoop.fs.Path(outDir)
         val fs = root.getFileSystem(conf)
-        parts.toSeq.map { raw =>
-          val leaf = sliceLeafPath(root, partitionBy, raw)
-          raw -> (try fs.listStatus(leaf).toSeq
-            .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-              !s.getPath.getName.startsWith("."))
-            .map(_.getPath.toString)
-          catch { case _: java.io.FileNotFoundException => Nil })
-        }.toMap
+        parts.toSeq.map(raw => raw -> DatasetSidecar.sliceFiles(fs,
+          sliceLeafPath(root, partitionBy, raw)).map(_.getPath.toString)).toMap
       case None => graft.sources.StarTableSource.listPartitionedFiles(
           Seq(outDir), partitionBy, conf)
         .groupBy(_._3).view.mapValues(_.map(_._1)).toMap
@@ -1239,37 +1209,18 @@ object CsvWriter {
         "statistics (reads stay correct, file skipping disabled)")
       return Nil
     }
-    val qsep = java.util.regex.Pattern.quote(sep)
-    val cells = split(col("value"), qsep, -1).as("__cs")
-    val aggs = dataCols.indices.flatMap { i =>
-      val v = parsedCellExpr(col("__cs"), i, units(i))
-      Seq(min(v).as(s"__min_$i"), max(v).as(s"__max_$i"),
-        count(when(v.isNull, 1)).as(s"__nulls_$i"))
-    } :+ count(lit(1)).as("__rows")
-    val rows = spark.read.text(targetFiles: _*)
-      .select(input_file_name().as("__f"), cells)
-      .groupBy(col("__f")).agg(aggs.head, aggs.tail: _*).collect()
-    rows.toSeq.map { r =>
-      // input_file_name yields a qualified URI; normalize like the listing
-      val p = try new org.apache.hadoop.fs.Path(new java.net.URI(r.getString(0)))
-      catch { case _: Exception => new org.apache.hadoop.fs.Path(r.getString(0)) }
-      val raw = graft.sources.StarTableStreamUtil.partitionValuesFromPath(
-        p.toString, partitionBy, outDir)
-      val stats = dataCols.zipWithIndex.map { case (c, i) =>
-        c -> graft.sources.StarTableSource.ColStats(
-          renderStat(r.get(1 + i * 3), units(i), naRep),
-          renderStat(r.get(1 + i * 3 + 1), units(i), naRep),
-          r.getLong(1 + i * 3 + 2))
-      }.toMap
-      graft.sources.StarTableSource.FileStats(
-        raw, p.getName, r.getLong(1 + dataCols.size * 3), stats)
-    }.sortBy(s => (s.partition.map(v => if (v == null) "" else v).mkString("\u0000"),
-      s.file))
+    DatasetSidecar.fileStatsFrame(spark, targetFiles, sep, units).collect()
+      .toSeq.map { r =>
+        val raw = graft.sources.StarTableStreamUtil.partitionValuesFromPath(
+          DatasetSidecar.fileOf(r).toString, partitionBy, outDir)
+        DatasetSidecar.fileStatsOf(r, raw, dataCols, units)
+      }.sortBy(s => (s.partition.map(v => if (v == null) "" else v).mkString("\u0000"),
+        s.file))
   }
 
   /** Render one collected stat value exactly as a data cell of its unit
     * would be (so the reader's re-parse yields the cell's value). */
-  private[graft] def renderStat(v: Any, unit: String, naRep: String): String = v match {
+  private[graft] def renderStat(v: Any): String = v match {
     case null                  => null
     case s: String             => s // text stats are already rendered
     case b: Boolean            => if (b) "1" else "0"
@@ -1278,26 +1229,66 @@ object CsvWriter {
     case other                 => stringify(other, None)
   }
 
-  /** `expectCommit` is the sidecar flip's compare-and-swap token:
-    * None = legacy/unguarded install (counter still bumps);
-    * Some(None) = the caller expects NO sidecar on disk (fresh dataset);
-    * Some(Some(c)) = the caller read commit `c` when its multi-step
-    * protocol began and refuses to flip if another writer moved it. */
-  private[graft] def writeDatasetSidecar(t: StarTable, outDir: String,
-                                  dataCols: Seq[String],
-                                  partitionBy: Seq[String],
-                                  sep: String = DefaultSep,
-                                  sliceStats: Seq[graft.sources.StarTableSource.SliceStats] = Nil,
-                                  fileStats: Seq[graft.sources.StarTableSource.FileStats] = Nil,
-                                  statsSharded: Boolean = false,
-                                  expectCommit: Option[Option[Long]] = None,
-                                  lateCols: Seq[String] = Nil,
-                                  lockToken: Option[String] = None,
-                                  seedCommit: Long = 1L): Unit =
-    writeSidecarFields(outDir, t.name, t.destinations, dataCols,
-      dataCols.map(t.unit), partitionBy, partitionBy.map(t.unit), sep,
-      sliceStats, fileStats, statsSharded, expectCommit, lateCols,
-      lockToken, seedCommit)
+  /** Install `meta` as `outDir`'s root sidecar — every sidecar write goes
+    * through here. `meta.commit` is ignored: the install stamps the next
+    * commit. `expectCommit` is the flip's compare-and-swap token: None =
+    * the caller expects NO sidecar on disk (fresh dataset); Some(c) = the
+    * caller read commit `c` when its multi-step protocol began and refuses
+    * to flip if another writer moved it. `lockToken` is the exclusive or
+    * flip token the caller holds (see
+    * [[DatasetLock.verifyWriteAuthority]]). `seedCommit` keeps the
+    * counter monotonic ACROSS a full overwrite's root swap (the staged
+    * sidecar continues above the replaced root's commit instead of
+    * resetting to 1 — closing the CAS ABA window). */
+  private[graft] def installSidecar(outDir: String, meta: DatasetMeta,
+                                    expectCommit: Option[Long],
+                                    lockToken: Option[String],
+                                    seedCommit: Long = 1L): Unit = {
+    // Lease-ownership gate (first defense, round 13): when the root is
+    // under ANY live lease, the installer must present the current
+    // exclusive token or the current flip token — a tokenless install
+    // against a leased root is a lock bypass, refused at the bypasser's
+    // own write instead of (only) at the victim's next flip.
+    DatasetLock.verifyWriteAuthority(outDir, lockToken)
+    // CAS at the flip: the second defense behind the DatasetLock lease —
+    // a writer that bypassed the lease (legacy code, a force-broken lock)
+    // is caught here, before its install can revert a sibling's commit.
+    val current: Option[Long] =
+      graft.sources.StarTableSource.readDatasetMeta(Seq(outDir)).map(_.commit)
+    if (expectCommit != current) throw new ConcurrentWriteException(
+      s"dataset at $outDir: sidecar commit moved — this writer began at " +
+        s"commit ${expectCommit.map(_.toString).getOrElse("<none>")} but the " +
+        s"root now holds ${current.map(_.toString).getOrElse("<none>")}: a " +
+        "concurrent writer committed in between; rerun this operation " +
+        "against the current state")
+    val newCommit: Long = math.max(seedCommit, expectCommit.getOrElse(0L) + 1L)
+    val conf = graft.sources.StarTableSource.activeHadoopConf()
+    val metaPath = new org.apache.hadoop.fs.Path(outDir, DatasetMetaFile)
+    val fs = metaPath.getFileSystem(conf)
+    atomicInstallJson(fs, conf, metaPath,
+      DatasetSidecar.encodeSidecar(meta.copy(commit = newCommit)))
+    // the reader memoizes parsed sidecars by (path, len, mtime) — a
+    // same-length rewrite inside the FS's mtime resolution would otherwise
+    // serve the OLD stats from cache and could wrongly skip files
+    graft.sources.StarTableSource.invalidateMetaCache(outDir)
+  }
+
+  /** The schema half of a sidecar written from table `t`: name,
+    * destinations, data and partition columns with their units, `sep`. */
+  private def tableMeta(t: StarTable, dataCols: Seq[String],
+                        partitionBy: Seq[String], sep: String): DatasetMeta =
+    DatasetMeta(t.name, t.destinations, dataCols, dataCols.map(t.unit),
+      partitionBy, partitionBy.map(t.unit), sep)
+
+  /** The THEN-CURRENT sidecar, re-read past the cache, for a
+    * read-merge-install under the flip lock. */
+  private def currentMeta(outDir: String): DatasetMeta = {
+    graft.sources.StarTableSource.invalidateMetaCache(outDir)
+    graft.sources.StarTableSource.readDatasetMeta(Seq(outDir))
+      .getOrElse(throw new ConcurrentWriteException(
+        s"dataset at $outDir: sidecar vanished during a shared backfill " +
+          "— a concurrent full overwrite or delete raced this writer"))
+  }
 
   /** METADATA-ONLY schema evolution: append `newCols` (name, unit) pairs
     * to an existing dataset's schema by rewriting the SIDECAR alone — no
@@ -1331,45 +1322,18 @@ object CsvWriter {
         s"evolveDatasetSchema: column(s) ${clash.mkString(", ")} already " +
           s"exist in the dataset at $outDir (${cur.cols.mkString(", ")}; " +
           s"partitioned by ${cur.partCols.mkString(", ")})")
-      writeSidecarFields(outDir, cur.name, cur.destinations,
-        cur.cols ++ names, cur.units ++ newCols.map(_._2),
-        cur.partCols, cur.partUnits, cur.sep,
-        cur.sliceStats, cur.fileStats, cur.statsSharded,
-        expectCommit = Some(Some(cur.commit)),
-        lateCols = (cur.lateCols ++ names).distinct,
-        lockToken = Some(h.info.token))
+      installSidecar(outDir, cur.copy(cols = cur.cols ++ names,
+        units = cur.units ++ newCols.map(_._2),
+        lateCols = (cur.lateCols ++ names).distinct),
+        expectCommit = Some(cur.commit), lockToken = Some(h.info.token))
     }
     graft.sources.StarTableSource.invalidateMetaCache(outDir)
   }
 
-  /** Read-merge-install of the root sidecar under the FLIP lock — the
-    * shared-lease sidecar mutation primitive. Re-reads the THEN-CURRENT
-    * sidecar (cache invalidated first), applies `f` — which must only
-    * add/remove the caller's OWN slices' entries (disjointness is the
-    * shared-lease contract) — and installs with the CAS expecting the
-    * commit just read. Flips serialize on the flip lock, so the CAS can
-    * only trip on a lock bypasser racing the install window itself.
-    * `f` returning None skips the install (nothing to change). */
-  private def mutateSidecarUnderFlip(outDir: String)(
-      f: graft.sources.StarTableSource.DatasetMeta =>
-        Option[(graft.sources.StarTableSource.DatasetMeta,
-                Seq[graft.sources.StarTableSource.FileStats])]): Unit =
-    DatasetLock.withFlipLock(outDir) { flipToken =>
-      graft.sources.StarTableSource.invalidateMetaCache(outDir)
-      val cur = graft.sources.StarTableSource.readDatasetMeta(Seq(outDir))
-        .getOrElse(throw new ConcurrentWriteException(
-          s"dataset at $outDir: sidecar vanished during a shared backfill " +
-            "— a concurrent full overwrite or delete raced this writer"))
-      f(cur).foreach { case (m2, files2) =>
-        writeSidecarFields(outDir, m2.name, m2.destinations, m2.cols,
-          m2.units, m2.partCols, m2.partUnits, m2.sep, m2.sliceStats, files2,
-          m2.statsSharded, expectCommit = Some(Some(cur.commit)),
-          lateCols = m2.lateCols, lockToken = Some(flipToken))
-      }
-    }
-
-  /** Staged sidecar-merge intents: `_startable_pending.<leaseToken>.<n>
-    * .json` files beside the sidecar. Round 13 measured the ceiling of
+  /** Stage a merge intent ([[DatasetSidecar.MergeIntent]], written as
+    * [[PendingMergePrefix]]`<leaseToken>.<n>.json` beside the sidecar)
+    * and wait until SOME drain (ours or a sibling's) applies it — the
+    * shared-lease sidecar mutation. Round 13 measured the ceiling of
     * per-holder serialized flips — 6.15× at 8 concurrent backfills but
     * only 2.50× at 16, every holder's read-merge-install queueing on one
     * mutex. Batched flips lift it: a holder STAGES its merge as an intent
@@ -1377,29 +1341,19 @@ object CsvWriter {
     * intent into ONE read-merge-install — 16 finished writers cost ~1-2
     * flips instead of 16. A holder returns only after its intent is
     * applied (the file is deleted by the drain), so lease release still
-    * implies visible stats — ordering with successors is unchanged. */
-  private[graft] val PendingMergePrefix = "_startable_pending."
-
-  private final case class MergeIntent(holderToken: String,
-      stripSlices: Set[Seq[String]],
-      stripFiles: Set[Seq[String]],
-      addSlices: Seq[graft.sources.StarTableSource.SliceStats],
-      addFiles: Seq[graft.sources.StarTableSource.FileStats])
-
-  /** Stage `intent` and wait until SOME drain (ours or a sibling's)
-    * applies it. Replaces the per-holder [[mutateSidecarUnderFlip]] in
-    * the shared-backfill path. Reapplication is idempotent (strip ⊇ the
-    * added entries' partitions — a crash between a drain's install and
-    * its deletes merely re-strips and re-adds the same entries), and a
-    * drain applies an intent ONLY while its holder's lease is live: an
-    * orphan (crashed holder) is deleted unapplied, which is conservative
-    * — its holder provably never wrote data after the un-applied stage
-    * (holders block right here until applied). */
+    * implies visible stats — ordering with successors is unchanged.
+    * Reapplication is idempotent (strip ⊇ the added entries' partitions —
+    * a crash between a drain's install and its deletes merely re-strips
+    * and re-adds the same entries), and a drain applies an intent ONLY
+    * while its holder's lease is live: an orphan (crashed holder) is
+    * deleted unapplied, which is conservative — its holder provably never
+    * wrote data after the un-applied stage (holders block right here
+    * until applied). */
   private[graft] def applySidecarMergeBatched(outDir: String,
       handle: DatasetLock.Handle,
       stripSlices: Set[Seq[String]],
-      addSlices: Seq[graft.sources.StarTableSource.SliceStats],
-      addFiles: Seq[graft.sources.StarTableSource.FileStats],
+      addSlices: Seq[SliceStats],
+      addFiles: Seq[FileStats],
       stripFilesOverride: Option[Set[Seq[String]]] = None): Unit = {
     // slice and file entries strip independently: a backfill replaces
     // both for its partitions; slice-scoped CLUSTERING keeps the (reorder-
@@ -1412,32 +1366,12 @@ object CsvWriter {
     val conf = graft.sources.StarTableSource.activeHadoopConf()
     val root = new org.apache.hadoop.fs.Path(outDir)
     val fs = root.getFileSystem(conf)
-    import JsonValue._
-    def optStr(s: String): JsonValue = if (s == null) JsonNull else JsonString(s)
-    def tuplesJson(ts: Set[Seq[String]]): JsonValue = JsonArray(ts.toVector
-      .sortBy(_.map(v => if (v == null) "" else v).mkString("\u0000"))
-      .map(t => JsonArray(t.toVector.map(optStr))))
-    val intentJson = JsonValue.write(JsonObject(scala.collection.immutable.ListMap(
-      "holder" -> JsonString(handle.info.token),
-      "strip" -> tuplesJson(stripSlices),
-      "stripFiles" -> tuplesJson(stripFiles),
-      "sliceStats" -> JsonArray(addSlices.toVector.map { s =>
-        JsonObject(scala.collection.immutable.ListMap(
-          "partition" -> JsonArray(s.partition.toVector.map(optStr)),
-          "rows" -> JsonNumber(s.rows.toDouble),
-          "stats" -> colStatsJson(s.stats)))
-      }),
-      "fileStats" -> JsonArray(addFiles.toVector.map { f =>
-        JsonObject(scala.collection.immutable.ListMap(
-          "partition" -> JsonArray(f.partition.toVector.map(optStr)),
-          "file" -> JsonString(f.file),
-          "rows" -> JsonNumber(f.rows.toDouble),
-          "stats" -> colStatsJson(f.stats)))
-      }))))
     val myPath = new org.apache.hadoop.fs.Path(root,
       PendingMergePrefix + handle.info.token + "." +
         java.util.UUID.randomUUID().toString.take(8) + ".json")
-    atomicInstallJson(fs, conf, myPath, intentJson)
+    atomicInstallJson(fs, conf, myPath, DatasetSidecar.encodeIntent(
+      MergeIntent(handle.info.token, stripSlices, stripFiles, addSlices,
+        addFiles)))
     val rnd = java.util.concurrent.ThreadLocalRandom.current()
     // disappearance means APPLIED only while the lease is provably live:
     // a sibling's drain deletes an EXPIRED holder's intent UNAPPLIED, and
@@ -1490,50 +1424,21 @@ object CsvWriter {
       val rest = p.getName.stripPrefix(PendingMergePrefix)
       liveTokens.exists(t => rest.startsWith(t + "."))
     }
-    val intents = liveFiles.map { p =>
-      val in = fs.open(p)
-      val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      import JsonValue._
-      val o = JsonValue.parse(txt).asInstanceOf[JsonObject]
-      def optStr(x: JsonValue): String = x match {
-        case JsonString(s) => s
-        case _             => null
-      }
-      def tuples(k: String): Set[Seq[String]] = o.fields.get(k) match {
-        case Some(JsonArray(ts)) => ts.map {
-          case JsonArray(vs) => vs.map(optStr): Seq[String]
-          case _             => Seq.empty[String]
-        }.toSet
-        case _ => Set.empty
-      }
-      val stripSlices = tuples("strip")
-      MergeIntent(o.fields("holder").asInstanceOf[JsonString].value,
-        stripSlices,
-        if (o.fields.contains("stripFiles")) tuples("stripFiles")
-        else stripSlices,
-        graft.sources.StarTableSource.sliceStatsFromJson(
-          o.fields.get("sliceStats")),
-        graft.sources.StarTableSource.fileStatsFromJson(
-          o.fields.get("fileStats")))
-    }
+    // a live holder's intent that does not decode fails the drain LOUDLY,
+    // file named, like a damaged sidecar or shard: dropping it would
+    // lose that holder's merge while it waits for it to land
+    val intents = liveFiles.map(p => DatasetSidecar.read(fs, p,
+      "sidecar merge", "merge intent")(DatasetSidecar.decodeIntent))
     if (intents.nonEmpty) {
-      graft.sources.StarTableSource.invalidateMetaCache(outDir)
-      val cur = graft.sources.StarTableSource.readDatasetMeta(Seq(outDir))
-        .getOrElse(throw new ConcurrentWriteException(
-          s"dataset at $outDir: sidecar vanished during a shared backfill " +
-            "— a concurrent full overwrite or delete raced this writer"))
-      val allStripSlices: Set[Seq[String]] = intents.flatMap(_.stripSlices).toSet
+      val cur = currentMeta(outDir)
+      val allStrip: Set[Seq[String]] = intents.flatMap(_.strip).toSet
       val allStripFiles: Set[Seq[String]] = intents.flatMap(_.stripFiles).toSet
-      val mergedSlices = cur.sliceStats
-        .filterNot(s => allStripSlices.contains(s.partition)) ++
-        intents.flatMap(_.addSlices)
-      val mergedFiles = cur.fileStats
-        .filterNot(s => allStripFiles.contains(s.partition)) ++
-        intents.flatMap(_.addFiles)
-      writeSidecarFields(outDir, cur.name, cur.destinations, cur.cols,
-        cur.units, cur.partCols, cur.partUnits, cur.sep, mergedSlices,
-        mergedFiles, cur.statsSharded, expectCommit = Some(Some(cur.commit)),
-        lateCols = cur.lateCols, lockToken = Some(flipToken))
+      installSidecar(outDir, cur.copy(
+        sliceStats = cur.sliceStats.filterNot(s => allStrip.contains(s.partition)) ++
+          intents.flatMap(_.addSlices),
+        fileStats = cur.fileStats.filterNot(s => allStripFiles.contains(s.partition)) ++
+          intents.flatMap(_.addFiles)),
+        expectCommit = Some(cur.commit), lockToken = Some(flipToken))
     }
     // crash window drilled by BatchedFlipCrashSpec: a drain dying HERE
     // (install landed, deletes pending) leaves every intent on disk —
@@ -1543,113 +1448,6 @@ object CsvWriter {
     (liveFiles ++ orphanFiles).foreach { p =>
       try fs.delete(p, false) catch { case _: java.io.IOException => () }
     }
-  }
-
-  /** Rewrite an existing dataset's sidecar with fresh FILE statistics,
-    * everything else (schema, sep, slice stats) verbatim — the
-    * maintenance-pass entry point, which holds a DatasetMeta rather than
-    * a StarTable. CAS-guarded against the commit the caller's meta was
-    * read at: a concurrent writer that committed since makes this flip
-    * refuse instead of silently reverting its sidecar. */
-  private[graft] def writeSidecarRaw(outDir: String,
-      meta: graft.sources.StarTableSource.DatasetMeta,
-      fileStats: Seq[graft.sources.StarTableSource.FileStats],
-      lockToken: Option[String] = None): Unit =
-    writeSidecarFields(outDir, meta.name, meta.destinations, meta.cols,
-      meta.units, meta.partCols, meta.partUnits, meta.sep, meta.sliceStats,
-      fileStats, meta.statsSharded, expectCommit = Some(Some(meta.commit)),
-      lateCols = meta.lateCols, lockToken = lockToken)
-
-  private def writeSidecarFields(outDir: String, name: String,
-                                 destinations: Set[String],
-                                 dataCols: Seq[String], units: Seq[String],
-                                 partitionBy: Seq[String], partUnits: Seq[String],
-                                 sep: String,
-                                 sliceStats: Seq[graft.sources.StarTableSource.SliceStats],
-                                 fileStats: Seq[graft.sources.StarTableSource.FileStats],
-                                 statsSharded: Boolean = false,
-                                 expectCommit: Option[Option[Long]] = None,
-                                 lateCols: Seq[String] = Nil,
-                                 lockToken: Option[String] = None,
-                                 seedCommit: Long = 1L): Unit = {
-    // Lease-ownership gate (first defense, round 13): when the root is
-    // under ANY live lease, the installer must present the current
-    // exclusive token or the current flip token — a tokenless install
-    // against a leased root is a lock bypass, refused at the bypasser's
-    // own write instead of (only) at the victim's next flip.
-    DatasetLock.verifyWriteAuthority(outDir, lockToken)
-    // CAS at the flip: the second defense behind the DatasetLock lease —
-    // a writer that bypassed the lease (legacy code, a force-broken lock)
-    // is caught here, before its install can revert a sibling's commit.
-    val current: Option[Long] =
-      graft.sources.StarTableSource.readDatasetMeta(Seq(outDir)).map(_.commit)
-    expectCommit.foreach { e =>
-      if (e != current) throw new ConcurrentWriteException(
-        s"dataset at $outDir: sidecar commit moved — this writer began at " +
-          s"commit ${e.map(_.toString).getOrElse("<none>")} but the root " +
-          s"now holds ${current.map(_.toString).getOrElse("<none>")}: a " +
-          "concurrent writer committed in between; rerun this operation " +
-          "against the current state")
-    }
-    // seedCommit keeps the counter monotonic ACROSS a full overwrite's
-    // root swap (the staged sidecar continues above the replaced root's
-    // commit instead of resetting to 1 — closing the CAS ABA window)
-    val newCommit: Long = math.max(seedCommit,
-      expectCommit.flatten.orElse(current).getOrElse(0L) + 1L)
-    import graft.io.JsonValue._
-    def optStr(s: String): JsonValue = if (s == null) JsonNull else JsonString(s)
-    val statsJson = JsonArray(sliceStats.toVector.map { s =>
-      JsonObject(scala.collection.immutable.ListMap(
-        "partition" -> JsonArray(s.partition.toVector.map(optStr)),
-        "rows" -> JsonNumber(s.rows.toDouble),
-        "stats" -> colStatsJson(s.stats)))
-    })
-    val fileStatsJson = JsonArray(fileStats.toVector.map { s =>
-      JsonObject(scala.collection.immutable.ListMap(
-        "partition" -> JsonArray(s.partition.toVector.map(optStr)),
-        "file" -> JsonString(s.file),
-        "rows" -> JsonNumber(s.rows.toDouble),
-        "stats" -> colStatsJson(s.stats)))
-    })
-    val meta = JsonObject(scala.collection.immutable.ListMap(
-      "name" -> JsonString(name),
-      "destinations" -> JsonArray(
-        destinations.toVector.sorted.map(JsonString(_))),
-      "columns" -> JsonArray(dataCols.toVector.map(JsonString(_))),
-      "units" -> JsonArray(units.toVector.map(JsonString(_))),
-      "partitionBy" -> JsonArray(partitionBy.toVector.map(JsonString(_))),
-      "partitionUnits" -> JsonArray(partUnits.toVector.map(JsonString(_))),
-      "sep" -> JsonString(sep),
-      // stored as a JSON double on purpose (the sidecar's only number
-      // type): exact to 2^53 commits — do NOT "fix" into a string, the
-      // reader parses JsonNumber
-      "commit" -> JsonNumber(newCommit.toDouble)) ++
-      (if (!statsSharded) Nil else Seq("statsSharded" -> JsonBool(true))) ++
-      (if (lateCols.isEmpty) Nil
-       else Seq("lateColumns" -> JsonArray(
-         lateCols.toVector.map(JsonString(_))))) ++
-      (if (sliceStats.isEmpty) Nil else Seq("sliceStats" -> statsJson)) ++
-      (if (fileStats.isEmpty) Nil else Seq("fileStats" -> fileStatsJson)))
-    val conf = graft.sources.StarTableSource.activeHadoopConf()
-    val metaPath = new org.apache.hadoop.fs.Path(outDir, DatasetMetaFile)
-    val fs = metaPath.getFileSystem(conf)
-    atomicInstallJson(fs, conf, metaPath, graft.io.JsonValue.write(meta))
-    // the reader memoizes parsed sidecars by (path, len, mtime) — a
-    // same-length rewrite inside the FS's mtime resolution would otherwise
-    // serve the OLD stats from cache and could wrongly skip files
-    graft.sources.StarTableSource.invalidateMetaCache(outDir)
-  }
-
-  private[graft] def colStatsJson(
-      stats: Map[String, graft.sources.StarTableSource.ColStats]): JsonValue = {
-    import graft.io.JsonValue._
-    def optStr(s: String): JsonValue = if (s == null) JsonNull else JsonString(s)
-    JsonObject(scala.collection.immutable.ListMap(
-      stats.toSeq.sortBy(_._1).map { case (c, cs) =>
-        c -> (JsonObject(scala.collection.immutable.ListMap(
-          "min" -> optStr(cs.min), "max" -> optStr(cs.max),
-          "nulls" -> JsonNumber(cs.nulls.toDouble))): JsonValue)
-      }: _*))
   }
 
   /** Stage-and-rename install of a small JSON metadata file: an in-place
@@ -1683,39 +1481,6 @@ object CsvWriter {
             s"atomicInstallJson: could not install $target")
     }
   }
-
-  /** Render one slice's stat shard (the per-leaf analog of the root
-    * sidecar's sliceStats/fileStats entries): the slice's own partition
-    * values (integrity-checked against the directory path by the reader),
-    * row count, per-column bounds, and — for multi-file slices — per-FILE
-    * entries keyed by basename. */
-  private[graft] def renderSliceShardJson(
-      slice: graft.sources.StarTableSource.SliceStats,
-      files: Seq[graft.sources.StarTableSource.FileStats]): String = {
-    import graft.io.JsonValue._
-    def optStr(s: String): JsonValue = if (s == null) JsonNull else JsonString(s)
-    val filesJson = JsonArray(files.toVector.map { f =>
-      JsonObject(scala.collection.immutable.ListMap(
-        "file" -> JsonString(f.file),
-        "rows" -> JsonNumber(f.rows.toDouble),
-        "stats" -> colStatsJson(f.stats)))
-    })
-    graft.io.JsonValue.write(JsonObject(scala.collection.immutable.ListMap(
-      "partition" -> JsonArray(slice.partition.toVector.map(optStr)),
-      "rows" -> JsonNumber(slice.rows.toDouble),
-      "stats" -> colStatsJson(slice.stats)) ++
-      (if (files.isEmpty) Nil else Seq("files" -> filesJson))))
-  }
-
-  val DatasetMetaFile = "_startable_dataset.json"
-
-  /** Per-leaf statistics shard (sharded-stats layout): lives INSIDE each
-    * `col=value` leaf directory, so it is (a) invisible to every data
-    * listing (`_` prefix), (b) lazily loadable — planning reads only the
-    * shards of slices that SURVIVED partition pruning, and (c) deleted
-    * together with its slice by dynamic partition overwrite and
-    * dropPartitions — stale stats cannot outlive the bytes they describe. */
-  val SliceShardFile = "_startable_slice.json"
 
   /** INLINE slice-statistics cardinality cap (see [[computeSliceStats]];
     * the sharded layout has none — shards are written distributed).
@@ -1818,10 +1583,9 @@ object CsvWriter {
     // no sliceStats: an append-forever stream has no final value ranges,
     // and any PRE-EXISTING entries are dropped — appended rows would fall
     // outside stale ranges; readers fall back to partition-level pruning
-    writeDatasetSidecar(t, outDir, dataCols, partitionBy, sep,
-      expectCommit = Some(existing.map(_.commit)),
-      lateCols = existing.map(_.lateCols).getOrElse(Nil),
-      lockToken = Some(lock.info.token))
+    installSidecar(outDir, tableMeta(t, dataCols, partitionBy, sep)
+      .copy(lateCols = existing.map(_.lateCols).getOrElse(Nil)),
+      expectCommit = existing.map(_.commit), lockToken = Some(lock.info.token))
     val pathCols = partitionPathCols(t, partitionBy, naRep,
       "streamPartitionedDataset")
     val valueCol = concat_ws(sep,
@@ -1979,8 +1743,8 @@ object CsvWriter {
           // so the install serializes through the flip lock like any
           // shared-holder commit
           DatasetLock.withFlipLock(outDir) { token =>
-            writeDatasetSidecar(t, outDir, dataCols, partitionBy, sep,
-              expectCommit = Some(None), lockToken = Some(token))
+            installSidecar(outDir, tableMeta(t, dataCols, partitionBy, sep),
+              expectCommit = None, lockToken = Some(token))
           }
       }
       val commitPath = new org.apache.hadoop.fs.Path(rootPath,
@@ -2133,10 +1897,8 @@ object CsvWriter {
         val target = rel.foldLeft(rootPath)(
           (p, seg) => new org.apache.hadoop.fs.Path(p, seg))
         fs.mkdirs(target)
-        val files = fs.listStatus(d).toSeq
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-          .map(_.getPath).sortBy(_.getName)
+        val files = DatasetSidecar.sliceFiles(fs, d).map(_.getPath)
+          .sortBy(_.getName)
         files.zipWithIndex.foreach { case (f, i) =>
           val dst = new org.apache.hadoop.fs.Path(target, f"$prefix$i%05d.txt")
           if (!fs.rename(f, dst)) throw new java.io.IOException(
@@ -2172,12 +1934,17 @@ object CsvWriter {
       }
       if (m.sliceStats.exists(s => parts.contains(s.partition)) ||
           m.fileStats.exists(s => parts.contains(s.partition)))
-        mutateSidecarUnderFlip(outDir) { cur =>
+        // read-merge-install under the flip lock: re-read the THEN-CURRENT
+        // sidecar and drop only OUR slices' entries (disjointness is the
+        // shared-lease contract); flips serialize on the flip lock, so the
+        // CAS can only trip on a lock bypasser racing the install itself
+        DatasetLock.withFlipLock(outDir) { flipToken =>
+          val cur = currentMeta(outDir)
           val s2 = cur.sliceStats.filterNot(s => parts.contains(s.partition))
           val f2 = cur.fileStats.filterNot(s => parts.contains(s.partition))
-          if (s2.size == cur.sliceStats.size &&
-              f2.size == cur.fileStats.size) None
-          else Some((cur.copy(sliceStats = s2), f2))
+          if (s2.size != cur.sliceStats.size || f2.size != cur.fileStats.size)
+            installSidecar(outDir, cur.copy(sliceStats = s2, fileStats = f2),
+              expectCommit = Some(cur.commit), lockToken = Some(flipToken))
         }
     }
   }

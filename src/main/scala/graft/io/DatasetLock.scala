@@ -72,7 +72,7 @@ final class ConcurrentWriteException(msg: String)
   * This is the first coordination layer, not a transaction log: readers
   * never take locks (reads stay lock-free and scale-free), and a second
   * defense — the sidecar commit counter with compare-and-swap semantics
-  * at the root flip ([[CsvWriter.writeDatasetSidecar]]), plus the
+  * at the root flip ([[CsvWriter.installSidecar]]), plus the
   * lease-ownership check every sidecar install performs — catches writers
   * that bypassed the lease (legacy code, a broken lock). */
 object DatasetLock {

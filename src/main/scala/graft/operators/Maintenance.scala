@@ -4,6 +4,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.io.DatasetSidecar
+import graft.io.DatasetSidecar.{FileStats, SliceShard}
+
 /** Table-maintenance operators. The small-file problem is the silent
   * killer of long-lived ingest pipelines: a streaming or per-batch writer
   * leaves thousands of KB-sized parquet files per partition, and every
@@ -213,26 +216,16 @@ object Maintenance {
       // basenames are new (stale entries would merely be inert, stripping
       // is hygiene). Installed into STAGING before the swap, so stats and
       // data change owners atomically-as-one.
-      val shardSrc = new Path(p, graft.io.CsvWriter.SliceShardFile)
+      val shardSrc = new Path(p, DatasetSidecar.SliceShardFile)
       if (fs.exists(shardSrc)) {
-        val in = fs.open(shardSrc)
-        val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
         // same loud refusal as the read path's shard parse: a corrupt or
-        // truncated shard must name the file and the repair, not surface
-        // as an opaque ClassCastException from a bare cast
-        val o = try graft.io.JsonValue.parse(txt)
-          .asInstanceOf[graft.io.JsonValue.JsonObject]
-        catch {
-          case e: Exception => throw new IllegalArgumentException(
-            s"compact: unreadable stat shard $shardSrc " +
-              s"(${e.getClass.getSimpleName}: ${e.getMessage}); repair or " +
-              "remove it", e)
-        }
+        // truncated shard names the file and the repair
+        val shard = DatasetSidecar.read(fs, shardSrc, "compact", "stat shard")(
+          DatasetSidecar.decodeShard)
         graft.io.CsvWriter.atomicInstallJson(fs,
           spark.sparkContext.hadoopConfiguration,
-          new Path(staging, graft.io.CsvWriter.SliceShardFile),
-          graft.io.JsonValue.write(
-            graft.io.JsonValue.JsonObject(o.fields - "files")))
+          new Path(staging, DatasetSidecar.SliceShardFile),
+          DatasetSidecar.encodeShard(shard.copy(files = Nil)))
       }
       faultHook(s"compact:staged")
       lock.foreach(_.checkHeld("compact")) // fencing: no swap on a lost lease
@@ -267,8 +260,8 @@ object Maintenance {
                          onlySlices: Set[Seq[String]] = Set.empty): CompactionReport = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new Path(root, graft.io.CsvWriter.DatasetMetaFile)),
-      s"compactStarDataset: $path has no ${graft.io.CsvWriter.DatasetMetaFile} " +
+    require(fs.exists(new Path(root, DatasetSidecar.DatasetMetaFile)),
+      s"compactStarDataset: $path has no ${DatasetSidecar.DatasetMetaFile} " +
         "sidecar — not a StarTable dataset (for parquet tables use compact)")
     if (onlySlices.isEmpty)
       // writer lease: a live stream ingest / backfill / vacuum on this root
@@ -378,7 +371,7 @@ object Maintenance {
     require(targetBytes > 0, "clusterStarDataset: targetBytes must be positive")
     require(graft.sources.StarTableSource.readDatasetMeta(Seq(path)).isDefined,
       s"clusterStarDataset: $path has no " +
-        s"${graft.io.CsvWriter.DatasetMetaFile} sidecar — not a StarTable " +
+        s"${DatasetSidecar.DatasetMetaFile} sidecar — not a StarTable " +
         "dataset")
     if (onlySlices.isEmpty)
       // writer lease (see compactStarDataset); the meta is re-read UNDER the
@@ -412,11 +405,10 @@ object Maintenance {
                                        onlySlices: Option[Set[Seq[String]]] = None): ClusterReport = {
     val lockToken: Option[String] = lock.map(_.info.token)
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.DoubleType
     val meta = graft.sources.StarTableSource.readDatasetMeta(Seq(path))
       .getOrElse(throw new IllegalArgumentException(
         s"clusterStarDataset: $path has no " +
-          s"${graft.io.CsvWriter.DatasetMetaFile} sidecar — not a StarTable " +
+          s"${DatasetSidecar.DatasetMetaFile} sidecar — not a StarTable " +
           "dataset"))
     val missing = sortCols.filterNot(meta.cols.contains)
     require(sortCols.nonEmpty && missing.isEmpty,
@@ -427,23 +419,14 @@ object Maintenance {
     val fs = new Path(path).getFileSystem(conf)
     val qsep = java.util.regex.Pattern.quote(meta.sep)
 
-    // parse-faithful typed cell expression, shared with the write-time
-    // file-stats pass (single source of the reader-null semantics)
-    def cellExpr(cells: org.apache.spark.sql.Column, i: Int): org.apache.spark.sql.Column =
-      graft.io.CsvWriter.parsedCellExpr(cells, i, meta.units(i))
-
     // slice inventory: files grouped by leaf directory. A SCOPED pass
     // constructs its leaves directly — touched-proportional cost, and no
     // root walk to race a disjoint sibling's commit window
     val files = onlySlices match {
       case Some(parts) => parts.toSeq.flatMap { raw =>
-        val leaf = graft.io.CsvWriter.sliceLeafPath(new Path(path),
-          meta.partCols, raw)
-        try fs.listStatus(leaf).toSeq
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
+        DatasetSidecar.sliceFiles(fs, graft.io.CsvWriter.sliceLeafPath(
+          new Path(path), meta.partCols, raw))
           .map(st => (st.getPath.toString, st.getLen, raw))
-        catch { case _: java.io.FileNotFoundException => Nil }
       }
       case None => graft.sources.StarTableSource.listPartitionedFiles(
         Seq(path), meta.partCols, conf).map(f => (f._1, f._2, f._3))
@@ -463,7 +446,7 @@ object Maintenance {
 
     final case class LeafResult(filesBefore: Long, bytesBefore: Long,
                                 filesAfter: Long, bytesAfter: Long,
-                                stats: Seq[graft.sources.StarTableSource.FileStats])
+                                stats: Seq[FileStats])
 
     def clusterLeaf(dir: String, raw: Seq[String],
                     slice: Seq[(String, Long)]): LeafResult = {
@@ -481,7 +464,10 @@ object Maintenance {
 
       val lines = spark.read.text(dir)
       val cells = split(col("value"), qsep, -1)
-      val keys = sortCols.map(c => cellExpr(cells, meta.cols.indexOf(c)))
+      // sort on the parse-faithful typed cells, the semantics the per-file
+      // stats kernel profiles with
+      val keys = sortCols.map(meta.cols.indexOf(_)).map(i =>
+        graft.io.CsvWriter.parsedCellExpr(cells, i, meta.units(i)))
       lines
         .repartitionByRange(nOut, keys: _*)
         .sortWithinPartitions(keys: _*)
@@ -493,31 +479,11 @@ object Maintenance {
       // once the cardinality cap is blown (the files still cluster; only
       // the metadata degrades). The SHARDED layout has no cap: each
       // leaf's entries land in its own shard, nothing accumulates.
-      val statRows: Array[org.apache.spark.sql.Row] =
-        if (!meta.statsSharded && capped.get()) Array.empty
-        else {
-          val statCells = split(col("value"), qsep, -1).as("__cs")
-          val aggs = meta.cols.indices.flatMap { i =>
-            val v = cellExpr(col("__cs"), i)
-            Seq(min(v).as(s"__min_$i"), max(v).as(s"__max_$i"),
-              count(when(v.isNull, 1)).as(s"__nulls_$i"))
-          } :+ count(lit(1)).as("__rows")
-          spark.read.text(staging.toString)
-            .select(input_file_name().as("__f"), statCells)
-            .groupBy(col("__f")).agg(aggs.head, aggs.tail: _*).collect()
-        }
-
-      val leafStats = statRows.toSeq.map { r =>
-        val base = new Path(r.getString(0)).getName
-        val stats = meta.cols.zipWithIndex.map { case (c, i) =>
-          c -> graft.sources.StarTableSource.ColStats(
-            graft.io.CsvWriter.renderStat(r.get(1 + i * 3), meta.units(i), "-"),
-            graft.io.CsvWriter.renderStat(r.get(1 + i * 3 + 1), meta.units(i), "-"),
-            r.getLong(1 + i * 3 + 2))
-        }.toMap
-        graft.sources.StarTableSource.FileStats(
-          raw, base, r.getLong(1 + meta.cols.size * 3), stats)
-      }
+      val leafStats: Seq[FileStats] =
+        if (!meta.statsSharded && capped.get()) Nil
+        else DatasetSidecar.fileStatsFrame(spark, Seq(staging.toString),
+          meta.sep, meta.units).collect().toSeq
+          .map(r => DatasetSidecar.fileStatsOf(r, raw, meta.cols, meta.units))
       // sharded layout: the leaf's shard is REGENERATED from the fresh
       // per-file profile (slice entry = fold of the file entries — the
       // rows are the same rows, reordered) and installed into STAGING
@@ -525,11 +491,11 @@ object Maintenance {
       // before the swap leaves the live leaf (and its live shard) intact
       if (meta.statsSharded && leafStats.nonEmpty)
         graft.io.CsvWriter.atomicInstallJson(fs, conf,
-          new Path(staging, graft.io.CsvWriter.SliceShardFile),
-          graft.io.CsvWriter.renderSliceShardJson(
+          new Path(staging, DatasetSidecar.SliceShardFile),
+          DatasetSidecar.encodeShard(SliceShard(
             graft.sources.StarTableSource.foldFileEntries(
               raw, leafStats, meta.cols, meta.units),
-            if (leafStats.size > 1) leafStats else Nil))
+            if (leafStats.size > 1) leafStats else Nil)))
       faultHook("cluster:staged")
       lock.foreach(_.checkHeld("clusterStarDataset")) // fencing
       swapLeaf(fs, "clusterStarDataset", leaf, staging)
@@ -537,8 +503,7 @@ object Maintenance {
       if (!meta.statsSharded &&
           statCount.addAndGet(leafStats.size.toLong) > graft.io.CsvWriter.MaxStatSlices)
         capped.set(true)
-      val after = fs.listStatus(leaf).filter(s => s.isFile &&
-        !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+      val after = DatasetSidecar.sliceFiles(fs, leaf)
       LeafResult(slice.size.toLong, bytes, after.length.toLong,
         after.map(_.getLen).sum, leafStats)
     }
@@ -563,7 +528,7 @@ object Maintenance {
       // sidecar LAST: slice stats are reorder-invariant (kept verbatim);
       // file entries replace wholesale (every slice was rewritten); above
       // the cardinality cap they degrade to none (conservative reads)
-      val keptFileStats: Seq[graft.sources.StarTableSource.FileStats] =
+      val keptFileStats: Seq[FileStats] =
         if (statsCapped) {
           System.err.println("[graft] WARN clusterStarDataset: more than " +
             s"${graft.io.CsvWriter.MaxStatSlices} files — skipping per-file " +
@@ -578,8 +543,9 @@ object Maintenance {
           graft.io.CsvWriter.applySidecarMergeBatched(path, lock.get,
             Set.empty, Nil, keptFileStats, stripFilesOverride = Some(parts))
         case None =>
-          graft.io.CsvWriter.writeSidecarRaw(path, meta, keptFileStats,
-            lockToken)
+          graft.io.CsvWriter.installSidecar(path,
+            meta.copy(fileStats = keptFileStats),
+            expectCommit = Some(meta.commit), lockToken = lockToken)
       }
       ClusterReport(byLeaf.size.toLong, filesBefore, filesAfter, bytesBefore,
         bytesAfter, keptFileStats.size.toLong)
@@ -588,7 +554,7 @@ object Maintenance {
 
   /** Migrate an INLINE-stats StarTable dataset to the SHARDED layout:
     * every root-sidecar slice entry (plus its per-file entries) moves into
-    * a [[graft.io.CsvWriter.SliceShardFile]] shard inside its leaf
+    * a [[DatasetSidecar.SliceShardFile]] shard inside its leaf
     * directory, then the root sidecar is rewritten with `statsSharded` and
     * no inline entries. Run this when a dataset's slice count has grown
     * past what one sidecar parse should cost — planning afterwards loads
@@ -602,7 +568,7 @@ object Maintenance {
   def shardDatasetStats(spark: SparkSession, path: String): Long = {
     require(graft.sources.StarTableSource.readDatasetMeta(Seq(path)).isDefined,
       s"shardDatasetStats: $path has no " +
-        s"${graft.io.CsvWriter.DatasetMetaFile} sidecar — not a StarTable " +
+        s"${DatasetSidecar.DatasetMetaFile} sidecar — not a StarTable " +
         "dataset")
     graft.io.DatasetLock.withLockHandle(path, "shard-stats",
       spark.sparkContext.hadoopConfiguration,
@@ -617,7 +583,7 @@ object Maintenance {
     val meta = graft.sources.StarTableSource.readDatasetMeta(Seq(path))
       .getOrElse(throw new IllegalArgumentException(
         s"shardDatasetStats: $path has no " +
-          s"${graft.io.CsvWriter.DatasetMetaFile} sidecar — not a StarTable " +
+          s"${DatasetSidecar.DatasetMetaFile} sidecar — not a StarTable " +
           "dataset"))
     require(!meta.statsSharded,
       s"shardDatasetStats: dataset at $path is already sharded")
@@ -629,16 +595,16 @@ object Maintenance {
         (raw: Seq[String]) ->
           new Path(fsOf.head._1).getParent.toString
       }
-    val filesByRaw: Map[Seq[String], Seq[graft.sources.StarTableSource.FileStats]] =
+    val filesByRaw: Map[Seq[String], Seq[FileStats]] =
       meta.fileStats.groupBy(s => s.partition: Seq[String])
     val targets = meta.sliceStats.flatMap(s =>
       leafByRaw.get(s.partition).map(dir => (dir, s)))
     val fs = new Path(path).getFileSystem(conf)
     parMapLeaves(targets, maintenanceParallelism(spark)) { case (dir, s) =>
       graft.io.CsvWriter.atomicInstallJson(fs, conf,
-        new Path(dir, graft.io.CsvWriter.SliceShardFile),
-        graft.io.CsvWriter.renderSliceShardJson(s,
-          filesByRaw.getOrElse(s.partition, Nil)))
+        new Path(dir, DatasetSidecar.SliceShardFile),
+        DatasetSidecar.encodeShard(SliceShard(s,
+          filesByRaw.getOrElse(s.partition, Nil))))
     }
     // leaves this migration writes NO shard for (no inline entry — e.g. a
     // stats-less backfill) must not keep a LEFTOVER shard from an earlier
@@ -648,12 +614,12 @@ object Maintenance {
     val written = targets.map(_._1).toSet
     parMapLeaves(leafByRaw.values.filterNot(written).toSeq,
         maintenanceParallelism(spark)) { dir =>
-      val sp = new Path(dir, graft.io.CsvWriter.SliceShardFile)
+      val sp = new Path(dir, DatasetSidecar.SliceShardFile)
       if (fs.exists(sp)) fs.delete(sp, false)
     }
-    graft.io.CsvWriter.writeSidecarRaw(path,
-      meta.copy(sliceStats = Nil, fileStats = Nil, statsSharded = true), Nil,
-      lockToken)
+    graft.io.CsvWriter.installSidecar(path,
+      meta.copy(sliceStats = Nil, fileStats = Nil, statsSharded = true),
+      expectCommit = Some(meta.commit), lockToken = lockToken)
     graft.sources.StarTableSource.invalidateShardCache(path)
     targets.size.toLong
   }
@@ -767,7 +733,7 @@ object Maintenance {
           fs.delete(st.getPath, true)
           removedDirs += 1
         } else if (st.isFile &&
-            n.startsWith(graft.io.CsvWriter.PendingMergePrefix)) {
+            n.startsWith(DatasetSidecar.PendingMergePrefix)) {
           // a staged sidecar-merge intent whose holder died before any
           // drain ran — under the exclusive vacuum lease every shared
           // lease is gone, so all pendings are orphans (drains would

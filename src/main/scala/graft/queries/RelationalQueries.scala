@@ -917,7 +917,7 @@ object RelationalQueries {
   private def partitionedDatasetFor(s: SparkSession, dir: String): String = {
     val path = Tables.memoDir("stpds", dir, "stpds1")
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path,
-        graft.io.CsvWriter.DatasetMetaFile)))
+        graft.io.DatasetSidecar.DatasetMetaFile)))
       graft.io.CsvWriter.writePartitionedDataset(
         StarTable.fromDataFrame(
           Tables.df(s, dir, "lineitem").select(col("l_returnflag"),
@@ -1058,7 +1058,7 @@ object RelationalQueries {
   private def shardedDatasetFor(s: SparkSession, dir: String): String = {
     val path = Tables.memoDir("shds", dir, "shds1")
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path,
-        graft.io.CsvWriter.DatasetMetaFile)))
+        graft.io.DatasetSidecar.DatasetMetaFile)))
       graft.io.CsvWriter.writePartitionedDataset(
         StarTable.fromDataFrame(
           Tables.df(s, dir, "lineitem").select(col("l_returnflag"),

@@ -15,6 +15,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.io.DatasetSidecar
+import graft.io.DatasetSidecar.{ColStats, DatasetMeta, FileStats, SliceShard, SliceStats}
 import graft.model.{StarTable, UnitIndicator}
 import graft.parse.{BlockType, Blocks, ParsedTable}
 
@@ -219,7 +221,7 @@ private[sources] class StarTableScanBuilder(fullSchema: StructType,
         // sharded layout: the byPart map loads from exactly the PRUNED
         // listing's shards — "COUNT(*) WHERE day = X" over a 100k-slice
         // dataset reads the shards of day X only
-        val byPart: Map[Seq[String], StarTableSource.SliceStats] =
+        val byPart: Map[Seq[String], SliceStats] =
           if (m.statsSharded)
             StarTableSource.readSliceShards(
               listed.map(f =>
@@ -477,7 +479,7 @@ private[sources] class StarTableScan(files: Seq[String], tableName: Option[Strin
                                      maxSplitBytes: Long,
                                      fullSchema: StructType, required: StructType,
                                      pushed: Array[Filter], limit: Option[Int],
-                                     dataset: Option[StarTableSource.DatasetMeta] = None,
+                                     dataset: Option[DatasetMeta] = None,
                                      confS: org.apache.spark.util.SerializableConfiguration =
                                        new org.apache.spark.util.SerializableConfiguration(
                                          new org.apache.hadoop.conf.Configuration()),
@@ -547,21 +549,21 @@ private[sources] class StarTableScan(files: Seq[String], tableName: Option[Strin
           // partition pruning — skipping metadata IO scales with slices
           // touched, not dataset size (a missing shard means "no stats":
           // the slice is read, never skipped)
-          val shards: Map[Seq[String], StarTableSource.SliceShard] =
+          val shards: Map[Seq[String], SliceShard] =
             if (!m.statsSharded) Map.empty
             else StarTableSource.readSliceShards(
               afterPart.map(f =>
                 (new org.apache.hadoop.fs.Path(f._1).getParent.toString,
                   f._3)).distinct,
               confS.value)
-          val statsByPart: Map[Seq[String], StarTableSource.SliceStats] =
+          val statsByPart: Map[Seq[String], SliceStats] =
             if (m.statsSharded)
               shards.map { case (raw, sh) => raw.toList -> sh.slice }
             else m.sliceStats.map(s => s.partition.toList -> s).toMap
           // per-FILE stats (clusterStarDataset output): finer than the
           // slice — within a clustered slice, a range predicate keeps
           // only the files whose sorted key range intersects it
-          val statsByFile: Map[(Seq[String], String), StarTableSource.FileStats] =
+          val statsByFile: Map[(Seq[String], String), FileStats] =
             if (m.statsSharded)
               shards.flatMap { case (raw, sh) =>
                 sh.files.map(fe => (raw.toList: Seq[String], fe.file) -> fe)
@@ -691,8 +693,9 @@ private[sources] case class StarFilePartition(path: String) extends InputPartiti
   * convention: a reader with start > dataStart discards its first
   * (possibly partial) line, then emits lines whose start offset is ≤ end;
   * the next reader's discard picks up exactly where this one stopped —
-  * every line parsed exactly once regardless of where boundaries fall. */
-/** `partitionSpec`: hive-partition constants riding the split — (column,
+  * every line parsed exactly once regardless of where boundaries fall.
+  *
+  * `partitionSpec`: hive-partition constants riding the split — (column,
   * unit, raw path value or null) per partition column; empty for plain
   * single-table splits. */
 private[sources] case class StarFileSplitPartition(
@@ -813,9 +816,10 @@ private[sources] class StarTableReaderFactory(tableName: Option[String], sep: St
   * cells before materialization. Stops at the range end, EOF, a blank
   * line, or a `**` marker (content past the first block is not table
   * data under the assumeSingleTable contract). Constant memory: one
-  * buffered byte stream, one line at a time. */
-/** The shared byte-range scan kernel of the row and columnar split
-  * readers: seek + first-line-discard (Hadoop line-split ownership),
+  * buffered byte stream, one line at a time.
+  *
+  * This base is the byte-range scan kernel the row and columnar split
+  * readers share: seek + first-line-discard (Hadoop line-split ownership),
   * buffered line reads with CRLF normalization, per-unit cell parsers
   * resolved once, hive-partition constants, pushed-filter evaluation on
   * the parsed slots, and terminator handling. Subclasses only decide how
@@ -1171,66 +1175,6 @@ private[graft] object StarTableSource {
     shardsRead.reset(); dirsPruned.reset()
   }
 
-  /** Directory-level schema of a hive-partitioned StarTable dataset
-    * (written by [[graft.io.CsvWriter.writePartitionedDataset]]). `sep` is
-    * the separator the dataset was WRITTEN with — the reader's default, so
-    * a non-default-sep dataset is still self-describing (a reader option
-    * still wins). `sliceStats`: optional per-slice column min/max/null
-    * statistics for data skipping (see [[SliceStats]]); empty when the
-    * writer didn't record them (e.g. streaming ingestion). */
-  /** `statsSharded`: the dataset's statistics live in per-leaf
-    * [[graft.io.CsvWriter.SliceShardFile]] shards instead of inline here —
-    * `sliceStats`/`fileStats` stay empty and readers load only the shards
-    * of slices that survive partition pruning (see [[readSliceShards]]). */
-  /** `commit`: monotone counter bumped by every sidecar install — the
-    * compare-and-swap token of the root flip (a mutating operation that
-    * began at commit C refuses its own flip when the on-disk counter has
-    * moved past C: another writer committed in between). 0 on pre-round-12
-    * sidecars.
-    *
-    * `lateCols`: data columns APPENDED by schema evolution after the
-    * dataset was created (writePartitionedDataset's evolveSchema). Slices
-    * written before an evolution hold SHORT rows the reader null-pads, and
-    * their stats entries/shards lack the late columns — for exactly these
-    * columns a missing per-slice stat provably means "every row null in
-    * this slice" (all writer paths record stats for every data column
-    * known at their write time), so pruning and metadata aggregates may
-    * substitute ColStats(null, null, rows) instead of degrading to a
-    * conservative scan forever after an evolution. A missing stat on a
-    * NON-late column keeps the conservative treatment. */
-  final case class DatasetMeta(name: String, destinations: Set[String],
-                               cols: Seq[String], units: Seq[String],
-                               partCols: Seq[String], partUnits: Seq[String],
-                               sep: String = ";",
-                               sliceStats: Seq[SliceStats] = Nil,
-                               fileStats: Seq[FileStats] = Nil,
-                               statsSharded: Boolean = false,
-                               commit: Long = 0L,
-                               lateCols: Seq[String] = Nil)
-
-  /** Per-slice column statistics: `partition` aligns with
-    * [[DatasetMeta.partCols]] (raw rendered values, null for the default
-    * partition); `rows` is the slice's row count; per column: rendered
-    * min/max (null when every value is null/NaN) and the null count
-    * (NaN counts as null — that is how the reader surfaces NaN cells). */
-  final case class SliceStats(partition: Seq[String], rows: Long,
-                              stats: Map[String, ColStats])
-  final case class ColStats(min: String, max: String, nulls: Long)
-
-  /** Per-FILE column statistics (written by
-    * [[graft.operators.Maintenance.clusterStarDataset]], which controls
-    * file assignment): keyed by (partition values, file BASENAME) — path
-    * roots/schemes don't enter the key, and a rewritten slice's fresh
-    * basenames make stale entries inert (conservative) rather than wrong.
-    * Same value semantics as [[SliceStats]]. */
-  final case class FileStats(partition: Seq[String], file: String, rows: Long,
-                             stats: Map[String, ColStats])
-
-  /** The sidecar, if the (single) root is a partitioned-dataset directory.
-    * The sidecar is written LAST by the writer, so its presence marks a
-    * COMPLETE dataset; a crash mid-write leaves a directory this reader
-    * refuses to treat as a dataset (and the plain-directory path then
-    * rejects the header-less part files loudly). */
   /** Parsed-sidecar memo keyed by (path, length, modTime): inference and
     * every scan build re-read the sidecar, and a stats-bearing sidecar
     * near the cardinality cap is tens of MB of JSON — parse it once per
@@ -1254,19 +1198,24 @@ private[graft] object StarTableSource {
     // misses exactly the stale entry it exists to remove
     val p = new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(outDir),
-      graft.io.CsvWriter.DatasetMetaFile)
+      DatasetSidecar.DatasetMetaFile)
     val qualified = p.getFileSystem(conf).makeQualified(p).toString
     val it = metaCache.keySet().iterator()
     while (it.hasNext) if (it.next()._1 == qualified) it.remove()
   }
 
+  /** The sidecar, if the (single) root is a partitioned-dataset directory.
+    * The sidecar is written LAST by the writer, so its presence marks a
+    * COMPLETE dataset; a crash mid-write leaves a directory this reader
+    * refuses to treat as a dataset (and the plain-directory path then
+    * rejects the header-less part files loudly). */
   def readDatasetMeta(roots: Seq[String],
                       conf: org.apache.hadoop.conf.Configuration = activeHadoopConf())
       : Option[DatasetMeta] = {
     if (roots.size != 1) return None
     val root = new org.apache.hadoop.fs.Path(roots.head)
     val fs = root.getFileSystem(conf)
-    val metaPath = new org.apache.hadoop.fs.Path(root, graft.io.CsvWriter.DatasetMetaFile)
+    val metaPath = new org.apache.hadoop.fs.Path(root, DatasetSidecar.DatasetMetaFile)
     val st = try {
       if (!fs.getFileStatus(root).isDirectory) return None
       fs.getFileStatus(metaPath)
@@ -1278,113 +1227,15 @@ private[graft] object StarTableSource {
       st.getModificationTime)
     val hit = metaCache.get(key)
     if (hit != null) return Some(hit)
-    val in = fs.open(metaPath)
-    val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    import graft.io.JsonValue._
-    try {
-      val o = graft.io.JsonValue.parse(txt).asInstanceOf[JsonObject]
-      def strs(k: String): Seq[String] = o.fields(k).asInstanceOf[JsonArray]
-        .values.map(_.asInstanceOf[JsonString].value)
-      def optStr(v: graft.io.JsonValue): String = v match {
-        case JsonString(s) => s
-        case _             => null
-      }
-      // optional fields: a pre-r9 sidecar has none — default sep, no stats
-      val sep = o.fields.get("sep").collect { case JsonString(s) => s }
-        .getOrElse(";")
-      val sliceStats = sliceStatsFromJson(o.fields.get("sliceStats"))
-      val fileStats = fileStatsFromJson(o.fields.get("fileStats"))
-      val statsSharded = o.fields.get("statsSharded")
-        .collect { case JsonBool(b) => b }.getOrElse(false)
-      val commit = o.fields.get("commit")
-        .collect { case JsonNumber(n) => n.toLong }.getOrElse(0L)
-      val lateCols = o.fields.get("lateColumns").toSeq.flatMap {
-        case JsonArray(vs) => vs.map(_.asInstanceOf[JsonString].value)
-        case _             => Nil
-      }
-      val meta = DatasetMeta(
-        o.fields("name").asInstanceOf[JsonString].value,
-        strs("destinations").toSet,
-        strs("columns"), strs("units"),
-        strs("partitionBy"), strs("partitionUnits"), sep, sliceStats,
-        fileStats, statsSharded, commit, lateCols)
-      if (metaCache.size > 64) metaCache.clear()
-      metaCache.put(key, meta)
-      Some(meta)
-    } catch {
-      case e: Exception =>
-        // a corrupt sidecar must fail LOUDLY with the file named — falling
-        // back to the plain-directory path would misread header-less data
-        // files (or list nothing) and look like silent data loss
-        throw new IllegalArgumentException(
-          s"startable source: unreadable dataset sidecar $metaPath " +
-            s"(${e.getClass.getSimpleName}: ${e.getMessage}); repair or " +
-            "remove it", e)
-    }
+    // a corrupt sidecar must fail LOUDLY with the file named — falling
+    // back to the plain-directory path would misread header-less data
+    // files (or list nothing) and look like silent data loss
+    val meta = DatasetSidecar.read(fs, metaPath, "startable source",
+      "dataset sidecar")(DatasetSidecar.decodeSidecar)
+    if (metaCache.size > 64) metaCache.clear()
+    metaCache.put(key, meta)
+    Some(meta)
   }
-
-  private[graft] def colStatsFromJson(
-      so: graft.io.JsonValue.JsonObject): Map[String, ColStats] = {
-    import graft.io.JsonValue._
-    def optStr(v: graft.io.JsonValue): String = v match {
-      case JsonString(s) => s
-      case _             => null
-    }
-    so.fields.map {
-      case (c, cs: JsonObject) =>
-        c -> ColStats(optStr(cs.fields("min")), optStr(cs.fields("max")),
-          cs.fields("nulls").asInstanceOf[JsonNumber].value.toLong)
-      case (c, other) => throw new IllegalArgumentException(
-        s"column stats for '$c' is not an object: $other")
-    }.toMap
-  }
-
-  /** Parse a `sliceStats`-shaped JSON array (shared by the root sidecar
-    * and the staged pending-merge intents). */
-  private[graft] def sliceStatsFromJson(
-      v: Option[graft.io.JsonValue]): Seq[SliceStats] = {
-    import graft.io.JsonValue._
-    def optStr(x: graft.io.JsonValue): String = x match {
-      case JsonString(s) => s
-      case _             => null
-    }
-    v.toSeq.flatMap {
-      case JsonArray(slices) => slices.map { sv =>
-        val so = sv.asInstanceOf[JsonObject]
-        SliceStats(
-          so.fields("partition").asInstanceOf[JsonArray].values.map(optStr),
-          so.fields("rows").asInstanceOf[JsonNumber].value.toLong,
-          colStatsFromJson(so.fields("stats").asInstanceOf[JsonObject]))
-      }
-      case _ => Nil
-    }
-  }
-
-  /** Parse a `fileStats`-shaped JSON array (shared like the above). */
-  private[graft] def fileStatsFromJson(
-      v: Option[graft.io.JsonValue]): Seq[FileStats] = {
-    import graft.io.JsonValue._
-    def optStr(x: graft.io.JsonValue): String = x match {
-      case JsonString(s) => s
-      case _             => null
-    }
-    v.toSeq.flatMap {
-      case JsonArray(fsv) => fsv.map { fv =>
-        val fo = fv.asInstanceOf[JsonObject]
-        FileStats(
-          fo.fields("partition").asInstanceOf[JsonArray].values.map(optStr),
-          fo.fields("file").asInstanceOf[JsonString].value,
-          fo.fields("rows").asInstanceOf[JsonNumber].value.toLong,
-          colStatsFromJson(fo.fields("stats").asInstanceOf[JsonObject]))
-      }
-      case _ => Nil
-    }
-  }
-
-  /** One leaf's statistics, loaded from its [[graft.io.CsvWriter.SliceShardFile]]
-    * shard (sharded-stats layout): the slice entry plus per-file entries
-    * (empty for single-file slices — the slice entry fully describes them). */
-  final case class SliceShard(slice: SliceStats, files: Seq[FileStats])
 
   /** Parsed-shard memo keyed by (qualified path, length, modTime) — the
     * same discipline as [[metaCache]], bounded by wholesale eviction.
@@ -1437,7 +1288,7 @@ private[graft] object StarTableSource {
     if (leaves.isEmpty) return Map.empty
     def loadOne(leafDir: String, raw: Seq[String]): Option[(Seq[String], SliceShard)] = {
       val shardPath = new org.apache.hadoop.fs.Path(leafDir,
-        graft.io.CsvWriter.SliceShardFile)
+        DatasetSidecar.SliceShardFile)
       val fs = shardPath.getFileSystem(conf)
       val st = try fs.getFileStatus(shardPath)
       catch { case _: java.io.FileNotFoundException => return None }
@@ -1456,48 +1307,15 @@ private[graft] object StarTableSource {
         return Some(raw -> hit)
       }
       shardsRead.increment()
-      val in = fs.open(shardPath)
-      val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      import graft.io.JsonValue._
-      val shard = try {
-        val o = graft.io.JsonValue.parse(txt).asInstanceOf[JsonObject]
-        def optStr(v: graft.io.JsonValue): String = v match {
-          case JsonString(s) => s
-          case _             => null
-        }
-        def colStatsOf(so: JsonObject): Map[String, ColStats] =
-          so.fields.map {
-            case (c, cs: JsonObject) =>
-              c -> ColStats(optStr(cs.fields("min")), optStr(cs.fields("max")),
-                cs.fields("nulls").asInstanceOf[JsonNumber].value.toLong)
-            case (c, other) => throw new IllegalArgumentException(
-              s"column stats for '$c' is not an object: $other")
-          }.toMap
-        val part = o.fields("partition").asInstanceOf[JsonArray].values.map(optStr)
-        require(part == raw,
-          s"shard records partition ${part.mkString("[", ",", "]")} but its " +
+      val shard = DatasetSidecar.read(fs, shardPath, "startable source",
+          "stat shard") { txt =>
+        val sh = DatasetSidecar.decodeShard(txt)
+        require(sh.slice.partition == raw,
+          s"shard records partition " +
+            s"${sh.slice.partition.mkString("[", ",", "]")} but its " +
             s"directory path parses to ${raw.mkString("[", ",", "]")} — " +
             "path-escaping drift or a misplaced shard")
-        val slice = SliceStats(part,
-          o.fields("rows").asInstanceOf[JsonNumber].value.toLong,
-          colStatsOf(o.fields("stats").asInstanceOf[JsonObject]))
-        val files = o.fields.get("files").toSeq.flatMap {
-          case JsonArray(fsv) => fsv.map { fv =>
-            val fo = fv.asInstanceOf[JsonObject]
-            FileStats(part,
-              fo.fields("file").asInstanceOf[JsonString].value,
-              fo.fields("rows").asInstanceOf[JsonNumber].value.toLong,
-              colStatsOf(fo.fields("stats").asInstanceOf[JsonObject]))
-          }
-          case _ => Nil
-        }
-        SliceShard(slice, files)
-      } catch {
-        case e: Exception =>
-          throw new IllegalArgumentException(
-            s"startable source: unreadable stat shard $shardPath " +
-              s"(${e.getClass.getSimpleName}: ${e.getMessage}); repair or " +
-              "remove it", e)
+        sh
       }
       if (shardCache.size > ShardCacheMax) shardCache.clear()
       shardCache.put(key, shard)

@@ -63,7 +63,7 @@ import org.apache.spark.sql.types.StructType
   * task error. Stream into NEW slices (or stop the reader, maintain,
   * restart) instead. */
 private[sources] class StarTableMicroBatchStream(
-    roots: Seq[String], meta: StarTableSource.DatasetMeta,
+    roots: Seq[String], meta: graft.io.DatasetSidecar.DatasetMeta,
     checkpointLocation: String,
     sep: String, failFast: Boolean,
     fullSchema: StructType, required: StructType,

@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.io.DatasetSidecar
+
 /** Round-11 rehearsal: sharded dataset statistics at ≥100k slices.
   * Claims under test (VERDICT r10 item 2):
   *  - planning cost of a partition-filtered probe is bounded by slices
@@ -15,7 +17,7 @@ import org.apache.spark.sql.functions._
   *    shard fetch), never a data scan.
   *
   * The bulk of the layout is synthesized directly (leaf dirs + data files
-  * + shard JSON through the same renderSliceShardJson the writer uses) —
+  * + shard JSON through the same DatasetSidecar.encodeShard the writer uses) —
   * the write path itself is spec-covered; what this rehearses is READ
   * PLANNING at a scale the local text sink would take an hour to produce.
   *
@@ -57,12 +59,13 @@ object ShardRehearsal {
           .mkString("", "\n", "\n")
         java.nio.file.Files.write(dir.resolve("part-00000"),
           lines.getBytes("UTF-8"))
-        val shard = graft.io.CsvWriter.renderSliceShardJson(
-          src.SliceStats(Seq(day), 5L, Map(
-            "x" -> src.ColStats(s"$lo", s"$hi", 0L),
-            "tag" -> src.ColStats(s"tag${d}_0", s"tag${d}_4", 0L))), Nil)
+        val shard = DatasetSidecar.encodeShard(DatasetSidecar.SliceShard(
+          DatasetSidecar.SliceStats(Seq(day), 5L, Map(
+            "x" -> DatasetSidecar.ColStats(s"$lo", s"$hi", 0L),
+            "tag" -> DatasetSidecar.ColStats(s"tag${d}_0", s"tag${d}_4", 0L))),
+          Nil))
         java.nio.file.Files.write(
-          dir.resolve(graft.io.CsvWriter.SliceShardFile),
+          dir.resolve(DatasetSidecar.SliceShardFile),
           shard.getBytes("UTF-8"))
       }
     }

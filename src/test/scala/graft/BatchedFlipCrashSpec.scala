@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.io.{CsvWriter, DatasetLock}
+import graft.io.{CsvWriter, DatasetLock, DatasetSidecar}
 import graft.model.StarTable
 
 /** The batched-flip drain's crash windows (round 14): a drain that dies
@@ -12,7 +12,8 @@ import graft.model.StarTable
   * REAPPLIES them, and the result must be byte-identical to the clean
   * run (reapplication idempotence: each intent's adds are covered by
   * its strip sets). Also: an ORPHANED intent (holder lease gone) is
-  * deleted unapplied at the next drain. */
+  * deleted unapplied at the next drain, and a LIVE holder's intent that
+  * does not decode refuses the drain loudly. */
 class BatchedFlipCrashSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -52,7 +53,7 @@ class BatchedFlipCrashSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(out).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     assert(fs.listStatus(new org.apache.hadoop.fs.Path(out))
-      .exists(_.getPath.getName.startsWith(CsvWriter.PendingMergePrefix)),
+      .exists(_.getPath.getName.startsWith(DatasetSidecar.PendingMergePrefix)),
       "the crash must leave the applied-but-undeleted intent behind")
     // the at-least-once scheduler reruns the identical backfill: it
     // re-strips/re-adds the same entries (idempotent) and its drain
@@ -67,7 +68,7 @@ class BatchedFlipCrashSpec extends AnyFunSuite {
     assert(back.filter(col("grp") === "a").count() === 40)
     assert(back.count() === 240)
     assert(!fs.listStatus(new org.apache.hadoop.fs.Path(out))
-      .exists(_.getPath.getName.startsWith(CsvWriter.PendingMergePrefix)))
+      .exists(_.getPath.getName.startsWith(DatasetSidecar.PendingMergePrefix)))
     assert(DatasetLock.listLocks(out).isEmpty)
   }
 
@@ -82,7 +83,7 @@ class BatchedFlipCrashSpec extends AnyFunSuite {
       """"sliceStats":[{"partition":["c"],"rows":999999,""" +
       """"stats":{"v":{"min":"0","max":"1","nulls":0}}}],"fileStats":[]}"""
     val op = new org.apache.hadoop.fs.Path(out,
-      CsvWriter.PendingMergePrefix + "dead-token.deadbeef.json")
+      DatasetSidecar.PendingMergePrefix + "dead-token.deadbeef.json")
     val os = fs.create(op, true)
     try os.write(bogus.getBytes("UTF-8")) finally os.close()
     // a real backfill of slice a triggers a drain
@@ -94,5 +95,39 @@ class BatchedFlipCrashSpec extends AnyFunSuite {
       Map("a" -> 40L, "b" -> 100L, "c" -> 100L),
       after.sliceStats.map(s => s.partition -> s.rows).toString)
     assert(!fs.exists(op), "the orphaned intent must be deleted")
+  }
+
+  test("a LIVE holder's undecodable intent fails the drain loudly, naming " +
+    "the file — truncated JSON and a malformed strip tuple alike") {
+    val out = mkDataset("corrupt")
+    val before = graft.sources.StarTableSource.readDatasetMeta(Seq(out)).get
+    val fs = new org.apache.hadoop.fs.Path(out).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    // a live sibling holder on slice c whose staged intent is damaged
+    val holder = DatasetLock.acquireShared(out, "backfill", Set(Seq("c")))
+    val tok = holder.info.token
+    val op = new org.apache.hadoop.fs.Path(out,
+      DatasetSidecar.PendingMergePrefix + tok + ".c0ffee00.json")
+    try {
+      for (bad <- Seq(
+             s"""{"holder":"$tok","strip":[["c"]""",
+             s"""{"holder":"$tok","strip":[["c"],"c"],"stripFiles":[["c"]],""" +
+               """"sliceStats":[],"fileStats":[]}""")) {
+        val os = fs.create(op, true)
+        try os.write(bad.getBytes("UTF-8")) finally os.close()
+        val e = intercept[IllegalArgumentException] {
+          backfill(out, "corrupt", "a")
+        }
+        assert(e.getMessage.contains(op.getName) &&
+          e.getMessage.contains("repair or remove it"), e.getMessage)
+        assert(fs.exists(op), "the damaged intent must stay for repair")
+      }
+    } finally holder.release()
+    // nothing was applied: the refused backfills stopped before their data
+    graft.sources.StarTableSource.invalidateMetaCache(out)
+    val after = graft.sources.StarTableSource.readDatasetMeta(Seq(out)).get
+    assert(after.sliceStats.map(s => s.partition.head -> s.rows).toMap ===
+      before.sliceStats.map(s => s.partition.head -> s.rows).toMap)
+    assert(spark.read.format("startable").load(out).count() === 300)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.io.CsvWriter
+import graft.io.{CsvWriter, DatasetSidecar}
 import graft.model.StarTable
 
 /** Concurrent fan-out gate: disjoint-slice concurrent backfills must beat
@@ -90,7 +90,7 @@ class ConcurrencyFanoutSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(concOut).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     assert(!fs.listStatus(new org.apache.hadoop.fs.Path(concOut))
-      .exists(_.getPath.getName.startsWith(CsvWriter.PendingMergePrefix)))
+      .exists(_.getPath.getName.startsWith(DatasetSidecar.PendingMergePrefix)))
     val speedup = serialS / concS
     info(f"serial $serialS%.2f s, concurrent $concS%.2f s, speedup $speedup%.2f x")
     speedup

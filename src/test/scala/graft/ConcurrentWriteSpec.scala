@@ -171,7 +171,8 @@ class ConcurrentWriteSpec extends AnyFunSuite {
     val hook: String => Unit = p =>
       if (p == "backfill:pre-sidecar") {
         val m = graft.sources.StarTableSource.readDatasetMeta(Seq(out)).get
-        CsvWriter.writeSidecarRaw(out, m, m.fileStats)
+        CsvWriter.installSidecar(out, m, expectCommit = Some(m.commit),
+          lockToken = None)
       }
     val prevHook = interceptHookSwap(hook)
     val e =

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.io.CsvWriter
+import graft.io.{CsvWriter, DatasetSidecar}
 import graft.model.StarTable
 import graft.sources.StarTableSource
 
@@ -100,7 +100,7 @@ class EvolveSpec extends AnyFunSuite {
     "metadata aggregate falls back") {
     import org.apache.spark.sql.sources.IsNotNull
     // direct kernel check: same missing stat, only lateCols differs
-    val stats = Map("v" -> StarTableSource.ColStats("1.0", "2.0", 0L))
+    val stats = Map("v" -> DatasetSidecar.ColStats("1.0", "2.0", 0L))
     val parse = Map[String, Any => Any]("v" -> identity, "w" -> identity)
     assert(StarTableSource.statsContradict(IsNotNull("w"), 10L, stats, parse,
       lateCols = Set("w")), "late column: all-null is provable, skip")

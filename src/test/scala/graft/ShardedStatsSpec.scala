@@ -16,6 +16,7 @@ class ShardedStatsSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def src = graft.sources.StarTableSource
+  private def sidecar = graft.io.DatasetSidecar
 
   private def mkTable(n: Int = 3000, slices: Int = 3): graft.model.StarTable =
     graft.model.StarTable.fromDataFrame(
@@ -24,7 +25,7 @@ class ShardedStatsSpec extends AnyFunSuite {
       "sharded", units = Map("grp" -> "text", "tag" -> "text"))
 
   private def shardPath(out: String, leaf: String) =
-    new java.io.File(s"$out/$leaf/${graft.io.CsvWriter.SliceShardFile}")
+    new java.io.File(s"$out/$leaf/${graft.io.DatasetSidecar.SliceShardFile}")
 
   private def readBack(out: String): Set[(String, Double, String)] =
     spark.read.format("startable").load(out)
@@ -360,10 +361,10 @@ class ShardedStatsSpec extends AnyFunSuite {
       units = Map("grp" -> "text", "tag" -> "text"))
     graft.io.CsvWriter.writePartitionedDataset(patch, out, Seq("grp"),
       overwriteSlices = true, collectStats = false)
-    val bogus = graft.io.CsvWriter.renderSliceShardJson(
-      src.SliceStats(Seq("g0"), 99999L,
-        Map("x" -> src.ColStats("0.0", "1.0", 0L),
-          "tag" -> src.ColStats("a", "b", 0L))), Nil)
+    val bogus = sidecar.encodeShard(sidecar.SliceShard(
+      sidecar.SliceStats(Seq("g0"), 99999L,
+        Map("x" -> sidecar.ColStats("0.0", "1.0", 0L),
+          "tag" -> sidecar.ColStats("a", "b", 0L))), Nil))
     Files.write(shardPath(out, "grp=g0").toPath, bogus.getBytes("UTF-8"))
     graft.operators.Maintenance.shardDatasetStats(spark, out)
     assert(!shardPath(out, "grp=g0").exists(),
@@ -410,7 +411,7 @@ class ShardedStatsSpec extends AnyFunSuite {
     // stale shard tmp (an executor crash mid stage-and-rename): vacuum
     // deletes it once it is older than the concurrent-writer age gate
     val tmp = new java.io.File(s"$out/grp=g1/." +
-      graft.io.CsvWriter.SliceShardFile + ".tmp")
+      graft.io.DatasetSidecar.SliceShardFile + ".tmp")
     Files.write(tmp.toPath, "half".getBytes("UTF-8"))
     val rep = graft.operators.Maintenance.vacuumStarDataset(spark, out,
       tmpMinAgeMs = 0L)

@@ -19,7 +19,7 @@ class StreamMaxFileAgeSpec extends AnyFunSuite {
 
   private def writeSlice(out: String, grp: String, x: Double): Unit = {
     val exists = Files.exists(
-      java.nio.file.Paths.get(out, graft.io.CsvWriter.DatasetMetaFile))
+      java.nio.file.Paths.get(out, graft.io.DatasetSidecar.DatasetMetaFile))
     graft.io.CsvWriter.writePartitionedDataset(
       graft.model.StarTable.fromDataFrame(
         Seq((grp, x)).toDF("grp", "x"), "aged", units = Map("grp" -> "text")),
