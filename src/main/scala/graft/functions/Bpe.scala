@@ -57,8 +57,6 @@ object Bpe {
     CacheScope.run { s =>
       require(numMerges >= 1 && numMerges <= 64,
         s"numMerges must be in [1, 64], got $numMerges")
-      val spark = df.sparkSession
-      import spark.implicits._
       // Spread: the corpus tokenize feeding the word histogram is the one
       // corpus-sized pass and otherwise fuses into a one-task single-file
       // scan at bench shape. Materialized before iterating.
@@ -66,12 +64,13 @@ object Bpe {
         .select(explode(Text.tokens(col(textCol))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("freq"))
         .select(charSeq(col("w")).as("seq"), col("freq")))
-      // merge rounds iterate a fixed tiny plan over the cached vocab — the
-      // IterConf contract (AQE re-planning adds only driver latency here)
-      IterConf.withIterConf(spark, 0) {
-        var cur = vocab.select(col("seq"), col("freq"))
-        val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-        for (step <- 1 to numMerges) {
+      // merge rounds iterate a fixed tiny plan over the cached vocab: a
+      // loop in a child session with AQE off, whose re-planning would add
+      // only driver latency here
+      CacheScope.loop(vocab.select(col("seq"), col("freq"))) { (_, vocab) =>
+        import vocab.sparkSession.implicits._
+        var cur = vocab
+        val merges = (1 to numMerges).map { step =>
           val best = cur.select(col("freq"), explode(symPairs(col("seq"))).as("p"))
             .groupBy(col("p.l").as("l"), col("p.r").as("r"))
             .agg(sum(col("freq")).as("cnt"))
@@ -79,11 +78,11 @@ object Bpe {
             .limit(1).collect()
           require(best.nonEmpty, s"BPE round $step: no pairs left to merge")
           val (l, r, cnt) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-          merges += ((step, l, r, l + r, cnt))
           cur = cur.withColumn("seq",
             replace(col("seq"), lit(s" $l $r "), lit(s" $l$r ")))
+          (step, l, r, l + r, cnt)
         }
-        merges.toSeq.toDF("step", "left_sym", "right_sym", "merged", "pair_count")
+        merges.toDF("step", "left_sym", "right_sym", "merged", "pair_count")
       }
     }
 

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 
 /** Deduplication operators for 100 TB-scale corpora.
   *
@@ -344,8 +345,10 @@ object Dedup {
     * Input: (idA, idB) pairs. Output: (id, component) with component = the
     * minimum id in each connected component.
     *
-    * Eager, under the [[CacheScope]] rules (edge cache, superseded
-    * generations and checkpoint blocks are all freed).
+    * Eager, a [[CacheScope.loop]]: it runs in a child of the caller's
+    * session with AQE off, inherits the caller's shuffle-partition count,
+    * and frees the edge cache, superseded generations and checkpoint
+    * blocks.
     *
     * Fault tolerance: lineage is truncated every 3 rounds with
     * localCheckpoint, whose blocks live in executor storage — an executor
@@ -354,107 +357,91 @@ object Dedup {
     * cluster, set `sc.setCheckpointDir(...)` first: the operator then uses
     * RELIABLE checkpoints (stable storage), which survive executor loss.
     */
-  /** `iterPartitions`: shuffle-partition count for the iteration joins —
-    * label/edge tables are usually far smaller than the corpus the
-    * session is tuned for, and per-round latency is task overhead ×
-    * stages × rounds (the pageRank/kCore lesson; at 100 TB of edges the
-    * same knob goes UP). 0 = session default, preserving every existing
-    * caller. NOTE: AQE is disabled for the loop's duration — including at
-    * iterPartitions = 0 — because it re-plans each flattened generation
-    * for no information gain (see [[graft.functions.Graph]]'s note and
-    * [[IterConf.withIterConf]]); wrap the call in your own conf scope to
-    * restore runtime skew splitting for skewed iteration shuffles. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 10,
-                          iterPartitions: Int = 0): DataFrame = {
-    IterConf.withIterConf(pairs.sparkSession, iterPartitions) {
-      connectedComponentsImpl(pairs, maxIter)
-    }
-  }
-
-  private def connectedComponentsImpl(pairs: DataFrame, maxIter: Int): DataFrame = CacheScope { s =>
-    // Flatten the EDGE plan before iterating, symmetric to the output
-    // flattening below: `pairs` usually arrives as a filter over a dedup
-    // operator's (cached but tree-shaped) candidate pipeline, and the
-    // iteration embeds the edge plan in every generation's plan — twice
-    // per round via the union legs. The driver then pays plan-sized costs
-    // PER ACTION (analysis, canonicalization, and AQE's onUpdatePlan
-    // explainString render, which fires per plan update event): measured
-    // 42 → 725 s on the SAME 8k-edge graph at rehearsal 10× depending
-    // only on the size of the upstream candidate tree. A flat LogicalRDD
-    // edge table makes iteration cost independent of how the edges were
-    // produced — on a 1000-executor cluster the alternative is minutes of
-    // single-threaded driver stall per action. Lineage contract: losing a
-    // cached partition re-executes the raw edge plan (uncached upstream),
-    // correct and merely slower — same as the output flattening.
-    val edgesRaw = pairs.select(col("idA").as("src"), col("idB").as("dst"))
-      .union(pairs.select(col("idB").as("src"), col("idA").as("dst")))
-      .distinct()
-    val edges = s.cache(org.apache.spark.sql.graft.PlanBridge.flattenPlan(edgesRaw))
-    var labels = s.cache(edges.select(col("src").as("id"))
-      .distinct()
-      .withColumn("component", col("id")))
-    // Resource hygiene for deep iteration at scale: exactly one cached
-    // label generation is live in steady state (the superseded one is
-    // freed as soon as its successor is materialized), the convergence
-    // test rides the SAME action that materializes the new labels (one
-    // aggregate, no extra join+count pass), and an eager checkpoint every
-    // 3 rounds truncates the otherwise quadratically-deepening lineage.
-    var prevGen: Option[DataFrame] = Some(labels)
-    var lastCheckpoint: Option[DataFrame] = None
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // neighbor labels: for each edge (src,dst), dst's current component
-      val nbr = edges
-        .join(labels.select(col("id").as("dst"), col("component").as("nbr_component")),
-          Seq("dst"))
-        .groupBy(col("src").as("id"))
-        .agg(min(col("nbr_component")).as("min_nbr"))
-      val updated = s.cache(labels.join(nbr, Seq("id"), "left")
-        .select(col("id"), col("component").as("__old"),
-          least(col("component"), coalesce(col("min_nbr"), col("component")))
-            .as("component")))
-      // one action: materializes `updated` AND computes the convergence test
-      val changed = updated
-        .agg(count(when(col("component") =!= col("__old"), lit(1))).as("n"))
-        .head().getLong(0)
-      prevGen.foreach(s.free(_, blocking = false))
-      if ((iter + 1) % 3 == 0) {
-        // Truncate lineage. Ordering matters for recoverability: the
-        // SUPERSEDED checkpoint is freed only after the new one is fully
-        // materialized (the checkpoint is eager), so no live generation
-        // ever lineage-depends on freed data.
-        labels = s.checkpoint(updated.select("id", "component"))
-        s.free(updated, blocking = false)
-        lastCheckpoint.foreach(s.free(_, blocking = false))
-        lastCheckpoint = Some(labels)
-        prevGen = None
-      } else {
-        labels = updated.select("id", "component")
-        prevGen = Some(updated)
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 10): DataFrame =
+    CacheScope.loop(pairs) { (s, pairs) =>
+      // Flatten the EDGE plan before iterating, symmetric to the output
+      // flattening below: `pairs` usually arrives as a filter over a dedup
+      // operator's (cached but tree-shaped) candidate pipeline, and the
+      // iteration embeds the edge plan in every generation's plan — twice
+      // per round via the union legs. The driver then pays plan-sized costs
+      // PER ACTION (analysis, canonicalization, and AQE's onUpdatePlan
+      // explainString render, which fires per plan update event): measured
+      // 42 → 725 s on the SAME 8k-edge graph at rehearsal 10× depending
+      // only on the size of the upstream candidate tree. A flat LogicalRDD
+      // edge table makes iteration cost independent of how the edges were
+      // produced — on a 1000-executor cluster the alternative is minutes of
+      // single-threaded driver stall per action. Lineage contract: losing a
+      // cached partition re-executes the raw edge plan (uncached upstream),
+      // correct and merely slower — same as the output flattening.
+      val edgesRaw = pairs.select(col("idA").as("src"), col("idB").as("dst"))
+        .union(pairs.select(col("idB").as("src"), col("idA").as("dst")))
+        .distinct()
+      val edges = s.cache(PlanBridge.flattenPlan(edgesRaw))
+      var labels = s.cache(edges.select(col("src").as("id"))
+        .distinct()
+        .withColumn("component", col("id")))
+      // Resource hygiene for deep iteration at scale: exactly one cached
+      // label generation is live in steady state (the superseded one is
+      // freed as soon as its successor is materialized), the convergence
+      // test rides the SAME action that materializes the new labels (one
+      // aggregate, no extra join+count pass), and an eager checkpoint every
+      // 3 rounds truncates the otherwise quadratically-deepening lineage.
+      var prevGen: Option[DataFrame] = Some(labels)
+      var lastCheckpoint: Option[DataFrame] = None
+      var converged = false
+      var iter = 0
+      while (!converged && iter < maxIter) {
+        // neighbor labels: for each edge (src,dst), dst's current component
+        val nbr = edges
+          .join(labels.select(col("id").as("dst"), col("component").as("nbr_component")),
+            Seq("dst"))
+          .groupBy(col("src").as("id"))
+          .agg(min(col("nbr_component")).as("min_nbr"))
+        val updated = s.cache(labels.join(nbr, Seq("id"), "left")
+          .select(col("id"), col("component").as("__old"),
+            least(col("component"), coalesce(col("min_nbr"), col("component")))
+              .as("component")))
+        // one action: materializes `updated` AND computes the convergence test
+        val changed = updated
+          .agg(count(when(col("component") =!= col("__old"), lit(1))).as("n"))
+          .head().getLong(0)
+        prevGen.foreach(s.free(_, blocking = false))
+        if ((iter + 1) % 3 == 0) {
+          // Truncate lineage. Ordering matters for recoverability: the
+          // SUPERSEDED checkpoint is freed only after the new one is fully
+          // materialized (the checkpoint is eager), so no live generation
+          // ever lineage-depends on freed data.
+          labels = s.checkpoint(updated.select("id", "component"))
+          s.free(updated, blocking = false)
+          lastCheckpoint.foreach(s.free(_, blocking = false))
+          lastCheckpoint = Some(labels)
+          prevGen = None
+        } else {
+          labels = updated.select("id", "component")
+          prevGen = Some(updated)
+        }
+        converged = changed == 0
+        iter += 1
       }
-      converged = changed == 0
-      iter += 1
+      // No silent caps: labels from a truncated propagation are NOT final
+      // components — make the condition visible instead of returning quietly.
+      if (!converged)
+        System.err.println(s"[graft] connectedComponents: NOT converged after " +
+          s"$maxIter iterations — labels are an upper approximation; raise maxIter " +
+          "(near-dup cliques normally converge in 2-3 rounds)")
+      // Materialize the final labels, then free the edge cache.
+      val out0 = s.materialize(labels.select("id", "component"))
+      s.free(edges)
+      // PLAN truncation, not just RDD-lineage truncation: the label plan
+      // after k un-checkpointed rounds is a ~2^k join tree over the full edge
+      // pipeline, and every CONSUMER action re-analyzes/canonicalizes it —
+      // measured ~30-40 DRIVER seconds per downstream action in the curation
+      // pipeline while stages took milliseconds. Rebuild the result over the
+      // materialized rows (flat LogicalRDD) and cache that; the scope frees
+      // the tree-shaped cache and the last generation. Lineage stays correct:
+      // losing a cached partition re-executes the (uncached) upstream plan.
+      s.materialize(PlanBridge.flattenPlan(out0))
     }
-    // No silent caps: labels from a truncated propagation are NOT final
-    // components — make the condition visible instead of returning quietly.
-    if (!converged)
-      System.err.println(s"[graft] connectedComponents: NOT converged after " +
-        s"$maxIter iterations — labels are an upper approximation; raise maxIter " +
-        "(near-dup cliques normally converge in 2-3 rounds)")
-    // Materialize the final labels, then free the edge cache.
-    val out0 = s.materialize(labels.select("id", "component"))
-    s.free(edges)
-    // PLAN truncation, not just RDD-lineage truncation: the label plan
-    // after k un-checkpointed rounds is a ~2^k join tree over the full edge
-    // pipeline, and every CONSUMER action re-analyzes/canonicalizes it —
-    // measured ~30-40 DRIVER seconds per downstream action in the curation
-    // pipeline while stages took milliseconds. Rebuild the result over the
-    // materialized rows (flat LogicalRDD) and cache that; the scope frees
-    // the tree-shaped cache and the last generation. Lineage stays correct:
-    // losing a cached partition re-executes the (uncached) upstream plan.
-    s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(out0))
-  }
 
   /** End-to-end near-duplicate removal: find MinHash-LSH candidates above
     * `threshold`, cluster them, and return the input minus every

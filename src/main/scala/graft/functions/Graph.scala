@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 /** Link-graph analytics for corpus curation. PageRank is the standard
@@ -31,10 +32,13 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
   * materialized before the previous is freed (the connectedComponents
   * driver-hygiene lessons: plan size and live cache stay constant in the
   * iteration count). Sink mass is one tiny aggregate per round.
+  *
+  * Every iterative operator here is a [[CacheScope.loop]]: it runs in a
+  * child of the caller's session with AQE off, inherits the caller's
+  * shuffle-partition count, and leaves the caller's session conf as it
+  * found it.
   */
 object Graph {
-
-  import IterConf.withIterConf
 
   private def intDiv(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
@@ -46,69 +50,43 @@ object Graph {
   /** PageRank over an edge list. Returns (node, rank) with rank in
     * massScale units (sums to ~massScale up to floor loss). `dampPct` is
     * the damping factor in integer percent (85 = the classic 0.85).
-    * Eager, under the [[CacheScope]] rules. */
-  /** `iterPartitions`: shuffle-partition count for the iteration joins —
-    * the rank/edge tables are usually far smaller than the corpus the
-    * session is tuned for, and per-iteration latency is TASK overhead ×
-    * stages × iterations (the streaming state-store lesson: size the
-    * shuffle to the state, not to the batch default; at 100 TB of edges
-    * the same knob goes UP). 0 = inherit the session setting.
-    *
-    * NOTE: every bounded-loop operator here (and
-    * [[Dedup.connectedComponents]]) additionally DISABLES AQE for the
-    * loop's duration — including when iterPartitions = 0 — because AQE
-    * re-plans the same flattened generation every round and schedules each
-    * query stage as its own job (measured: 3.3 s of driver gaps over 85
-    * jobs for an 8-iteration pageRank). Callers with heavily skewed
-    * iteration shuffles who want AQE's runtime skew splitting back can
-    * wrap the call in their own conf scope; see [[IterConf.withIterConf]]. */
+    * Eager, a [[CacheScope.loop]]. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iterations: Int = 8, massScale: Long = 1000000000000L,
-               dampPct: Int = 85, iterPartitions: Int = 0): DataFrame = {
+               dampPct: Int = 85): DataFrame = {
     require(iterations > 0, s"iterations must be positive, got $iterations")
     require(dampPct >= 0 && dampPct <= 100, s"dampPct must be 0..100, got $dampPct")
-    withIterConf(edges.sparkSession, iterPartitions) {
-      pageRankImpl(edges, srcCol, dstCol, iterations, massScale, dampPct)
-    }
-  }
+    CacheScope.loop(edges) { (s, edges) =>
+      val e = s.cache(PlanBridge.flattenPlan(
+          edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()))
+      val outDeg = s.cache(e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
+      val edgesDeg = s.cache(e.join(outDeg, Seq("src")))
+      val nodes = s.cache(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
+      val n = nodes.count()
+      require(n > 0, "pageRank: empty graph")
+      val m0 = massScale / n
+      val baseShare = (100L - dampPct) * m0 / 100L // exact Long floor, same as SQL
+      val sinks = s.cache(nodes.join(outDeg.select(col("src").as("node")), Seq("node"),
+        "left_anti"))
 
-  private def pageRankImpl(edges: DataFrame, srcCol: String, dstCol: String,
-                           iterations: Int, massScale: Long,
-                           dampPct: Int): DataFrame = CacheScope { s =>
-    val e = s.cache(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
-        edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()))
-    val outDeg = s.cache(e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
-    val edgesDeg = s.cache(e.join(outDeg, Seq("src")))
-    val nodes = s.cache(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct())
-    val n = nodes.count()
-    require(n > 0, "pageRank: empty graph")
-    val m0 = massScale / n
-    val baseShare = (100L - dampPct) * m0 / 100L // exact Long floor, same as SQL
-    val sinks = s.cache(nodes.join(outDeg.select(col("src").as("node")), Seq("node"),
-      "left_anti"))
-
-    var ranks = s.materialize(nodes.select(col("node"), lit(m0).as("rank")))
-    (1 to iterations).foreach { _ =>
-      val inflow = edgesDeg
-        .join(ranks.select(col("node").as("src"), col("rank")), Seq("src"))
-        .select(col("dst").as("node"), intDiv(col("rank"), col("deg")).as("__c"))
-        .groupBy(col("node")).agg(sum(col("__c")).as("__s"))
-      // dangling mass rides the generation's own plan as a broadcast 1-row
-      // aggregate — ONE action per iteration (the materializing count),
-      // not a separate driver collect per round
-      val dang = broadcast(sinks.join(ranks, Seq("node"))
-        .agg(intDiv(coalesce(sum(col("rank")), lit(0L)), lit(n)).as("__dang")))
-      val updated = s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
-          nodes.join(inflow, Seq("node"), "left").crossJoin(dang)
-            .select(col("node"),
-              (lit(baseShare) + intDiv(
-                lit(dampPct.toLong) * (coalesce(col("__s"), lit(0L)) + col("__dang")),
-                lit(100L))).as("rank"))))
-      s.free(ranks, blocking = false)
-      ranks = updated
+      s.iterate(nodes.select(col("node"), lit(m0).as("rank")), iterations) { ranks =>
+        val inflow = edgesDeg
+          .join(ranks.select(col("node").as("src"), col("rank")), Seq("src"))
+          .select(col("dst").as("node"), intDiv(col("rank"), col("deg")).as("__c"))
+          .groupBy(col("node")).agg(sum(col("__c")).as("__s"))
+        // dangling mass rides the generation's own plan as a broadcast 1-row
+        // aggregate — ONE action per iteration (the materializing count),
+        // not a separate driver collect per round
+        val dang = broadcast(sinks.join(ranks, Seq("node"))
+          .agg(intDiv(coalesce(sum(col("rank")), lit(0L)), lit(n)).as("__dang")))
+        nodes.join(inflow, Seq("node"), "left").crossJoin(dang)
+          .select(col("node"),
+            (lit(baseShare) + intDiv(
+              lit(dampPct.toLong) * (coalesce(col("__s"), lit(0L)) + col("__dang")),
+              lit(100L))).as("rank"))
+      }
     }
-    ranks
   }
 
   /** Exact per-node triangle counts — the clustering-coefficient /
@@ -166,37 +144,28 @@ object Graph {
     * Deterministic by construction (synchronous rounds, exact integer
     * degrees). Scale shape: one degree aggregate + two semi-joins per
     * round over the flattened cached edge generation; generations are
-    * flattened + materialized before freeing predecessors. Eager, under
-    * the [[CacheScope]] rules. Returns (node, deg) of survivors. */
+    * flattened + materialized before freeing predecessors. Eager, a
+    * [[CacheScope.loop]]. Returns (node, deg) of survivors. */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-            rounds: Int = 4, iterPartitions: Int = 0): DataFrame = {
+            rounds: Int = 4): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds > 0, s"rounds must be positive, got $rounds")
-    withIterConf(edges.sparkSession, iterPartitions) {
-      kCoreImpl(edges, srcCol, dstCol, k, rounds)
-    }
-  }
-
-  private def kCoreImpl(edges: DataFrame, srcCol: String, dstCol: String,
-                        k: Int, rounds: Int): DataFrame = CacheScope { s =>
-    def degrees(e: DataFrame): DataFrame =
-      e.select(explode(array(col("a"), col("b"))).as("node"))
-        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    var live = s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
+    CacheScope.loop(edges) { (s, edges) =>
+      def degrees(e: DataFrame): DataFrame =
+        e.select(explode(array(col("a"), col("b"))).as("node"))
+          .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+      val init = PlanBridge.flattenPlan(
         edges.select(least(col(srcCol), col(dstCol)).as("a"),
             greatest(col(srcCol), col(dstCol)).as("b"))
-          .filter(col("a") =!= col("b")).distinct()))
-    (1 to rounds).foreach { _ =>
-      val keep = degrees(live).filter(col("deg") >= k)
-        .select(col("node"))
-      val next = s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
-          live.join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
-            .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
-            .select(col("a"), col("b"))))
-      s.free(live, blocking = false)
-      live = next
+          .filter(col("a") =!= col("b")).distinct())
+      degrees(s.iterate(init, rounds) { live =>
+        val keep = degrees(live).filter(col("deg") >= k)
+          .select(col("node"))
+        live.join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
+          .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
+          .select(col("a"), col("b"))
+      })
     }
-    degrees(live)
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) — community
@@ -216,42 +185,31 @@ object Graph {
     * one argmax aggregate per round over the flattened cached
     * both-direction edge list; each generation is flattened +
     * materialized before its predecessor is freed (the pageRank driver
-    * hygiene). Eager, under the [[CacheScope]] rules.
+    * hygiene). Eager, a [[CacheScope.loop]].
     * Returns (node, community). */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       iterations: Int = 4,
-                       iterPartitions: Int = 0): DataFrame = {
+                       iterations: Int = 4): DataFrame = {
     require(iterations > 0, s"iterations must be positive, got $iterations")
-    withIterConf(edges.sparkSession, iterPartitions) {
-      lpImpl(edges, srcCol, dstCol, iterations)
+    CacheScope.loop(edges) { (s, edges) =>
+      val und = s.cache(PlanBridge.flattenPlan(
+          edges.select(least(col(srcCol), col(dstCol)).as("a"),
+              greatest(col(srcCol), col(dstCol)).as("b"))
+            .filter(col("a") =!= col("b")).distinct()))
+      val dir = s.cache(und.select(col("a").as("src"), col("b").as("dst"))
+        .union(und.select(col("b").as("src"), col("a").as("dst"))))
+      val nodes = s.cache(dir.select(col("src").as("node")).distinct())
+      s.iterate(nodes.select(col("node"), col("node").as("lbl")), iterations) { labels =>
+        val votes = dir
+          .join(labels.select(col("node").as("src"), col("lbl")), Seq("src"))
+          .groupBy(col("dst").as("node"), col("lbl"))
+          .agg(count(lit(1)).as("n"))
+        // argmax by (count desc, label asc): max(struct(n, −label)) — Long
+        // negation is exact
+        votes.groupBy(col("node"))
+          .agg(max(struct(col("n").as("n"), (-col("lbl")).as("nl"))).as("m"))
+          .select(col("node"), (-col("m.nl")).as("lbl"))
+      }.select(col("node"), col("lbl").as("community"))
     }
-  }
-
-  private def lpImpl(edges: DataFrame, srcCol: String, dstCol: String,
-                     iterations: Int): DataFrame = CacheScope { s =>
-    val und = s.cache(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
-        edges.select(least(col(srcCol), col(dstCol)).as("a"),
-            greatest(col(srcCol), col(dstCol)).as("b"))
-          .filter(col("a") =!= col("b")).distinct()))
-    val dir = s.cache(und.select(col("a").as("src"), col("b").as("dst"))
-      .union(und.select(col("b").as("src"), col("a").as("dst"))))
-    val nodes = s.cache(dir.select(col("src").as("node")).distinct())
-    var labels = s.materialize(nodes.select(col("node"), col("node").as("lbl")))
-    (1 to iterations).foreach { _ =>
-      val votes = dir
-        .join(labels.select(col("node").as("src"), col("lbl")), Seq("src"))
-        .groupBy(col("dst").as("node"), col("lbl"))
-        .agg(count(lit(1)).as("n"))
-      // argmax by (count desc, label asc): max(struct(n, −label)) — Long
-      // negation is exact
-      val updated = s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
-          votes.groupBy(col("node"))
-            .agg(max(struct(col("n").as("n"), (-col("lbl")).as("nl"))).as("m"))
-            .select(col("node"), (-col("m.nl")).as("lbl"))))
-      s.free(labels, blocking = false)
-      labels = updated
-    }
-    labels.select(col("node"), col("lbl").as("community"))
   }
 
   /** Personalized PageRank (the random surfer teleports to a SEED SET
@@ -264,60 +222,48 @@ object Graph {
     * so the fixpoint is engine/partitioning/order independent and
     * unrollable in SQL. Seeds absent from the graph simply contribute no
     * mass (identically in any engine). Scale shape identical to
-    * [[pageRank]]. Eager, under the [[CacheScope]] rules. */
+    * [[pageRank]]. Eager, a [[CacheScope.loop]]. */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            seeds: Seq[Long], iterations: Int = 8,
                            massScale: Long = 1000000000000L,
-                           dampPct: Int = 85,
-                           iterPartitions: Int = 0): DataFrame = {
+                           dampPct: Int = 85): DataFrame = {
     require(iterations > 0, s"iterations must be positive, got $iterations")
     require(seeds.nonEmpty, "personalizedPageRank: empty seed set")
     require(dampPct >= 0 && dampPct <= 100, s"dampPct must be 0..100, got $dampPct")
-    withIterConf(edges.sparkSession, iterPartitions) {
-      pprImpl(edges, srcCol, dstCol, seeds, iterations, massScale, dampPct)
-    }
-  }
+    CacheScope.loop(edges) { (s, edges) =>
+      val e = s.cache(PlanBridge.flattenPlan(
+          edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()))
+      val outDeg = s.cache(e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
+      val edgesDeg = s.cache(e.join(outDeg, Seq("src")))
+      val nodes = s.cache(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct()
+        .select(col("node"), col("node").isInCollection(seeds).as("__seed")))
+      require(nodes.limit(1).count() > 0, "personalizedPageRank: empty graph")
+      val nSeeds = seeds.length.toLong
+      val m0 = massScale / nSeeds
+      val seedShare = (100L - dampPct) * massScale / 100L / nSeeds
+      val sinks = s.cache(nodes.select(col("node"))
+        .join(outDeg.select(col("src").as("node")), Seq("node"), "left_anti"))
 
-  private def pprImpl(edges: DataFrame, srcCol: String, dstCol: String,
-                      seeds: Seq[Long], iterations: Int, massScale: Long,
-                      dampPct: Int): DataFrame = CacheScope { s =>
-    val e = s.cache(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
-        edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()))
-    val outDeg = s.cache(e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
-    val edgesDeg = s.cache(e.join(outDeg, Seq("src")))
-    val nodes = s.cache(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .select(col("node"), col("node").isInCollection(seeds).as("__seed")))
-    require(nodes.limit(1).count() > 0, "personalizedPageRank: empty graph")
-    val nSeeds = seeds.length.toLong
-    val m0 = massScale / nSeeds
-    val seedShare = (100L - dampPct) * massScale / 100L / nSeeds
-    val sinks = s.cache(nodes.select(col("node"))
-      .join(outDeg.select(col("src").as("node")), Seq("node"), "left_anti"))
-
-    var ranks = s.materialize(nodes
-      .select(col("node"), when(col("__seed"), lit(m0)).otherwise(lit(0L)).as("rank")))
-    (1 to iterations).foreach { _ =>
-      val inflow = edgesDeg
-        .join(ranks.select(col("node").as("src"), col("rank")), Seq("src"))
-        .select(col("dst").as("node"), intDiv(col("rank"), col("deg")).as("__c"))
-        .groupBy(col("node")).agg(sum(col("__c")).as("__s"))
-      val dang = broadcast(sinks.join(ranks, Seq("node"))
-        .agg(coalesce(sum(col("rank")), lit(0L)).as("__dangTot")))
-      val updated = s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
-          nodes.join(inflow, Seq("node"), "left").crossJoin(dang)
-            .select(col("node"),
-              (when(col("__seed"), lit(seedShare)).otherwise(lit(0L)) +
-                intDiv(lit(dampPct.toLong) *
-                  (coalesce(col("__s"), lit(0L)) +
-                    when(col("__seed"),
-                      intDiv(col("__dangTot"), lit(nSeeds)))
-                      .otherwise(lit(0L))),
-                  lit(100L))).as("rank"))))
-      s.free(ranks, blocking = false)
-      ranks = updated
+      s.iterate(nodes.select(col("node"),
+          when(col("__seed"), lit(m0)).otherwise(lit(0L)).as("rank")), iterations) { ranks =>
+        val inflow = edgesDeg
+          .join(ranks.select(col("node").as("src"), col("rank")), Seq("src"))
+          .select(col("dst").as("node"), intDiv(col("rank"), col("deg")).as("__c"))
+          .groupBy(col("node")).agg(sum(col("__c")).as("__s"))
+        val dang = broadcast(sinks.join(ranks, Seq("node"))
+          .agg(coalesce(sum(col("rank")), lit(0L)).as("__dangTot")))
+        nodes.join(inflow, Seq("node"), "left").crossJoin(dang)
+          .select(col("node"),
+            (when(col("__seed"), lit(seedShare)).otherwise(lit(0L)) +
+              intDiv(lit(dampPct.toLong) *
+                (coalesce(col("__s"), lit(0L)) +
+                  when(col("__seed"),
+                    intDiv(col("__dangTot"), lit(nSeeds)))
+                    .otherwise(lit(0L))),
+                lit(100L))).as("rank"))
+      }
     }
-    ranks
   }
 
   /** HITS hubs & authorities (Kleinberg 1999, "Authoritative sources in a
@@ -341,72 +287,66 @@ object Graph {
     * partial-sum aggregates per iteration over the flattened cached edge
     * table, normalizers ride each generation as broadcast 1-row
     * aggregates, each generation flattened + materialized before its
-    * predecessor is freed. Eager, under the [[CacheScope]] rules.
+    * predecessor is freed. Eager, a [[CacheScope.loop]].
     * Returns (node, hub, auth) in massScale units. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-           iterations: Int = 8, massScale: Long = 1000000L,
-           iterPartitions: Int = 0): DataFrame = {
+           iterations: Int = 8, massScale: Long = 1000000L): DataFrame = {
     require(iterations > 0, s"iterations must be positive, got $iterations")
     require(massScale > 0, s"massScale must be positive, got $massScale")
-    withIterConf(edges.sparkSession, iterPartitions) {
-      hitsImpl(edges, srcCol, dstCol, iterations, massScale)
-    }
-  }
+    CacheScope.loop(edges) { (s, edges) =>
+      val e = s.cache(PlanBridge.flattenPlan(
+          edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()))
+      val nodes = s.cache(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
+      val n = nodes.count()
+      require(n > 0, "hits: empty graph")
+      require(massScale >= n,
+        s"hits: massScale=$massScale < $n nodes — every score would floor to 0")
+      val maxDeg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
+        .unionByName(e.groupBy(col("dst")).agg(count(lit(1)).as("d"))
+          .select(col("dst").as("src"), col("d")))
+        .agg(max(col("d"))).head().getLong(0)
+      require(maxDeg <= Long.MaxValue / massScale / massScale,
+        s"hits: massScale²·maxdeg ($massScale² × $maxDeg) would overflow Long — " +
+          "lower massScale or pre-aggregate the hottest nodes")
 
-  private def hitsImpl(edges: DataFrame, srcCol: String, dstCol: String,
-                       iterations: Int, massScale: Long): DataFrame = CacheScope { s =>
-    val e = s.cache(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
-        edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()))
-    val nodes = s.cache(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct())
-    val n = nodes.count()
-    require(n > 0, "hits: empty graph")
-    require(massScale >= n,
-      s"hits: massScale=$massScale < $n nodes — every score would floor to 0")
-    val maxDeg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
-      .unionByName(e.groupBy(col("dst")).agg(count(lit(1)).as("d"))
-        .select(col("dst").as("src"), col("d")))
-      .agg(max(col("d"))).head().getLong(0)
-    require(maxDeg <= Long.MaxValue / massScale / massScale,
-      s"hits: massScale²·maxdeg ($massScale² × $maxDeg) would overflow Long — " +
-        "lower massScale or pre-aggregate the hottest nodes")
+      def renorm(raw: DataFrame, outCol: String): DataFrame = {
+        // x → (x · massScale) // max(Σx, 1); nodes without inflow score 0
+        val tot = broadcast(raw.agg(
+          greatest(coalesce(sum(col("__s")), lit(0L)), lit(1L)).as("__t")))
+        s.cache(PlanBridge.flattenPlan(
+            nodes.join(raw, Seq("node"), "left").crossJoin(tot)
+              .select(col("node"),
+                intDiv(coalesce(col("__s"), lit(0L)) * lit(massScale),
+                  col("__t")).as(outCol))))
+      }
 
-    def renorm(raw: DataFrame, outCol: String): DataFrame = {
-      // x → (x · massScale) // max(Σx, 1); nodes without inflow score 0
-      val tot = broadcast(raw.agg(
-        greatest(coalesce(sum(col("__s")), lit(0L)), lit(1L)).as("__t")))
-      s.cache(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
-          nodes.join(raw, Seq("node"), "left").crossJoin(tot)
-            .select(col("node"),
-              intDiv(coalesce(col("__s"), lit(0L)) * lit(massScale),
-                col("__t")).as(outCol))))
+      val h0 = massScale / n
+      var hubs = s.materialize(nodes.select(col("node"), lit(h0).as("hub")))
+      var auths: DataFrame = null
+      (1 to iterations).foreach { _ =>
+        val aRaw = e
+          .join(hubs.select(col("node").as("src"), col("hub")), Seq("src"))
+          .select(col("dst").as("node"), col("hub").as("__s"))
+          .groupBy(col("node")).agg(sum(col("__s")).as("__s"))
+        // no materializing action here: the hub half-step below consumes
+        // aNew (filling its cache), and the freed predecessor is not in
+        // aNew's lineage (aNew = f(hubs, e, nodes)) — one action per
+        // iteration instead of two
+        val aNew = renorm(aRaw, "auth")
+        if (auths != null) s.free(auths, blocking = false)
+        auths = aNew
+        val hRaw = e
+          .join(auths.select(col("node").as("dst"), col("auth")), Seq("dst"))
+          .select(col("src").as("node"), col("auth").as("__s"))
+          .groupBy(col("node")).agg(sum(col("__s")).as("__s"))
+        val hNew = renorm(hRaw, "hub")
+        hNew.count()
+        s.free(hubs, blocking = false)
+        hubs = hNew
+      }
+      hubs.join(auths, Seq("node"))
     }
-
-    val h0 = massScale / n
-    var hubs = s.materialize(nodes.select(col("node"), lit(h0).as("hub")))
-    var auths: DataFrame = null
-    (1 to iterations).foreach { _ =>
-      val aRaw = e
-        .join(hubs.select(col("node").as("src"), col("hub")), Seq("src"))
-        .select(col("dst").as("node"), col("hub").as("__s"))
-        .groupBy(col("node")).agg(sum(col("__s")).as("__s"))
-      // no materializing action here: the hub half-step below consumes
-      // aNew (filling its cache), and the freed predecessor is not in
-      // aNew's lineage (aNew = f(hubs, e, nodes)) — one action per
-      // iteration instead of two
-      val aNew = renorm(aRaw, "auth")
-      if (auths != null) s.free(auths, blocking = false)
-      auths = aNew
-      val hRaw = e
-        .join(auths.select(col("node").as("dst"), col("auth")), Seq("dst"))
-        .select(col("src").as("node"), col("auth").as("__s"))
-        .groupBy(col("node")).agg(sum(col("__s")).as("__s"))
-      val hNew = renorm(hRaw, "hub")
-      hNew.count()
-      s.free(hubs, blocking = false)
-      hubs = hNew
-    }
-    hubs.join(auths, Seq("node"))
   }
 
   /** Edge-WEIGHTED PageRank: rank flows in proportion to edge weight
@@ -416,63 +356,51 @@ object Graph {
     * integers. Same integer micro-mass contract as [[pageRank]]: each
     * flow is rank·w div ΣW(src), all Long arithmetic, engine/partition/
     * order-independent with the oracle unrollable. A loud overflow guard
-    * refuses massScale·maxWeight near Long range. Iteration hygiene and
-    * `iterPartitions` as [[pageRank]]. */
+    * refuses massScale·maxWeight near Long range. Iteration hygiene as
+    * [[pageRank]]. Eager, a [[CacheScope.loop]]. */
   def weightedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                        weightCol: String, iterations: Int = 8,
-                       massScale: Long = 1000000000000L, dampPct: Int = 85,
-                       iterPartitions: Int = 0): DataFrame = {
+                       massScale: Long = 1000000000000L,
+                       dampPct: Int = 85): DataFrame = {
     require(iterations > 0, s"iterations must be positive, got $iterations")
     require(dampPct >= 0 && dampPct <= 100, s"dampPct must be 0..100, got $dampPct")
-    withIterConf(edges.sparkSession, iterPartitions) {
-      weightedPrImpl(edges, srcCol, dstCol, weightCol, iterations,
-        massScale, dampPct)
-    }
-  }
+    CacheScope.loop(edges) { (s, edges) =>
+      val e = s.cache(PlanBridge.flattenPlan(
+          edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+              col(weightCol).cast("long").as("w"))
+            .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))))
+      val badW = e.filter(col("w") <= 0).count()
+      require(badW == 0, s"weightedPageRank: $badW edge(s) with weight <= 0")
+      val maxW = e.agg(max(col("w"))).head().getLong(0)
+      require(maxW < Long.MaxValue / (2 * massScale),
+        s"weightedPageRank: massScale * maxWeight ($massScale * $maxW) risks " +
+          "Long overflow in the per-edge flow product; lower massScale")
+      val outW = s.cache(e.groupBy(col("src")).agg(sum(col("w")).as("ow")))
+      val edgesW = s.cache(e.join(outW, Seq("src")))
+      val nodes = s.cache(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
+      val n = nodes.count()
+      require(n > 0, "weightedPageRank: empty graph")
+      val m0 = massScale / n
+      val baseShare = (100L - dampPct) * m0 / 100L
+      val sinks = s.cache(nodes.join(outW.select(col("src").as("node")), Seq("node"),
+        "left_anti"))
 
-  private def weightedPrImpl(edges: DataFrame, srcCol: String, dstCol: String,
-                             weightCol: String, iterations: Int,
-                             massScale: Long, dampPct: Int): DataFrame = CacheScope { s =>
-    val e = s.cache(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
-        edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-            col(weightCol).cast("long").as("w"))
-          .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))))
-    val badW = e.filter(col("w") <= 0).count()
-    require(badW == 0, s"weightedPageRank: $badW edge(s) with weight <= 0")
-    val maxW = e.agg(max(col("w"))).head().getLong(0)
-    require(maxW < Long.MaxValue / (2 * massScale),
-      s"weightedPageRank: massScale * maxWeight ($massScale * $maxW) risks " +
-        "Long overflow in the per-edge flow product; lower massScale")
-    val outW = s.cache(e.groupBy(col("src")).agg(sum(col("w")).as("ow")))
-    val edgesW = s.cache(e.join(outW, Seq("src")))
-    val nodes = s.cache(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct())
-    val n = nodes.count()
-    require(n > 0, "weightedPageRank: empty graph")
-    val m0 = massScale / n
-    val baseShare = (100L - dampPct) * m0 / 100L
-    val sinks = s.cache(nodes.join(outW.select(col("src").as("node")), Seq("node"),
-      "left_anti"))
-
-    var ranks = s.materialize(nodes.select(col("node"), lit(m0).as("rank")))
-    (1 to iterations).foreach { _ =>
-      val inflow = edgesW
-        .join(ranks.select(col("node").as("src"), col("rank")), Seq("src"))
-        .select(col("dst").as("node"),
-          intDiv(col("rank") * col("w"), col("ow")).as("__c"))
-        .groupBy(col("node")).agg(sum(col("__c")).as("__s"))
-      val dang = broadcast(sinks.join(ranks, Seq("node"))
-        .agg(intDiv(coalesce(sum(col("rank")), lit(0L)), lit(n)).as("__dang")))
-      val updated = s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
-          nodes.join(inflow, Seq("node"), "left").crossJoin(dang)
-            .select(col("node"),
-              (lit(baseShare) + intDiv(
-                lit(dampPct.toLong) * (coalesce(col("__s"), lit(0L)) + col("__dang")),
-                lit(100L))).as("rank"))))
-      s.free(ranks, blocking = false)
-      ranks = updated
+      s.iterate(nodes.select(col("node"), lit(m0).as("rank")), iterations) { ranks =>
+        val inflow = edgesW
+          .join(ranks.select(col("node").as("src"), col("rank")), Seq("src"))
+          .select(col("dst").as("node"),
+            intDiv(col("rank") * col("w"), col("ow")).as("__c"))
+          .groupBy(col("node")).agg(sum(col("__c")).as("__s"))
+        val dang = broadcast(sinks.join(ranks, Seq("node"))
+          .agg(intDiv(coalesce(sum(col("rank")), lit(0L)), lit(n)).as("__dang")))
+        nodes.join(inflow, Seq("node"), "left").crossJoin(dang)
+          .select(col("node"),
+            (lit(baseShare) + intDiv(
+              lit(dampPct.toLong) * (coalesce(col("__s"), lit(0L)) + col("__dang")),
+              lit(100L))).as("rank"))
+      }
     }
-    ranks
   }
 
   /** Multi-source BFS distances, bounded rounds: the minimum hop count
@@ -486,40 +414,25 @@ object Graph {
     * the oracle is the UNROLLED per-round minimum. Scale shape: one
     * (join + min-aggregate) per round over the flattened cached edge
     * table; generations flatten + materialize before freeing their
-    * predecessor (the pageRank hygiene); `iterPartitions` sizes the
-    * iteration shuffles to the frontier, not the session corpus. Eager,
-    * under the [[CacheScope]] rules. */
+    * predecessor (the pageRank hygiene). Eager, a [[CacheScope.loop]]. */
   def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
-                   seeds: Seq[Long], rounds: Int,
-                   iterPartitions: Int = 0): DataFrame = {
+                   seeds: Seq[Long], rounds: Int): DataFrame = {
     require(seeds.nonEmpty, "bfsDistances: no seeds")
     require(rounds >= 0, s"bfsDistances: rounds must be >= 0, got $rounds")
-    withIterConf(edges.sparkSession, iterPartitions) {
-      bfsImpl(edges, srcCol, dstCol, seeds, rounds)
+    CacheScope.loop(edges) { (s, edges) =>
+      import edges.sparkSession.implicits._
+      val e = s.materialize(PlanBridge.flattenPlan(
+          edges.select(col(srcCol).cast("long").as("src"),
+            col(dstCol).cast("long").as("dst")).distinct()))
+      s.iterate(seeds.distinct.toDF("node").select(col("node"), lit(0L).as("dist")),
+          rounds) { dist =>
+        dist
+          .join(e, dist("node") === e("src"))
+          .select(col("dst").as("node"), (col("dist") + 1L).as("dist"))
+          .unionByName(dist)
+          .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+      }
     }
-  }
-
-  private def bfsImpl(edges: DataFrame, srcCol: String, dstCol: String,
-                      seeds: Seq[Long], rounds: Int): DataFrame = CacheScope { s =>
-    import edges.sparkSession.implicits._
-    val e = s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
-        edges.select(col(srcCol).cast("long").as("src"),
-          col(dstCol).cast("long").as("dst")).distinct()))
-    var dist = s.materialize(seeds.distinct.toDF("node")
-      .select(col("node"), lit(0L).as("dist")))
-    (1 to rounds).foreach { _ =>
-      val grown = dist
-        .join(e, dist("node") === e("src"))
-        .select(col("dst").as("node"), (col("dist") + 1L).as("dist"))
-        .unionByName(dist)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-      val next = s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(grown))
-      s.free(dist)
-      dist = next
-    }
-    // the final generation is already materialized + cached; free the edges
-    s.free(e)
-    dist
   }
 
   /** Adamic–Adar link prediction (Adamic & Adar 2003): score each

@@ -169,9 +169,7 @@ object AnalyticQueries {
     // oracle. One shuffle per iteration; edge table flattened + cached.
     "q_pagerank" -> ((s, dir) => {
       val edges = linkEdges(s, dir)
-      // iteration shuffles sized to the small rank table, not the session
-      graft.functions.Graph.pageRank(edges, "src", "dst", iterations = 8,
-        iterPartitions = 8)
+      graft.functions.Graph.pageRank(edges, "src", "dst", iterations = 8)
     }),
 
     // Personalized PageRank from a 3-node seed set over the same link
@@ -182,7 +180,7 @@ object AnalyticQueries {
     "q_ppr" -> ((s, dir) => {
       val edges = linkEdges(s, dir)
       graft.functions.Graph.personalizedPageRank(edges, "src", "dst",
-        seeds = Seq(1L, 2L, 3L), iterations = 6, iterPartitions = 8)
+        seeds = Seq(1L, 2L, 3L), iterations = 6)
     }),
 
     // Exact per-node triangle counts over the link graph — the community
@@ -201,8 +199,7 @@ object AnalyticQueries {
     // unrolled oracle.
     "q_kcore" -> ((s, dir) => {
       val edges = linkEdges(s, dir)
-      graft.functions.Graph.kCore(edges, "src", "dst", k = 10, rounds = 4,
-        iterPartitions = 8)
+      graft.functions.Graph.kCore(edges, "src", "dst", k = 10, rounds = 4)
     }),
 
     // Synchronous label-propagation communities over the link graph —
@@ -211,7 +208,7 @@ object AnalyticQueries {
     "q_label_prop" -> ((s, dir) => {
       val edges = linkEdges(s, dir)
       graft.functions.Graph.labelPropagation(edges, "src", "dst",
-        iterations = 4, iterPartitions = 8)
+        iterations = 4)
     }),
 
     // Multi-source BFS over the link graph: minimum hop distance from the
@@ -220,7 +217,7 @@ object AnalyticQueries {
     "q_bfs" -> ((s, dir) => {
       val edges = linkEdges(s, dir)
       graft.functions.Graph.bfsDistances(edges, "src", "dst",
-        seeds = Seq(1L, 2L), rounds = 4, iterPartitions = 8)
+        seeds = Seq(1L, 2L), rounds = 4)
     }),
 
     // Adamic–Adar link prediction over the link graph: top-20 non-adjacent
@@ -298,7 +295,7 @@ object AnalyticQueries {
       val edges = linkEdges(s, dir)
         .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
       graft.functions.Graph.weightedPageRank(edges, "src", "dst", "w",
-        iterations = 6, iterPartitions = 8)
+        iterations = 6)
     }),
 
     // Newman modularity of the label-propagation communities: Q =
@@ -413,8 +410,7 @@ object AnalyticQueries {
     // 6-iteration DuckDB mirror, bit for bit.
     "q_hits" -> ((s, dir) => {
       val edges = linkEdges(s, dir)
-      graft.functions.Graph.hits(edges, "src", "dst", iterations = 6,
-        iterPartitions = 8)
+      graft.functions.Graph.hits(edges, "src", "dst", iterations = 6)
     }),
 
     // Closed-form per-group least squares (REGR_SLOPE/REGR_INTERCEPT):
@@ -789,8 +785,7 @@ object AnalyticQueries {
       val pairs = graft.operators.FuzzyJoin.editDistance1Pairs(
         recs, "record_id", "name")
       val comps = graft.functions.Dedup.connectedComponents(
-        pairs.select(col("id_a").as("idA"), col("id_b").as("idB")),
-        iterPartitions = 8)
+        pairs.select(col("id_a").as("idA"), col("id_b").as("idB")))
       val resolved = recs
         .join(comps.withColumnRenamed("id", "record_id"),
           Seq("record_id"), "left")
@@ -1398,7 +1393,7 @@ object AnalyticQueries {
     if (!java.nio.file.Files.exists(
         java.nio.file.Paths.get(path, "_SUCCESS"))) {
       graft.functions.Graph.labelPropagation(linkEdges(s, dir), "src", "dst",
-        iterations = 4, iterPartitions = 8)
+        iterations = 4)
         .write.mode("overwrite").parquet(path)
     }
     s.read.parquet(path)

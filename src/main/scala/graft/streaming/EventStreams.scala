@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
@@ -246,20 +247,6 @@ object EventStreams {
       .agg(count(lit(1)).as("n_sessions"),
         sum(col("n_events")).as("n_events"))
 
-  /** Run a streaming DataFrame to completion against its (static) file
-    * source and return the result as a batch DataFrame, via the memory sink.
-    * `Complete` mode so aggregates fold over all input.
-    *
-    * `statePartitions` sizes the stateful operators' shuffle — and
-    * therefore the STATE STORE COUNT, which a streaming query fixes at
-    * first start and which dominates micro-batch latency when state is
-    * small (measured: the interval join runs 5.3 s with the batch default
-    * of 32 stores vs 1.9 s with 4 — per-store open/commit/maintenance is
-    * the floor, not data). Sizing state partitions to state volume rather
-    * than inheriting the batch shuffle setting is standard Structured
-    * Streaming practice; a 100 TB stream raises it to keep per-store state
-    * inside executor memory. The session's shuffle setting is restored
-    * after the stream finishes (the value is only read at query start). */
   /** Continuous SCD-1 maintenance: run a change-feed stream to completion,
     * folding every micro-batch into a snapshot via
     * [[graft.operators.Merge.upsert]] (foreachBatch — the standard
@@ -339,27 +326,36 @@ object EventStreams {
     view
   }
 
+  /** Run a streaming DataFrame to completion against its (static) file
+    * source and return the result as a batch DataFrame of `spark`, via the
+    * memory sink; `Complete` mode by default so aggregates fold over all
+    * input.
+    *
+    * The stream runs in a child of `spark` with 8 shuffle partitions, and
+    * `spark`'s own conf is never written. The shuffle-partition count fixes
+    * the stateful operators' STATE STORE COUNT at first start, and that
+    * count dominates micro-batch latency when state is small (measured:
+    * the interval join runs 5.3 s with 32 stores and 1.9 s with 4;
+    * per-store open/commit/maintenance is the floor, not data). The memory
+    * sink's view is registered in the child's catalog and dropped before
+    * returning: the returned frame alone holds the rows. */
   def runToBatch(spark: SparkSession, streamed: DataFrame,
-                 mode: OutputMode = OutputMode.Complete(),
-                 statePartitions: Int = 8): DataFrame = {
+                 mode: OutputMode = OutputMode.Complete()): DataFrame = {
     val name = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    // restore only after the stream COMPLETES: the query clones the session
-    // conf during startup on its own thread, so an immediate restore races
     val ckpt = scratchCheckpointDir(name)
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-      val q = streamed.writeStream
-        .format("memory").queryName(name).outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      deleteRecursively(new java.io.File(ckpt)) // scratch by construction
+    PlanBridge.withChildSession(spark, "spark.sql.shuffle.partitions" -> "8") { child =>
+      try {
+        val q = PlanBridge.rebind(streamed, child).writeStream
+          .format("memory").queryName(name).outputMode(mode)
+          .option("checkpointLocation", ckpt)
+          .start()
+        try q.processAllAvailable()
+        finally q.stop()
+      } finally deleteRecursively(new java.io.File(ckpt)) // scratch by construction
+      val out = PlanBridge.rebind(child.table(name), spark)
+      child.catalog.dropTempView(name) // `out` holds the sink's rows itself
+      out
     }
-    spark.table(name)
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {

@@ -22,6 +22,18 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
   }
 
+  test("runToBatch leaves no memory-sink view in the caller's catalog") {
+    def streamViews = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_stream_")).toSet
+    val before = streamViews
+    val streamed = EventStreams.runToBatch(spark,
+      EventStreams.hourlyRollup(EventStreams.readStream(spark, sfDir)))
+    assert(streamViews == before, "runToBatch registered a view in the caller's catalog")
+    val batch = EventStreams.hourlyRollup(batchEvents)
+    assert(streamed.count() == batch.count())
+    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+  }
+
   test("streamed session windows cover all events exactly once") {
     val sessions = EventStreams.runToBatch(spark,
       EventStreams.sessionWindows(EventStreams.readStream(spark, sfDir)))
