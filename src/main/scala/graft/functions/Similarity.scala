@@ -664,12 +664,53 @@ object Similarity {
     val centroids = trainIvfCentroids(df, embCol, idCol, nlist, dim, iters)
     ivfAssignCentroids(df, embCol, idCol, centroids)
       .write.mode("overwrite").partitionBy("ivf_list").parquet(path)
+    writeIvfCentroids(df.sparkSession, path, centroids)
+    centroids
+  }
+
+  /** A trained IVF index's centroid sidecar, through the index path's own
+    * file system (a `file://`, HDFS or S3 index keeps it with its lists). */
+  private def writeIvfCentroids(spark: org.apache.spark.sql.SparkSession,
+                                path: String, centroids: Array[Array[Double]]): Unit = {
     val json = graft.io.JsonValue.JsonArray(centroids.toVector.map(c =>
       graft.io.JsonValue.JsonArray(c.toVector.map(graft.io.JsonValue.JsonNumber(_)))))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "_ivf_centroids.json"),
-      graft.io.JsonValue.write(json))
-    centroids
+    val p = new org.apache.hadoop.fs.Path(path, IvfCentroidsFile)
+    val out = p.getFileSystem(spark.sessionState.newHadoopConf()).create(p, true)
+    try out.write(graft.io.JsonValue.write(json).getBytes("UTF-8")) finally out.close()
+  }
+
+  private def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
+                               path: String): Array[Array[Double]] = {
+    val p = new org.apache.hadoop.fs.Path(path, IvfCentroidsFile)
+    val in = p.getFileSystem(spark.sessionState.newHadoopConf()).open(p)
+    val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    graft.io.JsonValue.parse(txt)
+      .asInstanceOf[graft.io.JsonValue.JsonArray].values
+      .map(_.asInstanceOf[graft.io.JsonValue.JsonArray].values
+        .map(_.asInstanceOf[graft.io.JsonValue.JsonNumber].value).toArray)
+      .toArray
+  }
+
+  private val IvfCentroidsFile = "_ivf_centroids.json"
+
+  /** The ids of the `nprobe` centroids nearest `query` (squared euclidean,
+    * ties to the lower id), ranked driver-side. */
+  private def nearestLists(centroids: Array[Array[Double]], query: Seq[Float],
+                           nprobe: Int): Seq[Int] = {
+    def d2(c: Array[Double]): Double = {
+      var s = 0.0; var i = 0
+      while (i < query.size) {
+        val d = query(i) - c(i); s += d * d; i += 1
+      }
+      s
+    }
+    centroids.indices.sortBy(i => (d2(centroids(i)), i)).take(nprobe)
+  }
+
+  /** The `_SUCCESS` marker of a memoized index build. */
+  private def markBuilt(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
+    p.getFileSystem(spark.sessionState.newHadoopConf()).create(p, true).close()
   }
 
   /** Incremental maintenance of a [[writeTrainedIvfIndex]] index: assign a
@@ -682,13 +723,7 @@ object Similarity {
     * that's FAISS-standard too; retrain on schedule, append in between. */
   def appendToTrainedIvfIndex(df: DataFrame, embCol: String, idCol: String,
                               path: String): Unit = {
-    val centroids = graft.io.JsonValue.parse(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(path, "_ivf_centroids.json")))
-      .asInstanceOf[graft.io.JsonValue.JsonArray].values
-      .map(_.asInstanceOf[graft.io.JsonValue.JsonArray].values
-        .map(_.asInstanceOf[graft.io.JsonValue.JsonNumber].value).toArray)
-      .toArray
-    ivfAssignCentroids(df, embCol, idCol, centroids)
+    ivfAssignCentroids(df, embCol, idCol, readIvfCentroids(df.sparkSession, path))
       .write.mode("append").partitionBy("ivf_list").parquet(path)
   }
 
@@ -698,21 +733,7 @@ object Similarity {
                            query: Seq[Float], k: Int, nprobe: Int,
                            embCol: String = "embedding",
                            idCol: String = "vec_id"): DataFrame = {
-    val centroids = graft.io.JsonValue.parse(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(path, "_ivf_centroids.json")))
-      .asInstanceOf[graft.io.JsonValue.JsonArray].values
-      .map(_.asInstanceOf[graft.io.JsonValue.JsonArray].values
-        .map(_.asInstanceOf[graft.io.JsonValue.JsonNumber].value).toArray)
-    def d2(c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < query.size) {
-        val d = query(i) - c(i); s += d * d; i += 1
-      }
-      s
-    }
-    val probeLists = centroids.zipWithIndex
-      .sortBy { case (c, i) => (d2(c), i) }
-      .take(nprobe).map(_._2)
+    val probeLists = nearestLists(readIvfCentroids(spark, path), query, nprobe)
     readIvfLists(spark, path, probeLists)
       .select(col(idCol), cosine(col(embCol), vecLit(query)).as("cosine"))
       .orderBy(col("cosine").desc, col(idCol).asc)
@@ -800,6 +821,16 @@ object Similarity {
                    dim: Int, m: Int = 8, k: Int = 16, iters: Int = 5): Unit = {
     val books = trainPqCodebooks(df, embCol, idCol, dim, m, k, iters)
     val spark = df.sparkSession
+    writeCodebooks(spark, books, path)
+    pqEncode(df, embCol, idCol, books, dim)
+      .write.mode("overwrite").parquet(s"$path/codes")
+    markBuilt(spark, path)
+  }
+
+  /** The codebook table of a PQ index: one (subspace, code, vector) row
+    * per centroid, in one file. */
+  private def writeCodebooks(spark: org.apache.spark.sql.SparkSession,
+                             books: Array[Array[Array[Double]]], path: String): Unit = {
     import scala.jdk.CollectionConverters._
     val bookRows = (for {
       j <- books.indices; c <- books(j).indices
@@ -811,12 +842,6 @@ object Similarity {
         org.apache.spark.sql.types.StructField("vec",
           org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)))))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    pqEncode(df, embCol, idCol, books, dim)
-      .write.mode("overwrite").parquet(s"$path/codes")
-    // marker for memoized builds
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.create(new org.apache.hadoop.fs.Path(s"$path/_SUCCESS"), true).close()
   }
 
   /** Asymmetric-distance (ADC) probe over a [[writePqIndex]] index: the
@@ -945,31 +970,15 @@ object Similarity {
     val spark = df.sparkSession
     val coarse = trainIvfCentroids(df, embCol, idCol, nlist, dim, iters)
     val books = trainPqCodebooks(df, embCol, idCol, dim, m, k, iters)
-    import scala.jdk.CollectionConverters._
-    val bookRows = (for {
-      j <- books.indices; c <- books(j).indices
-    } yield org.apache.spark.sql.Row(j, c, books(j)(c).toSeq)).asJava
-    spark.createDataFrame(bookRows,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("j", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("c", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("vec",
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)))))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+    writeCodebooks(spark, books, path)
     val assigned = ivfAssignCentroids(df, embCol, idCol, coarse)
       .withColumnRenamed("ivf_list", "__ivf_list")
     pqEncode(assigned, embCol, idCol, books, dim,
         keepCols = Seq("__ivf_list"))
       .withColumnRenamed("__ivf_list", "ivf_list")
       .write.mode("overwrite").partitionBy("ivf_list").parquet(s"$path/codes")
-    val json = graft.io.JsonValue.JsonArray(coarse.toVector.map(c =>
-      graft.io.JsonValue.JsonArray(c.toVector.map(graft.io.JsonValue.JsonNumber(_)))))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "_ivf_centroids.json"),
-      graft.io.JsonValue.write(json))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.create(new org.apache.hadoop.fs.Path(s"$path/_SUCCESS"), true).close()
+    writeIvfCentroids(spark, path, coarse)
+    markBuilt(spark, path)
   }
 
   /** Probe a [[writeIvfPqIndex]] index: rank coarse centroids driver-side,
@@ -978,21 +987,7 @@ object Similarity {
   def probeIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                       query: Seq[Float], topK: Int, nprobe: Int,
                       idCol: String = "vec_id"): DataFrame = {
-    val coarse = graft.io.JsonValue.parse(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(path, "_ivf_centroids.json")))
-      .asInstanceOf[graft.io.JsonValue.JsonArray].values
-      .map(_.asInstanceOf[graft.io.JsonValue.JsonArray].values
-        .map(_.asInstanceOf[graft.io.JsonValue.JsonNumber].value).toArray)
-    def d2(c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < query.size) {
-        val d = query(i) - c(i); s += d * d; i += 1
-      }
-      s
-    }
-    val probeLists = coarse.zipWithIndex
-      .sortBy { case (c, i) => (d2(c), i) }
-      .take(nprobe).map(_._2)
+    val probeLists = nearestLists(readIvfCentroids(spark, path), query, nprobe)
     val adc = adcCosine(readCodebooks(spark, path), query)
     readIvfLists(spark, s"$path/codes", probeLists)
       .select(col(idCol), adc.as("adc_cosine"))

@@ -810,11 +810,7 @@ object CsvWriter {
       val staging = new org.apache.hadoop.fs.Path(dataDir)
       if (fs.exists(staging)) fs.delete(staging, true)
     }
-    val pathCols = partitionPathCols(t, partitionBy, naRep,
-      "writePartitionedDataset")
-    val valueCol = org.apache.spark.sql.functions.concat_ws(sep,
-      distributedCells(t.select(dataCols: _*), naRep): _*).as("value")
-    val out = t.df.select(pathCols :+ valueCol: _*)
+    val out = textLines(t, partitionBy, dataCols, sep, naRep, "writePartitionedDataset")
     val shaped =
       if (numFiles <= 0) out
       else if (filesPerSlice <= 1) out.repartition(numFiles,
@@ -1022,6 +1018,13 @@ object CsvWriter {
         "or '.' — their directories would be skipped by hidden-file " +
         "listing conventions; rename the column")
   }
+
+  /** `t` as text-sink rows: its partition path columns, then each row's
+    * rendered line as `value`. */
+  private def textLines(t: StarTable, partitionBy: Seq[String], dataCols: Seq[String],
+                        sep: String, naRep: String, op: String): DataFrame =
+    t.df.select(partitionPathCols(t, partitionBy, naRep, op) :+
+      concat_ws(sep, distributedCells(t.select(dataCols: _*), naRep): _*).as("value"): _*)
 
   /** Partition columns as STRING path values, rendered with the same
     * representation rules as data cells so a read-back parses them
@@ -1550,15 +1553,8 @@ object CsvWriter {
       ttlMs = DatasetLock.ttlMsFromConf(t.df.sparkSession))
     try {
     val existing = graft.sources.StarTableSource.readDatasetMeta(Seq(outDir))
-    // streaming into an existing dataset must not silently fork its schema
-    // or line format
     existing.foreach { m =>
-      val incoming = (t.name, dataCols, dataCols.map(t.unit),
-        partitionBy, partitionBy.map(t.unit), sep)
-      val current = (m.name, m.cols, m.units, m.partCols, m.partUnits, m.sep)
-      require(incoming == current,
-        s"streamPartitionedDataset: dataset at $outDir holds $current, " +
-          s"incoming stream is $incoming")
+      requireStreamShape(m, t, dataCols, partitionBy, sep, outDir)
       // Appended rows invalidate every slice's recorded bounds. The INLINE
       // layout's entries are dropped by the sidecar rewrite below; a
       // SHARDED dataset's entries live in per-leaf shard FILES, which must
@@ -1586,82 +1582,14 @@ object CsvWriter {
     installSidecar(outDir, tableMeta(t, dataCols, partitionBy, sep)
       .copy(lateCols = existing.map(_.lateCols).getOrElse(Nil)),
       expectCommit = existing.map(_.commit), lockToken = Some(lock.info.token))
-    val pathCols = partitionPathCols(t, partitionBy, naRep,
-      "streamPartitionedDataset")
-    val valueCol = concat_ws(sep,
-      distributedCells(t.select(dataCols: _*), naRep): _*).as("value")
-    val q = t.df.select(pathCols :+ valueCol: _*)
+    graft.streaming.StreamRun.start(
+      textLines(t, partitionBy, dataCols, sep, naRep, "streamPartitionedDataset")
       .writeStream.format("text")
       .partitionBy(partitionBy: _*)
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .start()
-    // backstop: a query that terminates WITHOUT stop() (source failure,
-    // session shutdown) still frees the lease; release is idempotent and
-    // token-checked, so double-release with the wrapper below is benign
-    val spark = t.df.sparkSession
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == q.id) {
-          lock.release()
-          spark.streams.removeListener(this)
-        }
-    }
-    spark.streams.addListener(listener)
-    // registration gap: a query that FAILED its first micro-batch may have
-    // posted its terminated event before addListener ran (the bus does not
-    // replay) — release here if it is already dead; release is idempotent
-    if (!q.isActive) {
-      lock.release()
-      spark.streams.removeListener(listener)
-    }
-    new LockReleasingQuery(q, () => lock.release())
+      .option("path", outDir), checkpoint, onEnd = () => lock.release())
     } catch {
       case e: Throwable => lock.release(); throw e
     }
-  }
-
-  /** [[streamPartitionedDataset]]'s returned handle: delegates everything
-    * to the real query but releases the dataset's writer lease
-    * SYNCHRONOUSLY when the caller stops it — the terminated-listener
-    * backstop fires asynchronously, and a maintenance pass started right
-    * after stop() must not be refused by a lease that is logically free. */
-  private final class LockReleasingQuery(
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      releaseLock: () => Unit)
-      extends org.apache.spark.sql.streaming.StreamingQuery {
-    override def name: String = q.name
-    override def id: java.util.UUID = q.id
-    override def runId: java.util.UUID = q.runId
-    override def sparkSession: SparkSession = q.sparkSession
-    override def isActive: Boolean = q.isActive
-    override def exception: Option[org.apache.spark.sql.streaming.StreamingQueryException] =
-      q.exception
-    override def status: org.apache.spark.sql.streaming.StreamingQueryStatus =
-      q.status
-    override def recentProgress: Array[org.apache.spark.sql.streaming.StreamingQueryProgress] =
-      q.recentProgress
-    override def lastProgress: org.apache.spark.sql.streaming.StreamingQueryProgress =
-      q.lastProgress
-    override def awaitTermination(): Unit = {
-      q.awaitTermination(); releaseLock()
-    }
-    override def awaitTermination(timeoutMs: Long): Boolean = {
-      val done = q.awaitTermination(timeoutMs)
-      if (done) releaseLock()
-      done
-    }
-    override def processAllAvailable(): Unit = q.processAllAvailable()
-    override def stop(): Unit = {
-      try q.stop() finally releaseLock()
-    }
-    override def explain(): Unit = q.explain()
-    override def explain(extended: Boolean): Unit = q.explain(extended)
   }
 
   /** COEXISTING streaming ingest (`coexist = true`): the steady-state
@@ -1681,7 +1609,7 @@ object CsvWriter {
     *  - a backfill or compaction OVERLAPPING the stream's touched slices
     *    refuses (or queues) exactly like any shared-lease conflict, and a
     *    batch about to touch a slice a sibling holds waits the sibling
-    *    out (`spark.graft.stream.extendAwaitMs`, default 60 s);
+    *    out (up to [[StreamExtendAwaitMs]]);
     *  - full-root operations (vacuum, schema evolution, full overwrite,
     *    root compaction) still refuse while the stream lives — they are
     *    exclusive by nature.
@@ -1729,14 +1657,7 @@ object CsvWriter {
       graft.sources.StarTableSource.invalidateMetaCache(outDir)
       graft.sources.StarTableSource.readDatasetMeta(Seq(outDir)) match {
         case Some(m) =>
-          // streaming into an existing dataset must not silently fork its
-          // schema or line format
-          val incoming = (t.name, dataCols, dataCols.map(t.unit),
-            partitionBy, partitionBy.map(t.unit), sep)
-          val current = (m.name, m.cols, m.units, m.partCols, m.partUnits, m.sep)
-          require(incoming == current,
-            s"streamPartitionedDataset: dataset at $outDir holds $current, " +
-              s"incoming stream is $incoming")
+          requireStreamShape(m, t, dataCols, partitionBy, sep, outDir)
         case None =>
           // fresh dataset: publish the schema sidecar before the first
           // batch; the write-authority gate sees our live shared lease,
@@ -1750,44 +1671,38 @@ object CsvWriter {
       val commitPath = new org.apache.hadoop.fs.Path(rootPath,
         s"_startable_stream.$streamKey.json")
       val committedAtStart: Long = readStreamHighWater(fs, commitPath)
-      val extendAwaitMs: Long =
-        spark.conf.getOption("spark.graft.stream.extendAwaitMs")
-          .map(_.toLong).getOrElse(60000L)
       val lastCommitted = new java.util.concurrent.atomic.AtomicLong(committedAtStart)
-      val q = t.df.writeStream
-        .option("checkpointLocation", checkpoint)
+      graft.streaming.StreamRun.start(t.df.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                          batchId: Long) =>
           if (batchId > lastCommitted.get()) {
             commitStreamBatch(t.copy(df = batch), outDir, partitionBy, sep,
-              naRep, dataCols, lock, streamKey, batchId, extendAwaitMs,
-              conf, commitPath)
+              naRep, dataCols, lock, streamKey, batchId, conf, commitPath)
             lastCommitted.set(batchId)
           }
-        }
-        .start()
-      val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-        override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
-          if (e.id == q.id) {
-            lock.release()
-            spark.streams.removeListener(this)
-          }
-      }
-      spark.streams.addListener(listener)
-      if (!q.isActive) {
-        lock.release()
-        spark.streams.removeListener(listener)
-      }
-      new LockReleasingQuery(q, () => lock.release())
+        }, checkpoint, onEnd = () => lock.release())
     } catch {
       case e: Throwable => lock.release(); throw e
     }
   }
+
+  /** Streaming into an existing dataset must not silently fork its schema
+    * or line format. */
+  private def requireStreamShape(m: DatasetMeta,
+                                 t: StarTable, dataCols: Seq[String],
+                                 partitionBy: Seq[String], sep: String,
+                                 outDir: String): Unit = {
+    val incoming = (t.name, dataCols, dataCols.map(t.unit),
+      partitionBy, partitionBy.map(t.unit), sep)
+    val current = (m.name, m.cols, m.units, m.partCols, m.partUnits, m.sep)
+    require(incoming == current,
+      s"streamPartitionedDataset: dataset at $outDir holds $current, " +
+        s"incoming stream is $incoming")
+  }
+
+  /** How long a coexisting stream's batch waits for a sibling holding a
+    * slice it is about to touch. */
+  private val StreamExtendAwaitMs = 60000L
 
   /** A coexisting stream's batch files above its recorded high-water mark
     * are IN-DOUBT — a restart replays them (delete-by-name + re-install),
@@ -1832,7 +1747,7 @@ object CsvWriter {
                                 partitionBy: Seq[String], sep: String,
                                 naRep: String, dataCols: Seq[String],
                                 lock: DatasetLock.Handle, streamKey: String,
-                                batchId: Long, extendAwaitMs: Long,
+                                batchId: Long,
                                 conf: org.apache.hadoop.conf.Configuration,
                                 commitPath: org.apache.hadoop.fs.Path): Unit = {
     val rootPath = new org.apache.hadoop.fs.Path(outDir)
@@ -1854,7 +1769,7 @@ object CsvWriter {
       // and slice-scoped maintenance refuse (or queue behind) these slices
       val newParts = parts.filterNot(lock.info.slices.contains)
       if (newParts.nonEmpty) {
-        lock.extendSlices(newParts, awaitMs = extendAwaitMs)
+        lock.extendSlices(newParts, awaitMs = StreamExtendAwaitMs)
         // first touch invalidates the slice's recorded statistics:
         // appended rows may fall outside the recorded ranges. Strip is
         // conservative — no stats means the slice is read, never skipped.
@@ -1865,11 +1780,8 @@ object CsvWriter {
       val staging = new org.apache.hadoop.fs.Path(rootPath,
         s".__stream_${streamKey}_b$batchId")
       if (fs.exists(staging)) fs.delete(staging, true)
-      val pathCols = partitionPathCols(bt, partitionBy, naRep,
-        "streamPartitionedDataset")
-      val valueCol = concat_ws(sep,
-        distributedCells(bt.select(dataCols: _*), naRep): _*).as("value")
-      bt.df.select(pathCols :+ valueCol: _*).write.mode("overwrite")
+      textLines(bt, partitionBy, dataCols, sep, naRep, "streamPartitionedDataset")
+        .write.mode("overwrite")
         .partitionBy(partitionBy: _*).text(staging.toString)
       val prefix = s"part-s$streamKey-b$batchId-"
       // replay hygiene first: remove every file of a previous attempt of

@@ -264,21 +264,13 @@ object EventStreams {
                       deleteCol: Option[String] = None): DataFrame = CacheScope { s =>
     var snapshot = s.materialize(org.apache.spark.sql.graft.PlanBridge
       .flattenPlan(initial.select(initial.columns.map(col): _*)))
-    val name = "graft_upsert_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = scratchCheckpointDir(name)
-    try {
-      val q = changes.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val merged = s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
-              graft.operators.Merge.upsert(snapshot, batch, keyCols, deleteCol)))
-          s.free(snapshot, blocking = false)
-          snapshot = merged
-        }
-        .option("checkpointLocation", ckpt)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally deleteRecursively(new java.io.File(ckpt))
+    StreamRun.toCompletion(changes.writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        val merged = s.materialize(org.apache.spark.sql.graft.PlanBridge.flattenPlan(
+            graft.operators.Merge.upsert(snapshot, batch, keyCols, deleteCol)))
+        s.free(snapshot, blocking = false)
+        snapshot = merged
+      }, "graft_upsert_")
     snapshot
   }
 
@@ -299,30 +291,22 @@ object EventStreams {
                            opCol: String = "op"): DataFrame = CacheScope { s =>
     var view = s.materialize(org.apache.spark.sql.graft.PlanBridge
       .flattenPlan(initial.select(initial.columns.map(col): _*)))
-    val name = "graft_aggmaint_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = scratchCheckpointDir(name)
-    try {
-      val q = changes.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          // the batch runs on the stream's thread: enter the scope so the
-          // eager maintainAggregate hands its result here; flatten +
-          // materialize the generation, then free the inner frame and the
-          // predecessor generation
-          s.enter {
-            val inner = graft.operators.Merge.maintainAggregate(
-              view, batch, keyCols, valueCols, opCol)
-            val merged = s.materialize(
-              org.apache.spark.sql.graft.PlanBridge.flattenPlan(inner))
-            s.free(inner, blocking = false)
-            s.free(view, blocking = false)
-            view = merged
-          }
+    StreamRun.toCompletion(changes.writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        // the batch runs on the stream's thread: enter the scope so the
+        // eager maintainAggregate hands its result here; flatten +
+        // materialize the generation, then free the inner frame and the
+        // predecessor generation
+        s.enter {
+          val inner = graft.operators.Merge.maintainAggregate(
+            view, batch, keyCols, valueCols, opCol)
+          val merged = s.materialize(
+            org.apache.spark.sql.graft.PlanBridge.flattenPlan(inner))
+          s.free(inner, blocking = false)
+          s.free(view, blocking = false)
+          view = merged
         }
-        .option("checkpointLocation", ckpt)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally deleteRecursively(new java.io.File(ckpt))
+      }, "graft_aggmaint_")
     view
   }
 
@@ -340,44 +324,14 @@ object EventStreams {
     * sink's view is registered in the child's catalog and dropped before
     * returning: the returned frame alone holds the rows. */
   def runToBatch(spark: SparkSession, streamed: DataFrame,
-                 mode: OutputMode = OutputMode.Complete()): DataFrame = {
-    val name = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = scratchCheckpointDir(name)
+                 mode: OutputMode = OutputMode.Complete()): DataFrame =
     PlanBridge.withChildSession(spark, "spark.sql.shuffle.partitions" -> "8") { child =>
-      try {
-        val q = PlanBridge.rebind(streamed, child).writeStream
-          .format("memory").queryName(name).outputMode(mode)
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      } finally deleteRecursively(new java.io.File(ckpt)) // scratch by construction
+      val name = StreamRun.toCompletion(PlanBridge.rebind(streamed, child).writeStream
+        .format("memory").outputMode(mode), "graft_stream_")
       val out = PlanBridge.rebind(child.table(name), spark)
       child.catalog.dropTempView(name) // `out` holds the sink's rows itself
       out
     }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val children = f.listFiles()
-    if (children != null) children.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
-  /** Scratch checkpoint dir for run-to-completion memory-sink streams:
-    * tmpfs (/dev/shm) when present, else the JVM temp dir. These
-    * checkpoints are discard-after-run by construction (the memory sink is
-    * already non-durable), so the per-micro-batch offset-log and
-    * state-store commit fsyncs should hit RAM, not the container's disk —
-    * the measured floor is then the engine's, not the scratch volume's. A
-    * durable pipeline passes its own checkpointLocation on real storage. */
-  private def scratchCheckpointDir(name: String): String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val base =
-      if (java.nio.file.Files.isWritable(shm)) shm
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    base.resolve(s"graft_ckpt_$name").toString
-  }
 
   // ---------------------------------------------------------------- custom state
 

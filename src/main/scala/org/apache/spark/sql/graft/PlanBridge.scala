@@ -1,9 +1,13 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.SparkListenerInterface
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.internal.SessionState
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Bridge to `internalCreateDataFrame` (package `org.apache.spark.sql`
   * visibility): rebuilds a DataFrame over the physical rows of an existing
@@ -81,8 +85,10 @@ object PlanBridge {
     * cloned again when either changes. A fresh session is not free: its
     * jobs run under their own executor class loader, so every generated
     * class is compiled again (measured: 5 compilations, about 120 ms, for
-    * a two-stage aggregate), and its first stream registers a listener
-    * that stays on the shared listener bus. */
+    * a two-stage aggregate), and its first stream builds the child's own
+    * query manager, whose listener bus then stays on the shared listener
+    * bus for the child's life. The per-query buses of its streams do not
+    * stay: [[dropStreamListenerBus]] removes each when its query ends. */
   def withChildSession[A](spark: SparkSession, overrides: (String, String)*)(
       body: SparkSession => A): A = {
     val child = childOf(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], overrides)
@@ -104,6 +110,30 @@ object PlanBridge {
         children(overrides) = (spark, conf, child)
         child
     }
+  }
+
+  /** Remove the listener bus of ended query `q`'s own session clone
+    * (`sparkSessionForStream`) from the shared listener bus. A stateful
+    * operator builds that clone's query manager, whose bus Spark never
+    * removes; stateless queries build none, and this is then a no-op. Only
+    * this query's bus goes, found by identity and never by diffing the bus
+    * list (which could take a concurrent run's bus or the caller's). Reads
+    * without forcing either lazy value, and never waits. */
+  def dropStreamListenerBus(q: StreamingQuery): Unit = {
+    val forStream = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.sparkSessionForStream
+    Option(QueryManagerField.get(forStream.sessionState)).foreach { manager =>
+      forStream.sparkContext.listenerBus.removeListener(
+        ManagerBusField.get(manager).asInstanceOf[SparkListenerInterface])
+    }
+  }
+
+  /** The storage of the lazy `SessionState.streamingQueryManager`, and
+    * `classic.StreamingQueryManager`'s private bus. */
+  private lazy val QueryManagerField = field(classOf[SessionState], "streamingQueryManager")
+  private lazy val ManagerBusField =
+    field(classOf[org.apache.spark.sql.classic.StreamingQueryManager], "listenerBus")
+  private def field(cls: Class[_], name: String) = {
+    val f = cls.getDeclaredField(name); f.setAccessible(true); f
   }
 
   /** `df`'s plan as a frame of `session`: planned and run with that

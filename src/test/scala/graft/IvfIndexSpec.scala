@@ -143,4 +143,38 @@ class IvfIndexSpec extends AnyFunSuite {
     val self = top.find(_.getLong(0) == 123L).get.getDouble(1)
     assert(self > 0.4, s"ADC self-cosine too low: $self")
   }
+
+  test("trained IVF and IVF-PQ indexes at a file:// URI keep their centroids " +
+    "with their lists and probe as at a bare path") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val vectors = (0L until 400L).map(i => (i, Seq.fill(64)(rnd.nextFloat() - 0.5f)))
+    val emb = vectors.toDF("vec_id", "embedding")
+    val query = vectors(123)._2
+    val batch = Seq((900000L, query.map(_ + 1e-4f))).toDF("vec_id", "embedding")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    def trainedIvf(dir: String) = {
+      val centroids = Similarity.writeTrainedIvfIndex(
+        emb, "embedding", "vec_id", dir, nlist = 8, dim = 64, iters = 3)
+      Similarity.appendToTrainedIvfIndex(batch, "embedding", "vec_id", dir)
+      (centroids.map(_.toSeq).toSeq,
+        ids(Similarity.probeTrainedIvfIndex(spark, dir, query, k = 5, nprobe = 3)))
+    }
+    def ivfPq(dir: String) = {
+      Similarity.writeIvfPqIndex(emb, "embedding", "vec_id", dir,
+        nlist = 8, dim = 64, m = 8, k = 16, iters = 3)
+      ids(Similarity.probeIvfPqIndex(spark, dir, query, topK = 5, nprobe = 3))
+    }
+    val bare = java.nio.file.Files.createTempDirectory("graft_ivf_bare")
+    val uri = java.nio.file.Files.createTempDirectory("graft_ivf_uri")
+    val (bareCentroids, bareTop) = trainedIvf(bare.resolve("ivf").toString)
+    val (uriCentroids, uriTop) = trainedIvf(uri.resolve("ivf").toUri.toString)
+    assert(uriCentroids == bareCentroids)
+    assert(uriTop == bareTop && uriTop.map(_._1).contains(900000L))
+    assert(java.nio.file.Files.exists(uri.resolve("ivf").resolve("_ivf_centroids.json")))
+    assert(ivfPq(uri.resolve("ivfpq").toUri.toString) == ivfPq(bare.resolve("ivfpq").toString))
+    assert(java.nio.file.Files.exists(uri.resolve("ivfpq").resolve("_ivf_centroids.json")))
+    assert(java.nio.file.Files.exists(uri.resolve("ivfpq").resolve("_SUCCESS")))
+  }
 }
