@@ -3,13 +3,13 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Vector similarity search over an embedding column (Array[Float]).
+/** Vector similarity over an embedding column (Array[Float]).
   *
   * Baseline: brute-force cosine top-k — a single codegen'd scan, no shuffle
-  * except the final top-k (TakeOrderedAndProject). Scale path: hyperplane-LSH
-  * bucketing (deterministic seeded projections) so the scan touches only
-  * matching buckets, plus an IVF-style coarse quantizer over seeded anchor
-  * points.
+  * except the final top-k (TakeOrderedAndProject). The persisted scale
+  * path (LSH, anchor and k-means lists × raw or PQ codes) is
+  * [[AnnIndex]]; this object holds the blocked pair operators, k-means,
+  * the PQ codebook trainer and the exact-arithmetic scorers.
   */
 object Similarity {
 
@@ -26,7 +26,7 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.expressions.VectorExpressions.cosine(a, b)
 
-  private def vecLit(v: Seq[Float]): Column =
+  private[functions] def vecLit(v: Seq[Float]): Column =
     array(v.map(x => lit(x)): _*)
 
   /** Brute-force cosine top-k against a literal query vector.
@@ -279,167 +279,32 @@ object Similarity {
         .otherwise(lit(0.0)).as("cosine"))
   }
 
-  /** Deterministic pseudo-random hyperplanes: component j of plane p is
-    * derived from xxhash64(seed, p, j) mapped to [-1, 1]. Computed driver-side
-    * once (tiny), shipped as literals. */
-  def hyperplanes(numPlanes: Int, dim: Int, seed: Long = 42L): Seq[Seq[Float]] =
-    (0 until numPlanes).map { p =>
-      (0 until dim).map { j =>
-        // splitmix64-style scramble of (seed, p, j) — public-domain mixing
-        var z = seed + p.toLong * 0x9E3779B97F4A7C15L + j.toLong * 0xBF58476D1CE4E5B9L
-        z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-        z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-        z = z ^ (z >>> 31)
-        (z.toDouble / Long.MaxValue.toDouble).toFloat
-      }
-    }
-
-  /** LSH bucket id for a vector: sign bits against `planes` packed into a
-    * long. Same-bucket vectors are likely neighbors (random hyperplane LSH
-    * approximates angular distance). */
-  def lshBucket(emb: Column, planes: Seq[Seq[Float]]): Column =
-    planes.zipWithIndex.map { case (plane, i) =>
-      when(dot(emb, vecLit(plane)) >= 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-
-  /** LSH-bucketed ANN: restrict the cosine scan to vectors whose bucket
-    * matches the query's in at least one of `tables` independent hash tables
-    * (multi-probe via multiple tables, the standard recall lever). At scale,
-    * bucket ids can be a partition/bucketing key so matching buckets are a
-    * partition-pruned read instead of a full scan. */
-  def lshTopK(df: DataFrame, embCol: String, idCol: String,
-              query: Seq[Float], k: Int,
-              numPlanes: Int = 12, tables: Int = 4, seed: Long = 42L): DataFrame = {
-    val dim = query.size
-    val allPlanes = (0 until tables).map(t => hyperplanes(numPlanes, dim, seed + t * 1000L))
-    def bucketOf(v: Seq[Float], planes: Seq[Seq[Float]]): Long =
-      planes.zipWithIndex.map { case (plane, i) =>
-        val d = plane.zip(v).map { case (a, b) => a.toDouble * b.toDouble }.sum
-        if (d >= 0) 1L << i else 0L
-      }.foldLeft(0L)(_ | _)
-    val queryBuckets = allPlanes.map(p => bucketOf(query, p))
-    val cond = allPlanes.zip(queryBuckets).map { case (planes, qb) =>
-      lshBucket(col(embCol), planes) === lit(qb)
-    }.reduce(_ || _)
-    df.filter(cond)
-      .select(col(idCol), cosine(col(embCol), vecLit(query)).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  /** Persist a multi-probe hyperplane-LSH index: every vector is bucketed in
-    * `tables` independent hash tables, so probes become a pruned read — at
-    * query time NO per-row hashing happens at all (the round-2 filter-based
-    * lshTopK evaluated tables×planes dot products per row, which at dim 64
-    * costs more than the cosine it was meant to avoid; bucketing must be
-    * paid at WRITE time, once, to be a win).
-    *
-    * Layout is LAYERED, the standard lakehouse index shape: directories are
-    * (tbl, bucket >> coarse-shift) — a bounded count, so file listing stays
-    * cheap at any scale — and rows inside each directory are sorted by the
-    * full bucket, so the probe's `bucket IN (…)` predicate prunes at the
-    * parquet row-group level via min/max stats. One dir per (tbl, bucket)
-    * would make PARTITION DISCOVERY the bottleneck (measured: ~770 dirs
-    * cost 1.8 s to list per probe at toy scale; at 100 TB a 2^numPlanes
-    * directory fanout per table is a metastore killer). */
-  def writeLshIndex(df: DataFrame, embCol: String, idCol: String, path: String,
-                    dim: Int, numPlanes: Int = 8, tables: Int = 3,
-                    coarseBits: Int = 4, seed: Long = 42L,
-                    rowGroupBytes: Long = 4L * 1024 * 1024): Unit = {
-    val shift = math.max(numPlanes - coarseBits, 0)
-    val tb = (0 until tables).map { t =>
-      val planes = hyperplanes(numPlanes, dim, seed + t * 1000L)
-      struct(lit(t).as("tbl"), lshBucket(col(embCol), planes).as("bucket"))
-    }
-    df.select(col(idCol), col(embCol), explode(array(tb: _*)).as("bk"))
-      .select(col(idCol), col(embCol), col("bk.tbl").as("tbl"),
-        col("bk.bucket").as("bucket"),
-        shiftright(col("bk.bucket"), shift).as("bcoarse"))
-      .repartition(col("tbl"), col("bcoarse"))
-      .sortWithinPartitions(col("bucket")) // row-group clustering on fine bits
-      // Small row groups on purpose: an ANN index is read in tiny selective
-      // slices, so fine-grained min/max skipping on the sorted bucket column
-      // is worth the extra footer metadata (a scan-optimized 128 MB row
-      // group would make the pushed `bucket IN (…)` filter useless — the
-      // whole dir would be read whenever one of its buckets is probed).
-      .write.mode("overwrite")
-      .option("parquet.block.size", rowGroupBytes)
-      .partitionBy("tbl", "bcoarse").parquet(path)
-  }
-
-  /** Query-directed multi-probe over a [[writeLshIndex]] index (Lv et al.
-    * 2007, "Multi-Probe LSH"): per table, rank candidate buckets by the sum
-    * of |margin| of the flipped hyperplanes — a near neighbor most likely
-    * disagrees on exactly the planes the query is closest to — and read the
-    * `nprobe` cheapest buckets (flip sets of size ≤ 3). All ranking happens
-    * driver-side on the tiny plane set; the scan reads only the coarse
-    * partitions covering the probed buckets (PartitionFilters), prunes row
-    * groups on the fine bucket bits (PushedFilters on the sorted bucket
-    * column), and computes ONE cosine per candidate row. Candidates found
-    * in several tables are deduplicated before the top-k. */
-  def probeLshIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                    query: Seq[Float], k: Int,
-                    dim: Int, numPlanes: Int = 8, tables: Int = 3,
-                    nprobe: Int = 16, coarseBits: Int = 4,
-                    seed: Long = 42L,
-                    embCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val shift = math.max(numPlanes - coarseBits, 0)
-    val perTable: Seq[(Int, Seq[Long], Seq[Long])] = (0 until tables).map { t =>
-      val planes = hyperplanes(numPlanes, dim, seed + t * 1000L)
-      val margins = planes.map(p =>
-        p.zip(query).map { case (a, b) => a.toDouble * b.toDouble }.sum)
-      val exact = margins.zipWithIndex.foldLeft(0L) { case (acc, (m, i)) =>
-        if (m >= 0) acc | (1L << i) else acc
-      }
-      // perturbation sets: flip ≤3 planes, cost = sum of flipped |margins|
-      val flipSets = (0 to math.min(3, numPlanes)).flatMap(sz =>
-        (0 until numPlanes).combinations(sz).map(_.toSeq))
-      val buckets = flipSets
-        .map(s => (s.map(j => math.abs(margins(j))).sum,
-          s.foldLeft(exact)((b, j) => b ^ (1L << j))))
-        .sortBy(_._1)
-        .take(nprobe)
-        .map(_._2)
-      (t, buckets.map(_ >> shift).distinct, buckets)
-    }
-    val probeCond = perTable.map { case (t, coarse, buckets) =>
-      col("tbl") === t && col("bcoarse").isInCollection(coarse) &&
-        col("bucket").isInCollection(buckets)
-    }.reduce(_ || _)
-    // Targeted partition-directory read (same rationale as
-    // [[readIvfLists]]): list only the probed (tbl, bcoarse) directories
-    // instead of running full partition discovery over the whole index on
-    // every probe — planning cost ∝ probed buckets, not index width.
-    val src = readIndexDirs(spark, path, perTable.flatMap {
-      case (t, coarse, _) => coarse.map(c => s"tbl=$t/bcoarse=$c")
-    })
-    // Project to (id, cosine) BEFORE deduplicating across tables: the
-    // groupBy partial-aggregates map-side, so the shuffle carries 16-byte
-    // rows for near-distinct candidates — deduplicating first would shuffle
-    // the embeddings themselves (~20× wider). max() of identical values is
-    // deterministic.
-    src
-      .filter(probeCond)
-      .select(col(idCol), cosine(col(embCol), vecLit(query)).as("__cos"))
-      .groupBy(col(idCol))
-      .agg(max(col("__cos")).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  /** IVF-style coarse index: assign every vector to its nearest of `nlist`
-    * deterministic anchor directions; a query probes only the `nprobe`
-    * closest anchors' lists. Returns the assignment DataFrame — at scale,
-    * write it partitioned by `ivf_list` so probes prune partitions. */
+  /** Coarse assignment of every vector to the nearest (by cosine) of
+    * `nlist` fixed pseudo-random anchor directions: the
+    * [[AnnIndex.AnnSpec.Anchors]] partitioner's lists, as (id, embedding,
+    * `ivf_list`). */
   def ivfAssign(df: DataFrame, embCol: String, idCol: String,
-                nlist: Int, dim: Int, seed: Long = 7L): DataFrame = {
-    val anchors = hyperplanes(nlist, dim, seed)
-    val sims = anchors.zipWithIndex.map { case (a, i) =>
-      struct(cosine(col(embCol), vecLit(a)).as("sim"), lit(i).as("list"))
-    }
+                nlist: Int, dim: Int): DataFrame =
     df.select(col(idCol), col(embCol),
-      array_max(array(sims: _*)).getField("list").as("ivf_list"))
-  }
+      AnnIndex.nearestAnchor(col(embCol), AnnIndex.anchors(nlist, dim)).as("ivf_list"))
+
+  /** Nearest-centroid (partial dist² d = −2x·c + |c|², index c) struct
+    * against a CONSTANT centroid matrix — the fused
+    * [[expressions.NearestCentroid]] codegen expression, whose plan and
+    * generated-source size are independent of k and dim (the previous
+    * k × dim literal-node formulation stalled the DRIVER for seconds per
+    * Lloyd iteration compiling the plan, a cost that grows with k — fatal
+    * at real IVF scale where k is in the thousands). Bit-identical
+    * arithmetic to the literal form; ties toward the lower index. Shared
+    * by the Lloyd iterations and by consumers that need a final
+    * nearest-centroid pass without re-joining the assignment frame
+    * (e.g. [[semanticDedupRemoved]]). */
+  private def distStruct(v: Column, cs: Array[Array[Double]]): Column =
+    graft.functions.expressions.VectorExpressions.nearestCentroid(v, cs)
+
+  /** Nearest-centroid index column (ties toward the lower cluster index). */
+  private[functions] def nearestCentroid(v: Column, cs: Array[Array[Double]]): Column =
+    distStruct(v, cs).getField("c")
 
   /** Distributed Lloyd's k-means over the embedding column — the clustering
     * primitive behind real IVF training and corpus topic bucketing.
@@ -467,24 +332,6 @@ object Similarity {
     *
     * Returns (assignments (id, cluster), final centroids, per-iteration
     * decimal-exact inertia). */
-  /** Nearest-centroid (partial dist² d = −2x·c + |c|², index c) struct
-    * against a CONSTANT centroid matrix — the fused
-    * [[expressions.NearestCentroid]] codegen expression, whose plan and
-    * generated-source size are independent of k and dim (the previous
-    * k × dim literal-node formulation stalled the DRIVER for seconds per
-    * Lloyd iteration compiling the plan, a cost that grows with k — fatal
-    * at real IVF scale where k is in the thousands). Bit-identical
-    * arithmetic to the literal form; ties toward the lower index. Shared
-    * by the Lloyd iterations and by consumers that need a final
-    * nearest-centroid pass without re-joining the assignment frame
-    * (e.g. [[semanticDedupRemoved]]). */
-  private def distStruct(embCol: String, cs: Array[Array[Double]]): Column =
-    graft.functions.expressions.VectorExpressions.nearestCentroid(col(embCol), cs)
-
-  /** Nearest-centroid index column (ties toward the lower cluster index). */
-  private def nearestCentroid(embCol: String, cs: Array[Array[Double]]): Column =
-    distStruct(embCol, cs).getField("c")
-
   def kmeans(df: DataFrame, embCol: String, idCol: String,
              k: Int, dim: Int, iters: Int = 5,
              trackInertia: Boolean = true,
@@ -492,7 +339,7 @@ object Similarity {
     CacheScope.withFrame { scope =>
       import org.apache.spark.sql.types.DecimalType
 
-      def distStructK(cs: Array[Array[Double]]): Column = distStruct(embCol, cs)
+      def distStructK(cs: Array[Array[Double]]): Column = distStruct(col(embCol), cs)
 
       // ---- init: deterministic farthest-point k-means++ (or first-k by id)
       var centroids: Array[Array[Double]] = init match {
@@ -579,180 +426,16 @@ object Similarity {
       (finalAssign, centroids, inertias.toSeq)
     }(_._1)
 
-  /** Persist an IVF index: vectors written partitioned by their coarse list,
-    * so a probe reads only `nprobe` partitions of a 100 TB index instead of
-    * scanning it (directory-level partition pruning — verified by PlanSpec's
-    * PartitionFilters assertion). */
-  /** Read ONLY the selected `ivf_list=` partition directories of an IVF
-    * index. `spark.read.parquet(root).filter(list in ...)` would run full
-    * partition DISCOVERY over all nlist directories on every probe —
-    * measured 4× slower than a brute-force scan at 500k vectors / 256
-    * lists, pure listing cost. Targeted paths with basePath keep planning
-    * cost ∝ nprobe, not nlist (at 100 TB: a handful of object-store
-    * listings instead of thousands). Empty lists (no vectors assigned at
-    * build time) have no directory and are skipped. */
-  private def readIvfLists(spark: org.apache.spark.sql.SparkSession,
-                           root: String, lists: Seq[Int]): DataFrame =
-    readIndexDirs(spark, root, lists.map(l => s"ivf_list=$l"))
-
-  /** Core of the targeted read, shared with the LSH probe (whose
-    * partition layout is `tbl=<t>/bcoarse=<c>`). */
-  private def readIndexDirs(spark: org.apache.spark.sql.SparkSession,
-                            root: String, subdirs: Seq[String]): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(conf)
-    val dirs = subdirs.map(d => new org.apache.hadoop.fs.Path(rootPath, d))
-      .filter(fs.exists).map(_.toString)
-    if (dirs.isEmpty)
-      // every probed partition is empty (degenerate tiny index): the
-      // full-read fallback is correct and only pays on that shape
-      spark.read.parquet(root).filter(org.apache.spark.sql.functions.lit(false))
-    else spark.read.option("basePath", root).parquet(dirs: _*)
-  }
-
-  def writeIvfIndex(df: DataFrame, embCol: String, idCol: String, path: String,
-                    nlist: Int, dim: Int, seed: Long = 7L): Unit =
-    ivfAssign(df, embCol, idCol, nlist, dim, seed)
-      .write.mode("overwrite").partitionBy("ivf_list").parquet(path)
-
-  /** Probe the persisted IVF index: rank anchors against the query
-    * driver-side (tiny), read only the nprobe best lists, cosine top-k. */
-  def probeIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                    query: Seq[Float], k: Int, nprobe: Int,
-                    nlist: Int, seed: Long = 7L,
-                    embCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val dim = query.size
-    val anchors = hyperplanes(nlist, dim, seed)
-    def cos(a: Seq[Float], b: Seq[Float]): Double = {
-      var dotV = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.size) {
-        dotV += a(i).toDouble * b(i); na += a(i).toDouble * a(i); nb += b(i).toDouble * b(i)
-        i += 1
-      }
-      if (na == 0 || nb == 0) 0.0 else dotV / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val probeLists = anchors.zipWithIndex
-      .sortBy { case (a, _) => -cos(a, query) }
-      .take(nprobe).map(_._2)
-    readIvfLists(spark, path, probeLists)
-      .select(col(idCol),
-        cosine(col(embCol), vecLit(query)).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  /** Trained IVF: k-means centroids as the coarse quantizer (the real FAISS
-    * IVF recipe — random hyperplane anchors are the train-free fallback).
-    * Returns the centroid table to keep for probing. */
-  def trainIvfCentroids(df: DataFrame, embCol: String, idCol: String,
-                        nlist: Int, dim: Int, iters: Int = 5): Array[Array[Double]] =
-    kmeans(df, embCol, idCol, nlist, dim, iters, trackInertia = false)._2
-
-  /** Assign vectors to their nearest trained centroid (squared-euclidean,
-    * codegen'd dot products, ties to the lower list id). */
-  def ivfAssignCentroids(df: DataFrame, embCol: String, idCol: String,
-                         centroids: Array[Array[Double]]): DataFrame =
-    df.select(col(idCol), col(embCol),
-      nearestCentroid(embCol, centroids).as("ivf_list"))
-
-  /** Persist a TRAINED IVF index (k-means coarse lists), partitioned by
-    * list for partition-pruned probes; centroids ride along as a sidecar. */
-  def writeTrainedIvfIndex(df: DataFrame, embCol: String, idCol: String,
-                           path: String, nlist: Int, dim: Int,
-                           iters: Int = 5): Array[Array[Double]] = {
-    val centroids = trainIvfCentroids(df, embCol, idCol, nlist, dim, iters)
-    ivfAssignCentroids(df, embCol, idCol, centroids)
-      .write.mode("overwrite").partitionBy("ivf_list").parquet(path)
-    writeIvfCentroids(df.sparkSession, path, centroids)
-    centroids
-  }
-
-  /** A trained IVF index's centroid sidecar, through the index path's own
-    * file system (a `file://`, HDFS or S3 index keeps it with its lists). */
-  private def writeIvfCentroids(spark: org.apache.spark.sql.SparkSession,
-                                path: String, centroids: Array[Array[Double]]): Unit = {
-    val json = graft.io.JsonValue.JsonArray(centroids.toVector.map(c =>
-      graft.io.JsonValue.JsonArray(c.toVector.map(graft.io.JsonValue.JsonNumber(_)))))
-    val p = new org.apache.hadoop.fs.Path(path, IvfCentroidsFile)
-    val out = p.getFileSystem(spark.sessionState.newHadoopConf()).create(p, true)
-    try out.write(graft.io.JsonValue.write(json).getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
-                               path: String): Array[Array[Double]] = {
-    val p = new org.apache.hadoop.fs.Path(path, IvfCentroidsFile)
-    val in = p.getFileSystem(spark.sessionState.newHadoopConf()).open(p)
-    val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    graft.io.JsonValue.parse(txt)
-      .asInstanceOf[graft.io.JsonValue.JsonArray].values
-      .map(_.asInstanceOf[graft.io.JsonValue.JsonArray].values
-        .map(_.asInstanceOf[graft.io.JsonValue.JsonNumber].value).toArray)
-      .toArray
-  }
-
-  private val IvfCentroidsFile = "_ivf_centroids.json"
-
-  /** The ids of the `nprobe` centroids nearest `query` (squared euclidean,
-    * ties to the lower id), ranked driver-side. */
-  private def nearestLists(centroids: Array[Array[Double]], query: Seq[Float],
-                           nprobe: Int): Seq[Int] = {
-    def d2(c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < query.size) {
-        val d = query(i) - c(i); s += d * d; i += 1
-      }
-      s
-    }
-    centroids.indices.sortBy(i => (d2(centroids(i)), i)).take(nprobe)
-  }
-
-  /** The `_SUCCESS` marker of a memoized index build. */
-  private def markBuilt(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    p.getFileSystem(spark.sessionState.newHadoopConf()).create(p, true).close()
-  }
-
-  /** Incremental maintenance of a [[writeTrainedIvfIndex]] index: assign a
-    * NEW batch of vectors against the EXISTING centroids (read from the
-    * sidecar — no retraining, no touching the resident lists) and append
-    * its partitions. The daily-ingest shape: a 100 TB index absorbs a
-    * multi-GB batch by writing only the batch's own rows into the affected
-    * list partitions; probes see old + new immediately. Quantization
-    * quality decays as the corpus drifts from the training distribution —
-    * that's FAISS-standard too; retrain on schedule, append in between. */
-  def appendToTrainedIvfIndex(df: DataFrame, embCol: String, idCol: String,
-                              path: String): Unit = {
-    ivfAssignCentroids(df, embCol, idCol, readIvfCentroids(df.sparkSession, path))
-      .write.mode("append").partitionBy("ivf_list").parquet(path)
-  }
-
-  /** Probe a trained IVF index: rank centroids driver-side (k×dim floats),
-    * read only the nprobe best lists via partition pruning, cosine top-k. */
-  def probeTrainedIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                           query: Seq[Float], k: Int, nprobe: Int,
-                           embCol: String = "embedding",
-                           idCol: String = "vec_id"): DataFrame = {
-    val probeLists = nearestLists(readIvfCentroids(spark, path), query, nprobe)
-    readIvfLists(spark, path, probeLists)
-      .select(col(idCol), cosine(col(embCol), vecLit(query)).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-      .limit(k)
-  }
-
   /** All-pairs near-duplicate search over embeddings via LSH bucket join:
-    * pairs sharing a bucket in any table, verified by exact cosine ≥
-    * threshold. The embedding-cosine near-dup operator. */
+    * pairs sharing a bucket in any table of the [[AnnIndex]] LSH
+    * partitioner, verified by exact cosine ≥ threshold. The
+    * embedding-cosine near-dup operator. */
   def cosineNearDupPairs(df: DataFrame, embCol: String, idCol: String,
                          threshold: Double, dim: Int,
-                         numPlanes: Int = 10, tables: Int = 3,
-                         seed: Long = 42L): DataFrame = {
-    val tablesBuckets = (0 until tables).map { t =>
-      val planes = hyperplanes(numPlanes, dim, seed + t * 1000L)
-      struct(lit(t).as("tbl"), lshBucket(col(embCol), planes).as("bucket"))
-    }
+                         numPlanes: Int = 10, tables: Int = 3): DataFrame = {
     val bucketed = df.select(col(idCol).as("id"), col(embCol).as("emb"),
-        explode(array(tablesBuckets: _*)).as("bk"))
+        explode(AnnIndex.lshBuckets(col(embCol),
+          AnnIndex.lshPlanes(numPlanes, tables, dim))).as("bk"))
       .select(col("id"), col("emb"), col("bk.tbl"), col("bk.bucket"))
     val a = bucketed.select(col("tbl"), col("bucket"), col("id").as("idA"), col("emb").as("embA"))
     val b = bucketed.select(col("tbl"), col("bucket"), col("id").as("idB"), col("emb").as("embB"))
@@ -792,209 +475,6 @@ object Similarity {
     }
   }
 
-  /** Encode vectors to PQ codes: per subspace, the index of the nearest
-    * codebook centroid — one narrow codegen'd pass, no shuffle, no joins.
-    * Returns (id, codes array<int> of length m). */
-  def pqEncode(df: DataFrame, embCol: String, idCol: String,
-               codebooks: Array[Array[Array[Double]]], dim: Int,
-               keepCols: Seq[String] = Nil): DataFrame = {
-    val m = codebooks.length
-    val dsub = dim / m
-    val codeCols = (0 until m).map { j =>
-      // nearestCentroid over the sliced subvector against subspace j's book
-      val subCol = s"__sub$j"
-      (subCol, slice(col(embCol), j * dsub + 1, dsub))
-    }
-    val base = df.select(col(idCol) +: col(embCol) +: keepCols.map(col): _*)
-    val withSubs = codeCols.foldLeft(base) {
-      case (acc, (name, c)) => acc.withColumn(name, c)
-    }
-    withSubs.select(col(idCol) +:
-      array((0 until m).map(j =>
-        nearestCentroid(s"__sub$j", codebooks(j))): _*).as("codes") +:
-      keepCols.map(col): _*)
-  }
-
-  /** Persist a PQ index: the tiny codebook table plus the codes table
-    * (the scan target — m ints per vector instead of dim floats). */
-  def writePqIndex(df: DataFrame, embCol: String, idCol: String, path: String,
-                   dim: Int, m: Int = 8, k: Int = 16, iters: Int = 5): Unit = {
-    val books = trainPqCodebooks(df, embCol, idCol, dim, m, k, iters)
-    val spark = df.sparkSession
-    writeCodebooks(spark, books, path)
-    pqEncode(df, embCol, idCol, books, dim)
-      .write.mode("overwrite").parquet(s"$path/codes")
-    markBuilt(spark, path)
-  }
-
-  /** The codebook table of a PQ index: one (subspace, code, vector) row
-    * per centroid, in one file. */
-  private def writeCodebooks(spark: org.apache.spark.sql.SparkSession,
-                             books: Array[Array[Array[Double]]], path: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val bookRows = (for {
-      j <- books.indices; c <- books(j).indices
-    } yield org.apache.spark.sql.Row(j, c, books(j)(c).toSeq)).asJava
-    spark.createDataFrame(bookRows,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("j", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("c", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("vec",
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)))))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-  }
-
-  /** Asymmetric-distance (ADC) probe over a [[writePqIndex]] index: the
-    * query stays a full float vector; per subspace a k-entry lookup table
-    * of inner products and centroid norms is computed DRIVER-side and
-    * shipped as literals, so scoring a stored vector is m array lookups +
-    * m−1 adds — no per-row vector math at all. The approximate cosine is
-    *   Σ_j <q_j, c_{j,code_j}>  /  (|q| · √(Σ_j |c_{j,code_j}|²))
-    * (the reconstruction x̂'s exact cosine to q). Ties break by id.
-    *
-    * Scale shape: one codegen'd scan of the codes table (m ints/row,
-    * 32-64× less I/O than the float vectors) + a TakeOrderedAndProject —
-    * the re-rank-on-full-vectors refinement composes downstream by
-    * joining the top candidates back to the float table by id. */
-  def probePqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                   query: Seq[Float], topK: Int,
-                   idCol: String = "vec_id"): DataFrame = {
-    val adc = adcCosine(readCodebooks(spark, path), query)
-    spark.read.parquet(s"$path/codes")
-      .select(col(idCol), adc.as("adc_cosine"))
-      .orderBy(col("adc_cosine").desc, col(idCol).asc)
-      .limit(topK)
-  }
-
-  /** Composed PQ probe + exact re-rank — the ONE-CALL form of the pattern
-    * the ANN rehearsal proved necessary: raw ADC ranking is a byte-
-    * reduction stage, not a ranking (recall@10 was 0.188 on the 500k×64d
-    * rehearsal corpus); feeding its top `topK × rerankFactor` candidates
-    * into an exact cosine over the original float vectors recovers 0.86+
-    * recall at m=8 k=64 with rerank@200 (the measured defaults:
-    * rerankFactor = 20 × topK 10 = 200 candidates).
-    *
-    * Scale shape: the ADC scan reads m ints/vector (32-64× less IO than
-    * floats); the candidate ids — a few hundred — are collected (the
-    * centroid-table class of justified driver collect) and pushed into the
-    * float table's scan as an `id IN (...)` predicate, so the re-rank
-    * reads only the candidate rows' row groups (parquet id-stats pruning),
-    * never a full float scan. Output matches [[bruteForceTopK]]'s shape
-    * (id, cosine) so the two compose and compare directly. */
-  def probePqIndexReranked(spark: org.apache.spark.sql.SparkSession,
-                           path: String, vectors: DataFrame, embCol: String,
-                           query: Seq[Float], topK: Int,
-                           rerankFactor: Int = 20,
-                           idCol: String = "vec_id"): DataFrame = {
-    require(rerankFactor >= 1, s"rerankFactor must be >= 1, got $rerankFactor")
-    val candidateIds = probePqIndex(spark, path, query, topK * rerankFactor,
-      idCol).select(col(idCol)).collect().map(_.get(0)).toSeq
-    rerankExact(vectors, embCol, idCol, candidateIds, query, topK)
-  }
-
-  /** [[probePqIndexReranked]] for the IVF-PQ index: coarse-list pruning ×
-    * PQ compression on the candidate scan, exact cosine on the rerank.
-    * Rehearsal-measured default: nprobe=16, rerank@200 → 0.756 recall@10
-    * (raise nprobe before rerankFactor when recall is short — missed
-    * candidates are usually in unprobed lists, not mis-ranked). */
-  def probeIvfPqIndexReranked(spark: org.apache.spark.sql.SparkSession,
-                              path: String, vectors: DataFrame, embCol: String,
-                              query: Seq[Float], topK: Int, nprobe: Int,
-                              rerankFactor: Int = 20,
-                              idCol: String = "vec_id"): DataFrame = {
-    require(rerankFactor >= 1, s"rerankFactor must be >= 1, got $rerankFactor")
-    val candidateIds = probeIvfPqIndex(spark, path, query,
-      topK * rerankFactor, nprobe, idCol).select(col(idCol))
-      .collect().map(_.get(0)).toSeq
-    rerankExact(vectors, embCol, idCol, candidateIds, query, topK)
-  }
-
-  /** Exact-cosine re-rank of a bounded candidate id set against the float
-    * vectors: the ids ride as an IN predicate into the vector scan
-    * (pushed to parquet — candidate row groups only), then one codegen'd
-    * cosine + TakeOrderedAndProject. */
-  private def rerankExact(vectors: DataFrame, embCol: String, idCol: String,
-                          candidateIds: Seq[Any], query: Seq[Float],
-                          topK: Int): DataFrame = {
-    require(candidateIds.nonEmpty,
-      "rerankExact: empty candidate set (is the index empty?)")
-    vectors.filter(col(idCol).isin(candidateIds: _*))
-      .select(col(idCol), cosine(col(embCol), vecLit(query)).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-      .limit(topK)
-  }
-
-  private def readCodebooks(spark: org.apache.spark.sql.SparkSession,
-                            path: String): Map[(Int, Int), Array[Double]] =
-    spark.read.parquet(s"$path/codebooks")
-      .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
-      .toMap
-
-  /** The ADC scoring column over a `codes` column: driver-computed
-    * inner-product and norm lookup tables shipped as literals — m array
-    * lookups + adds per row, zero per-row vector math. */
-  private def adcCosine(books: Map[(Int, Int), Array[Double]],
-                        query: Seq[Float]): Column = {
-    val m = books.keys.map(_._1).max + 1
-    val k = books.keys.map(_._2).max + 1
-    val dsub = books((0, 0)).length
-    val q = query.map(_.toDouble).toArray
-    val qnorm = math.sqrt(q.map(x => x * x).sum)
-    val ipTab = Array.tabulate(m, k) { (j, c) =>
-      val cent = books((j, c))
-      (0 until dsub).map(t => q(j * dsub + t) * cent(t)).sum
-    }
-    val n2Tab = Array.tabulate(m, k) { (j, c) =>
-      books((j, c)).map(x => x * x).sum
-    }
-    def lut(tab: Array[Array[Double]]): Seq[Column] =
-      (0 until m).map(j =>
-        element_at(array(tab(j).map(lit(_)): _*),
-          element_at(col("codes"), j + 1) + 1))
-    val ip = lut(ipTab).reduce(_ + _)
-    val n2 = lut(n2Tab).reduce(_ + _)
-    val den = lit(qnorm) * sqrt(n2)
-    when(den > 0, ip / den).otherwise(lit(0.0))
-  }
-
-  /** Composed IVF-PQ index (the FAISS IVFPQ shape, non-residual variant):
-    * coarse k-means lists give PARTITION PRUNING, product-quantization
-    * codes give a 32-64× COMPRESSED scan — a probe touches nprobe/nlist of
-    * the corpus at m ints per vector, the two savings multiplying. Codes
-    * are partitioned by coarse list; both centroid sets ride as sidecars.
-    * All training determinism (farthest-point init, decimal sums,
-    * tie-breaks) is inherited from [[kmeans]]. */
-  def writeIvfPqIndex(df: DataFrame, embCol: String, idCol: String,
-                      path: String, nlist: Int, dim: Int, m: Int = 8,
-                      k: Int = 16, iters: Int = 5): Unit = {
-    val spark = df.sparkSession
-    val coarse = trainIvfCentroids(df, embCol, idCol, nlist, dim, iters)
-    val books = trainPqCodebooks(df, embCol, idCol, dim, m, k, iters)
-    writeCodebooks(spark, books, path)
-    val assigned = ivfAssignCentroids(df, embCol, idCol, coarse)
-      .withColumnRenamed("ivf_list", "__ivf_list")
-    pqEncode(assigned, embCol, idCol, books, dim,
-        keepCols = Seq("__ivf_list"))
-      .withColumnRenamed("__ivf_list", "ivf_list")
-      .write.mode("overwrite").partitionBy("ivf_list").parquet(s"$path/codes")
-    writeIvfCentroids(spark, path, coarse)
-    markBuilt(spark, path)
-  }
-
-  /** Probe a [[writeIvfPqIndex]] index: rank coarse centroids driver-side,
-    * read ONLY the nprobe best list partitions (pruned scan), ADC-score
-    * the m-int codes, top-k. */
-  def probeIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                      query: Seq[Float], topK: Int, nprobe: Int,
-                      idCol: String = "vec_id"): DataFrame = {
-    val probeLists = nearestLists(readIvfCentroids(spark, path), query, nprobe)
-    val adc = adcCosine(readCodebooks(spark, path), query)
-    readIvfLists(spark, s"$path/codes", probeLists)
-      .select(col(idCol), adc.as("adc_cosine"))
-      .orderBy(col("adc_cosine").desc, col(idCol).asc)
-      .limit(topK)
-  }
-
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     * deduplication by clustering embeddings with k-means and removing,
     * WITHIN each cluster, every vector whose cosine to a lower-id cluster
@@ -1027,7 +507,7 @@ object Similarity {
     val (_, centroids, _) =
       kmeans(df, embCol, idCol, k, dim, iters, trackInertia = false)
     val clustered = df.select(col(idCol).as("id"), col(embCol).as("emb"),
-      nearestCentroid(embCol, centroids).as("cluster"))
+      nearestCentroid(col(embCol), centroids).as("cluster"))
     val largest = clustered.groupBy(col("cluster"))
       .agg(count(lit(1)).as("n")).agg(max(col("n"))).head().getLong(0)
     require(largest <= maxClusterSize,

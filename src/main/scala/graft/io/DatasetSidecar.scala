@@ -200,23 +200,28 @@ private[graft] object DatasetSidecar {
   private def fail(what: String, v: JsonValue): Nothing =
     throw new IllegalArgumentException(s"$what expected, got $v")
 
-  private def objOf(v: JsonValue): ListMap[String, JsonValue] = v match {
+  private[graft] def objOf(v: JsonValue): ListMap[String, JsonValue] = v match {
     case JsonObject(fs) => fs
     case other          => fail("object", other)
   }
 
-  private def arrayOf(v: JsonValue): Vector[JsonValue] = v match {
+  private[graft] def arrayOf(v: JsonValue): Vector[JsonValue] = v match {
     case JsonArray(vs) => vs
     case other         => fail("array", other)
   }
 
-  private def stringOf(v: JsonValue): String = v match {
+  private[graft] def stringOf(v: JsonValue): String = v match {
     case JsonString(s) => s
     case other         => fail("string", other)
   }
 
-  private def longOf(v: JsonValue): Long = v match {
+  private[graft] def longOf(v: JsonValue): Long = v match {
     case JsonNumber(n) => n.toLong
+    case other         => fail("number", other)
+  }
+
+  private[graft] def doubleOf(v: JsonValue): Double = v match {
+    case JsonNumber(n) => n
     case other         => fail("number", other)
   }
 
@@ -292,9 +297,10 @@ private[graft] object DatasetSidecar {
     * decode fails LOUDLY with the file named — silently ignoring damaged
     * metadata would misread data or hide a writer bug behind slower
     * reads. `decode` may validate further under the same guard (the
-    * shard reader's partition-vs-path integrity check). */
-  def read[A](fs: FileSystem, path: Path, op: String, what: String)(
-      decode: String => A): A = {
+    * shard reader's partition-vs-path integrity check); `fix` tells the
+    * reader what to do about a refused file. */
+  def read[A](fs: FileSystem, path: Path, op: String, what: String,
+              fix: String = "repair or remove it")(decode: String => A): A = {
     val in = fs.open(path)
     val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
     try decode(txt)
@@ -302,7 +308,7 @@ private[graft] object DatasetSidecar {
       case e: Exception =>
         throw new IllegalArgumentException(
           s"$op: unreadable $what $path (${e.getClass.getSimpleName}: " +
-            s"${e.getMessage}); repair or remove it", e)
+            s"${e.getMessage}); $fix", e)
     }
   }
 

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.{Decontamination, Dedup, Packing, Retrieval, Similarity, Text, UnigramLm, Windowing}
+import graft.functions.{AnnIndex, Decontamination, Dedup, Packing, Retrieval, Similarity, Text, UnigramLm, Windowing}
+import graft.functions.AnnIndex.AnnSpec
 import Tables.star
 
 /** The LLM-training-data-pipeline operator coverage (BASELINE.json north
@@ -49,26 +50,16 @@ object PipelineQueries {
       |          regexp_replace(text, '((?:\S+\s+){11}\S+)\s+', '\1. ', 'g') AS s1
       |        FROM documents))))""".stripMargin
 
-  /** Build-once-per-dataset LSH index under the JVM temp dir, keyed by the
-    * source directory and a variant marker (testdata is immutable within a
-    * run). The parquet `_SUCCESS` marker gates the rebuild, so Verify and
-    * Bench share one build per dataset per container. */
+  /** Build-once-per-dataset keyed store under the JVM temp dir, keyed by
+    * the source directory and a variant marker (testdata is immutable
+    * within a run). The parquet `_SUCCESS` marker gates the rebuild, so
+    * Verify and Bench share one build per dataset per host. */
   private def keyedStoreFor(s: SparkSession, dir: String): String = {
     val path = Tables.memoDir("keyed", dir, "keyed64")
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")))
       graft.operators.KeyedStore.write(
         Tables.df(s, dir, "documents").select("doc_id", "lang", "n_chars"),
         path, "doc_id", buckets = 64)
-    path
-  }
-
-  private def lshIndexFor(s: SparkSession, dir: String,
-                          emb: org.apache.spark.sql.DataFrame,
-                          marker: String): String = {
-    val path = Tables.memoDir("lsh", dir, s"p8t2s42|$marker")
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")))
-      Similarity.writeLshIndex(emb, "embedding", "vec_id", path,
-        dim = 64, numPlanes = 8, tables = 2)
     path
   }
 
@@ -1156,9 +1147,9 @@ object PipelineQueries {
     // latency, the standard ANN-index metric.
     "q_ann_lsh" -> ((s, dir) => {
       val emb = star(s, dir, "embeddings").df.select("vec_id", "embedding")
-      val path = lshIndexFor(s, dir, emb.unionByName(plantedAnn(s)), "plant10")
-      Similarity.probeLshIndex(s, path, e1Probe, 10, dim = 64,
-          numPlanes = 8, tables = 2, nprobe = 24)
+      val path = annIndexFor(s, dir, "lsh", "p8t2|plant10",
+        emb.unionByName(plantedAnn(s)), AnnSpec(AnnSpec.Lsh(planes = 8, tables = 2)))
+      AnnIndex.probe(s, path, e1Probe, 10, nprobe = 24)
         .withColumn("cosine", round(col("cosine"), 4))
     }),
 
@@ -1236,7 +1227,7 @@ object PipelineQueries {
       val path = ivfIndexFor(s, dir)
       val probe = star(s, dir, "embeddings").df.filter(col("vec_id") === 3)
         .select(col("embedding")).head().getSeq[Float](0)
-      Similarity.probeTrainedIvfIndex(s, path, probe, k = 13, nprobe = 1)
+      AnnIndex.probe(s, path, probe, k = 13, nprobe = 1)
         .select(col("vec_id"))
     }),
 
@@ -1254,12 +1245,12 @@ object PipelineQueries {
       val path = pqIndexFor(s, dir)
       val probe = star(s, dir, "embeddings").df.filter(col("vec_id") === 3)
         .select(col("embedding")).head().getSeq[Float](0)
-      Similarity.probePqIndex(s, path, probe, topK = 13)
+      AnnIndex.probe(s, path, probe, k = 13, nprobe = 1)
         .select(col("vec_id"))
     }),
 
     // Composed PQ probe + EXACT re-rank (round 13, the rehearsal-derived
-    // one-call operator): the ADC probe's top-(13×4) candidate ids are
+    // one-call operator): the ADC probe's top-(13×20) candidate ids are
     // pushed into the float-vector scan as an IN predicate and re-scored
     // with exact cosine — the ranking now comes from float math, pinning
     // candidate collection, predicate pushdown, exact re-scoring, and the
@@ -1270,8 +1261,8 @@ object PipelineQueries {
       val path = pqIndexFor(s, dir)
       val probe = star(s, dir, "embeddings").df.filter(col("vec_id") === 3)
         .select(col("embedding")).head().getSeq[Float](0)
-      Similarity.probePqIndexReranked(s, path, plantedClusters(s, dir),
-          "embedding", probe, topK = 13, rerankFactor = 4)
+      AnnIndex.probe(s, path, probe, k = 13, nprobe = 1,
+          rerankVectors = Some(plantedClusters(s, dir)))
         .select(col("vec_id"))
     }),
 
@@ -1288,7 +1279,7 @@ object PipelineQueries {
       val path = ivfpqIndexFor(s, dir)
       val probe = star(s, dir, "embeddings").df.filter(col("vec_id") === 3)
         .select(col("embedding")).head().getSeq[Float](0)
-      Similarity.probeIvfPqIndex(s, path, probe, topK = 13, nprobe = 1)
+      AnnIndex.probe(s, path, probe, k = 13, nprobe = 1)
         .select(col("vec_id"))
     }),
 
@@ -1445,35 +1436,36 @@ object PipelineQueries {
     path
   }
 
-  /** Build-once-per-dataset trained IVF index over the planted clusters
-    * (memoized like the LSH index; `_SUCCESS` gates the rebuild). */
-  private def ivfIndexFor(s: SparkSession, dir: String): String = {
-    val path = Tables.memoDir("ivf", dir, "ivfplant8")
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")))
-      Similarity.writeTrainedIvfIndex(plantedClusters(s, dir),
-        "embedding", "vec_id", path, nlist = 8, dim = 64)
+  /** Build-once-per-dataset ANN index of `rows` under the JVM temp dir,
+    * keyed by the source directory and a variant (testdata is immutable
+    * within a run), so Verify and Bench share one build per dataset per
+    * host. `_ann_index.json` is written LAST by AnnIndex.write, so it
+    * gates the rebuild: a build that stopped midway is rebuilt, never
+    * probed. */
+  private def annIndexFor(s: SparkSession, dir: String, prefix: String,
+                          variant: String, rows: => DataFrame,
+                          spec: AnnSpec): String = {
+    val path = Tables.memoDir(prefix, dir, s"$variant|ann")
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, AnnIndex.MetaFile)))
+      AnnIndex.write(rows, "embedding", "vec_id", path, spec)
     path
   }
 
-  /** Memoized PQ index over the planted clusters (same scheme as
-    * [[ivfIndexFor]]). */
-  private def pqIndexFor(s: SparkSession, dir: String): String = {
-    val path = Tables.memoDir("pq", dir, "pqplant8")
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")))
-      Similarity.writePqIndex(plantedClusters(s, dir),
-        "embedding", "vec_id", path, dim = 64, m = 8, k = 16, iters = 3)
-    path
-  }
+  /** Trained IVF index (k-means lists, raw vectors) over the planted
+    * clusters. */
+  private[graft] def ivfIndexFor(s: SparkSession, dir: String): String =
+    annIndexFor(s, dir, "ivf", "ivfplant8", plantedClusters(s, dir),
+      AnnSpec(AnnSpec.KMeans(nlist = 8)))
 
-  /** Memoized composed IVF-PQ index over the planted clusters. */
-  private def ivfpqIndexFor(s: SparkSession, dir: String): String = {
-    val path = Tables.memoDir("ivfpq", dir, "ivfpqplant8")
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")))
-      Similarity.writeIvfPqIndex(plantedClusters(s, dir),
-        "embedding", "vec_id", path, nlist = 8, dim = 64, m = 8, k = 16,
-        iters = 3)
-    path
-  }
+  /** PQ index (no lists) over the planted clusters. */
+  private def pqIndexFor(s: SparkSession, dir: String): String =
+    annIndexFor(s, dir, "pq", "pqplant8", plantedClusters(s, dir),
+      AnnSpec(AnnSpec.Flat, AnnSpec.Pq(m = 8, k = 16, iters = 3)))
+
+  /** IVF-PQ index (k-means lists × PQ codes) over the planted clusters. */
+  private def ivfpqIndexFor(s: SparkSession, dir: String): String =
+    annIndexFor(s, dir, "ivfpq", "ivfpqplant8", plantedClusters(s, dir),
+      AnnSpec(AnnSpec.KMeans(nlist = 8, iters = 3), AnnSpec.Pq(m = 8, k = 16, iters = 3)))
 
   /** CDC chunk derivation shared by q_doc_cdc and q_cdc_dedup: cut where
     * the trailing 16-char window's polynomial hash (left fold

@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -156,11 +157,33 @@ private[sources] class StarTableScanBuilder(fullSchema: StructType,
     * null, excluded — exactly SQL MIN/MAX's null treatment) and re-parse
     * through the same unit parsers as data cells, so the metadata answer
     * equals the scanning answer cell for cell. An all-null column yields
-    * null, like the scan. Partial pushdown (supportCompletePushDown stays
-    * false): the scan emits one partial row and Spark's final aggregate
-    * folds it — the engine, not the connector, owns the contract. */
-  override def pushAggregation(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
+    * null, like the scan. Complete pushdown: every group's row is its
+    * final answer, so Spark plans no aggregate (and no shuffle) over the
+    * scan. Spark asks [[supportCompletePushDown]] before
+    * [[pushAggregation]], so the fold runs once and both answer from it;
+    * an aggregate that does not fold is refused by both, and the
+    * scanning plan runs. */
+  override def supportCompletePushDown(agg: Aggregation): Boolean =
+    foldOnce(agg).isDefined
+
+  override def pushAggregation(agg: Aggregation): Boolean = {
+    pushedAgg = foldOnce(agg)
+    pushedAgg.isDefined
+  }
+
+  private var folded: Option[(Aggregation, Option[(StructType, Seq[Array[Any]])])] = None
+
+  private def foldOnce(agg: Aggregation): Option[(StructType, Seq[Array[Any]])] =
+    folded match {
+      case Some((a, rows)) if a eq agg => rows
+      case _ =>
+        val rows = fold(agg)
+        folded = Some((agg, rows))
+        rows
+    }
+
+  /** The aggregate's rows from slice statistics, or None to scan. */
+  private def fold(agg: Aggregation): Option[(StructType, Seq[Array[Any]])] = {
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
     // pushed PARTITION filters do not block the metadata path: pushFilters
     // consumed them completely (no residual), so Spark still offers the
@@ -168,8 +191,8 @@ private[sources] class StarTableScanBuilder(fullSchema: StructType,
     // the scanning plan would prune by — "COUNT(*) WHERE day = X" answers
     // from the pruned listing + sidecar. Data-column filters always stay
     // residual, so their plans never reach here.
-    if (limit.isDefined) return false
-    if (agg.aggregateExpressions.isEmpty) return false
+    if (limit.isDefined) return None
+    if (agg.aggregateExpressions.isEmpty) return None
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[String] = e match {
       case r: org.apache.spark.sql.connector.expressions.NamedReference
@@ -188,11 +211,11 @@ private[sources] class StarTableScanBuilder(fullSchema: StructType,
         case m: Mx => colOf(m.column).isDefined
         case _     => false
       } && agg.groupByExpressions.forall(colOf(_).isDefined)
-      if (!shapesOk) return false
+      if (!shapesOk) return None
     }
     val conf = StarTableSource.activeHadoopConf()
     val roots = StarTableSource.paths(options)
-    pushedAgg = StarTableSource.readDatasetMeta(roots, conf)
+    StarTableSource.readDatasetMeta(roots, conf)
       .filter(m => m.sliceStats.nonEmpty || m.statsSharded)
       .flatMap { m =>
         // GROUP BY is servable only over PARTITION columns: each group is
@@ -202,14 +225,14 @@ private[sources] class StarTableScanBuilder(fullSchema: StructType,
         val groupCols: Seq[String] =
           agg.groupByExpressions.toSeq.map(colOf).map {
             case Some(c) if m.partCols.contains(c) => c
-            case _ => return false
+            case _ => return None
           }
         // defensive: only filters pushFilters could have CONSUMED may be
         // honored here (partition-exact); anything else falls back — a
         // residual filter reaching this point would otherwise be applied
         // twice or, worse, not at all
         if (!pushed.forall(f => f.references.forall(m.partCols.contains) &&
-            StarTableSource.exactFilter(f))) return false
+            StarTableSource.exactFilter(f))) return None
         val listed0 = StarTableSource.listPartitionedFiles(roots, m.partCols,
           conf,
           partPrune =
@@ -229,10 +252,9 @@ private[sources] class StarTableScanBuilder(fullSchema: StructType,
                   f._3)).distinct,
               conf).map { case (raw, sh) => raw -> sh.slice }
           else m.sliceStats.map(s => s.partition -> s).toMap
-        // empty listing → fall back: with partial pushdown Spark rewrites
-        // the final COUNT to a SUM over the scan's partial rows, and a SUM
-        // over ZERO rows is null where a real count of an empty table is 0
-        // — the ordinary scan over zero files gets that right
+        // empty listing → fall back: it holds no group, so the fold would
+        // emit no row where a COUNT of an empty table is one row of 0 —
+        // the ordinary scan over zero files gets that right
         if (parts.isEmpty || !parts.forall(byPart.contains)) None
         else {
           val fixer = new graft.parse.ParseFixer()
@@ -334,7 +356,6 @@ private[sources] class StarTableScanBuilder(fullSchema: StructType,
           }
         }
       }
-    pushedAgg.isDefined
   }
 
   override def pruneColumns(requiredSchema: StructType): Unit =
@@ -444,10 +465,9 @@ private[sources] class StarTableScanBuilder(fullSchema: StructType,
 }
 
 /** Metadata-only aggregate scan (COUNT(*)/MIN/MAX, optionally grouped by
-  * partition columns, from slice statistics): one partition emitting one
-  * partial row per group, folded by Spark's final aggregate (see
-  * [[StarTableScanBuilder.pushAggregation]]). Values arrive already in
-  * Catalyst internal form. */
+  * partition columns, from slice statistics): one partition emitting each
+  * group's final row (see [[StarTableScanBuilder.pushAggregation]]).
+  * Values arrive already in Catalyst internal form. */
 private[sources] class StarMetaAggScan(schema: StructType, rows: Seq[Array[Any]])
     extends Scan with Batch {
   override def readSchema(): StructType = schema

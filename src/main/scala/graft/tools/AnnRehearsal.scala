@@ -1,9 +1,9 @@
 package graft.tools
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
-import graft.functions.Similarity
+import graft.functions.{AnnIndex, Similarity}
+import graft.functions.AnnIndex.AnnSpec
 
 /** Round-12 ANN recall/latency rehearsal (VERDICT r11 item 7): the index
   * family (brute / trained-IVF / PQ / IVF-PQ / int8) covers the
@@ -104,55 +104,39 @@ object AnnRehearsal {
         f"recall@10 ${recall}%.3f  probe median ${median(runs.map(_._2)) * 1000}%6.0f ms")
     }
 
+    // one build per index, memoized on its metadata file (written last)
+    def build(name: String, spec: AnnSpec): (String, Double) = {
+      val path = s"/tmp/graft_ann_${name}_v3_$n"
+      if (java.nio.file.Files.exists(java.nio.file.Paths.get(path, AnnIndex.MetaFile)))
+        (path, 0.0)
+      else (path, timed(AnnIndex.write(emb, "embedding", "vec_id", path, spec))._2)
+    }
+
     // trained IVF at several nprobe settings
-    val ivfPath = s"/tmp/graft_ann_ivf_v2_$n"
-    val (_, ivfBuild) =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(ivfPath, "_ivf_centroids.json")))
-        ((), 0.0)
-      else timed(Similarity.writeTrainedIvfIndex(
-        emb, "embedding", "vec_id", ivfPath, nlist = 256, dim = dim, iters = 4))
+    val (ivfPath, ivfBuild) = build("ivf", AnnSpec(AnnSpec.KMeans(nlist = 256, iters = 4)))
     for (nprobe <- Seq(1, 4, 16, 64))
       report(s"ivf256 nprobe=$nprobe", if (nprobe == 1) ivfBuild else 0.0,
-        qv => Similarity.probeTrainedIvfIndex(spark, ivfPath, qv, 10, nprobe))
+        qv => AnnIndex.probe(spark, ivfPath, qv, 10, nprobe))
 
-    // exact re-rank refinement: ADC/coarse candidates joined back to the
-    // float vectors by id, exact cosine, top-k — the standard two-stage
-    // ANN shape (the candidate set is tiny, so the join broadcasts)
-    def rerank(cands: DataFrame, qv: Seq[Float]): DataFrame =
-      emb.join(broadcast(cands.select(col("vec_id"))), Seq("vec_id"))
-        .select(col("vec_id"),
-          Similarity.cosine(col("embedding"),
-            array(qv.map(x => lit(x)): _*)).as("cosine"))
-        .orderBy(col("cosine").desc, col("vec_id").asc)
-        .limit(10)
-
-    // PQ (full-corpus ADC scan over m ints/vector), raw and re-ranked
+    // PQ (full-corpus ADC scan over m ints/vector), raw and re-ranked:
+    // the top 200 ADC candidates rescored by exact cosine over the floats
     for (kq <- Seq(16, 64)) {
-      val pqPath = s"/tmp/graft_ann_pq_v2_k${kq}_$n"
-      val (_, pqBuild) =
-        if (java.nio.file.Files.exists(java.nio.file.Paths.get(pqPath, "_SUCCESS")))
-          ((), 0.0)
-        else timed(Similarity.writePqIndex(
-          emb, "embedding", "vec_id", pqPath, dim = dim, m = 8, k = kq, iters = 4))
+      val (pqPath, pqBuild) = build(s"pq_k$kq",
+        AnnSpec(AnnSpec.Flat, AnnSpec.Pq(m = 8, k = kq, iters = 4)))
       report(s"pq m=8 k=$kq (ADC)", pqBuild,
-        qv => Similarity.probePqIndex(spark, pqPath, qv, 10))
+        qv => AnnIndex.probe(spark, pqPath, qv, 10, 1))
       report(s"pq m=8 k=$kq +rerank200", 0.0,
-        qv => rerank(Similarity.probePqIndex(spark, pqPath, qv, 200), qv))
+        qv => AnnIndex.probe(spark, pqPath, qv, 10, 1, Some(emb)))
     }
 
     // IVF-PQ composition (pruned lists × int codes)
-    val ivfpqPath = s"/tmp/graft_ann_ivfpq_v2_$n"
-    val (_, ivfpqBuild) =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(ivfpqPath, "_ivf_centroids.json")))
-        ((), 0.0)
-      else timed(Similarity.writeIvfPqIndex(
-        emb, "embedding", "vec_id", ivfpqPath, nlist = 256, dim = dim,
-        m = 8, k = 16, iters = 4))
+    val (ivfpqPath, ivfpqBuild) = build("ivfpq",
+      AnnSpec(AnnSpec.KMeans(nlist = 256, iters = 4), AnnSpec.Pq(m = 8, k = 16, iters = 4)))
     for (nprobe <- Seq(4, 16))
       report(s"ivfpq256 m=8 nprobe=$nprobe", if (nprobe == 4) ivfpqBuild else 0.0,
-        qv => Similarity.probeIvfPqIndex(spark, ivfpqPath, qv, 10, nprobe))
+        qv => AnnIndex.probe(spark, ivfpqPath, qv, 10, nprobe))
     report("ivfpq256 nprobe=16 +rerank200", 0.0,
-      qv => rerank(Similarity.probeIvfPqIndex(spark, ivfpqPath, qv, 200, 16), qv))
+      qv => AnnIndex.probe(spark, ivfpqPath, qv, 10, 16, Some(emb)))
 
     // int8 full scan (4x smaller bytes, exact-integer ranking)
     val int8Path = s"/tmp/graft_ann_int8_v2_$n/codes.parquet"

@@ -156,24 +156,23 @@ object ScaleRehearsal {
       sweep()
 
       // 3. ANN index build (once) + steady-state probes
-      if (selected("probeLshIndex")) {
+      if (selected("lsh index")) {
         val idxPath = s"$root/lsh_index"
-        t(s"writeLshIndex (mult=$mult)") {
-          graft.functions.Similarity.writeLshIndex(emb, "embedding", "vec_id",
-            idxPath, dim = 64, numPlanes = 8, tables = 2)
+        t(s"lsh index write (mult=$mult)") {
+          graft.functions.AnnIndex.write(emb, "embedding", "vec_id", idxPath,
+            graft.functions.AnnIndex.AnnSpec(
+              graft.functions.AnnIndex.AnnSpec.Lsh(planes = 8, tables = 2)))
         }
         val q = baseEmb.filter(col("vec_id") === 0)
           .select("embedding").head().getSeq[Float](0)
         // one warm-up probe (reader/codegen init), then 5 timed probes
-        graft.functions.Similarity.probeLshIndex(spark, idxPath, q, 10,
-          dim = 64, numPlanes = 8, tables = 2, nprobe = 24).collect()
+        graft.functions.AnnIndex.probe(spark, idxPath, q, 10, nprobe = 24).collect()
         val probeTimes = (1 to 5).map { _ =>
           val t0 = System.nanoTime()
-          graft.functions.Similarity.probeLshIndex(spark, idxPath, q, 10,
-            dim = 64, numPlanes = 8, tables = 2, nprobe = 24).collect()
+          graft.functions.AnnIndex.probe(spark, idxPath, q, 10, nprobe = 24).collect()
           (System.nanoTime() - t0) / 1e9
         }.sorted
-        println(f"[scale] probeLshIndex median of 5 (mult=$mult)   ${probeTimes(2)}%8.3f s")
+        println(f"[scale] lsh index probe median of 5 (mult=$mult)  ${probeTimes(2)}%8.3f s")
         sweep()
       }
 

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{Decontamination, Dedup, Similarity, Text}
+import graft.functions.{AnnIndex, Decontamination, Dedup, Similarity, Text}
+import graft.functions.AnnIndex.AnnSpec
 
 /** Semantics of the LLM-pipeline operators on small known inputs. */
 class FunctionsSpec extends AnyFunSuite {
@@ -247,8 +248,11 @@ class FunctionsSpec extends AnyFunSuite {
       val rest = emb.filter(col("vec_id") =!= pid)
       val exact = Similarity.bruteForceTopK(rest, "embedding", "vec_id", q, 10)
         .collect().map(_.getLong(0)).toSet
-      val lsh = Similarity.lshTopK(rest, "embedding", "vec_id", q, 10,
-        numPlanes = 4, tables = 8)
+      // nprobe = 1 reads exactly the query's bucket in each table
+      val dir = java.nio.file.Files.createTempDirectory("lsh_recall").toString
+      AnnIndex.write(rest, "embedding", "vec_id", dir,
+        AnnSpec(AnnSpec.Lsh(planes = 4, tables = 8)))
+      val lsh = AnnIndex.probe(spark, dir, q, 10, nprobe = 1)
         .collect().map(_.getLong(0)).toSet
       lsh.intersect(exact).size / 10.0
     }
@@ -261,8 +265,10 @@ class FunctionsSpec extends AnyFunSuite {
       if (i < 10) Array(1f + i * 0.01f, 0.1f * i, 0f)
       else Array(0f, 0.1f * i, 1f + i * 0.01f)))
     val df = vecs.toDF("vec_id", "embedding")
-    val res = Similarity.lshTopK(df, "embedding", "vec_id",
-      Seq(1f, 0.05f, 0f), 3, numPlanes = 3, tables = 6)
+    val dir = java.nio.file.Files.createTempDirectory("lsh_clustered").toString
+    AnnIndex.write(df, "embedding", "vec_id", dir,
+      AnnSpec(AnnSpec.Lsh(planes = 3, tables = 6)))
+    val res = AnnIndex.probe(spark, dir, Seq(1f, 0.05f, 0f), 3, nprobe = 1)
     val got = res.collect().map(_.getLong(0)).toSet
     assert(got.nonEmpty && got.subsetOf((0L until 10L).toSet))
   }

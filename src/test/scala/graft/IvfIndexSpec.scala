@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.Similarity
+import graft.functions.{AnnIndex, Similarity}
+import graft.functions.AnnIndex.AnnSpec
 
 class IvfIndexSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -10,17 +11,16 @@ class IvfIndexSpec extends AnyFunSuite {
   test("IVF index probe prunes partitions and finds the nearest vector") {
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString + "/idx"
-    Similarity.writeIvfIndex(emb, "embedding", "vec_id", dir, nlist = 8, dim = 64)
+    AnnIndex.write(emb, "embedding", "vec_id", dir, AnnSpec(AnnSpec.Anchors(nlist = 8)))
 
     val query = emb.filter(org.apache.spark.sql.functions.col("vec_id") === 123)
       .select("embedding").head().getSeq[Float](0)
 
-    val probed = Similarity.probeIvfIndex(spark, dir, query, k = 5,
-      nprobe = 3, nlist = 8)
+    val probed = AnnIndex.probe(spark, dir, query, k = 5, nprobe = 3)
     // partition pruning visible in the scan
     val plan = probed.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [") &&
-      plan.contains("ivf_list"), s"no partition pruning:\n$plan")
+      plan.contains("ann_list"), s"no partition pruning:\n$plan")
 
     // the query vector itself must be recalled as the top hit
     val top = probed.collect()
@@ -37,15 +37,15 @@ class IvfIndexSpec extends AnyFunSuite {
   test("trained IVF (k-means coarse lists) probes with pruning and better recall") {
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_t").toString + "/idx"
-    val centroids = Similarity.writeTrainedIvfIndex(
-      emb, "embedding", "vec_id", dir, nlist = 8, dim = 64, iters = 3)
-    assert(centroids.length == 8)
-    // sidecar is valid and feeds the probe path
+    AnnIndex.write(emb, "embedding", "vec_id", dir,
+      AnnSpec(AnnSpec.KMeans(nlist = 8, iters = 3)))
+    assert(AnnIndex.readMeta(spark, dir, "spec").vectors.head.length == 8)
+    // metadata is valid and feeds the probe path
     val query = emb.filter(org.apache.spark.sql.functions.col("vec_id") === 123)
       .select("embedding").head().getSeq[Float](0)
-    val probed = Similarity.probeTrainedIvfIndex(spark, dir, query, k = 5, nprobe = 3)
+    val probed = AnnIndex.probe(spark, dir, query, k = 5, nprobe = 3)
     val plan = probed.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [") && plan.contains("ivf_list"),
+    assert(plan.contains("PartitionFilters: [") && plan.contains("ann_list"),
       s"no partition pruning:\n$plan")
     val top = probed.collect()
     // the query vector lives in the best-ranked list, so it MUST be recalled
@@ -55,12 +55,12 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(top.map(_.getLong(0)).toSet.intersect(exact).size >= 2)
   }
 
-  test("appendToTrainedIvfIndex makes a new batch probe-visible without retraining") {
+  test("AnnIndex.append makes a new batch probe-visible without retraining") {
     import spark.implicits._
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_a").toString + "/idx"
-    Similarity.writeTrainedIvfIndex(
-      emb, "embedding", "vec_id", dir, nlist = 8, dim = 64, iters = 3)
+    AnnIndex.write(emb, "embedding", "vec_id", dir,
+      AnnSpec(AnnSpec.KMeans(nlist = 8, iters = 3)))
     // new batch: near-copies of vector 123 under fresh ids — they must land
     // in 123's list and dominate a probe for 123's direction
     val base = emb.filter(org.apache.spark.sql.functions.col("vec_id") === 123)
@@ -69,8 +69,8 @@ class IvfIndexSpec extends AnyFunSuite {
       (900000L + j, base.zipWithIndex.map { case (x, i) =>
         if (i == 0) x + (j + 1) * 1e-4f else x }) }
       .toDF("vec_id", "embedding")
-    Similarity.appendToTrainedIvfIndex(batch, "embedding", "vec_id", dir)
-    val got = Similarity.probeTrainedIvfIndex(spark, dir, base, k = 4, nprobe = 2)
+    AnnIndex.append(batch, dir)
+    val got = AnnIndex.probe(spark, dir, base, k = 4, nprobe = 2)
       .collect().map(_.getLong(0)).toSet
     assert(got == Set(123L, 900000L, 900001L, 900002L),
       s"appended batch not recalled: $got")
@@ -93,12 +93,12 @@ class IvfIndexSpec extends AnyFunSuite {
     }.toDF("vec_id", "embedding")
     val corpus = emb.unionByName(planted)
     val dir = java.nio.file.Files.createTempDirectory("graft_pq_rr").toString + "/idx"
-    Similarity.writePqIndex(corpus, "embedding", "vec_id", dir,
-      dim = 64, m = 8, k = 64, iters = 3)
+    AnnIndex.write(corpus, "embedding", "vec_id", dir,
+      AnnSpec(AnnSpec.Flat, AnnSpec.Pq(m = 8, k = 64, iters = 3)))
     val exact = Similarity.bruteForceTopK(corpus, "embedding", "vec_id", q, 10)
       .collect()
-    val reranked = Similarity.probePqIndexReranked(
-      spark, dir, corpus, "embedding", q, topK = 10).collect()
+    val reranked = AnnIndex.probe(spark, dir, q, k = 10, nprobe = 1,
+      rerankVectors = Some(corpus)).collect()
     // ids AND order match brute force exactly — the rerank is exact cosine
     assert(reranked.map(_.getLong(0)).toSeq === exact.map(_.getLong(0)).toSeq,
       s"reranked=${reranked.map(_.getLong(0)).mkString(",")} " +
@@ -109,10 +109,10 @@ class IvfIndexSpec extends AnyFunSuite {
     }
     // the IVF-PQ composition reaches the same neighborhood
     val dir2 = java.nio.file.Files.createTempDirectory("graft_ivfpq_rr").toString + "/idx"
-    Similarity.writeIvfPqIndex(corpus, "embedding", "vec_id", dir2,
-      nlist = 8, dim = 64, m = 8, k = 16, iters = 3)
-    val rr2 = Similarity.probeIvfPqIndexReranked(
-      spark, dir2, corpus, "embedding", q, topK = 10, nprobe = 4).collect()
+    AnnIndex.write(corpus, "embedding", "vec_id", dir2,
+      AnnSpec(AnnSpec.KMeans(nlist = 8, iters = 3), AnnSpec.Pq(m = 8, k = 16, iters = 3)))
+    val rr2 = AnnIndex.probe(spark, dir2, q, k = 10, nprobe = 4,
+      rerankVectors = Some(corpus)).collect()
     val got = rr2.map(_.getLong(0)).toSet
     val want = exact.map(_.getLong(0)).toSet
     assert(got.intersect(want).size >= 9,
@@ -122,14 +122,14 @@ class IvfIndexSpec extends AnyFunSuite {
   test("IVF-PQ probe composes partition pruning with the ADC code scan") {
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString + "/idx"
-    Similarity.writeIvfPqIndex(emb, "embedding", "vec_id", dir,
-      nlist = 8, dim = 64, m = 8, k = 16, iters = 3)
+    AnnIndex.write(emb, "embedding", "vec_id", dir,
+      AnnSpec(AnnSpec.KMeans(nlist = 8, iters = 3), AnnSpec.Pq(m = 8, k = 16, iters = 3)))
     val query = emb.filter(org.apache.spark.sql.functions.col("vec_id") === 123)
       .select("embedding").head().getSeq[Float](0)
-    val probed = Similarity.probeIvfPqIndex(spark, dir, query, topK = 5, nprobe = 3)
+    val probed = AnnIndex.probe(spark, dir, query, k = 5, nprobe = 3)
     val plan = probed.queryExecution.executedPlan.toString
     // pruned scan of the CODES table, not the float vectors
-    assert(plan.contains("PartitionFilters: [") && plan.contains("ivf_list"),
+    assert(plan.contains("PartitionFilters: [") && plan.contains("ann_list"),
       s"no partition pruning:\n$plan")
     assert(plan.contains("codes") && !plan.contains("embedding"),
       s"probe must scan codes, not embeddings:\n$plan")
@@ -155,16 +155,16 @@ class IvfIndexSpec extends AnyFunSuite {
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     def trainedIvf(dir: String) = {
-      val centroids = Similarity.writeTrainedIvfIndex(
-        emb, "embedding", "vec_id", dir, nlist = 8, dim = 64, iters = 3)
-      Similarity.appendToTrainedIvfIndex(batch, "embedding", "vec_id", dir)
-      (centroids.map(_.toSeq).toSeq,
-        ids(Similarity.probeTrainedIvfIndex(spark, dir, query, k = 5, nprobe = 3)))
+      AnnIndex.write(emb, "embedding", "vec_id", dir,
+        AnnSpec(AnnSpec.KMeans(nlist = 8, iters = 3)))
+      AnnIndex.append(batch, dir)
+      (AnnIndex.readMeta(spark, dir, "spec").vectors,
+        ids(AnnIndex.probe(spark, dir, query, k = 5, nprobe = 3)))
     }
     def ivfPq(dir: String) = {
-      Similarity.writeIvfPqIndex(emb, "embedding", "vec_id", dir,
-        nlist = 8, dim = 64, m = 8, k = 16, iters = 3)
-      ids(Similarity.probeIvfPqIndex(spark, dir, query, topK = 5, nprobe = 3))
+      AnnIndex.write(emb, "embedding", "vec_id", dir,
+        AnnSpec(AnnSpec.KMeans(nlist = 8, iters = 3), AnnSpec.Pq(m = 8, k = 16, iters = 3)))
+      ids(AnnIndex.probe(spark, dir, query, k = 5, nprobe = 3))
     }
     val bare = java.nio.file.Files.createTempDirectory("graft_ivf_bare")
     val uri = java.nio.file.Files.createTempDirectory("graft_ivf_uri")
@@ -172,9 +172,8 @@ class IvfIndexSpec extends AnyFunSuite {
     val (uriCentroids, uriTop) = trainedIvf(uri.resolve("ivf").toUri.toString)
     assert(uriCentroids == bareCentroids)
     assert(uriTop == bareTop && uriTop.map(_._1).contains(900000L))
-    assert(java.nio.file.Files.exists(uri.resolve("ivf").resolve("_ivf_centroids.json")))
+    assert(java.nio.file.Files.exists(uri.resolve("ivf").resolve("_ann_index.json")))
     assert(ivfPq(uri.resolve("ivfpq").toUri.toString) == ivfPq(bare.resolve("ivfpq").toString))
-    assert(java.nio.file.Files.exists(uri.resolve("ivfpq").resolve("_ivf_centroids.json")))
-    assert(java.nio.file.Files.exists(uri.resolve("ivfpq").resolve("_SUCCESS")))
+    assert(java.nio.file.Files.exists(uri.resolve("ivfpq").resolve("_ann_index.json")))
   }
 }

@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -34,37 +29,12 @@ class PlanBridgeSpec extends AnyFunSuite {
     assert(flat.agg(sum("x")).head().getLong(0) == (0L until 64L).map(_ * 2).sum)
   }
 
-  /** Spark jobs started while `body` runs, counted by a listener: a
-    * sentinel job in its own group marks the end, since the listener bus
-    * delivers events in order. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    val group = s"probe-${java.util.UUID.randomUUID()}"
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-end", "sentinel")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains(s"$group-end") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains(s"$group-end"), "listener never saw the sentinel job")
-      groups.asScala.count(_ == group)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("Spread over a groupBy input plans without running a job and adds no exchange") {
     // the aggregate's shuffle is implicit (EnsureRequirements adds it), so
     // only the prepared plan shows it
     val agg = spark.range(0, 1000).groupBy((col("id") % 7).as("k")).count()
     var spread: org.apache.spark.sql.DataFrame = null
-    assert(jobsDuring { spread = Spread(agg) } == 0)
+    assert(TestSpark.jobsDuring { spread = Spread(agg) } == 0)
     assert(spread eq agg, "a post-exchange input must pass through untouched")
   }
 
@@ -73,7 +43,7 @@ class PlanBridgeSpec extends AnyFunSuite {
     spark.range(0, 1000).coalesce(1).write.mode("overwrite").parquet(dir)
     val scan = spark.read.parquet(dir)
     var spread: org.apache.spark.sql.DataFrame = null
-    assert(jobsDuring { spread = Spread(scan) } == 0)
+    assert(TestSpark.jobsDuring { spread = Spread(scan) } == 0)
     assert(spread.queryExecution.analyzed.collect { case r: Repartition => r }.nonEmpty,
       "a one-task scan must gain the round-robin repartition")
     assert(spread.count() == 1000)

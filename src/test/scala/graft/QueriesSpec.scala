@@ -13,6 +13,19 @@ class QueriesSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("a build whose metadata file is gone is refused, and q_emb_ivf_probe " +
+    "rebuilds it and still returns family 3") {
+    val path = graft.queries.PipelineQueries.ivfIndexFor(spark, sfDir)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(path, "_ann_index.json"))
+    val msg = intercept[IllegalArgumentException](
+      graft.functions.AnnIndex.probe(spark, path, Seq.fill(64)(1f), k = 1, nprobe = 1)).getMessage
+    assert(msg.contains(path), msg)
+    val got = graft.queries.PipelineQueries.queries("q_emb_ivf_probe")(spark, sfDir)
+      .collect().map(_.getLong(0)).toSeq.sorted
+    assert(got == (3000L until 3013L))
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_ann_index.json")))
+  }
+
   test("every oracle key has a query") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle without query: $missing")

@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{Retrieval, Similarity, UnigramLm}
+import graft.functions.{AnnIndex, Retrieval, Similarity, UnigramLm}
+import graft.functions.AnnIndex.AnnSpec
 
 /** BM25 retrieval, DSIR importance weights, and SemDeDup semantic dedup. */
 class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -297,10 +298,10 @@ class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
       (2L, Seq(0f, 5f, 2f, 0f)), (3L, Seq(0f, 5f, 0f, 3f)))
     val df = rows.toDF("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("pqspec").toString
-    Similarity.writePqIndex(df, "embedding", "vec_id", dir,
-      dim = 4, m = 2, k = 2, iters = 3)
+    AnnIndex.write(df, "embedding", "vec_id", dir,
+      AnnSpec(AnnSpec.Flat, AnnSpec.Pq(m = 2, k = 2, iters = 3)))
     val q = Seq(1f, 0f, 2f, 0f)
-    val got = Similarity.probePqIndex(spark, dir, q, topK = 4)
+    val got = AnnIndex.probe(spark, dir, q, k = 4, nprobe = 1)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     def cos(a: Seq[Float], b: Seq[Float]): Double = {
       val ip = a.zip(b).map { case (x, y) => x.toDouble * y.toDouble }.sum
@@ -324,10 +325,10 @@ class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
       fam(Array(0f, 0f, 8f, 0f, 0f, 0f, 1f, 0f), 6, 200L)
     val df = rows.toDF("vec_id", "embedding").repartition(5)
     val dir = java.nio.file.Files.createTempDirectory("pqspec2").toString
-    Similarity.writePqIndex(df, "embedding", "vec_id", dir,
-      dim = 8, m = 4, k = 4, iters = 3)
-    val got = Similarity.probePqIndex(spark,
-        dir, Seq(0f, 8f, 0f, 0f, 0f, 1f, 0f, 0f), topK = 4)
+    AnnIndex.write(df, "embedding", "vec_id", dir,
+      AnnSpec(AnnSpec.Flat, AnnSpec.Pq(m = 4, k = 4, iters = 3)))
+    val got = AnnIndex.probe(spark,
+        dir, Seq(0f, 8f, 0f, 0f, 0f, 1f, 0f, 0f), k = 4, nprobe = 1)
       .collect().map(_.getLong(0)).toSeq
     assert(got == Seq(100L, 101L, 102L, 103L),
       s"expected family 100-103 in id order, got $got")

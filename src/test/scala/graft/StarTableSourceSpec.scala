@@ -982,6 +982,25 @@ class StarTableSourceSpec extends AnyFunSuite {
     assert(joined.count() > 0)
   }
 
+  test("a statistics-answered COUNT is pushed down completely: one Spark " +
+    "job, no aggregate over the scan") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft_cnt_jobs").resolve("ds").toString
+    graft.io.CsvWriter.writePartitionedDataset(
+      graft.model.StarTable.fromDataFrame(
+        (0 until 90).map(i => (s"g${i % 3}", i.toDouble)).toDF("grp", "x"), "t",
+        units = Map("grp" -> "text")),
+      out, Seq("grp"))
+    val ds = spark.read.format("startable").load(out)
+    val plan = ds.groupBy().count().queryExecution.executedPlan.toString
+    assert(plan.contains("StarMetaAggScan") && !plan.contains("Aggregate"), plan)
+    var counted = 0L
+    // the scan's one-row collect is the only job; partial pushdown ran two
+    // (the final aggregate's shuffle map stage, then its result)
+    assert(TestSpark.jobsDuring { counted = ds.count() } == 1)
+    assert(counted == 90L)
+  }
+
   test("COUNT(*) over a stats-bearing dataset answers from metadata: zero " +
     "lines parsed; stripped/absent stats and filters fall back to scanning") {
     import spark.implicits._
