@@ -1,175 +1,48 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.io.JsonValue
+import graft.io.JsonValue.{JsonNumber, JsonObject, JsonString}
+import graft.queries.{AnalyticQueries, ModelQueries, PipelineQueries, RelationalQueries, SketchQueries, StreamingQueries}
 
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line {"metric":…,"value":…,"queries":{…},"sf":…}.
+  * records, per query, its wall time and the counters of its [[Profile]]:
+  * jobs, stages, tasks, executor CPU, shuffle read/write, spill, the wall
+  * time no job covers and the persisted RDDs it left behind.
+  *
+  * Output:
+  *  - `BENCH_FULL.json` (unfiltered runs only): every query's counters,
+  *    the totals and the per-family totals;
+  *  - stderr: one line per query and one per job of its median run;
+  *  - the last stdout line: a compact JSON with the per-family totals and
+  *    the slowest queries, sized to fit a 2000-character output tail.
   *
   * Measurement notes:
   *  - Results are materialized through the `noop` sink: `count()` would let
   *    Catalyst prune the projected expressions (a text-metrics query would
   *    benchmark nothing but a row count).
-  *  - A warm-up pass at sf0.001 triggers JIT + codegen compilation so the
-  *    timed pass measures steady-state throughput, which is what matters at
-  *    100 TB — not first-query compile latency.
-  *  - Every query is timed `reps` times (default 3) and the MEDIAN is
-  *    reported: the round-3 official record showed 3-11× single-run jitter
-  *    on a few queries (GC pauses, state-store residue after the streaming
-  *    block) that a same-day rerun didn't reproduce — a median absorbs one
-  *    bad draw without hiding a real regression.
-  *  - Between timed runs the session is swept back to a clean slate:
-  *    cache-manager entries, leftover persisted/checkpoint RDDs (blocking),
-  *    streaming state-store providers (the 6 streaming queries otherwise
-  *    leave providers + a maintenance thread resident), and an explicit GC
-  *    so one query's garbage isn't collected on a neighbor's clock.
+  *  - A warm-up pass at sf0.001 compiles (JIT + codegen) off the clock.
+  *  - Every query runs `Reps` times and the run with the MEDIAN wall time
+  *    is recorded: a median absorbs one bad draw (a GC pause, a contended
+  *    window) without hiding a real regression.
+  *  - Between timed runs the session is swept back to a clean slate (see
+  *    [[sweep]]), off every query's clock.
   */
 object Bench {
 
-  /** Newest committed official record among candidate file names — the
-    * immutable rerun prior (BenchPriorSpec). Numeric sort on the round,
-    * not lexicographic: r10 must beat r9. */
-  def pickOfficial(names: Seq[String]): Option[String] = {
-    val Pat = "BENCH_OFFICIAL_r(\\d+)\\.json".r
-    names.collect { case n @ Pat(r) => (r.toInt, n) }.sortBy(_._1).lastOption.map(_._2)
-  }
+  private val Reps = 3
 
-  /** Re-time trigger: does a first-pass median of `first` seconds against a
-    * prior record of `p` seconds warrant a clean serialized re-timing?
-    * Streaming queries AND every query whose prior is >= 1 s trigger from
-    * 1.5× (the round-10 record carried a 1.74× drift on a 1.19 s query that
-    * the uniform 2× trigger could never adjudicate — the judge's re-time
-    * exonerated it, but the record itself couldn't); sub-second queries
-    * keep 2× (they live near the scheduling floor, where 1.5× is routine
-    * multi-job session noise). Priors at/below 0.05 s never trigger. */
-  /** Window-contention factor from the session's fixed-work SHUFFLE probe:
-    * a contended window inflates every query by roughly the same
-    * machine-wide factor, so the rerun threshold scales with it. Without
-    * this, a 2× machine-wide window re-times most of the suite against the
-    * clean prior (round 11 measured 62 reruns, doubling bench wall) while
-    * adjudicating nothing — each rerun lands in the same contended window.
-    * The probes stay in the record either way, so a contended record
-    * remains self-labeled.
-    *
-    * `cleanFloor` should be the PRIOR record's own shuffle probe (see
-    * [[parsePriorShuffle]]) so the factor tracks the machine/window the
-    * prior was taken on, not a hardcoded constant: with a hardcoded 0.9 a
-    * contended calibration (probe ~3.3 s → factor ~3.7×) would stop
-    * re-timing a genuine ~3× regression entirely. The floor is clamped to
-    * [0.3, 2.0]: below, division noise; above, the PRIOR itself was taken
-    * in a heavily contended window and its per-query numbers are already
-    * inflated — scaling the trigger by a contended-prior floor would
-    * suppress reruns in CLEAN windows exactly when they adjudicate best. */
-  def contentionFactor(shuffleProbe: Double, cleanFloor: Double = 0.9): Double =
-    math.max(1.0, shuffleProbe / math.min(2.0, math.max(0.3, cleanFloor)))
-
-  /** The prior record's own shuffle calibration probe, if recorded — the
-    * machine floor [[contentionFactor]] scales against. */
-  def parsePriorShuffle(txt: String): Option[Double] =
-    "\"calibration_shuffle_s\":([0-9.Ee+-]+)".r.findFirstMatchIn(txt)
-      .map(_.group(1).toDouble)
-
-  /** Pinned stable CONTROL queries: cheap, code-stable rows timed in every
-    * run whose ratio against the immutable prior record labels the run's
-    * window (the round-11 record was 1.46× raw and needed a judge session
-    * to prove the elevation environmental — the control ratio makes the
-    * record prove it itself). Chosen for plan stability across rounds and
-    * non-trivial priors (≥ ~0.2 s at sf0.1: scheduling-floor queries would
-    * measure noise, heavy queries would measure their own code). */
-  val ControlQueries: Seq[String] =
-    Seq("q1_pricing_summary", "q3_shipping_priority", "q5_revenue_by_nation")
-
-  /** Median over the control queries of first-pass / prior seconds — the
-    * run's window-contention label. 1.0 when no prior (or no control has a
-    * usable prior > 0.05 s: a floor-level prior would make the ratio pure
-    * scheduling noise). Uses FIRST-pass medians, never rerun-smoothed
-    * values — the controls measure the window, not the best case. */
-  def controlRatio(firstPass: Map[String, Double],
-                   prior: Map[String, Double],
-                   controls: Seq[String] = ControlQueries): Double = {
-    val ratios = controls.flatMap { c =>
-      for { t <- firstPass.get(c); p <- prior.get(c) if p > 0.05 && t > 0 }
-        yield t / p
-    }.sorted
-    if (ratios.isEmpty) 1.0
-    else if (ratios.size % 2 == 1) ratios(ratios.size / 2)
-    else (ratios(ratios.size / 2 - 1) + ratios(ratios.size / 2)) / 2.0
-  }
-
-  /** Pinned stable SHUFFLE-AXIS controls (round 13): contention is not
-    * one axis — the r12 record showed CPU controls at 1.27 while
-    * shuffle-heavy queries drifted ~2.3× (disk/shuffle-path contention
-    * the CPU controls are blind to), burning 30 reruns that adjudicated
-    * nothing. These three are code-stable, shuffle-bound, with ≥0.5 s
-    * priors; their first-pass/prior median labels the run's IO axis the
-    * way [[ControlQueries]] labels the CPU axis. */
-  val ShuffleControlQueries: Seq[String] =
-    Seq("q_event_gap", "q_group_median", "q_zipf")
-
-  /** The shuffle/IO-AXIS query set: queries whose cost is dominated by
-    * shuffle or file IO, so a contended-window adjudication must compare
-    * them against the shuffle controls, not the CPU controls. Derived
-    * EMPIRICALLY from immutable records: every common ≥0.2 s query whose
-    * (contended r12-local)/(r10-official) ratio exceeded 1.25× that
-    * window's CPU control ratio — i.e. provably IO-sensitive in a
-    * measured IO-contended window — plus the stream/dataset/startable
-    * families wholesale (file IO by construction), plus the iterative-
-    * shuffle / index-file families the first r13 record showed drifting
-    * ~2× in a window whose CPU controls read 1.11 (graph iteration,
-    * dedup-index builds, n-gram perplexity joins, probe file reads).
-    * Pinned by BenchPriorSpec. */
-  val ShuffleAxisQueries: Set[String] = Set(
-    "q_pagerank", "q_cluster_split", "q_dedup_content",
-    "q_dedup_incremental", "q_dedup_index", "q_dedup_keep_best",
-    "q_decontaminate_scrub", "q_doc_trigram_ppl", "q_doc_bigram_ppl",
-    "q_doc_kn_ppl", "q_emb_ivf_probe", "q_emb_ivfpq_probe",
-    "q_emb_kmeans_corpus", "q_entity_resolution", "q_fuzzy_join",
-    "q_funnel_steps", "q_event_twap", "q_gram_novelty_cross",
-    "q_tfidf_terms", "q_temperature_mix", "q_multimodal_features",
-    "q_multimodal_frames",
-    "q_anti_join", "q_bm25_search", "q_bpe_tokenize", "q_calibration",
-    "q_chi2_independence", "q_concat_union", "q_corpus_stats",
-    "q_dataset_card", "q_doc_quality", "q_doc_readability",
-    "q_doc_redact", "q_doc_tokens", "q_doc_topic", "q_emb_covariance",
-    "q_emb_pq_probe", "q_emb_pq_rerank", "q_event_anomaly", "q_event_gap",
-    "q_event_seasonal",
-    "q_events_hourly", "q_except", "q_fillna_value", "q_global_agg",
-    "q_gram_novelty", "q_group_having", "q_group_median",
-    "q_group_quantiles", "q_grouping_sets", "q_hard_negatives", "q_hits",
-    "q_hll_distinct", "q_hybrid_search", "q_incr_agg", "q_intersect",
-    "q_jaro_join", "q_json_extract", "q_kcore", "q_keyness",
-    "q_kmv_distinct", "q_ks_test", "q_label_prop", "q_langid_confusion",
-    "q_mad_outliers", "q_mann_whitney", "q_match_distribution",
-    "q_merge_scd2", "q_pareto", "q_point_lookup", "q_ppr", "q_prf_search",
-    "q_profile", "q_range_join", "q_source_overlap", "q_split_drift",
-    "q_token_burstiness", "q_token_topk", "q_top_docs_per_lang",
-    "q_triangles", "q_weighted_pagerank", "q_window_top_order",
-    "q_winsorize", "q_zipf",
-    // second-window evidence (r13 contended record, judge re-time): these
-    // drifted with the 1.79x shuffle window while the CPU controls read
-    // 0.98, and the serialized re-time exonerated each — IO-sensitive
-    "q_decontaminate_bloom", "q_pivot_qty", "q_percent_rank",
-    "q_setsim_join", "q_knn_graph", "q_mutual_nn", "q_emb_outliers")
-
-  /** Axis of a query: true = shuffle/IO, false = CPU. */
-  def shuffleAxis(name: String): Boolean =
-    ShuffleAxisQueries.contains(name) ||
-      name.startsWith("q_stream_") || name.startsWith("q_dataset_") ||
-      name.startsWith("q_startable_")
-
-  def shouldRerun(name: String, first: Double, p: Double,
-                  contention: Double = 1.0): Boolean =
-    p > 0.05 && {
-      val trigger =
-        if (name.startsWith("q_stream_") || p >= 1.0) 1.5 else 2.0
-      first >= trigger * contention * p
-    }
-
-  /** Per-query seconds out of a bench record, Map.empty unless the record's
-    * sf matches (a prior at a different SF would mistrigger every rerun). */
-  def parsePriorText(txt: String, sfDir: String): Map[String, Double] =
-    if (!txt.contains("\"sf\":\"" + sfDir + "\"")) Map.empty
-    else "\"(q[^\"]+)\":([0-9.Ee+-]+)".r.findAllMatchIn(txt)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+  /** The six objects that declare the queries, by family name. */
+  private val families: Seq[(String, Set[String])] = Seq(
+    "Relational" -> RelationalQueries.queries.keySet,
+    "Pipeline" -> PipelineQueries.queries.keySet,
+    "Streaming" -> StreamingQueries.queries.keySet,
+    "Analytic" -> AnalyticQueries.queries.keySet,
+    "Model" -> ModelQueries.queries.keySet,
+    "Sketch" -> SketchQueries.queries.keySet)
 
   /** Isolation between timed runs: one query's cache hygiene bug must not
     * distort its alphabetical neighbors (the round-2 bench lost three
@@ -185,19 +58,49 @@ object Bench {
     System.gc()
   }
 
+  private def num(v: Double) = JsonNumber(v)
+  private def round2(v: Double) = JsonNumber(math.round(v * 100) / 100.0)
+
+  /** Summed counters of `ps`, full precision. */
+  private def counters(ps: Seq[Profile]): ListMap[String, JsonNumber] = ListMap(
+    "s" -> num(ps.map(_.wallNs).sum / 1e9),
+    "jobs" -> num(ps.map(_.jobs.size).sum),
+    "stages" -> num(ps.map(_.stages).sum),
+    "tasks" -> num(ps.map(_.tasks).sum),
+    "cpu_ns" -> num(ps.map(_.cpuNs).sum.toDouble),
+    "shuffle_read_bytes" -> num(ps.map(_.shuffleReadBytes).sum.toDouble),
+    "shuffle_write_bytes" -> num(ps.map(_.shuffleWriteBytes).sum.toDouble),
+    "spill_bytes" -> num(ps.map(_.spillBytes).sum.toDouble),
+    "uncovered_s" -> num(ps.map(_.uncoveredMs).sum / 1e3),
+    "leaked_rdds" -> num(ps.map(_.leakedRdds).sum))
+
+  /** The per-query and per-job lines of one profile, in seconds and MB. */
+  private def describe(name: String, p: Profile): String = {
+    def mb(b: Long): Double = b / 1e6
+    val head = f"== $name%s wall=${p.wallNs / 1e9}%.2fs jobs=${p.jobs.size}%d stages=${p.stages}%d " +
+      f"tasks=${p.tasks}%d cpu=${p.cpuNs / 1e9}%.2fs shufRead=${mb(p.shuffleReadBytes)}%.1fMB " +
+      f"shufWrite=${mb(p.shuffleWriteBytes)}%.1fMB spill=${mb(p.spillBytes)}%.1fMB " +
+      f"uncovered=${p.uncoveredMs / 1e3}%.2fs leakedRdds=${p.leakedRdds}%d"
+    (head +: p.jobs.map { j =>
+      f"   job ${j.id}%4d ${(j.endMs - j.startMs) / 1e3}%6.2fs stages=${j.stages}%3d tasks=${j.tasks}%5d " +
+        f"cpu=${j.cpuNs / 1e9}%6.2fs shufRead=${mb(j.shuffleReadBytes)}%8.1fMB " +
+        f"shufWrite=${mb(j.shuffleWriteBytes)}%8.1fMB spill=${mb(j.spillBytes)}%6.1fMB"
+    }).mkString("", "\n", "\n")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
-    val cpus = GraftSession.cores
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val spark = GraftSession.local()
 
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame, dir: String): Unit =
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
+    // The caller owns one unpersist() on a query's frame (CacheScope), so
+    // a leaked RDD is one the query itself left behind.
+    def run(fn: (SparkSession, String) => DataFrame, dir: String): Unit = {
+      val df = fn(spark, dir)
+      try df.write.format("noop").mode("overwrite").save() finally df.unpersist()
+    }
 
-    def sweep(): Unit = Bench.sweep(spark)
-
-    // Optional comma-separated query filter for targeted timing sessions
+    // Optional comma-separated query filter for targeted sessions
     // (e.g. SPARK_GRAFT_BENCH_ONLY=q_link_predict,q_hits). A filtered run
     // never overwrites BENCH_FULL.json — partial totals are not a record.
     val only: Option[Set[String]] =
@@ -206,215 +109,83 @@ object Bench {
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
 
-    // Fixed-work calibration probes: constant work whose cost is
-    // INDEPENDENT of the benchmarked SF, recorded so a reader can
-    // mechanically distinguish "the code got slower" from "the machine was
-    // contended during this window" — the round-7 record carried a phantom
-    // 3× regression that a clean rerun refuted, with nothing in the JSON to
-    // flag it. Three probes because contention is not one axis (the round-9
-    // record showed a clean 0.097 CPU probe beside 3-4×-elevated
-    // CPU-saturating queries):
-    //  - calibration_s: a 2e8-row single-pipeline codegen aggregate — light,
-    //    detects gross CPU contention only.
-    //  - calibration_shuffle_s: a fixed 2e7-row repartition+aggregate that
-    //    writes+reads ~32 shuffle partitions through local disk — detects
-    //    IO/disk-path contention the CPU probe is blind to.
-    //  - calibration_saturate_s: 32 concurrent partitions each burning a
-    //    fixed CPU loop — detects partial-core contention (a noisy
-    //    neighbor stealing 30% of the cores barely moves a 1-pipeline
-    //    probe but directly inflates every 32-thread-saturating stage,
-    //    which is exactly the profile of the suite's heaviest queries).
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(200000000L).selectExpr("sum(id * 3 + 7) AS s")
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def calibrateShuffle(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(20000000L)
-        .selectExpr("id", "id % 1000000 AS k")
-        .repartition(org.apache.spark.sql.functions.col("k"))
-        .groupBy("k").agg(org.apache.spark.sql.functions.sum("id").as("s"))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def calibrateSaturate(): Double = {
-      val sc = spark.sparkContext
-      val t0 = System.nanoTime()
-      sc.parallelize(1 to cpus, cpus).map { p =>
-        var acc = p.toLong
-        var i = 0L
-        while (i < 150000000L) { acc = acc * 6364136223846793005L + 1442695040888963407L; i += 1 }
-        acc
-      }.count()
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    // Prior per-query record (for the ≥2× regression rerun below). The
-    // prior must be IMMUTABLE within a round: round 9's official record
-    // carried an unadjudicated 4.4× regression because the trigger compared
-    // against BENCH_FULL.json, which the builder's own pre-official local
-    // run had already overwritten with an elevated number — the discipline
-    // disarmed itself. The prior is therefore the newest committed
-    // BENCH_OFFICIAL_r*.json (written once per round at driver-gate time,
-    // never touched by local runs); BENCH_FULL.json is only a fallback when
-    // no official record exists yet.
-    def priorText(path: java.nio.file.Path): String = try {
-      new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
-    } catch { case _: Throwable => "" }
-    // (per-query prior seconds, the prior's own shuffle probe): the probe
-    // is the machine floor contentionFactor scales against, taken from the
-    // SAME immutable record as the per-query priors so both describe one
-    // window.
-    val (prior: Map[String, Double], priorShuffle: Option[Double]) = {
-      val repo = java.nio.file.Paths.get("/root/repo")
-      val names = try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.list(repo).iterator().asScala
-          .map(_.getFileName.toString).toSeq
-      } catch { case _: Throwable => Seq.empty[String] }
-      val txt = pickOfficial(names).map(n => priorText(repo.resolve(n)))
-        .filter(t => parsePriorText(t, sfDir).nonEmpty)
-        .getOrElse(priorText(repo.resolve("BENCH_FULL.json")))
-      (parsePriorText(txt, sfDir), parsePriorShuffle(txt))
-    }
-
     // Warm-up: JIT + whole-stage-codegen compile at the smallest SF.
     ordered.foreach { case (_, fn) =>
       try run(fn, warmDir) catch { case _: Throwable => () }
     }
-    sweep()
+    sweep(spark)
 
     // Index-backed queries: run once untimed at the target SF so the timed
     // pass measures steady-state probe latency — the one-time index build is
-    // amortized over the query stream in any real deployment (standard ANN
-    // benchmark methodology; the build itself is declared and memoized in
-    // the query, not hidden).
+    // amortized over the query stream in any real deployment (the build
+    // itself is declared and memoized in the query, not hidden).
     SparkEntry.indexedQueries.filter(n => only.forall(_.contains(n))).foreach { n =>
       try run(SparkEntry.queries(n), sfDir) catch { case _: Throwable => () }
     }
-    sweep()
+    sweep(spark)
 
-    calibrate(); calibrateShuffle(); calibrateSaturate() // warm codegen off the probes' clocks
-    sweep()
-    val calibration = calibrate()
-    sweep()
-    val calibrationShuffle = calibrateShuffle()
-    sweep()
-    val calibrationSaturate = calibrateSaturate()
-    sweep()
-
-    def timeQuery(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                  n: Int): Double = {
-      val times = (1 to n).map { rep =>
-        val t0 = System.nanoTime()
-        try run(fn, sfDir) catch {
-          case e: Throwable =>
-            // a failed query must be loud — a swallowed error reads as a
-            // suspiciously fast benchmark number
-            System.err.println(s"[bench] $name rep $rep FAILED: ${e.getMessage}")
+    val results: Seq[(String, Profile)] = ordered.map { case (name, fn) =>
+      val runs = (1 to Reps).map { rep =>
+        val p = Profile.run(spark) {
+          try run(fn, sfDir) catch {
+            case e: Throwable =>
+              // a failed query must be loud — a swallowed error reads as a
+              // suspiciously fast benchmark number
+              System.err.println(s"[bench] $name rep $rep FAILED: ${e.getMessage}")
+          }
         }
-        val dt = (System.nanoTime() - t0) / 1e9
-        sweep() // untimed: isolation work stays off every query's clock
-        dt
-      }.sorted
-      times(times.size / 2)
+        sweep(spark) // untimed: isolation work stays off every query's clock
+        p
+      }.sortBy(_.wallNs)
+      val median = runs(runs.size / 2)
+      System.err.print(describe(name, median))
+      name -> median
+    }
+    val total = results.map(_._2.wallNs).sum / 1e9
+    val byFamily = families.map { case (fam, names) =>
+      fam -> results.collect { case (n, p) if names.contains(n) => p }
     }
 
-    val firstPass = ordered.map { case (name, fn) => name -> timeQuery(name, fn, reps) }
-
-    // Self-adjudication: the pinned control queries' first-pass medians
-    // against the immutable prior label THIS run's window, so a uniformly
-    // elevated record reads as "contended window" from the JSON alone
-    // (the round-11 record needed a judge re-time session to prove that).
-    val ctrlRatio = controlRatio(firstPass.toMap, prior)
-    // the IO-axis twin (round 13): the shuffle-bound pinned controls'
-    // median vs the same immutable prior — in an IO-contended window this
-    // reads ~2× while the CPU controls read ~1.2, and vice versa
-    val shufRatio = controlRatio(firstPass.toMap, prior, ShuffleControlQueries)
-
-    // Per-axis contention for the rerun trigger: a CPU-bound query's
-    // threshold scales with the CPU window, a shuffle-bound query's with
-    // the IO window (max of the measured shuffle controls and the
-    // fixed-work probe, which historically UNDERSTATES query-level drift:
-    // r12 probe 1.25× vs ~2.3× measured on queries). One-axis scaling
-    // burned 30 reruns in r12 — every shuffle query tripped a trigger
-    // scaled by the (cleaner) CPU-side factor.
-    def axisContention(name: String): Double =
-      if (shuffleAxis(name))
-        math.max(math.max(1.0, shufRatio),
-          contentionFactor(calibrationShuffle, priorShuffle.getOrElse(0.9)))
-      else math.max(1.0, ctrlRatio)
-
-    // Regression-rerun discipline: any query whose median regressed ≥2× vs
-    // the prior record gets one clean serialized re-timing at the END of
-    // the run (after every other query's work is done — maximum distance
-    // from whatever contended the first window). The REPORTED value is the
-    // better of the two medians — a transient stall must not be recorded as
-    // a regression — and the rerun is annotated so the record shows both
-    // numbers instead of silently smoothing.
-    val reruns = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
-    val results = firstPass.map { case (name, first) =>
-      prior.get(name) match {
-        case Some(p) if shouldRerun(name, first, p, axisContention(name)) =>
-          val again = timeQuery(name, SparkEntry.queries(name), reps)
-          reruns(name) = (first, again)
-          name -> math.min(first, again)
-        case _ => name -> first
-      }
+    if (only.isEmpty) {
+      val full = JsonObject(ListMap(
+        "metric" -> JsonString("total"), "value" -> num(total),
+        "unit" -> JsonString("sec"), "sf" -> JsonString(sfDir),
+        "reps" -> num(Reps), "cores" -> num(GraftSession.cores),
+        "totals" -> JsonObject(counters(results.map(_._2))),
+        "families" -> JsonObject(ListMap.from(byFamily.map { case (f, ps) =>
+          f -> JsonObject(ListMap("n" -> num(ps.size)) ++ counters(ps)) })),
+        "queries" -> JsonObject(ListMap.from(results.map { case (n, p) =>
+          n -> JsonObject(counters(Seq(p))) }))))
+      try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
+        JsonValue.write(full).getBytes("UTF-8"))
+      catch { case e: Exception => System.err.println(s"[bench] BENCH_FULL.json write failed: $e") }
     }
-    val total = results.map(_._2).sum
 
-    // Contention-normalized view: raw seconds divided by the query's OWN
-    // axis ratio — the number comparable across differently-contended
-    // windows. The raw values stay the record; normalized values are the
-    // adjudication. Ratios are floored at 0.5 (a division by a tiny
-    // accidental ratio must not fabricate a 3× "speedup").
-    def axisRatio(name: String): Double =
-      math.max(0.5, if (shuffleAxis(name)) shufRatio else ctrlRatio)
-    val totalNormalized = results.map { case (n, v) => v / axisRatio(n) }.sum
-
-    // Full-precision record → repo file (survives any stdout truncation).
-    val fullQs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val fullQsNorm = results.map { case (k, v) => "\"" + k + "\":" + v / axisRatio(k) }
-      .mkString("{", ",", "}")
-    val rerunsJson = reruns.map { case (k, (f, a)) =>
-      "\"" + k + "\":{\"first\":" + f + ",\"rerun\":" + a + "}"
-    }.mkString("{", ",", "}")
-    val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","control_ratio":$ctrlRatio,"shuffle_ratio":$shufRatio,"value_normalized":$totalNormalized,"calibration_s":$calibration,"calibration_shuffle_s":$calibrationShuffle,"calibration_saturate_s":$calibrationSaturate,"prior_shuffle_s":${priorShuffle.getOrElse(-1.0)},"reruns":$rerunsJson,"queries":$fullQs,"queries_normalized":$fullQsNorm,"sf":"$sfDir","reps":$reps}"""
-    if (only.isEmpty)
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get("/root/repo/BENCH_FULL.json"),
-        fullLine.getBytes("UTF-8"))
-      catch { case e: Throwable => System.err.println(s"[bench] BENCH_FULL.json write failed: ${e.getMessage}") }
-
-    // The harness records only the LAST 2000 chars of output; the
-    // full-precision line above is ~3 kB at 100+ queries, so a single
-    // full line can NEVER be parsed from that window (rounds 1-4 all
-    // recorded parsed:null). The FINAL line is therefore a compact JSON
-    // sized to fit the window with room to spare: slowest queries first
-    // (the informative ones), 2-decimal seconds, an explicit omitted
-    // count, and a pointer to the full file. Budget 1700 chars for the
-    // entries leaves ~200 for the envelope + the build tool's epilogue.
-    def fmt2(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val budget = 1610 // envelope grew by the control_ratio/shuffle_ratio fields
-    val bySlow = results.sortBy(-_._2)
-    val sb = new StringBuilder
-    var kept = 0
-    bySlow.foreach { case (k, v) =>
-      val e = "\"" + k + "\":" + fmt2(v)
-      if (sb.length + e.length + 1 <= budget) {
-        if (sb.nonEmpty) sb.append(',')
-        sb.append(e); kept += 1
-      }
-    }
-    val omitted = results.size - kept
-    println(fullLine)
-    println(s"""{"metric":"total","value":${fmt2(total)},"unit":"sec","control_ratio":${fmt2(ctrlRatio)},"shuffle_ratio":${fmt2(shufRatio)},"value_normalized":${fmt2(totalNormalized)},"calibration_s":${fmt2(calibration)},"cal_shuffle_s":${fmt2(calibrationShuffle)},"cal_saturate_s":${fmt2(calibrationSaturate)},"reruns":${reruns.size},"queries":{${sb.toString}},"n_queries":${results.size},"omitted_fastest":$omitted,"full":"BENCH_FULL.json","sf":"$sfDir","reps":$reps}""")
+    // The last stdout line is the record a harness that keeps only the
+    // last 2000 characters of output can parse: the per-family totals
+    // (which cover every query), then the slowest queries at 2 decimals
+    // while they fit, with an explicit omitted count and a pointer to the
+    // full file.
+    val famJson = JsonObject(ListMap.from(byFamily.map { case (f, ps) =>
+      f -> JsonObject(ListMap(
+        "n" -> num(ps.size), "s" -> round2(ps.map(_.wallNs).sum / 1e9),
+        "jobs" -> num(ps.map(_.jobs.size).sum),
+        "cpu_s" -> round2(ps.map(_.cpuNs).sum / 1e9),
+        "shuffle_mb" -> round2(ps.map(p => p.shuffleReadBytes + p.shuffleWriteBytes).sum / 1e6),
+        "uncovered_s" -> round2(ps.map(_.uncoveredMs).sum / 1e3),
+        "leaked_rdds" -> num(ps.map(_.leakedRdds).sum)))
+    }))
+    def line(kept: Seq[(String, Profile)]): String = JsonValue.write(JsonObject(ListMap(
+      "metric" -> JsonString("total"), "value" -> round2(total),
+      "unit" -> JsonString("sec"), "families" -> famJson,
+      "queries" -> JsonObject(ListMap.from(kept.map { case (n, p) => n -> round2(p.wallNs / 1e9) })),
+      "n_queries" -> num(results.size), "omitted_fastest" -> num(results.size - kept.size),
+      "full" -> JsonString("BENCH_FULL.json"), "sf" -> JsonString(sfDir),
+      "reps" -> num(Reps))))
+    val bySlow = results.sortBy(-_._2.wallNs)
+    val kept = (0 to bySlow.size).reverseIterator.map(bySlow.take)
+      .find(k => line(k).length <= 1800).getOrElse(Nil)
+    println(line(kept))
     spark.stop()
   }
 }

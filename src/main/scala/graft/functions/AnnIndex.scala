@@ -108,7 +108,7 @@ object AnnIndex {
         (0 until tables).map(t => table(hyperplanes(planes, dim, LshSeed + t * 1000L)))
       case Anchors(nlist) => Seq(table(anchors(nlist, dim)))
       case KMeans(nlist, iters) =>
-        Seq(Similarity.kmeans(df, embCol, idCol, nlist, dim, iters,
+        Seq(Similarity.kmeans(df, embCol, idCol, nlist, iters,
           trackInertia = false)._2.toSeq.map(_.toSeq))
     }
     val books = spec.fine match {

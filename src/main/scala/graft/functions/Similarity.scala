@@ -333,7 +333,7 @@ object Similarity {
     * Returns (assignments (id, cluster), final centroids, per-iteration
     * decimal-exact inertia). */
   def kmeans(df: DataFrame, embCol: String, idCol: String,
-             k: Int, dim: Int, iters: Int = 5,
+             k: Int, iters: Int = 5,
              trackInertia: Boolean = true,
              init: String = "kmeans++"): (DataFrame, Array[Array[Double]], Seq[Double]) =
     CacheScope.withFrame { scope =>
@@ -470,7 +470,7 @@ object Similarity {
       val sub = df.select(col(idCol),
         slice(col(embCol), j * dsub + 1, dsub).as("__sub"))
       val (_, centroids, _) =
-        kmeans(sub, "__sub", idCol, k, dsub, iters, trackInertia = false)
+        kmeans(sub, "__sub", idCol, k, iters, trackInertia = false)
       centroids
     }
   }
@@ -501,11 +501,11 @@ object Similarity {
     * composed with [[cosineNearDupPairs]]' LSH sub-bucketing when clusters
     * must stay large. */
   def semanticDedupRemoved(df: DataFrame, embCol: String, idCol: String,
-                           k: Int, dim: Int, threshold: Double,
+                           k: Int, threshold: Double,
                            iters: Int = 5,
                            maxClusterSize: Int = 20000): DataFrame = {
     val (_, centroids, _) =
-      kmeans(df, embCol, idCol, k, dim, iters, trackInertia = false)
+      kmeans(df, embCol, idCol, k, iters, trackInertia = false)
     val clustered = df.select(col(idCol).as("id"), col(embCol).as("emb"),
       nearestCentroid(col(embCol), centroids).as("cluster"))
     val largest = clustered.groupBy(col("cluster"))

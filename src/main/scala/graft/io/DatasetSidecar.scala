@@ -298,19 +298,22 @@ private[graft] object DatasetSidecar {
     * metadata would misread data or hide a writer bug behind slower
     * reads. `decode` may validate further under the same guard (the
     * shard reader's partition-vs-path integrity check); `fix` tells the
-    * reader what to do about a refused file. */
+    * reader what to do about a refused file. A read error (a checksum
+    * that no longer matches) is refused the same way; a missing file
+    * propagates as is, since lock-free readers race the writers that
+    * replace these files. */
   def read[A](fs: FileSystem, path: Path, op: String, what: String,
-              fix: String = "repair or remove it")(decode: String => A): A = {
-    val in = fs.open(path)
-    val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    try decode(txt)
-    catch {
+              fix: String = "repair or remove it")(decode: String => A): A =
+    try {
+      val in = fs.open(path)
+      decode(try new String(in.readAllBytes(), "UTF-8") finally in.close())
+    } catch {
+      case e: java.io.FileNotFoundException => throw e
       case e: Exception =>
         throw new IllegalArgumentException(
           s"$op: unreadable $what $path (${e.getClass.getSimpleName}: " +
             s"${e.getMessage}); $fix", e)
     }
-  }
 
   // ---- per-file statistics kernel ----------------------------------------
 

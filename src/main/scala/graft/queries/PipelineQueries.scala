@@ -1194,7 +1194,7 @@ object PipelineQueries {
     // machinery end to end.
     "q_emb_kmeans" -> ((s, dir) => {
       val (assign, _, _) = Similarity.kmeans(plantedClusters(s, dir),
-        "embedding", "vec_id", k = 8, dim = 64, iters = 5, trackInertia = false)
+        "embedding", "vec_id", k = 8, iters = 5, trackInertia = false)
       assign.groupBy(col("cluster")).agg(count(lit(1)).as("n")).select(col("n"))
     }),
 
@@ -1205,7 +1205,7 @@ object PipelineQueries {
     "q_emb_kmeans_corpus" -> ((s, dir) => {
       val emb = star(s, dir, "embeddings").df
       val (assign, _, _) = Similarity.kmeans(emb, "embedding", "vec_id",
-        k = 8, dim = 64, iters = 3, trackInertia = false)
+        k = 8, iters = 3, trackInertia = false)
       assign.groupBy(col("cluster")).agg(count(lit(1)).as("n"))
     }),
 
@@ -1315,7 +1315,7 @@ object PipelineQueries {
       val planted = plantedClusters(s, dir)
         .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
       Similarity.semanticDedupRemoved(emb.unionByName(planted),
-        "embedding", "vec_id", k = 32, dim = 64, threshold = 0.9, iters = 3)
+        "embedding", "vec_id", k = 32, threshold = 0.9, iters = 3)
     }),
 
     // BM25 lexical retrieval: top-20 documents for a 3-term query. The

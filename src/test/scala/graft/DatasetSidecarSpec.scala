@@ -88,6 +88,34 @@ class DatasetSidecarSpec extends AnyFunSuite {
     bad.foreach(f => intercept[Exception](f()))
   }
 
+  test("a metadata file whose checksum no longer matches is refused with " +
+    "its path and fix: the dataset sidecar and _ann_index.json") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_sidecar_crc")
+    val ds = root.resolve("ds").toString
+    graft.io.CsvWriter.writePartitionedDataset(graft.model.StarTable.fromDataFrame(
+      spark.range(6).select((col("id") % 2).as("grp"), col("id").as("v")), "crc"),
+      ds, partitionBy = Seq("grp"))
+    val idx = root.resolve("idx")
+    graft.functions.AnnIndex.write(Seq((1L, Seq(1f, 0f))).toDF("vec_id", "embedding"),
+      "embedding", "vec_id", idx.toString,
+      graft.functions.AnnIndex.AnnSpec(graft.functions.AnnIndex.AnnSpec.Flat))
+    // rewritten through java.nio, so the Hadoop `.crc` beside it goes stale
+    def damage(file: java.nio.file.Path): Unit =
+      Files.write(file, (" " + new String(Files.readAllBytes(file), "UTF-8")).getBytes("UTF-8"))
+    val sidecar = java.nio.file.Paths.get(ds, DatasetMetaFile)
+    damage(sidecar)
+    val dsMsg = intercept[IllegalArgumentException](
+      graft.sources.StarTableSource.readDatasetMeta(Seq(ds))).getMessage
+    assert(dsMsg.contains(sidecar.toString) && dsMsg.contains("ChecksumException") &&
+      dsMsg.contains("repair or remove it"), dsMsg)
+    damage(idx.resolve("_ann_index.json"))
+    val annMsg = intercept[IllegalArgumentException](graft.functions.AnnIndex.probe(
+      spark, idx.toString, Seq(1f, 0f), k = 1, nprobe = 1)).getMessage
+    assert(annMsg.contains(idx.resolve("_ann_index.json").toString) &&
+      annMsg.contains("ChecksumException") && annMsg.contains("rebuild it"), annMsg)
+  }
+
   test("per-file kernel: a naRep cell of a numeric column profiles as a " +
     "null, and clustering on that column runs") {
     val dir = Files.createTempDirectory("graft_sidecar_kernel")

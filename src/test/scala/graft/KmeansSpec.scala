@@ -13,7 +13,7 @@ class KmeansSpec extends AnyFunSuite {
 
   test("inertia is non-increasing across iterations (Lloyd's guarantee)") {
     val (_, _, inertias) = Similarity.kmeans(emb, "embedding", "vec_id",
-      k = 4, dim = 64, iters = 4)
+      k = 4, iters = 4)
     assert(inertias.size == 4)
     inertias.sliding(2).foreach { case Seq(a, b) =>
       assert(b <= a + 1e-6, s"inertia increased: $inertias")
@@ -23,7 +23,7 @@ class KmeansSpec extends AnyFunSuite {
   test("clustering is deterministic across runs and covers all vectors") {
     def sizes() = {
       val (assign, _, _) = Similarity.kmeans(emb, "embedding", "vec_id",
-        k = 4, dim = 64, iters = 3)
+        k = 4, iters = 3)
       assign.groupBy("cluster").count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     }
@@ -42,7 +42,7 @@ class KmeansSpec extends AnyFunSuite {
     }
     val df = rows.toDF("vec_id", "embedding")
     val (assign, _, _) = Similarity.kmeans(df, "embedding", "vec_id",
-      k = 2, dim = 4, iters = 3)
+      k = 2, iters = 3)
     val byCluster = assign.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val even = (0 until 20 by 2).map(i => byCluster(i.toLong)).toSet
     val odd = (1 until 20 by 2).map(i => byCluster(i.toLong)).toSet
@@ -60,7 +60,7 @@ class KmeansSpec extends AnyFunSuite {
     // needs a single Lloyd round; with iters=8 the early stop must kick in
     // (inertia trace shorter than the cap and flat at the tail)
     val (assign, _, inertias) = Similarity.kmeans(df, "embedding", "vec_id",
-      k = 2, dim = 4, iters = 8)
+      k = 2, iters = 8)
     val byCluster = assign.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val even = (0 until 20 by 2).map(i => byCluster(i.toLong)).toSet
     val odd = (1 until 20 by 2).map(i => byCluster(i.toLong)).toSet
@@ -71,7 +71,7 @@ class KmeansSpec extends AnyFunSuite {
 
   test("returned assignments are consistent with returned centroids") {
     val (assign, centroids, _) = Similarity.kmeans(emb, "embedding", "vec_id",
-      k = 4, dim = 64, iters = 2) // deliberately truncated: not converged
+      k = 4, iters = 2) // deliberately truncated: not converged
     def d2(x: Seq[Float], c: Array[Double]): Double = {
       var s = 0.0; var i = 0
       while (i < x.size) { val d = x(i) - c(i); s += d * d; i += 1 }

@@ -315,7 +315,7 @@ class OperatorHygieneSpec extends AnyFunSuite {
       Similarity.mutualNearestNeighbors(badEmb, "grp", "embedding", "vec_id")),
     "hardPairs" -> (() =>
       Similarity.hardPairs(badEmb, "grp", "label", "embedding", "vec_id")),
-    "kmeans" -> (() => Similarity.kmeans(badEmb, "embedding", "vec_id", k = 2, dim = 2,
+    "kmeans" -> (() => Similarity.kmeans(badEmb, "embedding", "vec_id", k = 2,
       init = "first")._1),
     "curate" -> (() => Curation.curate(badDocs, docs, "doc_id", "text")._1),
     "bloomSemiJoin" -> (() => graft.operators.BloomJoin.bloomSemiJoin(

@@ -359,7 +359,7 @@ class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
       (12L, Seq(0f, 0f, 7f, 0f))) // its own region, no near-dup
     val df = rows.toDF("vec_id", "embedding").repartition(5)
     val got = Similarity.semanticDedupRemoved(df, "embedding", "vec_id",
-        k = 3, dim = 4, threshold = 0.999)
+        k = 3, threshold = 0.999)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 0L, 2L -> 0L, 11L -> 10L))
   }
@@ -369,7 +369,7 @@ class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = rows.toDF("vec_id", "embedding")
     val e = intercept[IllegalArgumentException] {
       Similarity.semanticDedupRemoved(df, "embedding", "vec_id",
-        k = 2, dim = 4, threshold = 0.9, maxClusterSize = 10)
+        k = 2, threshold = 0.9, maxClusterSize = 10)
     }
     assert(e.getMessage.contains("maxClusterSize"))
     assert(e.getMessage.contains("Raise k"))
@@ -383,7 +383,7 @@ class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = (0L until 32L).map(i => (i, vv(i)))
     def run(parts: Int) =
       Similarity.semanticDedupRemoved(rows.toDF("vec_id", "embedding").repartition(parts),
-          "embedding", "vec_id", k = 4, dim = 4, threshold = 0.999)
+          "embedding", "vec_id", k = 4, threshold = 0.999)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
     assert(run(1) == run(13))
   }
